@@ -2,56 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CharNGrams, DotProductF, MinHashAgg, RollingHash, SimHashAgg, SortedIntersectSize, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin}
 
 /** Canonical registration of every engine extension point
-  * (SparkSessionExtensions): the as-of join planner strategy and the
-  * custom expressions/aggregate, so a session built with
-  * `.withExtensions(new GraftExtensions)` (as Verify/Bench do) — or
-  * `spark.sql.extensions=graft.GraftExtensions` — has the whole engine
-  * surface without any per-query registration. Query closures still
-  * self-register idempotently so they also work on a vanilla session.
+  * (SparkSessionExtensions): the as-of join planner strategy, its
+  * filter-pushdown rule and every function in `GraftFunctions.all`, so
+  * a session built with `.withExtensions(new GraftExtensions)` (as
+  * Verify/Bench do) — or `spark.sql.extensions=graft.GraftExtensions` —
+  * has the whole engine surface without any per-query registration.
+  * Query closures still call `GraftFunctions.register`, which skips
+  * the names injected here, so they also work on a vanilla session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductF].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductF(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[RollingHash].getName, "graft_fingerprint"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_minhash16"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "graft_minhash16"),
-      (exprs: Seq[Expression]) => MinHashAgg(exprs.head, 16)))
-    e.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHashAgg(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_trigrams"),
-      new ExpressionInfo(classOf[CharNGrams].getName, "graft_trigrams"),
-      (exprs: Seq[Expression]) => CharNGrams(exprs.head, 3)))
-    e.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head, 5)))
-    e.injectFunction((FunctionIdentifier("graft_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "graft_intersect_size"),
-      (exprs: Seq[Expression]) => SortedIntersectSize(exprs(0), exprs(1))))
-    // Spark's own bloom pair, surfaced for application-level blooms
-    // (see GraftFunctions.register).
-    e.injectFunction((FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (exprs: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
+    GraftFunctions.all.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -38,23 +38,28 @@ object Prof {
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           import org.apache.spark.scheduler._
-          private val cpu = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+          // CPU per stage attempt, one successful attempt per task index:
+          // speculative duplicates in an attempt count once, and zombie
+          // tasks of a finished attempt find no entry to add to.
+          private val cpu = new java.util.concurrent.ConcurrentHashMap[
+            (Int, Int), java.util.concurrent.ConcurrentHashMap[Int, Long]]()
+          override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+            cpu.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()),
+              new java.util.concurrent.ConcurrentHashMap[Int, Long]()): Unit
           override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-            // Successful attempts only: failed/speculative duplicates
-            // would double-count CPU into the stage total (ADVICE r14).
             if (e.taskMetrics != null && e.reason == org.apache.spark.Success)
-              cpu.merge(e.stageId, e.taskMetrics.executorCpuTime, Long.box(_) + _)
+              Option(cpu.get((e.stageId, e.stageAttemptId))).foreach(
+                _.putIfAbsent(e.taskInfo.index, e.taskMetrics.executorCpuTime))
           override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
             val si = e.stageInfo
             val dur = (for { s0 <- si.submissionTime; c <- si.completionTime }
               yield c - s0).getOrElse(-1L)
+            // Evict the attempt whether or not it is printed.
+            val tasks = Option(cpu.remove((si.stageId, si.attemptNumber())))
+            val cpuNs = tasks.fold(0L)(_.values.stream.mapToLong(x => x).sum)
             if (dur > 200)
-              println(f"  [stage ${si.stageId}] ${dur / 1e3}%.2fs " +
-                f"tasks=${si.numTasks} cpu=${cpu.getOrDefault(si.stageId, 0L) / 1e9}%.2fs")
-            // Evict: the map otherwise grows for the whole profiling run
-            // (ADVICE r14). Retried stage attempts re-accumulate from
-            // their own task-end events.
-            cpu.remove(si.stageId): Unit
+              println(f"  [stage ${si.stageId}.${si.attemptNumber()}] ${dur / 1e3}%.2fs " +
+                f"tasks=${si.numTasks} cpu=${cpuNs / 1e9}%.2fs")
           }
         })
     try SparkEntry.entry(spark).count() catch { case _: Throwable => } // warm-up

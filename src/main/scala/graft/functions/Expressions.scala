@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -178,44 +180,47 @@ case class LshBucket(child: Expression, numPlanes: Int, dim: Int,
   override protected def withNewChildInternal(c: Expression): LshBucket = copy(child = c)
 }
 
-/** Session registration so queries can reach the expressions through
-  * `call_function` — idempotent, called at query-construction time.
+/** The engine's function surface, defined once: GraftExtensions
+  * injects it into every session built with the extensions, and
+  * `register` adds it to a vanilla session so queries can reach the
+  * expressions through `call_function`.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProductF(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_fingerprint",
-      exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket",
-      exprs => LshBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int],
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Int] else 0), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash16",
-      exprs => MinHashAgg(exprs.head, 16), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHashAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_trigrams",
-      exprs => CharNGrams(exprs.head, 3), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => WordShingles(exprs.head, 5), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => WinnowedPrints(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
+
+  /** (name, implementing expression class, builder) per function. */
+  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProductF], e => DotProductF(e(0), e(1))),
+    ("graft_fingerprint", classOf[RollingHash], e => RollingHash(e.head)),
+    ("graft_lsh_bucket", classOf[LshBucket], e => LshBucket(e(0),
+      intArg(e(1)), intArg(e(2)), if (e.length > 3) intArg(e(3)) else 0)),
+    ("graft_minhash16", classOf[MinHashAgg], e => MinHashAgg(e.head, 16)),
+    ("graft_simhash", classOf[SimHashAgg], e => SimHashAgg(e.head)),
+    ("graft_trigrams", classOf[CharNGrams], e => CharNGrams(e.head, 3)),
+    ("graft_shingles", classOf[WordShingles], e => WordShingles(e.head, 5)),
+    ("graft_winnow", classOf[WinnowedPrints],
+      e => WinnowedPrints(e(0), intArg(e(1)), intArg(e(2)))),
+    ("graft_intersect_size", classOf[SortedIntersectSize],
+      e => SortedIntersectSize(e(0), e(1))),
     // Spark's OWN bloom expressions (the pair InjectRuntimeFilter
     // plants automatically), surfaced as callable functions so a query
     // can build an APPLICATION-level bloom — e.g. over a historical
     // fingerprint set — rather than relying on the optimizer to decide.
     // No custom sketch code: same Catalyst implementation, codegen'd.
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    ("graft_bloom_agg", classOf[BloomFilterAggregate],
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  /** Idempotent, called at query-construction time: names the session
+    * already has (injected by GraftExtensions or registered by an
+    * earlier call) are left alone.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    all.foreach { case (name, _, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

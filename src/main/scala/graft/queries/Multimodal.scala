@@ -10,29 +10,26 @@ import graft.Tables._
   * contract): image/audio/video as opaque BINARY columns with typed
   * metadata, processed per-partition in batches.
   *
-  * CONTAINER-METADATA decode is REAL as of round 12 (VERDICT r11 item
-  * 5): mm_decode_meta / mm_aspect_bucket wrap each document's bytes in
-  * spec-conformant PNG / PCM-WAV containers and parse the headers back
-  * from the bytes alone — magic sniffing, endian-correct field reads,
-  * CRC-32 (JDK java.util.zip, not a codec lib) and RIFF-size
-  * verification.
+  * CONTAINER-METADATA decode: mm_decode_meta / mm_aspect_bucket wrap
+  * each document's bytes in spec-conformant PNG / PCM-WAV containers
+  * and parse the headers back from the bytes alone — magic sniffing,
+  * endian-correct field reads, CRC-32 and RIFF-size verification.
   *
-  * PIXEL decode is REAL as of round 13 (VERDICT r12 item 1):
-  * mm_resize / mm_feature_extract / mm_frame_sample / mm_phash_dedup
-  * build an 8-bit grayscale image per document (pixels tiled from the
-  * text bytes — the corpus has no binary column, so the construction
-  * is the oracle's prediction handle), encode it as a fully
-  * spec-conformant PNG — per-scanline filters cycling the COMPLETE
-  * PNG filter set (None/Sub/Up/Average/Paeth), a stored-deflate
-  * (btype=00) zlib IDAT with Adler-32 trailer, CRC-32 per chunk — and
-  * then DECODE it back from the bytes alone (chunk walk, zlib
-  * inflate, filter reversal) before doing any pixel math. The zlib
-  * inflater and PNG filter codec are implemented here in pure byte
-  * arithmetic (RFC 1950/1951 stored subset + the PNG filter spec);
-  * the only JDK helpers are the CRC32/Adler32 checksums. Any slip in
-  * deflate framing, checksum math, filter encode OR decode, or the
-  * downstream resample/histogram/hash arithmetic breaks the DuckDB
-  * hash gate, because the oracle predicts results from the pixel
+  * PIXEL decode: mm_resize / mm_feature_extract / mm_frame_sample /
+  * mm_phash_dedup and the other pixel keys build an 8-bit image per
+  * document (pixels tiled from the text bytes — the corpus has no
+  * binary column, so the construction is the oracle's prediction
+  * handle), encode it as a spec-conformant PNG — per-scanline filters
+  * cycling the complete PNG filter set (None/Sub/Up/Average/Paeth), a
+  * zlib IDAT, CRC-32 per chunk — and then DECODE it back from the
+  * bytes alone (chunk walk, zlib inflate, filter reversal) before doing
+  * any pixel math. zlib is the JDK's java.util.zip (the native zlib);
+  * the chunk walk, filter codec and clip container are implemented
+  * here. Each document picks its deflate mode (stored / fastest / best
+  * compression) from `id % 3`, so the decoder sees a mixed corpus. Any
+  * slip in the filter encode OR decode, the chunk framing, or the
+  * downstream resample/histogram/hash arithmetic breaks the DuckDB hash
+  * gate, because the oracle predicts results from the pixel
   * construction while Spark must RECOVER them through the codec.
   * The plumbing is real throughout: binary column → typed Dataset →
   * `mapPartitions` (the Scala analogue of a batched Pandas UDF: one
@@ -141,604 +138,50 @@ object Multimodal {
     } else ("unknown", 0, 0, false)
   }
 
-  // ---- Real pixel codec (round 13): zlib stored-deflate + the full
-  // PNG scanline-filter set, pure byte arithmetic per RFC 1950/1951
-  // and the PNG spec. JDK java.util.zip is used ONLY for the CRC-32 /
-  // Adler-32 checksums — the stream framing, block walk, and filter
-  // math are all implemented here, so the write→decode roundtrip is a
-  // genuine codec exercise, not a library call.
+  // ---- Pixel codec: JDK zlib (java.util.zip wraps the native zlib),
+  // then the PNG scanline-filter set.
 
-  /** zlib stream carrying STORED (btype=00) deflate blocks: 2-byte
-    * header 0x78 0x01 ((CMF·256+FLG) % 31 == 0), ≤65535-byte blocks
-    * with LEN/~LEN framing and BFINAL on the last, big-endian
-    * Adler-32 trailer over the raw data.
+  /** zlib stream in mode 0 = stored, 1 = fastest, 2 = best compression.
+    * The queries pass `id % 3`, so the decoder sees a mixed corpus.
     */
-  def zlibStore(raw: Array[Byte]): Array[Byte] = {
-    val nBlocks = math.max(1, (raw.length + 65534) / 65535)
-    val out = new java.io.ByteArrayOutputStream(6 + raw.length + nBlocks * 5)
-    out.write(0x78); out.write(0x01)
-    var off = 0
-    var first = true
-    while (first || off < raw.length) {
-      first = false
-      val len = math.min(65535, raw.length - off)
-      out.write(if (off + len >= raw.length) 1 else 0) // BFINAL | BTYPE=00
-      out.write(len & 0xFF); out.write((len >>> 8) & 0xFF)
-      out.write(~len & 0xFF); out.write((~len >>> 8) & 0xFF)
-      out.write(raw, off, len)
-      off += len
-    }
-    val ad = new java.util.zip.Adler32
-    ad.update(raw)
-    out.write(be32(ad.getValue), 0, 4)
-    out.toByteArray
-  }
-
-  /** Inflate a stored-blocks-only zlib stream: header check, block
-    * walk with LEN/NLEN complement verification, Adler-32 trailer
-    * verification. (The 5 bits above BFINAL/BTYPE are bitstream
-    * padding for byte-aligned stored blocks — ignored per the spec.)
-    */
-  def zlibInflateStored(b: Array[Byte]): Array[Byte] = {
-    require(b.length >= 7, "zlib: truncated stream")
-    val cmf = b(0) & 0xFF; val flg = b(1) & 0xFF
-    require((cmf & 0x0F) == 8 && (cmf * 256 + flg) % 31 == 0,
-      "zlib: bad header")
-    val out = new java.io.ByteArrayOutputStream(b.length)
-    var p = 2
-    var fin = false
-    while (!fin) {
-      require(b.length >= p + 5, "zlib: truncated block header")
-      val hdr = b(p) & 0xFF
-      require(((hdr >>> 1) & 3) == 0,
-        s"zlib: only stored blocks supported, got btype=${(hdr >>> 1) & 3}")
-      fin = (hdr & 1) == 1
-      val len = rle16(b, p + 1)
-      require((len ^ rle16(b, p + 3)) == 0xFFFF, "zlib: LEN/NLEN mismatch")
-      require(b.length >= p + 5 + len, "zlib: truncated stored block body")
-      out.write(b, p + 5, len)
-      p += 5 + len
-    }
-    require(b.length >= p + 4, "zlib: truncated Adler-32 trailer")
-    val raw = out.toByteArray
-    val ad = new java.util.zip.Adler32
-    ad.update(raw)
-    require(rbe32(b, p) == ad.getValue, "zlib: Adler-32 mismatch")
-    raw
-  }
-
-  // ---- Full RFC 1951 inflate + deflate (round 14, VERDICT r13 item
-  // 1): fixed-Huffman (btype=01) and dynamic-Huffman (btype=10)
-  // blocks in addition to the stored (btype=00) subset — all pure
-  // bit/byte arithmetic per the public spec, no codec libs (JDK only
-  // for the Adler-32/CRC-32 checksums, as before). The ENCODER gains
-  // fixed and dynamic modes too (greedy hash-head LZ77 + canonical
-  // length-limited Huffman), so the decoder's Huffman walk and LZ77
-  // window-copy paths are exercised by oracle-predictable fixtures —
-  // the mm keys now encode a MIXED-btype corpus (doc_id % 3 picks
-  // stored/fixed/dynamic) and every pixel still has to survive the
-  // roundtrip for the DuckDB hash gate to pass.
-
-  /** LSB-first bit reader over the deflate bitstream (RFC 1951
-    * §3.1.1: data elements are packed starting at the least-
-    * significant bit of each byte). `alignByte()` pushes whole
-    * buffered bytes back and drops the partial one — the stored-block
-    * and trailer byte-alignment rule.
-    */
-  private final class BitReader(val src: Array[Byte], var pos: Int) {
-    private var buf = 0L
-    private var cnt = 0
-    def bits(n: Int): Int = {
-      while (cnt < n) {
-        require(pos < src.length, "deflate: truncated bitstream")
-        buf |= (src(pos) & 0xFFL) << cnt
-        pos += 1; cnt += 8
-      }
-      val v = (buf & ((1L << n) - 1)).toInt
-      buf >>>= n; cnt -= n
-      v
-    }
-    def alignByte(): Unit = { pos -= cnt >> 3; buf = 0L; cnt = 0 }
-  }
-
-  /** LSB-first bit writer (the encoder mirror of BitReader). Huffman
-    * codes are emitted most-significant-bit first per §3.1.1, hence
-    * the bit reversal in `huff`.
-    */
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var buf = 0L
-    private var cnt = 0
-    def bits(v: Int, n: Int): Unit = {
-      buf |= (v.toLong & ((1L << n) - 1)) << cnt
-      cnt += n
-      while (cnt >= 8) { out.write((buf & 0xFF).toInt); buf >>>= 8; cnt -= 8 }
-    }
-    def huff(code: Int, len: Int): Unit = {
-      var v = 0; var i = 0
-      while (i < len) { v = (v << 1) | ((code >>> i) & 1); i += 1 }
-      bits(v, len)
-    }
-    def flushByte(): Unit =
-      if (cnt > 0) { out.write((buf & 0xFF).toInt); buf = 0L; cnt = 0 }
-  }
-
-  /** Canonical Huffman decoder from code lengths (RFC 1951 §3.2.2),
-    * per-length count/first-code walk. Rejects over-subscribed length
-    * sets at construction; an INCOMPLETE set (legal for a degenerate
-    * distance table) only fails if the stream actually lands on a
-    * missing code.
-    */
-  private final class Huff(lengths: Array[Int]) {
-    private val maxBits = 15
-    private val count = new Array[Int](maxBits + 1)
-    lengths.foreach { l =>
-      require(l >= 0 && l <= maxBits, s"deflate: bad code length $l")
-      if (l > 0) count(l) += 1
-    }
-    val nSyms: Int = count.sum
-    locally {
-      var left = 1
-      var l = 1
-      while (l <= maxBits) {
-        left = (left << 1) - count(l)
-        require(left >= 0, "deflate: over-subscribed Huffman code set")
-        l += 1
-      }
-    }
-    // Symbols in canonical order: sorted by (code length, symbol).
-    private val sym = new Array[Int](nSyms)
-    locally {
-      val cursor = new Array[Int](maxBits + 2)
-      var l = 1
-      while (l <= maxBits) { cursor(l + 1) = cursor(l) + count(l); l += 1 }
-      var s = 0
-      while (s < lengths.length) {
-        val l = lengths(s)
-        if (l > 0) { sym(cursor(l)) = s; cursor(l) += 1 }
-        s += 1
-      }
-    }
-    def decode(in: BitReader): Int = {
-      var code = 0; var first = 0; var index = 0; var len = 1
-      while (len <= maxBits) {
-        code |= in.bits(1)
-        val c = count(len)
-        if (code < first + c) return sym(index + (code - first))
-        index += c
-        first = (first + c) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException("deflate: invalid Huffman code")
-    }
-  }
-
-  // Fixed lit/len + distance code lengths (RFC 1951 §3.2.6) and the
-  // length/distance base+extra-bit tables (§3.2.5).
-  private val fixedLitLen: Array[Int] = Array.tabulate(288)(i =>
-    if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8)
-  private val fixedDistLen: Array[Int] = Array.fill(30)(5)
-  private lazy val fixedLitHuff = new Huff(fixedLitLen)
-  private lazy val fixedDistHuff = new Huff(fixedDistLen)
-  // Fixed-mode canonical ENCODE tables, hoisted (round 14): they were
-  // recomputed from the static length arrays on every mode-1 encode.
-  private lazy val fixedLitCodes = canonCodes(fixedLitLen)
-  private lazy val fixedDistCodes = canonCodes(fixedDistLen)
-  private val lenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19,
-    23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val lenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2,
-    2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  private val distBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65,
-    97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-    8193, 12289, 16385, 24577)
-  private val distExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6,
-    6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  // Code-length-code transmission order (§3.2.7).
-  private val clOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
-    3, 13, 2, 14, 1, 15)
-
-  /** Growable output buffer with random read-back for the LZ77
-    * window copy (a ByteArrayOutputStream can't be read mid-stream).
-    */
-  private final class ByteVec(initial: Int) {
-    private var a = new Array[Byte](math.max(16, initial))
-    var n = 0
-    private def ensure(extra: Int): Unit =
-      if (n + extra > a.length) {
-        var cap = a.length * 2
-        while (cap < n + extra) cap *= 2
-        a = java.util.Arrays.copyOf(a, cap)
-      }
-    def add(v: Byte): Unit = { ensure(1); a(n) = v; n += 1 }
-    def addSlice(src: Array[Byte], off: Int, len: Int): Unit = {
-      ensure(len); System.arraycopy(src, off, a, n, len); n += len
-    }
-    /** Back-copy with overlap: dist may be < len (run replication). */
-    def copyBack(dist: Int, len: Int): Unit = {
-      ensure(len)
-      var i = 0
-      while (i < len) { a(n + i) = a(n - dist + i); i += 1 }
-      n += len
-    }
-    def toArray: Array[Byte] = java.util.Arrays.copyOf(a, n)
-  }
-
-  /** One compressed block body: lit/len decode loop with the §3.2.5
-    * length/distance extra-bit expansion and overlapping window copy.
-    */
-  private def inflateHuffBlock(in: BitReader, lit: Huff, dist: Huff,
-      out: ByteVec): Unit = {
-    var done = false
-    while (!done) {
-      val s = lit.decode(in)
-      if (s < 256) out.add(s.toByte)
-      else if (s == 256) done = true
-      else {
-        require(s <= 285, s"deflate: invalid length symbol $s")
-        val li = s - 257
-        val len = lenBase(li) + in.bits(lenExtra(li))
-        require(dist.nSyms > 0,
-          "deflate: distance code used but distance table is empty")
-        val ds = dist.decode(in)
-        require(ds <= 29, s"deflate: invalid distance symbol $ds")
-        val d = distBase(ds) + in.bits(distExtra(ds))
-        require(d <= out.n, "deflate: distance reaches before output start")
-        out.copyBack(d, len)
-      }
-    }
-  }
-
-  /** Dynamic-block header (§3.2.7): HLIT/HDIST/HCLEN, the 3-bit
-    * code-length-code lengths in clOrder, then the RLE-coded (16:
-    * repeat-prev, 17/18: zero runs) lit+dist code lengths.
-    */
-  private def readDynamicHeader(in: BitReader): (Huff, Huff) = {
-    val hlit = in.bits(5) + 257
-    val hdist = in.bits(5) + 1
-    val hclen = in.bits(4) + 4
-    require(hlit <= 286 && hdist <= 30,
-      s"deflate: bad dynamic header counts hlit=$hlit hdist=$hdist")
-    val clLen = new Array[Int](19)
-    var i = 0
-    while (i < hclen) { clLen(clOrder(i)) = in.bits(3); i += 1 }
-    val clHuff = new Huff(clLen)
-    val lens = new Array[Int](hlit + hdist)
-    var p = 0
-    while (p < lens.length) {
-      val s = clHuff.decode(in)
-      if (s < 16) { lens(p) = s; p += 1 }
-      else {
-        var rep = 0; var v = 0
-        if (s == 16) {
-          require(p > 0, "deflate: length repeat with no prior length")
-          v = lens(p - 1); rep = 3 + in.bits(2)
-        } else if (s == 17) rep = 3 + in.bits(3)
-        else rep = 11 + in.bits(7)
-        require(p + rep <= lens.length,
-          "deflate: code-length repeat overflows the declared counts")
-        while (rep > 0) { lens(p) = v; p += 1; rep -= 1 }
-      }
-    }
-    require(lens(256) > 0, "deflate: missing end-of-block code")
-    (new Huff(java.util.Arrays.copyOfRange(lens, 0, hlit)),
-      new Huff(java.util.Arrays.copyOfRange(lens, hlit, hlit + hdist)))
-  }
-
-  /** FULL RFC 1950/1951 inflate: stored, fixed-Huffman, and
-    * dynamic-Huffman blocks, LZ77 window copy, Adler-32 trailer
-    * verification. Supersedes the stored-only `zlibInflateStored`
-    * (kept for its framing-level spec gates); this is what the PNG
-    * decoder calls, so the engine now ingests any spec-conformant
-    * zlib stream — including real-world libpng output — not just its
-    * own stored-deflate subset.
-    */
-  def zlibInflate(b: Array[Byte]): Array[Byte] = {
-    require(b.length >= 7, "zlib: truncated stream")
-    val cmf = b(0) & 0xFF; val flg = b(1) & 0xFF
-    require((cmf & 0x0F) == 8 && (cmf * 256 + flg) % 31 == 0,
-      "zlib: bad header")
-    require((flg & 0x20) == 0, "zlib: preset dictionary unsupported")
-    val in = new BitReader(b, 2)
-    val out = new ByteVec(b.length * 3)
-    var fin = false
-    while (!fin) {
-      fin = in.bits(1) == 1
-      in.bits(2) match {
-        case 0 =>
-          in.alignByte()
-          val p = in.pos
-          require(b.length >= p + 4, "zlib: truncated stored-block header")
-          val len = rle16(b, p)
-          require((len ^ rle16(b, p + 2)) == 0xFFFF,
-            "zlib: LEN/NLEN mismatch")
-          require(b.length >= p + 4 + len, "zlib: truncated stored block")
-          out.addSlice(b, p + 4, len)
-          in.pos = p + 4 + len
-        case 1 => inflateHuffBlock(in, fixedLitHuff, fixedDistHuff, out)
-        case 2 =>
-          val (lit, dist) = readDynamicHeader(in)
-          inflateHuffBlock(in, lit, dist, out)
-        case other =>
-          throw new IllegalArgumentException(s"zlib: reserved btype=$other")
-      }
-    }
-    in.alignByte()
-    require(b.length >= in.pos + 4, "zlib: truncated Adler-32 trailer")
-    val raw = out.toArray
-    val ad = new java.util.zip.Adler32
-    ad.update(raw)
-    require(rbe32(b, in.pos) == ad.getValue, "zlib: Adler-32 mismatch")
-    raw
-  }
-
-  /** Greedy LZ77 with a 3-byte-hash most-recent-head table — single
-    * candidate, no lazy matching, hence fully deterministic. Matches
-    * are 3..258 bytes within the 32 KiB window. Token packing:
-    * literal = 0..255; match = (1<<30) | len<<16 | dist.
-    */
-  /** Per-thread reusable LZ77 state (round 14, guide §1.2 step 2 /
-    * §4.5 "initialise heavyweight state once per task"): the 32 Ki-slot
-    * hash-head table was previously allocated AND fill(-1)'d per encode
-    * call — ~128 KB of alloc + clear for inputs that are typically a
-    * few hundred bytes, dominating the per-image encode cost across the
-    * ~10⁵ encode calls a full mm-family pass makes. The head table is
-    * paired with a stamp array and a monotonically increasing epoch so
-    * reuse needs NO clearing: a slot is live only if its stamp equals
-    * the current call's epoch. Token output is BIT-IDENTICAL to the
-    * old form — same hash, same single-candidate policy — so every
-    * oracle that replays the construction is unaffected.
-    */
-  private final class Lz77State {
-    val head = new Array[Int](1 << 15)
-    val stamp = new Array[Int](1 << 15)
-    var epoch = 0
-    var toks = new Array[Int](1024)
-  }
-  private val lzState = new ThreadLocal[Lz77State] {
-    override def initialValue(): Lz77State = new Lz77State
-  }
-
-  private def lz77Tokens(raw: Array[Byte]): Array[Int] = {
-    val st = lzState.get()
-    st.epoch += 1
-    if (st.epoch == 0) { // Int wrap: stamps are stale-safe only within an epoch cycle
-      java.util.Arrays.fill(st.stamp, 0)
-      st.epoch = 1
-    }
-    val ep = st.epoch
-    val head = st.head
-    val stamp = st.stamp
-    var toks = st.toks
-    var n = 0
-    @inline def push(v: Int): Unit = {
-      if (n == toks.length) {
-        toks = java.util.Arrays.copyOf(toks, toks.length * 2)
-        st.toks = toks
-      }
-      toks(n) = v; n += 1
-    }
-    @inline def hash(i: Int): Int =
-      (((raw(i) & 0xFF) << 10) ^ ((raw(i + 1) & 0xFF) << 5) ^
-        (raw(i + 2) & 0xFF)) & ((1 << 15) - 1)
-    var i = 0
-    while (i < raw.length) {
-      var matched = false
-      if (i + 2 < raw.length) {
-        val h = hash(i)
-        val cand = if (stamp(h) == ep) head(h) else -1
-        head(h) = i; stamp(h) = ep
-        if (cand >= 0 && i - cand <= 32768 && raw(cand) == raw(i) &&
-            raw(cand + 1) == raw(i + 1) && raw(cand + 2) == raw(i + 2)) {
-          var len = 3
-          val maxLen = math.min(258, raw.length - i)
-          while (len < maxLen && raw(cand + len) == raw(i + len)) len += 1
-          push((1 << 30) | (len << 16) | (i - cand))
-          var j = i + 1
-          val stop = math.min(i + len, raw.length - 2)
-          while (j < stop) { val hj = hash(j); head(hj) = j; stamp(hj) = ep; j += 1 }
-          i += len
-          matched = true
-        }
-      }
-      if (!matched) { push(raw(i) & 0xFF); i += 1 }
-    }
-    java.util.Arrays.copyOf(toks, n)
-  }
-
-  /** Largest length code whose base ≤ len (code 285 = exactly 258,
-    * which the scan lands on because 285's base is 258 itself).
-    */
-  private def lenSym(len: Int): Int = {
-    var c = 28
-    while (lenBase(c) > len) c -= 1
-    c
-  }
-
-  /** Largest distance code whose base ≤ dist. */
-  private def distSym(dist: Int): Int = {
-    var c = 29
-    while (distBase(c) > dist) c -= 1
-    c
-  }
-
-  /** Canonical code assignment from lengths (§3.2.2's next_code). */
-  private def canonCodes(lengths: Array[Int]): Array[Int] = {
-    val maxLen = lengths.foldLeft(0)(math.max)
-    val count = new Array[Int](maxLen + 1)
-    lengths.foreach(l => if (l > 0) count(l) += 1)
-    val next = new Array[Int](maxLen + 1)
-    var code = 0
-    var l = 1
-    while (l <= maxLen) {
-      code = (code + (if (l > 1) count(l - 1) else 0)) << 1
-      next(l) = code
-      l += 1
-    }
-    lengths.map { ln =>
-      if (ln == 0) 0 else { val c = next(ln); next(ln) += 1; c }
-    }
-  }
-
-  /** Deterministic length-limited Huffman code lengths: heap build
-    * with (weight, node-id) tie order, then zlib's overflow remedy —
-    * halve the frequencies and rebuild — if any depth exceeds maxLen
-    * (converges: all-1 weights give a balanced tree of depth
-    * ⌈log2 n⌉ ≤ 9 for n ≤ 288).
-    */
-  private def huffLengths(freq0: Array[Long], maxLen: Int): Array[Int] = {
-    val n = freq0.length
-    val live = (0 until n).filter(freq0(_) > 0).toArray
-    val out = new Array[Int](n)
-    if (live.length == 0) return out
-    if (live.length == 1) { out(live(0)) = 1; return out }
-    var f = live.map(freq0)
-    var depths: Array[Int] = null
-    var ok = false
-    while (!ok) {
-      val m = live.length
-      val w = new Array[Long](2 * m - 1)
-      val left = new Array[Int](2 * m - 1)
-      val right = new Array[Int](2 * m - 1)
-      Array.copy(f, 0, w, 0, m)
-      val ord: Ordering[Int] = Ordering.by(i => (w(i), i.toLong))
-      val pq = scala.collection.mutable.PriorityQueue.empty[Int](ord.reverse)
-      (0 until m).foreach(pq.enqueue(_))
-      var next = m
-      while (pq.size > 1) {
-        val a = pq.dequeue(); val b = pq.dequeue()
-        w(next) = w(a) + w(b); left(next) = a; right(next) = b
-        pq.enqueue(next); next += 1
-      }
-      depths = new Array[Int](m)
-      def walk(node: Int, d: Int): Unit =
-        if (node < m) depths(node) = d
-        else { walk(left(node), d + 1); walk(right(node), d + 1) }
-      walk(next - 1, 0)
-      if (depths.max <= maxLen) ok = true
-      else f = f.map(v => math.max(1L, (v + 1) >> 1))
-    }
-    var k = 0
-    while (k < live.length) { out(live(k)) = depths(k); k += 1 }
-    out
-  }
-
-  /** RLE-encode a code-length sequence with the §3.2.7 CL alphabet:
-    * (symbol, extraBitsValue) pairs, extra = -1 for plain lengths.
-    */
-  private def rleCodeLengths(lens: Array[Int]): Array[(Int, Int)] = {
-    val outb = new scala.collection.mutable.ArrayBuffer[(Int, Int)](
-      lens.length)
-    var i = 0
-    while (i < lens.length) {
-      val v = lens(i)
-      var run = 1
-      while (i + run < lens.length && lens(i + run) == v) run += 1
-      if (v == 0) {
-        var r = run
-        while (r >= 11) { val take = math.min(138, r)
-          outb += ((18, take - 11)); r -= take }
-        if (r >= 3) { outb += ((17, r - 3)); r = 0 }
-        while (r > 0) { outb += ((0, -1)); r -= 1 }
-      } else {
-        outb += ((v, -1))
-        var r = run - 1
-        while (r >= 3) { val take = math.min(6, r)
-          outb += ((16, take - 3)); r -= take }
-        while (r > 0) { outb += ((v, -1)); r -= 1 }
-      }
-      i += run
-    }
-    outb.toArray
-  }
-
-  /** Emit the LZ77 token stream under the given canonical tables,
-    * then the end-of-block code.
-    */
-  private def emitTokens(bw: BitWriter, toks: Array[Int],
-      litCode: Array[Int], litLen: Array[Int],
-      dCode: Array[Int], dLen: Array[Int]): Unit = {
-    toks.foreach { t =>
-      if ((t & (1 << 30)) == 0) bw.huff(litCode(t), litLen(t))
-      else {
-        val len = (t >>> 16) & 0x3FFF
-        val dist = t & 0xFFFF
-        val lc = lenSym(len)
-        bw.huff(litCode(257 + lc), litLen(257 + lc))
-        bw.bits(len - lenBase(lc), lenExtra(lc))
-        val dc = distSym(dist)
-        bw.huff(dCode(dc), dLen(dc))
-        bw.bits(dist - distBase(dc), distExtra(dc))
-      }
-    }
-    bw.huff(litCode(256), litLen(256))
-  }
-
-  /** zlib deflate in the caller's chosen mode: 0 = stored (the r13
-    * subset, via zlibStore), 1 = one fixed-Huffman block, 2 = one
-    * dynamic-Huffman block (frequencies → length-limited canonical
-    * Huffman → RLE'd code-length header). Modes 1/2 run the greedy
-    * LZ77 matcher, so tiled images genuinely compress and the
-    * decoder's window-copy path is on every roundtrip.
-    */
-  def zlibDeflate(raw: Array[Byte], mode: Int): Array[Byte] = mode match {
-    case 0 => zlibStore(raw)
-    case m =>
-      require(m == 1 || m == 2, s"zlibDeflate: unknown mode $m")
-      val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-      out.write(0x78); out.write(0x01)
-      val bw = new BitWriter(out)
-      val toks = lz77Tokens(raw)
-      bw.bits(1, 1) // BFINAL: single block
-      if (m == 1) {
-        bw.bits(1, 2)
-        emitTokens(bw, toks, fixedLitCodes, fixedLitLen,
-          fixedDistCodes, fixedDistLen)
-      } else {
-        bw.bits(2, 2)
-        val litFreq = new Array[Long](286)
-        val distFreq = new Array[Long](30)
-        toks.foreach { t =>
-          if ((t & (1 << 30)) == 0) litFreq(t) += 1
-          else {
-            litFreq(257 + lenSym((t >>> 16) & 0x3FFF)) += 1
-            distFreq(distSym(t & 0xFFFF)) += 1
-          }
-        }
-        litFreq(256) += 1
-        // §3.2.7 requires ≥1 distance code even in an all-literal
-        // block; a single 1-bit dummy code is the standard answer.
-        if (distFreq.forall(_ == 0)) distFreq(0) = 1
-        val litLenA = huffLengths(litFreq, 15)
-        val distLenA = huffLengths(distFreq, 15)
-        val hlit = math.max(257,
-          litLenA.lastIndexWhere(_ > 0) + 1)
-        val hdist = math.max(1, distLenA.lastIndexWhere(_ > 0) + 1)
-        val seq = rleCodeLengths(
-          java.util.Arrays.copyOfRange(litLenA, 0, hlit) ++
-            java.util.Arrays.copyOfRange(distLenA, 0, hdist))
-        val clFreq = new Array[Long](19)
-        seq.foreach { case (s, _) => clFreq(s) += 1 }
-        val clLen = huffLengths(clFreq, 7)
-        val clCode = canonCodes(clLen)
-        var hclen = 19
-        while (hclen > 4 && clLen(clOrder(hclen - 1)) == 0) hclen -= 1
-        bw.bits(hlit - 257, 5); bw.bits(hdist - 1, 5); bw.bits(hclen - 4, 4)
-        var i = 0
-        while (i < hclen) { bw.bits(clLen(clOrder(i)), 3); i += 1 }
-        seq.foreach { case (s, extra) =>
-          bw.huff(clCode(s), clLen(s))
-          if (s == 16) bw.bits(extra, 2)
-          else if (s == 17) bw.bits(extra, 3)
-          else if (s == 18) bw.bits(extra, 7)
-        }
-        emitTokens(bw, toks, canonCodes(litLenA), litLenA,
-          canonCodes(distLenA), distLenA)
-      }
-      bw.flushByte()
-      val ad = new java.util.zip.Adler32
-      ad.update(raw)
-      out.write(be32(ad.getValue), 0, 4)
+  def zlibDeflate(raw: Array[Byte], mode: Int): Array[Byte] = {
+    import java.util.zip.Deflater._
+    require(0 <= mode && mode <= 2, s"zlibDeflate: unknown mode $mode")
+    val d = new java.util.zip.Deflater(
+      Array(NO_COMPRESSION, BEST_SPEED, BEST_COMPRESSION)(mode))
+    try {
+      d.setInput(raw); d.finish()
+      val out = new java.io.ByteArrayOutputStream(raw.length + 64)
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
       out.toByteArray
+    } finally d.end()
+  }
+
+  /** Inflate an untrusted zlib stream that must decode to exactly
+    * `expectedLen` bytes; any other stream fails with an
+    * IllegalArgumentException whose message starts "zlib:".
+    */
+  def zlibInflate(b: Array[Byte], expectedLen: Int): Array[Byte] = {
+    val inf = new java.util.zip.Inflater()
+    try {
+      inf.setInput(b)
+      val out = new Array[Byte](expectedLen + 1) // one spare byte detects overlong output
+      var n = 0
+      try {
+        while (n < out.length && !inf.finished() && !inf.needsInput() &&
+            !inf.needsDictionary())
+          n += inf.inflate(out, n, out.length - n)
+      } catch {
+        case e: java.util.zip.DataFormatException =>
+          throw new IllegalArgumentException(s"zlib: ${e.getMessage}", e)
+      }
+      require(!inf.needsDictionary(), "zlib: preset dictionary unsupported")
+      require(n <= expectedLen, s"zlib: output exceeds $expectedLen bytes")
+      require(inf.finished(), "zlib: truncated stream")
+      require(n == expectedLen, s"zlib: inflated $n bytes, expected $expectedLen")
+      java.util.Arrays.copyOf(out, n)
+    } finally inf.end()
   }
 
   /** PNG Paeth predictor: nearest of left/up/up-left to a+b−c. */
@@ -768,7 +211,7 @@ object Multimodal {
     * decoder's filter reversal is exercised on every image; the
     * filters operate bytewise with the left neighbor at offset bpp,
     * exactly the PNG spec's bpp-parametric rule. IDAT is zlib in the
-    * caller's deflate mode (0 stored / 1 fixed / 2 dynamic Huffman),
+    * caller's deflate mode (0 stored / 1 fastest / 2 best compression),
     * CRC-32 per chunk.
     */
   def encodePng(pix: Array[Byte], w: Int, h: Int, bpp: Int,
@@ -823,10 +266,10 @@ object Multimodal {
     * 0) or truecolor (color type 2): signature sniff, chunk walk with
     * per-chunk CRC-32 verification (ancillary chunks skipped, multiple
     * IDATs concatenated per spec, IHDR-before-IDAT ordering enforced),
-    * zlib inflate (full RFC 1951 — stored, fixed, and dynamic
-    * Huffman), then per-scanline bpp-parametric filter REVERSAL for
-    * all five filter types. Returns (w, h, bpp, samples row-major —
-    * 1 byte per pixel for grayscale, RGB triplets for truecolor).
+    * zlib inflate to exactly h·(stride+1) bytes, then per-scanline
+    * bpp-parametric filter REVERSAL for all five filter types. Returns
+    * (w, h, bpp, samples row-major — 1 byte per pixel for grayscale,
+    * RGB triplets for truecolor).
     */
   def decodePng(b: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
     require(b.length >= 8 && b.take(8).sameElements(pngSig),
@@ -867,10 +310,13 @@ object Multimodal {
       p += 12 + len
     }
     require(ihdrSeen, "png: missing IHDR chunk")
-    val raw = zlibInflate(idat.toByteArray)
     val stride = w * bpp
-    require(raw.length == h * (stride + 1),
-      s"png: scanline payload ${raw.length} != $h*($stride+1)")
+    val rawLen = h.toLong * (w.toLong * bpp + 1)
+    // Deflate expands at most 1032:1, so a larger claim is corrupt and is
+    // rejected before the output buffer is allocated.
+    require(rawLen < Int.MaxValue && rawLen <= 1032L * idat.size + 64,
+      s"png: ${w}x$h scanlines cannot fit in a ${idat.size}-byte IDAT")
+    val raw = zlibInflate(idat.toByteArray, rawLen.toInt)
     val pix = new Array[Byte](stride * h)
     var y = 0
     while (y < h) {
@@ -1160,7 +606,7 @@ object Multimodal {
     "mm_resize" -> { (s, d) =>
       // REAL pixel resize (round 13). Each doc's text bytes become a
       // w×h grayscale image (tilePixels), written as a spec-conformant
-      // PNG (all-five-filter scanlines + stored-deflate zlib IDAT),
+      // PNG (all-five-filter scanlines + zlib IDAT in the doc's mode),
       // then DECODED back from the bytes alone and nearest-neighbor
       // resampled to a fixed 4×4 thumbnail — the fixed-size-output-
       // per-variable-size-blob batch shape image loaders need. The
@@ -1608,7 +1054,7 @@ object Multimodal {
             val (w, h) = pixDims(data.length)
             // Re-encodes diverge from the original on BOTH axes a real
             // re-compressor moves: the filter schedule AND the deflate
-            // block type — decode still normalizes them to one digest.
+            // mode — decode still normalizes them to one digest.
             val png = encodeGrayPng(tilePixels(data, w, h), w, h,
               filterOffset = if (reenc) 1 else 0,
               deflateMode = (if (reenc) (id + 1) % 3 else id % 3).toInt)
@@ -1944,7 +1390,7 @@ object Multimodal {
     // ord(text[(k % n) + 1]) — ASCII ⇒ char == byte. The oracle
     // PREDICTS each op from that construction; the Spark side must
     // RECOVER it through the PNG encode→decode roundtrip (five-filter
-    // scanlines, stored-deflate zlib, CRC/Adler verification).
+    // scanlines, zlib in the doc's mode, CRC/Adler verification).
     // Thumbnail sample (i, j): pixel at x = i·w/4, y = j·h/4.
     "mm_resize" ->
       """WITH t AS (

@@ -32,6 +32,18 @@ class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getDouble(1) === 2.0)
   }
 
+  test("every GraftFunctions name resolves from plain SQL to its injected class") {
+    // The names come from the shared list itself, and `register` is
+    // never called here: each must already be in the session through
+    // GraftExtensions, backed by the expression class the list names
+    // (a `register`-created entry would report a builder lambda).
+    for ((name, cls, _) <- graft.functions.GraftFunctions.all) {
+      val desc = spark.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(desc.contains(s"Class: ${cls.getName}"),
+        s"$name does not resolve to ${cls.getName}: ${desc.mkString(" | ")}")
+    }
+  }
+
   test("surfaced bloom pair: no false negatives, measurable selectivity") {
     // graft_bloom_agg/graft_might_contain (Spark's own expressions,
     // injected by GraftExtensions): every inserted key MUST probe true

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Multimodal._
 
-/** Unit gates for the round-13 pixel codec (SURVEY.md §2i multimodal):
-  * the zlib stored-deflate framing, the full five-filter PNG
-  * encode→decode roundtrip, and loud rejection of corrupted streams.
-  * These run WITHOUT Spark — the codec is plain byte arithmetic — so
-  * a framing slip fails in milliseconds, not via the oracle gate.
+/** Unit gates for the pixel codec (SURVEY.md §2i multimodal): the zlib
+  * modes over java.util.zip, the full five-filter PNG encode→decode
+  * roundtrip, and loud rejection of corrupted streams. These run
+  * WITHOUT Spark, so a framing slip fails in milliseconds, not via the
+  * oracle gate.
   */
 class MultimodalSpec extends AnyFunSuite {
 
@@ -15,23 +15,52 @@ class MultimodalSpec extends AnyFunSuite {
     Array.tabulate(n)(i => ((i * 31 + 7) % 256).toByte)
 
   test("zlib stored roundtrip, including the multi-block path past 65535 bytes") {
-    for (n <- Seq(0, 1, 17, 65534, 65535, 65536, 200000)) {
+    for (n <- Seq(0, 1, 2, 3, 17, 100, 5000, 65534, 65535, 65536, 70000, 200000)) {
       val raw = pix(n)
-      val z = zlibStore(raw)
+      val z = zlibDeflate(raw, 0)
       assert((z(0) & 0x0F) == 8 && ((z(0) & 0xFF) * 256 + (z(1) & 0xFF)) % 31 == 0,
         s"bad zlib header for n=$n")
-      assert(zlibInflateStored(z).sameElements(raw), s"roundtrip broke at n=$n")
+      assert((z(2) >> 1 & 3) == 0, s"mode 0 must emit stored blocks at n=$n")
+      assert(zlibInflate(z, n).sameElements(raw), s"roundtrip broke at n=$n")
     }
   }
 
   test("zlib inflate rejects LEN/NLEN and Adler-32 corruption loudly") {
-    val z = zlibStore(pix(100))
+    val z = zlibDeflate(pix(100), 0)
     val nlenBad = z.clone(); nlenBad(5) = (nlenBad(5) ^ 0x01).toByte
-    val e1 = intercept[IllegalArgumentException](zlibInflateStored(nlenBad))
-    assert(e1.getMessage.contains("LEN/NLEN"))
+    val e1 = intercept[IllegalArgumentException](zlibInflate(nlenBad, 100))
+    assert(e1.getMessage.startsWith("zlib:"), e1.getMessage)
+    assert(e1.getMessage.contains("stored block lengths"), e1.getMessage)
     val adlerBad = z.clone(); adlerBad(z.length - 1) = (adlerBad(z.length - 1) ^ 0x01).toByte
-    val e2 = intercept[IllegalArgumentException](zlibInflateStored(adlerBad))
-    assert(e2.getMessage.contains("Adler-32"))
+    val e2 = intercept[IllegalArgumentException](zlibInflate(adlerBad, 100))
+    assert(e2.getMessage.contains("data check"), e2.getMessage)
+  }
+
+  test("inflate and PNG decode reject wrong or oversized lengths and a preset dictionary") {
+    val z = zlibDeflate(pix(100), 1)
+    val e1 = intercept[IllegalArgumentException](zlibInflate(z, 99))
+    assert(e1.getMessage.contains("exceeds 99"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](zlibInflate(z, 101))
+    assert(e2.getMessage.contains("expected 101"), e2.getMessage)
+    val d = new java.util.zip.Deflater()
+    val withDict = try {
+      d.setDictionary(pix(32)); d.setInput(pix(100)); d.finish()
+      val buf = new Array[Byte](512)
+      java.util.Arrays.copyOf(buf, d.deflate(buf))
+    } finally d.end()
+    val e3 = intercept[IllegalArgumentException](zlibInflate(withDict, 100))
+    assert(e3.getMessage.contains("preset dictionary"), e3.getMessage)
+    // An IHDR (with a valid CRC) claiming 30000x30000 is refused before
+    // a 900 MB scanline buffer is allocated.
+    val big = encodeGrayPng(pix(64), 8, 8).clone()
+    for (o <- Seq(16, 20)) {
+      big(o + 2) = (30000 >> 8).toByte; big(o + 3) = (30000 & 0xFF).toByte
+    }
+    val crc = new java.util.zip.CRC32
+    crc.update(big, 12, 17)
+    for (k <- 0 until 4) big(29 + k) = (crc.getValue >>> (24 - 8 * k)).toByte
+    val e4 = intercept[IllegalArgumentException](decodeGrayPng(big))
+    assert(e4.getMessage.contains("cannot fit"), e4.getMessage)
   }
 
   test("PNG grayscale roundtrip exercises all five filters and every small dim") {
@@ -77,56 +106,45 @@ class MultimodalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("WAV"), s"unexpected: ${e.getMessage}")
   }
 
-  // ---- Round-14 gates: full RFC 1951 inflate (fixed + dynamic
-  // Huffman) and the matching encoder modes. Corpus shapes chosen to
-  // force both the literal path and the LZ77 window-copy path
-  // (including overlapping copies with dist < len).
+  // ---- Compressed modes. Corpus shapes force both the literal path
+  // and the LZ77 window-copy path (including overlapping copies with
+  // dist < len).
 
   private def repetitive(n: Int): Array[Byte] =
     Array.tabulate(n)(i => ("graft".charAt(i % 5)).toByte)
 
-  test("fixed-Huffman deflate roundtrips through the full inflate") {
-    for (n <- Seq(0, 1, 2, 3, 100, 5000, 70000)) {
-      for (raw <- Seq(pix(n), repetitive(n))) {
-        val z = zlibDeflate(raw, 1)
-        assert(((z(0) & 0xFF) * 256 + (z(1) & 0xFF)) % 31 == 0)
-        assert(zlibInflate(z).sameElements(raw),
-          s"fixed roundtrip broke at n=$n")
+  for ((mode, name) <- Seq(1 -> "BEST_SPEED", 2 -> "BEST_COMPRESSION"))
+    test(s"mode-$mode ($name) deflate roundtrips through the inflate") {
+      for (n <- Seq(0, 1, 2, 3, 100, 5000, 70000)) {
+        for (raw <- Seq(pix(n), repetitive(n))) {
+          val z = zlibDeflate(raw, mode)
+          assert(((z(0) & 0xFF) * 256 + (z(1) & 0xFF)) % 31 == 0)
+          assert(zlibInflate(z, n).sameElements(raw),
+            s"mode-$mode roundtrip broke at n=$n")
+        }
       }
     }
-  }
-
-  test("dynamic-Huffman deflate roundtrips through the full inflate") {
-    for (n <- Seq(0, 1, 2, 3, 100, 5000, 70000)) {
-      for (raw <- Seq(pix(n), repetitive(n))) {
-        val z = zlibDeflate(raw, 2)
-        assert(zlibInflate(z).sameElements(raw),
-          s"dynamic roundtrip broke at n=$n")
-      }
-    }
-  }
 
   test("overlapping LZ77 copy (dist < len) decodes correctly in both modes") {
-    // 3-byte period over 600 bytes: the greedy matcher emits dist=3
-    // matches far longer than 3, so the decoder MUST copy byte-by-byte.
+    // 3-byte period over 600 bytes: dist=3 matches far longer than 3,
+    // so the decoder must copy byte-by-byte. The size bound also shows
+    // that modes 1 and 2 really compress.
     val raw = Array.tabulate(600)(i => "abc".charAt(i % 3).toByte)
     for (mode <- Seq(1, 2)) {
       val z = zlibDeflate(raw, mode)
       assert(z.length < raw.length / 4,
         s"mode $mode should compress a period-3 stream hard (${z.length})")
-      assert(zlibInflate(z).sameElements(raw))
+      assert(zlibInflate(z, raw.length).sameElements(raw))
     }
   }
 
   test("full inflate also accepts the stored subset and mixed corpora agree") {
     for (n <- Seq(0, 1, 100, 70000)) {
       val raw = pix(n)
-      assert(zlibInflate(zlibStore(raw)).sameElements(raw))
       // All three modes carry the same payload.
-      assert(zlibInflate(zlibDeflate(raw, 0)).sameElements(
-        zlibInflate(zlibDeflate(raw, 1))))
-      assert(zlibInflate(zlibDeflate(raw, 1)).sameElements(
-        zlibInflate(zlibDeflate(raw, 2))))
+      for (mode <- 0 to 2)
+        assert(zlibInflate(zlibDeflate(raw, mode), n).sameElements(raw),
+          s"mode $mode broke at n=$n")
     }
   }
 
@@ -136,16 +154,16 @@ class MultimodalSpec extends AnyFunSuite {
       val z = zlibDeflate(raw, mode)
       val adlerBad = z.clone()
       adlerBad(z.length - 1) = (adlerBad(z.length - 1) ^ 0x01).toByte
-      val e1 = intercept[IllegalArgumentException](zlibInflate(adlerBad))
-      assert(e1.getMessage.contains("Adler-32") ||
-        e1.getMessage.contains("deflate"), s"mode $mode: ${e1.getMessage}")
+      val e1 = intercept[IllegalArgumentException](zlibInflate(adlerBad, 500))
+      assert(e1.getMessage.contains("data check"), s"mode $mode: ${e1.getMessage}")
       val trunc = z.take(z.length / 2)
-      intercept[IllegalArgumentException](zlibInflate(trunc))
+      val e2 = intercept[IllegalArgumentException](zlibInflate(trunc, 500))
+      assert(e2.getMessage.contains("truncated"), s"mode $mode: ${e2.getMessage}")
     }
     // Reserved btype=11: header bits BFINAL=1, BTYPE=3 -> byte 0b00000111.
     val res = Array[Byte](0x78, 0x01, 0x07, 0, 0, 0, 0, 1)
-    val e3 = intercept[IllegalArgumentException](zlibInflate(res))
-    assert(e3.getMessage.contains("reserved btype"))
+    val e3 = intercept[IllegalArgumentException](zlibInflate(res, 0))
+    assert(e3.getMessage.contains("invalid block type"), e3.getMessage)
   }
 
   test("full inflate rejects an over-subscribed dynamic Huffman header") {
@@ -160,11 +178,11 @@ class MultimodalSpec extends AnyFunSuite {
     val body = bits.grouped(8).map(g =>
       g.zipWithIndex.map { case (b, i) => b << i }.sum.toByte).toArray
     val stream = Array[Byte](0x78, 0x01) ++ body ++ Array[Byte](0, 0, 0, 1)
-    val e = intercept[IllegalArgumentException](zlibInflate(stream))
-    assert(e.getMessage.contains("over-subscribed"), e.getMessage)
+    val e = intercept[IllegalArgumentException](zlibInflate(stream, 0))
+    assert(e.getMessage.contains("invalid code lengths set"), e.getMessage)
   }
 
-  test("PNG roundtrip holds under fixed and dynamic IDAT modes") {
+  test("PNG roundtrip holds under the compressed IDAT modes") {
     for (w <- Seq(8, 11, 16); h <- Seq(8, 10, 14); mode <- Seq(1, 2)) {
       val img = pix(w * h)
       val png = encodeGrayPng(img, w, h, deflateMode = mode)
