@@ -322,10 +322,10 @@ object Graph {
       // table under the threshold and degrades to a shuffle join above
       // it — no forced hint, the graph_triangles rationale). The two
       // per-round scalars (dangling mass D, change fingerprint) ride
-      // the SAME single-row aggregate the driver reads each round — the
-      // ccLabels labelSum pattern — so a round is exactly one job with
-      // no broadcast-exchange sub-jobs (the first cut paid 2 broadcast
-      // jobs/round; this shape halved the wall). Stationarity detection
+      // the SAME single-row aggregate read back each round, so a round
+      // is exactly one job with no broadcast-exchange sub-jobs
+      // (the first cut paid 2 broadcast jobs/round; this shape halved
+      // the wall). Stationarity detection
       // is a collision-resistant fingerprint (exact decimal sum of
       // q·salted-hash — changes iff some q changed, w.h.p.); the loud
       // EXACT certificate below makes a fingerprint collision a noisy
@@ -1637,84 +1637,76 @@ object Graph {
       // Connected components of the co-occurrence graph with a
       // component census — the community-structure readout a crawl
       // audit runs (how fragmented is the link graph? how big is the
-      // giant component?). Same iterative min-label fixpoint schedule
-      // as the dedup ccLabels flagship (TextPipeline) with the graph
-      // swapped: label(v) ← min(label(v), min over neighbors) each
-      // round, O(edges) per round, labels auto-broadcast under the
-      // size threshold and degrade to shuffle joins above it (no
-      // forced hint — the ccLabels rationale). Plain propagation, not
-      // pointer doubling: a co-occurrence graph's diameter is tiny
-      // (measured 3 rounds to fixpoint here); ccLabels documents the
-      // doubling variant for long-chain graphs. Per-round driver
-      // traffic is ONE changed-count row (the k_core idiom);
-      // localCheckpoint truncates the per-round lineage growth
-      // (measured exponential analysis cost without it — ccLabels
-      // note). The %10 subgraph bounds the recursive-CTE oracle's
-      // transitive closure, the graph_triangles gate rationale; edges
-      // keep only STRONG ties (pairs co-occurring in ≥ 2 distinct
-      // orders — the standard co-occurrence significance cut), which
-      // both matches how a real community census thresholds noise
-      // edges and fragments this synthetic graph into a multi-
-      // component emission (19 components at sf0.01) instead of one
-      // giant blob — the census grouping is genuinely exercised.
+      // giant component?); the fixpoint itself is [[componentCensus]].
+      // The %10 subgraph bounds the recursive-CTE oracle's transitive
+      // closure, the graph_triangles gate rationale; edges keep only
+      // STRONG ties (pairs co-occurring in ≥ 2 distinct orders — the
+      // standard co-occurrence significance cut), which both matches
+      // how a real community census thresholds noise edges and
+      // fragments this synthetic graph into a multi-component emission
+      // (19 components at sf0.01) instead of one giant blob — the
+      // census grouping is genuinely exercised.
       val op = partPairs(s, d, 10)
       val und = op.as("x").join(op.as("y"),
           col("x.o") === col("y.o") && col("x.p") < col("y.p"))
         .groupBy(col("x.p").as("u"), col("y.p").as("v"))
         .agg(count(lit(1)).as("nord"))
         .filter(col("nord") >= 2).select("u", "v")
-      val edges = und.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .persist() // joined every propagation round
-      var lab = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("mn"))
-        .select(col("id"), least(col("id"), col("mn")).as("lbl"))
-        .localCheckpoint(eager = false).persist()
-      // Edge-violation fixpoint probe (round 15 — the Cc.minLabel
-      // construction and proof): labels converged IFF no edge joins two
-      // labels, checkable on the CURRENT table — the old changed-count
-      // needed one more full (provably identical) propagation round
-      // just to observe stability. count() first materializes the
-      // cache so the probe's label joins see real stats and
-      // auto-broadcast; plain 1-row aggregate, not limit(1).count()
-      // (the Cc.minLabel note: CollectLimit's incremental waves pay
-      // several sequential jobs exactly when the probe finds nothing).
-      def violations(l: DataFrame): Long = {
-        l.count()
-        l.select(col("id").as("ia"), col("lbl").as("la"))
-          .join(edges, col("ia") === col("u"))
-          .join(l.select(col("id").as("ib"), col("lbl").as("lb")),
-            col("v") === col("ib"))
-          .filter(col("la") =!= col("lb"))
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      var viol = violations(lab)
-      var rounds = 0
-      while (viol != 0L && rounds < 20) {
-        val prop = edges.join(lab.withColumnRenamed("id", "v2"),
-            edges("v") === col("v2"))
-          .groupBy(col("u").as("id")).agg(min(col("lbl")).as("nbl"))
-        val next = lab
-          .join(prop.withColumnRenamed("id", "id2"),
-            col("id") === col("id2"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-          .localCheckpoint(eager = false).persist()
-        viol = violations(next)
-        lab.unpersist()
-        lab = next
-        rounds += 1
-      }
-      require(viol == 0L,
-        s"graph_connected_components: no fixpoint in $rounds rounds — " +
-          "emission would carry stale labels, not components")
-      lab.groupBy(col("lbl").as("component_id"))
-        .agg(count(lit(1)).as("n_nodes"),
-          min(col("id")).as("min_node"), max(col("id")).as("max_node"))
-        .orderBy("component_id")
+      componentCensus(und, "graph_connected_components")
     }
   )
+
+  /** Connected-component census of an undirected edge frame (u, v;
+    * each edge listed in either or both directions): one row per
+    * component — component_id (= its min node), n_nodes, min_node,
+    * max_node. Same min-label fixpoint schedule as [[Cc.minLabel]] with
+    * the graph swapped: label(v) ← min(label(v), min over neighbors)
+    * each round, O(edges) per round. Plain propagation, not pointer
+    * jumping: a co-occurrence graph's diameter is tiny (measured at
+    * sf0.01: labels settle in 4 rounds and a 5th confirms the
+    * fixpoint); Cc.minLabel documents the jumping variant.
+    * Each round is ONE SQL execution ([[Cc.round]]): the eager
+    * checkpoint that truncates lineage also observes how many labels
+    * dropped. Edges are symmetric, so no label drops exactly when no
+    * edge joins two different labels — the fixpoint. Throws if that has
+    * not happened after 20 rounds.
+    */
+  def componentCensus(und: DataFrame, what: String): DataFrame = {
+    val edges = und.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .persist() // joined every propagation round
+    var lab = Cc.round(edges.groupBy(col("u").as("id")).agg(min(col("v")).as("mn")),
+      lit(false), col("id"), least(col("id"), col("mn")).as("lbl"))._1
+    val none = lit(null).cast(lab.schema("lbl").dataType)
+    var changed = -1L
+    var rounds = 0
+    while (changed != 0L && rounds < 20) {
+      // Neighbor labels and each node's own label meet in one groupBy:
+      // nbl = min neighbor label, lbl = the node's current label (set
+      // only on its self row). Every node has an edge, so nbl is set.
+      val viaEdges = edges.join(lab, col("v") === col("id"))
+        .select(col("u").as("id"), col("lbl").as("nbl"), none.as("lbl"))
+      val self = lab.select(col("id"), none.as("nbl"), col("lbl"))
+      val next = viaEdges.unionByName(self)
+        .groupBy("id").agg(min(col("nbl")).as("nbl"), max(col("lbl")).as("lbl"))
+      val (cp, n) = Cc.round(next, col("nbl") < col("lbl"),
+        col("id"), least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
+      Cc.release(lab)
+      lab = cp
+      changed = n
+      rounds += 1
+    }
+    require(changed == 0L,
+      s"$what: no fixpoint in $rounds rounds — " +
+        "emission would carry stale labels, not components")
+    edges.unpersist()
+    lab.groupBy(col("lbl").as("component_id"))
+      .agg(count(lit(1)).as("n_nodes"),
+        min(col("id")).as("min_node"), max(col("id")).as("max_node"))
+      .orderBy("component_id")
+  }
 
   /** The graph_louvain_converged oracle's CTE chain on the %10 graph:
     * op/und/adj/deg/m, the 40-round unrolled fine sweep, the exact Q

@@ -133,32 +133,59 @@ object TextPipeline {
       |  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b) t
       |WHERE jac >= $ShingleT ORDER BY id_a, id_b""".stripMargin
 
+  /** Exact near-dup pairs (id_a < id_b, jaccard), unsorted — shared by
+    * the dedup_jaccard_pairs emission and the [[ccLabels]] fixpoint.
+    * Blocked on (lang, source): explode → self-join on shared token
+    * within block → |A∩B| / (|A|+|B|−|A∩B|).
+    */
+  private def jaccardPairs(s: SparkSession, d: String): DataFrame = {
+    val tok = tokens(s, d).persist() // 3 uses: sizes + both join sides
+    val sizes = tok.groupBy(col("doc_id").as("sz_id"))
+      .agg(count(lit(1)).as("n_tok"))
+    val a = tok.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("w"))
+    val b = tok.select(col("doc_id").as("id_b"),
+      col("lang").as("lang_b"), col("source").as("source_b"), col("w").as("w_b"))
+    val inter = a.join(b,
+        col("w") === col("w_b") && col("lang") === col("lang_b") &&
+          col("source") === col("source_b") && col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_inter"))
+    inter
+      .join(sizes.withColumnRenamed("sz_id", "id_a").withColumnRenamed("n_tok", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed("sz_id", "id_b").withColumnRenamed("n_tok", "n_b"), "id_b")
+      .withColumn("jac", col("n_inter").cast(DoubleType) /
+        (col("n_a") + col("n_b") - col("n_inter")))
+      .filter(col("jac") >= 0.8)
+      .select(col("id_a"), col("id_b"), round(col("jac"), 6).as("jaccard"))
+  }
+
   /** Min-label connected components over the verified near-dup edge set
     * (the dedup_jaccard_pairs truth pairs): each round a node takes the
     * min label among itself, its neighbors, AND its label's label
-    * (pointer jumping) — the label-doubling that turns O(diameter)
-    * propagation into O(log diameter) distributed join rounds; measured
-    * here: 5 rounds to fixpoint (component diameter <= 5 at sf0.1),
-    * with per-round cost dominated by fixed job overhead at test size,
-    * not data. The driver-side loop only reads one tiny aggregate per
-    * round; all data stays distributed. Returns the converged
-    * (id, label) table, cached and already materialized. Shared by
-    * dedup_clusters (cluster emission) and pipeline_dedup_corpus
-    * (survivor mapping over the full corpus).
+    * (pointer jumping, which shortens long chains; [[Cc]] states its
+    * limits); measured at sf0.01: 3 rounds, the last of which only
+    * confirms the fixpoint, with per-round cost dominated by fixed job
+    * overhead at test size, not data. The loop reads back one
+    * observed count per round; all data stays distributed. Returns
+    * the converged (id, label) table, checkpointed and already
+    * materialized. Shared by dedup_clusters (cluster emission) and
+    * pipeline_dedup_corpus (survivor mapping over the full corpus).
     */
-  // The converged label table is persisted because each consumer
-  // (cluster emission, corpus label join) references it from several
-  // plan branches. Callers receive a LAZY DataFrame, so unpersisting
-  // inside this method would defeat the cache before materialization;
-  // instead the PREVIOUS call's table is released on the next call,
-  // bounding the session to one live cached label table (KBs per 10^6
-  // near-dup nodes) instead of one per query execution.
+  // The converged label table's checkpoint blocks back each consumer
+  // (cluster emission, corpus label join). Callers receive a LAZY
+  // DataFrame, so releasing them inside this method would drop the
+  // only copy before materialization; instead the PREVIOUS call's
+  // table is released on the next call, bounding the session to one
+  // live label table (KBs per 10^6 near-dup nodes) instead of one per
+  // query execution.
   private var lastCcLabels: Option[DataFrame] = None
 
   private def ccLabels(s: SparkSession, d: String): DataFrame = synchronized {
-    val truthPairs = queries("dedup_jaccard_pairs")(s, d)
-      .select(col("id_a"), col("id_b"))
-    // The min-label pointer-doubling fixpoint itself lives in
+    // The unsorted pairs, not the dedup_jaccard_pairs emission:
+    // its orderBy would cost a range-sampling job and an exchange the
+    // fixpoint never needs.
+    val truthPairs = jaccardPairs(s, d).select(col("id_a"), col("id_b"))
+    // The min-label pointer-jumping fixpoint itself lives in
     // [[Cc.minLabel]] (shared with pipeline_mm_dedup since round 14);
     // this wrapper adds the per-session memoization the converged/
     // full siblings rely on.
@@ -167,7 +194,7 @@ object TextPipeline {
     // (now-stopped) SparkSession — unpersist on a dead context NPEs in
     // BlockManagerMaster, and a dead context has nothing to free.
     lastCcLabels.foreach { prev =>
-      try if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist(): Unit
+      try if (!prev.sparkSession.sparkContext.isStopped) Cc.release(prev)
       catch { case _: Throwable => }
     }
     lastCcLabels = Some(labels)
@@ -440,27 +467,7 @@ object TextPipeline {
     },
 
     "dedup_jaccard_pairs" -> { (s, d) =>
-      // Exact near-dup pairs, blocked on (lang, source): explode →
-      // self-join on shared token within block → |A∩B| / (|A|+|B|−|A∩B|).
-      val tok = tokens(s, d).persist() // 3 uses: sizes + both join sides
-      val sizes = tok.groupBy(col("doc_id").as("sz_id"))
-        .agg(count(lit(1)).as("n_tok"))
-      val a = tok.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("w"))
-      val b = tok.select(col("doc_id").as("id_b"),
-        col("lang").as("lang_b"), col("source").as("source_b"), col("w").as("w_b"))
-      val inter = a.join(b,
-          col("w") === col("w_b") && col("lang") === col("lang_b") &&
-            col("source") === col("source_b") && col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("n_inter"))
-      inter
-        .join(sizes.withColumnRenamed("sz_id", "id_a").withColumnRenamed("n_tok", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("sz_id", "id_b").withColumnRenamed("n_tok", "n_b"), "id_b")
-        .withColumn("jac", col("n_inter").cast(DoubleType) /
-          (col("n_a") + col("n_b") - col("n_inter")))
-        .filter(col("jac") >= 0.8)
-        .select(col("id_a"), col("id_b"), round(col("jac"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
+      jaccardPairs(s, d).orderBy("id_a", "id_b")
     },
 
     "dedup_containment" -> { (s, d) =>
@@ -752,9 +759,9 @@ object TextPipeline {
       // per-round work drops from corpus-size to vocabulary-size (the
       // Zipf bound — a first cut over raw words measured 9.4 s at
       // sf0.1, this shape ~6× less). (2) the round's winner is ONE
-      // (pair, n) row — an O(1) driver read per round, the ccLabels
-      // labelSum class — re-embedded as a plan literal, so a round is
-      // exactly ONE job (the vocabulary-bounded pair-count aggregate;
+      // (pair, n) row — an O(1) read per round — re-embedded
+      // as a plan literal, so a round is exactly ONE job (the
+      // vocabulary-bounded pair-count aggregate;
       // map-side combine caps task emissions by (alphabet+merges)²)
       // and the merge decode is 12 driver-side string substitutions.
       // 12 is the gate-bounded round count; production trains 30k

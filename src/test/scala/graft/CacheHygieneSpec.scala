@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - SQL CacheManager entries from `df.persist()` — released by
   *    `spark.catalog.clearCache()`;
-  *  - RDD-level blocks from `localCheckpoint(eager = false).persist()`
-  *    (the fixpoint loops' per-round state) — INVISIBLE to the catalog
-  *    call; only `sparkContext.getPersistentRDDs` sees them.
+  *  - RDD-level blocks from `localCheckpoint` (the fixpoint loops'
+  *    per-round state, eager or `.persist()`ed) — INVISIBLE to the
+  *    catalog call; only `sparkContext.getPersistentRDDs` sees them.
   *
   * The contract under test: after `CacheDrain.drain` (what Bench,
   * Verify, and Prof run between queries), BOTH layers are empty — so a
@@ -47,7 +47,8 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     "graph_pagerank_converged", "graph_hits_converged",
     "sim_kmeans_converged", "feat_pca_power_converged",
     "bpe_train_loop", "bpe_encode",
-    "dedup_clusters", "dedup_minhash", "text_tfidf",
+    "dedup_clusters", "pipeline_dedup_corpus", "pipeline_mm_dedup",
+    "graph_connected_components", "dedup_minhash", "text_tfidf",
     "graph_label_prop", "graph_k_core",
     "graph_louvain_converged", "sim_pq_train_converged", "sim_pq_adc")
 

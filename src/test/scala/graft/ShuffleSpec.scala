@@ -85,7 +85,13 @@ class ShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim_pq_adc moves input-size-invariant shuffle bytes (map-only claim)") {
+    // Both tiers must measure the same path: a codebook an earlier
+    // process published to the cross-JVM store would let one tier
+    // consume it (0 shuffle bytes) while the other trains. Clear the
+    // store before each tier so both train, as bpe_train_loop's does.
+    ArtifactMemo.clearStoreForTest()
     val small = shuffleBytes("sim_pq_adc", sfSmall)
+    ArtifactMemo.clearStoreForTest()
     val big = shuffleBytes("sim_pq_adc", sfBig)
     assert(big <= math.max(small, 1L) * 3 + (64 << 10),
       s"sim_pq_adc shuffle bytes grew with input: $small -> $big on a 10x tier step")
