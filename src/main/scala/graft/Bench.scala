@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON metric line. The stdout line must stay TINY: the driver
@@ -11,42 +11,13 @@ import java.nio.file.{Files, Paths}
   * the full per-query timing map goes solely to `bench_result.json` and
   * `$SPARK_GRAFT_BENCH_OUT`. A query failing ANY repeat lands on the
   * "errors" list; its value is the best successful time, or -1 when
-  * every repeat failed.
+  * every repeat failed. The files also carry "causes": per failed key,
+  * the first failure's exception class and message (300 chars at most).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Single ~20MB parquet files per table would otherwise scan on a
-      // couple of cores; smaller split size keeps all of local[N] busy.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // AQE partition coalescing, tuned per the optimization guide §2.2
-      // (round 14). parallelismFirst=false is Spark's own documented
-      // production recommendation: the default true pins every
-      // post-shuffle read at cluster-width task counts, which at the
-      // gate tiers schedules 32 tasks for KB-sized shuffles — measured
-      // ~0.2-0.3 s of pure scheduling per stage across hundreds of
-      // stages. The advisory size is env-parameterised: 2m matches the
-      // gate tiers (tables are 0.3-11 MB, so ~input/cores); a
-      // production 100 TB deployment sets 64-256m (the guide's
-      // 100 MB-1 GB partition target) via SPARK_GRAFT_ADVISORY_BYTES.
-      // canChangeCachedPlanOutputPartitioning lets AQE coalesce the
-      // materialization of persisted plans too — the fixpoint loops'
-      // per-round localCheckpoint().persist() stages otherwise bypass
-      // AQE entirely and schedule full-width task waves per round.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "2m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     // ERROR, not WARN: several queries make Spark log EXPECTED warnings
     // that carry full stack traces (fs_cat_binary's glob probe hits
     // FileStreamSink's FileNotFoundException warning; the torn-parquet
@@ -63,18 +34,18 @@ object Bench {
     // min-of-N would compare non-uniform work (see BASELINE.md: layout
     // writes are one-time maintenance, excluded from the timed region;
     // roundtrip writes are the op's semantics, timed in every repeat).
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     try SparkEntry.queries("scan_partition_pruning")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // Same contract for the range-clustered layout behind
     // scan_sorted_skipping: the _SUCCESS-guarded write happens here
     // once, so every timed repeat measures the clustered READ.
     try SparkEntry.queries("scan_sorted_skipping")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     try SparkEntry.queries("scan_zorder_skipping")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     try SparkEntry.queries("scan_bloom_skipping")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // Round 3's driver-recorded total (113.7 s) vs the same commit on a
     // quiet box (48.2 s) proved machine load alone can fabricate a >2×
     // swing. Min-of-N per query filters that contention noise out;
@@ -86,12 +57,14 @@ object Bench {
     // checkout without BASELINE_QUERIES.json -> absolute rule only.
     val floors = Floors.load()
     var failed = List.empty[String]
+    val causes = scala.collection.mutable.Map.empty[String, String]
     val results = SparkEntry.queries.map { case (name, fn) =>
       def rep(): Option[Double] = {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(e) =>
+            causes.getOrElseUpdate(name, Report.cause(e).take(300)); false }
         val secs = (System.nanoTime() - t0) / 1e9
         // Drop per-query persist()ed blocks so caches (LSH bands etc.)
         // don't accumulate memory pressure across the 90+ query run —
@@ -142,17 +115,19 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val why = failed.sorted.flatMap(k => causes.get(k).map(c => s"\"$k\":${Report.json(c)}"))
+      .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     val totalR = math.round(total * 1000) / 1000.0
     // Compact line for stdout (fits any tail buffer); full map for files.
     val shortLine =
       s"""{"metric":"total","value":$totalR,"unit":"sec","errors":$errs,"sf":"$sfDir"}"""
     val fullLine =
-      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"errors":$errs,"causes":$why,"sf":"$sfDir"}"""
     val outPaths = "bench_result.json" :: sys.env.get("SPARK_GRAFT_BENCH_OUT").toList
     outPaths.foreach { p =>
       try Files.write(Paths.get(p), (fullLine + "\n").getBytes(StandardCharsets.UTF_8))
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
     spark.stop()
     // Absolute last stdout: nothing (not even spark shutdown chatter) may

@@ -10,10 +10,9 @@ import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin}
   * (SparkSessionExtensions): the as-of join planner strategy, its
   * filter-pushdown rule and every function in `GraftFunctions.all`, so
   * a session built with `.withExtensions(new GraftExtensions)` (as
-  * Verify/Bench do) — or `spark.sql.extensions=graft.GraftExtensions` —
-  * has the whole engine surface without any per-query registration.
-  * Query closures still call `GraftFunctions.register`, which skips
-  * the names injected here, so they also work on a vanilla session.
+  * GraftSession does) — or `spark.sql.extensions=graft.GraftExtensions`
+  * — has the whole engine surface. Queries register nothing: they need
+  * a session that carries these extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

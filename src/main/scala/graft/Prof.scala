@@ -1,35 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
-/** Dev profiling main: time one or more named queries in isolation.
+/** Dev profiling main: time one or more named queries in isolation on
+  * the shipped profile (GraftSession).
   * Usage: runMain graft.Prof <sfDir> <q1,q2,...> [reps]
-  * Prints per-rep wall time and the formatted plan on the last rep.
+  * Prints per-rep wall time. A failing key prints its exception and
+  * stack trace and the run goes on to the next key; Prof exits 1 if any
+  * key failed. Modes, by environment:
+  *  - SPARK_GRAFT_CONF="k=v;k2=v2": session confs set on top of the
+  *    profile, for A/B-ing one knob (AQE, thresholds) without a rebuild;
+  *  - SPARK_GRAFT_PROF_STAGES=1: per-stage wall/task-count/CPU;
+  *  - SPARK_GRAFT_PROF_EXPLAIN=1: the formatted plan after the last rep.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE coalescing contract shared with Bench (rationale there).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "2m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-    // Dev lever: SPARK_GRAFT_CONF="k=v;k2=v2" overlays arbitrary session
-    // confs, for A/B-ing one knob (AQE, thresholds) without a rebuild.
+    val spark = GraftSession(GraftSession.envCores)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_PROF_STAGES=1: print per-stage wall/task-count/CPU for
     // stages over 200 ms — the empirical loop's "which stage is slow"
@@ -62,18 +52,34 @@ object Prof {
                 f"tasks=${si.numTasks} cpu=${cpuNs / 1e9}%.2fs")
           }
         })
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => } // warm-up
-    for (name <- names; fn = SparkEntry.queries(name); r <- 1 to reps) {
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"PROF $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.2fs ($n rows)")
-      // Mirror Bench: persist()ed blocks must not leak between reps or
-      // queries, or rep 2+ reports cache-served times (codegen/JIT stay
-      // warm — that's the intended rep-2 signal).
-      CacheDrain.drain(spark)
-      if (r == reps && sys.env.contains("SPARK_GRAFT_PROF_EXPLAIN"))
-        fn(spark, sfDir).explain("formatted")
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => } // warm-up
+    val failed = names.filterNot { name =>
+      try {
+        val fn = SparkEntry.queries(name)
+        for (r <- 1 to reps) {
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          println(f"PROF $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.2fs ($n rows)")
+          // Mirror Bench: persist()ed blocks must not leak between reps or
+          // queries, or rep 2+ reports cache-served times (codegen/JIT stay
+          // warm — that's the intended rep-2 signal).
+          CacheDrain.drain(spark)
+          if (r == reps && sys.env.contains("SPARK_GRAFT_PROF_EXPLAIN"))
+            fn(spark, sfDir).explain("formatted")
+        }
+        true
+      } catch {
+        case NonFatal(e) =>
+          println(s"PROF $name FAILED: ${Report.cause(e)}")
+          e.printStackTrace(System.out)
+          CacheDrain.drain(spark)
+          false
+      }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      println(s"PROF failed keys: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

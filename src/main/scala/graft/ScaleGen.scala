@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize K× tiers from sf0.1 for scaling measurements
@@ -53,12 +53,7 @@ object ScaleGen {
     }
     require(mode == "neardup" || mode == "bounded", s"unknown mode $mode")
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =

@@ -17,31 +17,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q1(spark, "/root/testdata/sf0.001")
 
+  /** A map from keys that must be unique: a duplicate key throws when
+    * the map is built, where a Map literal or `++` would keep the last
+    * entry and silently shadow the other.
+    */
+  def keyed[T](pairs: (String, T)*): Map[String, T] = {
+    val dups = pairs.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(dups.isEmpty, s"duplicate keys: ${dups.toList.sorted.mkString(", ")}")
+    pairs.toMap
+  }
+
+  private def modules = {
+    import graft.queries._
+    Seq(Relational.queries -> Relational.oracleSql, Joins.queries -> Joins.oracleSql,
+      Windows.queries -> Windows.oracleSql, Scalars.queries -> Scalars.oracleSql,
+      FsQueries.queries -> FsQueries.oracleSql, TextPipeline.queries -> TextPipeline.oracleSql,
+      Vectors.queries -> Vectors.oracleSql, Multimodal.queries -> Multimodal.oracleSql,
+      StreamingBatch.queries -> StreamingBatch.oracleSql, Graph.queries -> Graph.oracleSql)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Joins.queries ++
-      graft.queries.Windows.queries ++
-      graft.queries.Scalars.queries ++
-      graft.queries.FsQueries.queries ++
-      graft.queries.TextPipeline.queries ++
-      graft.queries.Vectors.queries ++
-      graft.queries.Multimodal.queries ++
-      graft.queries.StreamingBatch.queries ++
-      graft.queries.Graph.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    keyed(modules.flatMap(_._1.toSeq): _*)
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++
-      graft.queries.Joins.oracleSql ++
-      graft.queries.Windows.oracleSql ++
-      graft.queries.Scalars.oracleSql ++
-      graft.queries.FsQueries.oracleSql ++
-      graft.queries.TextPipeline.oracleSql ++
-      graft.queries.Vectors.oracleSql ++
-      graft.queries.Multimodal.oracleSql ++
-      graft.queries.StreamingBatch.oracleSql ++
-      graft.queries.Graph.oracleSql
+  lazy val oracleSql: Map[String, String] = keyed(modules.flatMap(_._2.toSeq): _*)
 }

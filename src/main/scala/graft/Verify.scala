@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,25 +12,7 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, subset) => (s, o, Some(subset.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE coalescing contract shared with Bench (see Bench.scala's
-      // scaladoc for the full rationale + production values).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "2m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // µs-int64 timestamps in output parquet (not int96) so the driver's
-      // DuckDB/pyarrow compare sees plain timestamps (SURVEY.md §7.4).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -37,26 +20,14 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${Report.cause(e)}")
       }
       // Queries persist() intermediates (LSH bands etc.) and can't
       // unpersist what they lazily return; drop them here so cached
       // blocks don't accumulate across the 90+ query run.
       CacheDrain.drain(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Environment facts DuckDB can't observe but this process can:
     // owner/primary group of files the fs fixtures plant, probed via a
     // java.nio temp file created by the SAME process that planted them.
@@ -69,7 +40,7 @@ object Verify {
       // fs oracles need literal paths for DuckDB glob()/read_blob();
       // substitute the tier actually verified (queries.FsQueries doc).
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(queries.FsQueries.SfDirToken, sfDir)
+        s"${Report.json(k)}: ${Report.json(v.replace(queries.FsQueries.SfDirToken, sfDir)
           .replace(queries.FsQueries.FsUserToken, fsUser)
           .replace(queries.FsQueries.FsGroupToken, fsGroup))}" }
       .mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -181,9 +179,8 @@ case class LshBucket(child: Expression, numPlanes: Int, dim: Int,
 }
 
 /** The engine's function surface, defined once: GraftExtensions
-  * injects it into every session built with the extensions, and
-  * `register` adds it to a vanilla session so queries can reach the
-  * expressions through `call_function`.
+  * injects it into every session GraftSession builds, so queries reach
+  * the expressions through `call_function` with no registration.
   */
 object GraftFunctions {
   private def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
@@ -211,16 +208,4 @@ object GraftFunctions {
       e => new BloomFilterAggregate(e(0), e(1), e(2))),
     ("graft_might_contain", classOf[BloomFilterMightContain],
       e => BloomFilterMightContain(e(0), e(1))))
-
-  /** Idempotent, called at query-construction time: names the session
-    * already has (injected by GraftExtensions or registered by an
-    * earlier call) are left alone.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, _, build) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, build, "built-in")
-    }
-  }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.SparkEntry.keyed
 import graft.functions.Glob
 import graft.sources.FsOps
 
@@ -281,7 +282,7 @@ object FsQueries {
        |FROM f, r ORDER BY name""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "fs_tier_plan" -> { (s, d) =>
       // Storage-tier planner (`hh`-layer lifecycle management — the
       // hot/warm/cold decision behind HDFS storage policies and
@@ -691,7 +692,7 @@ object FsQueries {
     }
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "fs_tier_plan" -> tierPlanOracle,
 
     // Known-construction emission straight from the SAME fixture Seq the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** Link-graph operators (SURVEY.md §2i, crawl-curation layer).
   *
@@ -255,7 +256,7 @@ object Graph {
       .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "graph_pagerank_step" -> { (s, d) =>
       // One damped power-iteration step (d=0.85) from the uniform start
       // over the bipartite supplier→part link graph (distinct lineitem
@@ -1852,7 +1853,7 @@ object Graph {
       .stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "graph_pagerank_step" ->
       """WITH edges AS (
         |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),

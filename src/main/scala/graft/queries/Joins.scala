@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** Join suite (SURVEY.md §2c). Scale notes per operator:
   *
@@ -22,7 +23,7 @@ import graft.Tables._
 object Joins {
   type Q = (SparkSession, String) => DataFrame
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "join_inner_equi" -> ((s, d) =>
       orders(s, d).join(customer(s, d), col("o_custkey") === col("c_custkey"), "inner")
         .select(col("o_orderkey"), col("c_name"), col("o_totalprice"))
@@ -426,7 +427,7 @@ object Joins {
     }
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "join_inner_equi" ->
       """SELECT o_orderkey, c_name, o_totalprice
         |FROM orders JOIN customer ON o_custkey = c_custkey

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** Multimodal-column plumbing (north-star layer, SURVEY.md §2i / task
   * contract): image/audio/video as opaque BINARY columns with typed
@@ -527,7 +528,7 @@ object Multimodal {
       .toDF("doc_id", "phash")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "mm_decode_meta" -> { (s, d) =>
       // REAL container-metadata decode (round 12, VERDICT r11 item 5).
       // The corpus has no binary column, so each document's text bytes
@@ -1343,7 +1344,7 @@ object Multimodal {
       |      (a, x) -> a + x) AS BIGINT) AS phash
       |  FROM smp)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     // The oracle PREDICTS the planted container metadata from the
     // document table (ASCII text ⇒ byte length == char length); the
     // Spark side must RECOVER the same values by actually parsing the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.SparkEntry.keyed
 import graft.functions.Glob
 
 /** Relational core (SURVEY.md §2a/§2b/§2d/§2f): scans, projections,
@@ -236,7 +237,7 @@ object Relational {
   }
 
   // ---------------------------------------------------------------- 2a scans
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "agg_groupby" -> (q1 _),
 
     "scan_parquet" -> ((s, d) =>
@@ -2477,7 +2478,7 @@ object Relational {
       rows.mkString("", "\nUNION ALL\n", "\nORDER BY x_col, y_col")
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "agg_groupby" -> q1Oracle,
 
     "scan_parquet" -> "SELECT * FROM part ORDER BY p_partkey",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.SparkEntry.keyed
 import graft.functions.Chmod
 
 /** Geometric mean as a typed Aggregator (SURVEY.md §2d UDAF surface).
@@ -38,7 +39,7 @@ object Scalars {
     Chmod.applyExpr(expr, base, isDir = false).toOption.map(Chmod.toOctal)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "fn_string" -> ((s, d) =>
       customer(s, d).select(
         col("c_custkey"),
@@ -247,7 +248,7 @@ object Scalars {
     }
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "fn_string" ->
       """SELECT c_custkey,
         |  upper(c_name) AS up, lower(c_mktsegment) AS lo,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** Batch-equivalent forms of the streaming operators (SURVEY.md §2j).
   * The oracle is batch DuckDB, so each op ships twice: these DataFrame
@@ -19,7 +20,7 @@ object StreamingBatch {
   private val halfHourUs = 1800000000L
   private val gapUs = 300000000L // 5-minute session gap
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "stream_tumbling_counts" -> ((s, d) =>
       eventsTs(s, d)
         .groupBy(window(col("ts_t"), "1 hour").as("win"), col("event_type"))
@@ -1454,7 +1455,7 @@ object StreamingBatch {
     }
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "feat_winsorize" ->
       """WITH cuts AS (
         |  SELECT event_type, round(quantile_cont(value, 0.05), 9) AS p05,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** LLM-training-data pipeline: deduplication + text analysis
   * (SURVEY.md §2i, north-star layer).
@@ -30,7 +31,6 @@ object TextPipeline {
     * array and drop out at the explode (none exist here, n_chars ≥ 48).
     */
   private[queries] def shingles(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     spread(documents(s, d).select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         explode(call_function("graft_shingles", col("text"))).as("w"))
@@ -267,7 +267,7 @@ object TextPipeline {
     bpeTrainMergesMemo(s, d, all, k)._1
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "dedup_exact" -> { (s, d) =>
       // The corpus has no exact dups (FIXTURES.md) → self-union first so
       // the query demonstrably removes something; survivor = min doc_id
@@ -360,7 +360,6 @@ object TextPipeline {
       // the plain exact form: the hash gate proves the bloom split is
       // a pure reduction, never a semantic change (join_runtime_bloom's
       // gate pattern, applied to dedup).
-      graft.functions.GraftFunctions.register(s)
       val docs = documents(s, d)
       docs.createOrReplaceTempView("dbi_docs")
       // Size the sketch from the tier, not a constant: a fixed 48k-bit
@@ -508,7 +507,6 @@ object TextPipeline {
       // exactly on the full trigram sets. The oracle computes the
       // UNFILTERED within-block brute force: a hash match proves the
       // prefix filter lost nothing.
-      graft.functions.GraftFunctions.register(s)
       val t = 0.6
       val docs = spread(documents(s, d))
         .select(col("doc_id"), col("lang"), col("source"),
@@ -597,7 +595,6 @@ object TextPipeline {
       // identical, which degenerated LSH into all-pairs (bench-observed).
       // Engine-specific hashing → no SQL oracle; recall on planted
       // near-dups is asserted in TextSpec.
-      graft.functions.GraftFunctions.register(s)
       val tok = shingles(s, d).select("doc_id", "w")
       // One-pass K-slot signature via the MinHashAgg sketch
       // (TypedImperativeAggregate) — bit-identical to K separate
@@ -632,7 +629,6 @@ object TextPipeline {
       // candidates share ≥1 identical block, then an exact Hamming
       // re-check ≤ 16. Engine-specific hashing → no oracle; planted-dup
       // recall in PipelineSpec.
-      graft.functions.GraftFunctions.register(s)
       val sigs = shingles(s, d)
         .groupBy("doc_id")
         .agg(call_function("graft_simhash", col("w")).as("sig"))
@@ -1029,7 +1025,6 @@ object TextPipeline {
       // one map-side-combined pass. Any flipped character, dropped
       // doc, or renumbered id changes at least one digest; the
       // count/chars columns catch the cardinality edits.
-      graft.functions.GraftFunctions.register(s)
       documents(s, d)
         .select(col("source"), col("doc_id"), col("n_chars"),
           call_function("graft_fingerprint", col("text")).as("fp"))
@@ -1173,7 +1168,6 @@ object TextPipeline {
       // CharNGrams kernel (the interpreted transform/substr chain cost
       // ~2 s/pass and made a persist necessary; at kernel speed,
       // recomputing the arrays per branch is cheaper than caching them).
-      graft.functions.GraftFunctions.register(s)
       val docTris = documents(s, d)
         .select(col("doc_id"), col("lang"),
           call_function("graft_trigrams", col("text")).as("tris"))
@@ -1411,7 +1405,6 @@ object TextPipeline {
       // the only exchanges are the distinct on the (small) eval shingles
       // and the final per-lang rollup. Emits per-lang counts: train
       // docs, contaminated, surviving.
-      graft.functions.GraftFunctions.register(s)
       val docs = documents(s, d).withColumn("bucket", splitBucket)
       val evalShingles = docs.filter(col("bucket") >= 80)
         .select(explode(call_function("graft_shingles", col("text"))).as("sh"))
@@ -1450,7 +1443,6 @@ object TextPipeline {
       // is already proven complete on this corpus by dedup_minhash's
       // own green gate (same signature, same bands, superset pair
       // space). Emits the decontaminate_ngram rollup per lang.
-      graft.functions.GraftFunctions.register(s)
       val docs = documents(s, d).withColumn("bucket", splitBucket)
       val sh = docs.select(col("doc_id"), col("bucket"),
         explode(array_distinct(
@@ -1856,7 +1848,6 @@ object TextPipeline {
       // Rolling-hash fingerprint via the custom codegen'd RollingHash
       // expression; equals the oracle's ord-fold because the corpus is
       // ASCII (bytes == codepoints).
-      graft.functions.GraftFunctions.register(s)
       documents(s, d)
         .select(col("doc_id"), call_function("graft_fingerprint", col("text")).as("fp"))
         .orderBy("doc_id")
@@ -2061,7 +2052,6 @@ object TextPipeline {
       // the polynomial hash is exact BIGINT arithmetic ((a·31+ord)%p
       // — text_fingerprint's fold), window minima are integer order
       // statistics, counts are longs.
-      graft.functions.GraftFunctions.register(s)
       val K = 20; val W = 8
       // spread was MEASURED here and reverted (round 14): repartitioning
       // the full text rows costs more than the kernel pass it would
@@ -2565,7 +2555,7 @@ object TextPipeline {
       |  FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id) t
       |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     // Both sketch pipelines end in the exact-verify tail, so both must
     // reproduce the same brute-force truth set (see shingleVerify).
     "dedup_minhash" -> shingleTruthSql,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
-import graft.functions.GraftFunctions
+import graft.SparkEntry.keyed
 
 /** Similarity search over the embeddings table (SURVEY.md §2i).
   *
@@ -127,7 +127,6 @@ object Vectors {
     */
   private def annMultiTableCands(s: SparkSession, d: String,
       nTables: Int, maxDist: Int): (DataFrame, DataFrame, DataFrame) = {
-    GraftFunctions.register(s)
     val emb = embeddings(s, d)
     val tables = 0 until nTables
     val masks = hammingMasks(8, maxDist)
@@ -178,7 +177,6 @@ object Vectors {
   }
 
   private def annRecallAudit(s: SparkSession, d: String, masks: Seq[Long]): DataFrame = {
-    GraftFunctions.register(s)
     val emb = embeddings(s, d)
     val planes = 8
     val withBucket = emb.withColumn("bucket", lshBucket(col("embedding"), planes, 64))
@@ -311,9 +309,6 @@ object Vectors {
       val cur = rows.map(r =>
         (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(4)).toMap
       converged = prev != null && cur == prev
-      if (sys.env.contains("SPARK_GRAFT_LOOP_DEBUG") && prev != null)
-        println(s"trainPq round $rounds changed=" +
-          cur.count { case (k, v) => prev.get(k).forall(_ != v) })
       prev = cur
       cb = rows.groupBy(_.getInt(0)).map { case (j, rs) =>
         j -> rs.groupBy(_.getInt(1)).toSeq.map { case (cid, ds) =>
@@ -341,7 +336,7 @@ object Vectors {
       PqC(j, cid, ce) })).toDF("cb")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "feat_embedding_norm_audit" -> { (s, d) =>
       // Embedding-health audit — the sanity gate an ANN/dedup build
       // runs BEFORE trusting cosine anywhere: zero-norm vectors make
@@ -351,7 +346,6 @@ object Vectors {
       // mean, min/max, zero and non-finite counts). Shape: norms via
       // the codegen'd DotProductF kernel, MAP-ONLY; one ≤#labels-row
       // groupBy — the whole audit costs one corpus scan at any size.
-      GraftFunctions.register(s)
       val snap: Column => Column =
         x => floor(x * 1000000 + 0.5).cast(DoubleType) / 1000000.0
       embeddings(s, d)
@@ -370,7 +364,6 @@ object Vectors {
     "sim_cosine_topk" -> { (s, d) =>
       // Brute-force top-20 cosine neighbors of vec_id 0: broadcast the
       // query row, map-side dot products, TakeOrdered for the top-k.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"))
@@ -386,7 +379,6 @@ object Vectors {
       // All pairs with cosine ≥ 0.3 within a label block. Norms are
       // precomputed once per vector (not once per pair), and the
       // division shape dot/‖a‖/‖b‖ matches the oracle exactly.
-      GraftFunctions.register(s)
       val withNorm = embeddings(s, d)
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       val a = withNorm.select(col("vec_id").as("id_a"),
@@ -412,7 +404,6 @@ object Vectors {
       // it end-to-end in SQL (decimal centroid means → 2-probe → exact
       // re-rank) and the hash gate verifies the full ANN result, not
       // just a row count.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       // spread: the 64-way posexplode + partial aggregate over the
       // 1-row-group embeddings file otherwise runs on one task
@@ -461,7 +452,6 @@ object Vectors {
       // anti-join. The whole pipeline is RNG-free arithmetic, so the
       // oracle replicates planting, banding, verify, and anti-join in
       // SQL and the hash gate checks the exact survivor set.
-      GraftFunctions.register(s)
       val corpus = embeddings(s, d).select(col("vec_id"), col("label"), col("embedding"))
         .unionByName(
           embeddings(s, d).filter(col("vec_id") % 50 === 0)
@@ -510,7 +500,6 @@ object Vectors {
       // quantization arithmetic itself. Plan shape: broadcast query
       // codes, map-side int dots, TakeOrdered top-100, re-rank 100 rows
       // — zero shuffle at any corpus size.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val vmax = greatest(
         array_max(transform(col("embedding"), x => abs(x.cast(DoubleType)))),
@@ -550,7 +539,6 @@ object Vectors {
       // oracle reproduces buckets, probes, and re-rank bit-for-bit in
       // SQL — the hash gate verifies the full ANN result. Recall vs
       // brute force additionally asserted in PipelineSpec.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val planes = 8
       val withBucket = emb.withColumn("bucket", lshBucket(col("embedding"), planes, 64))
@@ -696,7 +684,6 @@ object Vectors {
       // #queries-partition key. NOTE the honest expectation: gate
       // vectors are near-isotropic (no MRL training), so this measures
       // the audit working, not prefix truncation being good here.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val qs = emb.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -733,7 +720,6 @@ object Vectors {
       // grid BEFORE argmin (ties → lower cid via the struct
       // ordering); the 8-term ADC sum accumulates in DECIMAL(28,6)
       // (order-free, each term already a grid number).
-      GraftFunctions.register(s)
       val M = 8; val K = 16; val SUB = 8
       val emb = embeddings(s, d)
       // Re-seeded from the TRAINED codebook (VERDICT r10 item 5): the
@@ -800,7 +786,6 @@ object Vectors {
       // only data-sized work is one corpus scan. Determinism: the
       // sim_pq_adc recipe verbatim (grid-snapped dist² before argmin,
       // DECIMAL(28,6) ADC accumulation).
-      GraftFunctions.register(s)
       val M = 8; val K = 16; val SUB = 8
       val emb = embeddings(s, d)
       // spread: the 64-way posexplode + partial aggregate over the
@@ -873,7 +858,6 @@ object Vectors {
       // double derives from rounded products captured in exact
       // decimals, so the oracle replicates score → weight → norm and
       // the gate verifies the iterate itself.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val v = emb.filter(col("vec_id") === 0).select(col("embedding").as("v"))
       val scored = emb.crossJoin(broadcast(v))
@@ -948,7 +932,6 @@ object Vectors {
       // (broadcast v, codegen'd left-fold dot), the Xᵀs reduction
       // shuffles ≤64 decimal partials per task (bytes O(tasks·dim),
       // input-size-invariant), norm over 64 rows.
-      GraftFunctions.register(s)
       import s.implicits._
       // ARTIFACT MEMO (round 12): the converged principal component is
       // the shipped projection basis — trained once per dataset,
@@ -1020,7 +1003,6 @@ object Vectors {
       // (graft_dot), round 6 — the only exchange in the plan is the
       // emission orderBy's rangepartitioning (PlanSpec-pinned). At
       // 100 TB this is the embarrassingly parallel shape.
-      GraftFunctions.register(s)
       val basis = queries("feat_pca_power_converged")(s, d)
         .orderBy("dim").collect().map(_.getDouble(1).toFloat).toSeq
       embeddings(s, d)
@@ -1044,7 +1026,6 @@ object Vectors {
       // 0.9 threshold. Whole rule is RNG-free, so the oracle replicates
       // plant → assign → pair → anti-join and the hash gate checks the
       // exact survivor set.
-      GraftFunctions.register(s)
       val base = embeddings(s, d)
       val corpus = base.select(col("vec_id"), col("embedding"))
         .unionByName(
@@ -1115,7 +1096,6 @@ object Vectors {
       // potential so a cycle is impossible in exact arithmetic;
       // quantization could in theory introduce one, which the 40-round
       // cap catches loudly — measured convergence is well inside it.
-      GraftFunctions.register(s)
       // ARTIFACT MEMO (round 12): the converged centroid table is the
       // shipped coarse quantizer (the IVF/SemDeDup artifact) — trained
       // once per dataset, re-emitted from the held ≤512 rows on
@@ -1221,7 +1201,6 @@ object Vectors {
       // mean) carries over verbatim, so iterating this sweep to the
       // fixpoint is exactly sim_kmeans_converged's machinery — the one
       // sweep is the witnessed primitive.
-      GraftFunctions.register(s)
       val M = 8; val K = 16; val SUB = 8
       val emb = embeddings(s, d)
       // The SEED codebook, deliberately: this operator is the witnessed
@@ -1287,7 +1266,6 @@ object Vectors {
       // repeats (the codebook memo itself already skipped the Lloyd
       // loop; this also skips the stationary sweep's corpus scan,
       // which is the ADC consumers' work, not the trainer's).
-      GraftFunctions.register(s)
       graft.ArtifactMemo.cached(s, artifactKey(d, "embeddings") + "#pqsweep") {
         trainPq(s, d).frame.orderBy("j", "cid", "dim")
       }
@@ -1308,7 +1286,6 @@ object Vectors {
       // assignment itself is engine-independent (ties → lower cid, the
       // struct ordering); member values round at 1e-6 then go through
       // exact decimal capture so the mean is order-free.
-      GraftFunctions.register(s)
       val emb = embeddings(s, d)
       val cRow = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cemb"))
@@ -1534,7 +1511,7 @@ object Vectors {
         |FROM exact e LEFT JOIN cand c ON e.q_id = c.q_id AND e.vec_id = c.vec_id
         |GROUP BY e.q_id ORDER BY e.q_id""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     // Full replication of the SemDeDup pipeline: planted copies, the
     // kmeans-step argmin assignment (row_number ≡ the struct array_min
     // ordering: dist2 then cid), within-cluster rounded-cosine pairs,

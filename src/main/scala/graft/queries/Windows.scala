@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import graft.Tables._
+import graft.SparkEntry.keyed
 
 /** Window function suite (SURVEY.md §2e). Every window is partitioned —
   * never a global unpartitioned window except the bounded top-k — and
@@ -14,7 +15,7 @@ import graft.Tables._
 object Windows {
   type Q = (SparkSession, String) => DataFrame
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = keyed(
     "win_row_number" -> { (s, d) =>
       val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
       orders(s, d)
@@ -179,7 +180,7 @@ object Windows {
     }
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = keyed(
     "win_row_number" ->
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey, CAST(row_number()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates for the once-per-dataset trained-artifact machinery
@@ -9,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * family now rides (r11 PQ finding lineage: a memo without content
   * keying silently re-seeds from stale artifacts).
   */
-class ArtifactMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
-
+class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
   test("cached() trains exactly once per key and re-emits identical rows") {
     var trains = 0
     val key = s"spec#${System.nanoTime()}"
@@ -29,7 +19,7 @@ class ArtifactMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("artifactKey changes when the backing parquet is regenerated in-place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_spec")
+    val dir = tempDir("graft_memo_spec")
       .toFile.getAbsolutePath
     spark.range(3).toDF("v").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/t.parquet")

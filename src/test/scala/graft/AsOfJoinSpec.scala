@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.AsOfJoin
 
@@ -9,15 +7,7 @@ import graft.plans.AsOfJoin
   * no-match rows (nulls), inclusive time boundary, latest-of-many
   * matches, keys missing on either side, and multi-partition execution.
   */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-
+class AsOfJoinSpec extends AnyFunSuite with GraftSuite {
   test("as-of edge semantics on a hand-built dataset") {
     val sp = spark
     import sp.implicits._
@@ -51,6 +41,4 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, 50L, -1L, -1L),
       (3L, 99L, 3000L, 1L)))
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

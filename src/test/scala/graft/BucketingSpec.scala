@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketing = the production co-location strategy for the 100 TB fact
@@ -10,27 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucketed on the join key lets the sort-merge join run with ZERO
   * shuffle exchanges — the property this spec pins on the physical plan.
   */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketingSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-
   test("bucketed join on the bucket key plans with zero exchanges") {
+    // External tables in a suite temp dir: the shared session's
+    // warehouse dir is not this suite's to fill.
+    val dir = tempDir("graft_warehouse")
     Tables.lineitem(spark, sf)
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("path", s"$dir/li")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .saveAsTable("li_bucketed")
     Tables.orders(spark, sf)
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("path", s"$dir/o")
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .saveAsTable("o_bucketed")
 
@@ -66,6 +55,6 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS o_bucketed")
-    spark.stop()
+    super.afterAll()
   }
 }

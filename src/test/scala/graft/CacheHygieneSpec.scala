@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache-hygiene gate (VERDICT r10 item 2): an operator library must
@@ -30,18 +28,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * getPersistentRDDs for a beat — the gate bounds the pool, it does
   * not time the async eviction.
   */
-class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CacheHygieneSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("ERROR")
 
   private val heavyCachers = Seq(
     "graph_pagerank_converged", "graph_hits_converged",
@@ -98,13 +86,9 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tags = Seq(
       "artlouv10" + Tables.md5hex(liKey + "#p10").take(12),
       "artlouv" + Tables.md5hex(liKey).take(12))
-    // Tag-prefix match only, NO appId suffix: a sibling suite's
-    // spark.stop() rotates the shared context's applicationId
-    // mid-suite, while the (content-keyed) memo correctly keeps
-    // re-reading the dir minted under the old id — filtering on the
-    // current id undercounts to zero (observed in the full-suite run).
-    // The md5-of-key tag is unique to these artifacts, so the
-    // stability assertion below is exact either way.
+    // Tag-prefix match, no appId suffix: the md5-of-key tag is unique
+    // to these artifacts, so the stability assertion below is exact
+    // whichever application minted a dir.
     def artDirs: Int = {
       val tmp = System.getProperty("java.io.tmpdir")
       val scratch = Option(new java.io.File(tmp).listFiles())

@@ -2,8 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Cc, Graph}
@@ -17,18 +16,8 @@ import graft.queries.{Cc, Graph}
   * cap, fixpoints that land on odd and on even rounds, duplicate and
   * reversed pairs, and an empty pair frame.
   */
-class CcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CcSpec extends AnyFunSuite with GraftSuite {
   import CcSpec._
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("ERROR")
 
   private def pairFrame(pairs: Seq[(Long, Long)]): DataFrame = {
     val sp = spark

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Determinism double-run (SURVEY.md §5.5): every query executed twice
@@ -10,17 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows — catches missing ORDER BYs and float-order instability before
   * the driver's hash compare does.
   */
-class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DeterminismSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   test("every query is stable across shuffle-partition counts") {
     val alt = spark.newSession()
@@ -97,6 +87,4 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m("rows_in") === o.count())
     assert(m("big_orders") === o.filter(col("o_totalprice") > 150000).count())
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     table, or prose — brace groups like `dedup_{exact, minhash}`
   *     expanded), so beyond-§2 additions can't go unrecorded;
   *  4. oracle totals are DERIVED, not narrated: queries.keySet ==
-  *     oracleSql.keySet (the "fully oracled map" claim, as an assert).
+  *     oracleSql.keySet (the "fully oracled map" claim, as an assert);
+  *  5. no key is defined twice (SparkEntry.keyed refuses it when the
+  *     registry is built).
   */
 class DriftSpec extends AnyFunSuite {
 
@@ -100,7 +102,9 @@ class DriftSpec extends AnyFunSuite {
     // later module in SparkEntry's ++ chain) — the subset oracle gate
     // then "passed" by running the OLD query against the OLD oracle.
     // Key uniqueness across modules is the invariant that makes every
-    // other check in this file mean what it says.
+    // other check in this file mean what it says. SparkEntry.keyed now
+    // refuses such a key when the merged map is built; this names the
+    // two modules.
     import graft.queries._
     val modules: Seq[(String, Set[String])] = Seq(
       "Relational" -> Relational.queries.keySet,
@@ -126,7 +130,9 @@ class DriftSpec extends AnyFunSuite {
     // StreamingBatch compiled fine and SHADOWED the original inside
     // the same Map literal — invisible to the cross-module check
     // above, caught only because the new oracle's columns mismatched.
-    // Scan the SOURCE for query/oracle entry definitions per file.
+    // Each module map is now built by SparkEntry.keyed, which throws on
+    // such a key; the source scan per file also catches it before the
+    // module is loaded.
     val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
     val qRx = """"([a-z0-9_]+)" -> \{ \(s, d\) =>""".r
     val oRx = """"([a-z0-9_]+)" ->\s*\n?\s*s?"{3}""".r
@@ -143,5 +149,12 @@ class DriftSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("keyed throws on a duplicate key") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.keyed("a" -> 1, "b" -> 2, "a" -> 3, "b" -> 4))
+    assert(e.getMessage.contains("duplicate keys: a, b"), e.getMessage)
+    assert(SparkEntry.keyed("a" -> 1, "b" -> 2) === Map("a" -> 1, "b" -> 2))
   }
 }

@@ -1,27 +1,38 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.AsOfJoin
 
-/** SparkSessionExtensions wiring: functions resolvable from SQL with no
-  * manual registration, and the injected optimizer rule pushing filters
+/** The shipped session profile and its SparkSessionExtensions wiring:
+  * the exact profile confs, functions resolvable from SQL with no
+  * registration, and the injected optimizer rule pushing filters
   * through the custom as-of join into the parquet scan.
   */
-class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
+  test("GraftSession(4) carries the shipped profile and resolves graft_* functions") {
+    // The one place the shipped configuration is stated as a test. A
+    // session of its own (newSession) must carry it too: specs that
+    // need other settings start from one.
+    val profile = Map(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.files.maxPartitionBytes" -> "8m",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "2m"),
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    val s = GraftSession(4)
+    assert(s.sparkContext.master === "local[4]")
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") === "false")
+    for (session <- Seq(s, s.newSession()); (k, v) <- profile)
+      assert(session.conf.get(k) === v, k)
+    assert(s.sql("SELECT graft_fingerprint('abc')").head().getLong(0) ===
+      (97L * 31 + 98) * 31 + 99)
+  }
 
   test("extension-registered functions resolve from plain SQL") {
     val r = spark.sql(
@@ -33,10 +44,9 @@ class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every GraftFunctions name resolves from plain SQL to its injected class") {
-    // The names come from the shared list itself, and `register` is
-    // never called here: each must already be in the session through
-    // GraftExtensions, backed by the expression class the list names
-    // (a `register`-created entry would report a builder lambda).
+    // The names come from the shared list itself: each must be in the
+    // session through GraftExtensions, backed by the expression class
+    // the list names.
     for ((name, cls, _) <- graft.functions.GraftFunctions.all) {
       val desc = spark.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
       assert(desc.contains(s"Class: ${cls.getName}"),
@@ -68,7 +78,7 @@ class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
   // test JVM's context already exists — a builder-config "test" gets the
   // pre-extended session back and asserts nothing (verified empirically:
   // a fresh session on the existing context does NOT see the functions).
-  // The class itself is exercised via .withExtensions in every
+  // The class itself is exercised via GraftSession in every
   // Verify/Bench/spec session; the conf plumbing is Spark's own.
 
   test("NGram kernels are bit-identical to the HOF forms they replaced") {
@@ -133,6 +143,4 @@ class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_.getAs[Long]("event_id")).map(_.toString)
     assert(pushed.toSeq === unpushed.toSeq)
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Chmod
 import graft.sources.FsOps
@@ -13,16 +11,8 @@ import graft.sources.FsOps
   * hh metadata mutations (mkdir/mv/rm/chmod) through the Hadoop
   * FileSystem API — test-only per the contract (no `queries` surface).
   */
-class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FsSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   test("fs_du matches java.io file lengths") {
     val rows = SparkEntry.queries("fs_du")(spark, sf).collect()
@@ -116,7 +106,7 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // files: exercises the ship-subtree-paths-to-executors shape (the
     // driver holds only the 6 top-level paths; every subtree's
     // RemoteIterator runs inside a task).
-    val scratch = Files.createTempDirectory("graft_fs_deep").toString
+    val scratch = tempDir("graft_fs_deep").toString
     var expect = 0
     for (t <- 1 to 4) {
       var dir = new java.io.File(s"$scratch/top$t")
@@ -165,7 +155,7 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // recurse); this pins the recursive path: parquet part files nested
     // under table-shaped dirs must be found, copied flat, and byte-equal
     // to their sources.
-    val root = Files.createTempDirectory("graft_distcp_src").toString
+    val root = tempDir("graft_distcp_src").toString
     val inner = new java.io.File(s"$root/table.parquet"); inner.mkdirs()
     val payloads = Map(
       s"$root/flat-a.parquet" -> Array[Byte](1, 2, 3, 0, -1),
@@ -200,7 +190,7 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hh metadata ops: mkdirs / rename / setPermission(chmod) / delete") {
-    val scratch = Files.createTempDirectory("graft_fs_meta").toString
+    val scratch = tempDir("graft_fs_meta").toString
     val fs = new Path(scratch).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     val dirA = new Path(s"$scratch/a/b/c")
@@ -242,7 +232,7 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("listing metadata columns match filesystem truth") {
-    val scratch = Files.createTempDirectory("graft_fs_meta_cols").toString
+    val scratch = tempDir("graft_fs_meta_cols").toString
     val f = new java.io.File(scratch, "probe.dat")
     Files.write(f.toPath, Array.fill[Byte](1234)(7))
     val fs = new Path(scratch).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -268,7 +258,7 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // TARGET — this test pins both the column and that resolution
     // behavior; a true SYMLINK status can only arrive from HDFS/
     // FileContext, where the same column carries it through unchanged.
-    val scratch = Files.createTempDirectory("graft_fs_symlink").toString
+    val scratch = tempDir("graft_fs_symlink").toString
     val target = new java.io.File(scratch, "target.dat")
     Files.write(target.toPath, Array.fill[Byte](77)(1))
     Files.createSymbolicLink(
@@ -299,6 +289,4 @@ class FsSpec extends AnyFunSuite with BeforeAndAfterAll {
     sess.cd(sf)
     assert(FsOps.ls(spark, sess.pwd).count() === 10)
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

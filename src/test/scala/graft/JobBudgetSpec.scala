@@ -10,7 +10,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Cc, Graph}
@@ -20,7 +19,7 @@ import graft.queries.{Cc, Graph}
   * execution, not by compute, and a regression there hides inside the
   * run-to-run spread of wall time. Counts do not spread: under one
   * session profile a call schedules the same jobs every time. So this
-  * suite pins, per call at sf0.001 under Bench's AQE profile:
+  * suite pins, per call at sf0.001 under the shipped profile:
   *
   *  - a job budget and an SQL-execution budget for each connected-
   *    components key, counted over construction plus one consuming
@@ -33,32 +32,13 @@ import graft.queries.{Cc, Graph}
   * session of this suite's own, so suites sharing the SparkContext do
   * not leak into the counts.
   */
-class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JobBudgetSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val base: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** Bench's shipped SQL profile, on a session of this suite's own. */
-  lazy val spark: SparkSession = {
-    val s = base.newSession()
-    Seq(
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.files.maxPartitionBytes" -> "8m",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m",
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-      "spark.sql.session.timeZone" -> "UTC"
-    ).foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
-
-  override def beforeAll(): Unit = base.sparkContext.setLogLevel("ERROR")
+  /** The shipped profile on a session of this suite's own, so the
+    * query-execution listener sees only this suite's executions.
+    */
+  override lazy val spark: SparkSession = GraftSuite.shared.newSession()
 
   /** Jobs started and SQL executions finished (by action name). */
   case class Counts(jobs: Int, execs: Seq[String])

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Three-level witness for graph_louvain_full (VERDICT r12 item 5):
@@ -35,19 +34,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * violation would throw, failing this test), and the composed
   * fine-node → final-community map emitted for all 162 nodes.
   */
-class LouvainWitnessSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("ERROR")
-
+class LouvainWitnessSpec extends AnyFunSuite with GraftSuite {
   test("graph_louvain_full contracts exactly 3 levels on the planted hierarchy") {
-    val dir = LouvainWitnessSpec.writeFixture(spark)
+    val dir = LouvainWitnessSpec.writeFixture(spark, tempDir("graft_louvain_witness").toString)
     val out = SparkEntry.queries("graph_louvain_full")(spark, dir)
       .select("node_id", "cid", "levels").collect()
     assert(out.length === 162, s"expected 162 fine nodes, got ${out.length}")
@@ -143,15 +132,14 @@ object LouvainWitnessSpec {
     buf.toSeq
   }
 
-  def writeFixture(spark: SparkSession): String = {
+  /** Writes the fixture's lineitem table under `dir`; returns `dir`. */
+  def writeFixture(spark: SparkSession, dir: String): String = {
     val sp = spark
     import sp.implicits._
     val es = edges()
     val rows = es.zipWithIndex.flatMap { case ((u, v), o) =>
       Seq((o.toLong, u), (o.toLong, v))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_louvain_witness").toString
     rows.toDF("l_orderkey", "l_partkey").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir

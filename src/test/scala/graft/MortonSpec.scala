@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,18 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * not fail any oracle (predicates stay on the original columns) — it
   * would just quietly destroy the clustering the witness claims.
   */
-class MortonSpec extends AnyFunSuite {
+class MortonSpec extends AnyFunSuite with GraftSuite {
   private def refSpread(v: Long): Long =
     (0 until 16).map(i => ((v >> i) & 1L) << (2 * i)).reduce(_ | _)
 
   test("spread16 column kernel == bit-by-bit reference on random 16-bit values") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val sp = spark
+    import sp.implicits._
     val rnd = new scala.util.Random(42)
     val samples = (Seq(0L, 1L, 0xFFFFL, 0x5555L, 0xAAAAL, 0x8000L) ++
       Seq.fill(1000)(rnd.nextLong().abs)).toDF("v")
@@ -38,6 +32,5 @@ class MortonSpec extends AnyFunSuite {
     val pairs = Seq.fill(2000)((rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong)).distinct
     val zs = pairs.map { case (a, b) => refSpread(a) | (refSpread(b) << 1) }
     assert(zs.distinct.size === pairs.size, "Morton code collided on distinct pairs")
-    spark.stop()
   }
 }

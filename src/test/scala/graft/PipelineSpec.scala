@@ -1,25 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LLM-pipeline operators that have no SQL oracle (SURVEY.md §5.2):
   * minhash recall on planted near-dups, ANN candidate soundness,
   * approx_count_distinct accuracy, trigram generator counts.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   test("dedup_minhash finds planted near-duplicates") {
     val sp = spark
@@ -36,7 +26,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = (docs ++ planted).toSeq.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_minhash").toString
+    val tmp = tempDir("graft_minhash").toString
     all.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val cand = SparkEntry.queries("dedup_minhash")(spark, tmp)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -74,7 +64,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = (docs ++ planted).toSeq.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_simhash").toString
+    val tmp = tempDir("graft_simhash").toString
     all.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val cand = SparkEntry.queries("dedup_simhash")(spark, tmp)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -92,7 +82,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // this test pins the assumption at the fixture layer so the failure
     // lands here, with a readable message, at both the test tier and the
     // driver's verify tier.
-    graft.functions.GraftFunctions.register(spark)
     for (tier <- Seq(sf, "/root/testdata/sf0.01")) {
       val shs = spark.read.parquet(s"$tier/documents.parquet")
         .select(col("doc_id"), call_function("graft_shingles", col("text")).as("shs"))
@@ -141,9 +130,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = (docs :+ ((plantedId, evalDoc._2, evalDoc._3))).toSeq
       .toDF("doc_id", "text", "lang")
       .withColumn("source", lit("s")).withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_decon").toString
+    val tmp = tempDir("graft_decon").toString
     all.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val tmpBase = java.nio.file.Files.createTempDirectory("graft_decon0").toString
+    val tmpBase = tempDir("graft_decon0").toString
     all.filter(col("doc_id") =!= plantedId).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmpBase/documents.parquet")
     val without = SparkEntry.queries("decontaminate_ngram")(spark, tmpBase)
@@ -210,7 +199,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (90003L, "tiny junk doc", l0, s0))
     val all = (base.toSeq ++ planted).toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
+    val tmp = tempDir("graft_pipeline").toString
     all.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     def totalDocs(dir: String): Long =
       SparkEntry.queries("pipeline_clean_corpus")(spark, dir)
@@ -225,7 +214,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MinHashAgg sketch equals the per-slot min(xxhash64) column form") {
-    graft.functions.GraftFunctions.register(spark)
     val tok = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
     val viaSketch = tok.groupBy("doc_id")
@@ -434,7 +422,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
     def dump(df: DataFrame): String = {
-      val t = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+      val t = tempDir("graft_manifest").toString
       df.write.mode("overwrite").parquet(s"$t/documents.parquet")
       t
     }
@@ -626,6 +614,4 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"funnel not monotone: $got")
     assert(got("3_purchase") > 0, "no user completed the funnel — fixture too small?")
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions (SURVEY.md §4b, task contract: ".explain
@@ -11,17 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * top-k avoiding the full sort, aggregates doing map-side partials, and
   * the custom expressions staying inside whole-stage codegen.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -515,6 +504,4 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty,
       s"unpartitioned window over unbounded input in: ${offenders.mkString(", ")}")
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

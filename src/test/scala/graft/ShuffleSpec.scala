@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shuffle-BYTES witnesses (round 8): PlanSpec pins the shapes, but a
@@ -24,19 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Thresholds are deliberately loose (3× on a 10× input step): the
   * point is the asymptote, not the constant.
   */
-class ShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ShuffleSpec extends AnyFunSuite with GraftSuite {
   private val sfSmall = "/root/testdata/sf0.01"
   private val sfBig = "/root/testdata/sf0.1"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("ERROR")
 
   private def shuffleBytes(name: String, sf: String): Long = {
     val bytes = new AtomicLong(0)
@@ -148,6 +136,4 @@ class ShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(big > small * 3,
       s"shuffle_global shuffle bytes should grow ~10x with input, got $small -> $big — the byte measurement itself may be broken")
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew mitigation patterns for the 100 TB path (SURVEY.md §4b):
   * salted two-phase aggregation must equal the direct aggregation, and
   * AQE's skew-join handling stays enabled in the harness sessions.
   */
-class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
-
+class SkewSpec extends AnyFunSuite with GraftSuite {
   test("salted two-phase aggregation equals direct aggregation") {
     val sp = spark
     import sp.implicits._
@@ -169,6 +158,4 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
     val expect = fact.join(dim.hint("broadcast"), col("o_custkey") === col("c_custkey")).count()
     assert(joined.count() === expect)
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

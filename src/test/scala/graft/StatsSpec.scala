@@ -2,9 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic properties of the statistical operators that the row-hash
@@ -13,17 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * kmeans-step invariants (partition of the corpus, centroid = member
   * mean), the unigram-LM score ordering.
   */
-class StatsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StatsSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   test("ts_anomaly_zscore flags exactly the >3-sample-sigma events") {
     val flagged = SparkEntry.queries("ts_anomaly_zscore")(spark, sf).collect()

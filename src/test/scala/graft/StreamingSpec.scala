@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
 
@@ -14,24 +13,24 @@ import graft.streaming.StreamingOps
   * one file at a time so the watermark actually advances between
   * triggers and drops a too-late file.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private var srcDir: Path = _
 
+  /** A session of this suite's own: the nanos-as-long parquet read of
+    * the events source must not leak into later suites.
+    */
+  override lazy val spark: SparkSession = {
+    val s = GraftSuite.shared.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s
+  }
+
   override def beforeAll(): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Split events into 8 files, shuffled across time (partitioned by
     // a hash, so each file spans the whole month — disorder guaranteed).
-    srcDir = Files.createTempDirectory("graft_stream_src")
+    srcDir = tempDir("graft_stream_src")
     graft.Tables.events(spark, sf)
       .repartition(8, col("event_id"))
       .write.mode("overwrite").parquet(srcDir.toString)
@@ -71,7 +70,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("watermark dedup drops duplicate event_ids") {
     // Duplicate the whole source: every event_id appears twice.
-    val dupDir = Files.createTempDirectory("graft_stream_dup")
+    val dupDir = tempDir("graft_stream_dup")
     val ev = graft.Tables.events(spark, sf)
     ev.unionByName(ev).repartition(8, col("event_id"))
       .write.mode("overwrite").parquet(dupDir.toString)
@@ -183,7 +182,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The fraud tripwire on the live ingest: digit derivation AND the
     // χ² tail are the shared batch definitions; the stream maintains
     // only the ≤9-key digit counts (complete mode, bounded forever).
-    val ordersDir = Files.createTempDirectory("graft_stream_orders")
+    val ordersDir = tempDir("graft_stream_orders")
     graft.Tables.orders(spark, sf)
       .repartition(8, col("o_orderkey"))
       .write.mode("overwrite").parquet(ordersDir.toString)
@@ -272,7 +271,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // map over a streamed doc source through the SHARED decodeMetaRow
     // must land exactly on mm_decode_meta's batch emission, CRC/RIFF
     // verification included.
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_stream_mm")
+    val docsDir = tempDir("graft_stream_mm")
     graft.Tables.documents(spark, sf).write.mode("overwrite")
       .parquet(docsDir.toString)
     val stream = StreamingOps.readDocuments(spark, docsDir.toString)
@@ -291,7 +290,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // land exactly on bpe_tokenize_corpus's batch emission — including
     // the twin's single-agg decomposition (sum per occurrence ≡ the
     // batch per-(doc, word) collapse).
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_stream_docs")
+    val docsDir = tempDir("graft_stream_docs")
     graft.Tables.documents(spark, sf).write.mode("overwrite")
       .parquet(docsDir.toString)
     val merges = graft.queries.TextPipeline.trainedBpeMerges(spark, sf)
@@ -352,11 +351,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r = ev.agg(min("us"), max("us")).collect()(0)
       (r.getLong(0), r.getLong(1) + 1)
     }
-    val sliceDir = Files.createTempDirectory("graft_stream_slices")
+    val sliceDir = tempDir("graft_stream_slices")
     import java.nio.file.attribute.FileTime
     val width = (hiUs - loUs + 7) / 8
     val staged = (0 until 8).map { i =>
-      val stage = Files.createTempDirectory(s"graft_slice_$i")
+      val stage = tempDir(s"graft_slice_$i")
       ev.filter(col("us") >= loUs + i * width && col("us") < loUs + (i + 1) * width)
         .drop("us").coalesce(1).write.mode("overwrite").parquet(stage.toString)
       // A slice CAN be empty if the fixture's time axis is skewed; fail
@@ -449,7 +448,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two far-future sentinel batches push the watermark forward (the
     // flush trick production pipelines use at stream end), after which
     // the streamed result equals the batch left-outer join exactly.
-    val dir = Files.createTempDirectory("graft_stream_loj")
+    val dir = tempDir("graft_stream_loj")
     graft.Tables.events(spark, sf)
       .repartition(4, col("event_id"))
       .write.mode("overwrite").parquet(dir.toString)
@@ -514,7 +513,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // snapshot rollup must equal the batch operator's 3-chain result
     // row-for-row: streamed incremental maintenance ≡ direct recompute.
     import org.apache.hadoop.fs.Path
-    val dir = Files.createTempDirectory("graft_cdc_stream")
+    val dir = tempDir("graft_cdc_stream")
     val ctl = dir.resolve("ctl"); Files.createDirectories(ctl)
     val params = Seq(
       (1, 13, 10, 1000, 17, 2000000000L, "N"),
@@ -571,11 +570,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // nothing new appends nothing, and reprocessing after new data
     // arrives emits each input row exactly once, ever.
     val ev = graft.Tables.events(spark, sf)
-    val srcDir2 = Files.createTempDirectory("graft_restart_src")
-    val outDir = Files.createTempDirectory("graft_restart_out")
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt")
+    val srcDir2 = tempDir("graft_restart_src")
+    val outDir = tempDir("graft_restart_out")
+    val ckpt = tempDir("graft_restart_ckpt")
     def addFile(name: String, filter: org.apache.spark.sql.Column): Long = {
-      val stage = Files.createTempDirectory("graft_restart_stage")
+      val stage = tempDir("graft_restart_stage")
       val part = ev.filter(filter)
       part.coalesce(1).write.mode("overwrite").parquet(stage.toString)
       val f = new java.io.File(stage.toString).listFiles()
@@ -614,7 +613,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Spark applies the advanced watermark starting one batch AFTER the
     // advancing batch), file C replays hour 10 — far beyond the
     // 1-minute watermark by then, so it must be dropped in append mode.
-    val lateDir = Files.createTempDirectory("graft_stream_late")
+    val lateDir = tempDir("graft_stream_late")
     val spark2 = spark
     import spark2.implicits._
     def mkRow(id: Long, hour: Int, minute: Int): (Long, Long, Long, String, Double, String) = {
@@ -626,7 +625,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a.parquet" -> Seq(mkRow(1, 10, 0), mkRow(2, 10, 30), mkRow(3, 23, 0)),
       "b.parquet" -> Seq(mkRow(4, 22, 0)),  // bridge batch
       "c.parquet" -> Seq(mkRow(5, 10, 31))) // 12.5h late → dropped
-    val srcFlat = Files.createTempDirectory("graft_stream_late_flat")
+    val srcFlat = tempDir("graft_stream_late_flat")
     import java.nio.file.attribute.FileTime
     files.zipWithIndex.foreach { case ((name, rows), i) =>
       val sub = s"$lateDir/$name.dir"
@@ -650,6 +649,4 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hour10.length === 1 && hour10(0).getLong(0) === 2L,
       s"late row leaked into the closed window: ${got.collect().mkString(",")}")
   }
-
-  override def afterAll(): Unit = spark.stop()
 }

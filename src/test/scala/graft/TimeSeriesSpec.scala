@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic properties of the time-series / history operators that the
   * row-hash oracle can't articulate: gap-fill density, OHLC pick rules,
   * SCD2 interval integrity.
   */
-class TimeSeriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TimeSeriesSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
   private val hourUs = 3600000000L
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
 
   test("ar1Tail: slope = -1 takes the closed form, not the drift fallback") {
     // r12 ADVICE: the geometric closed form is singular only at
@@ -103,6 +92,4 @@ class TimeSeriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
-
-  override def afterAll(): Unit = spark.stop()
 }
