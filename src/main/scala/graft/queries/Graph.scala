@@ -1,7 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
@@ -59,28 +58,16 @@ object Graph {
       val lab = queries("graph_louvain_step")(s, d)
         .select(col("node_id").as("i"), col("cid_new").as("c"))
         .localCheckpoint(eager = true)
-      // The contraction, once, over the checkpointed labels —
-      // graph_louvain_coarsen's construction verbatim.
-      val und = undirectedEdges(s, d, 3)
-      val cw = und
-        .join(lab.select(col("i").as("u"), col("c").as("cu")), "u")
-        .join(lab.select(col("i").as("v"), col("c").as("cv")), "v")
-        .select(least(col("cu"), col("cv")).as("c_a"),
-          greatest(col("cu"), col("cv")).as("c_b"))
-        .groupBy("c_a", "c_b").agg(count(lit(1)).as("n_edges"))
-        .withColumn("weight",
-          when(col("c_a") === col("c_b"), col("n_edges") * 2)
-            .otherwise(col("n_edges")))
       // Labels are NODE-SIZED (corpus-proportional) → persisted parquet
       // artifact, never driver memory (r12 review; the cachedTable
       // rationale). The ≤C(64,2)+64-row contraction stays driver-held.
       val labPath = graft.Tables.scratch(s,
         "artlouv" + graft.Tables.md5hex(artifactKey(d, "lineitem")).take(12), d)
       lab.write.mode("overwrite").parquet(labPath)
-      val cws = cw.collect()
+      val cws = contract(unit(undirectedEdges(s, d, 3)), Labels(lab)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-      lab.unpersist()
+      Cc.release(lab)
       LouvainArt(labPath, cws)
     }(old => graft.ArtifactMemo.deleteDir(old.labelsPath))
 
@@ -91,12 +78,12 @@ object Graph {
   private def louvainStepLabels(s: SparkSession, d: String): DataFrame =
     s.read.parquet(louvainArt(s, d).labelsPath)
 
-  /** The %3 contraction (c_a, c_b, n_edges, weight), re-seeded from the
-    * artifact — graph_louvain_level2's input.
+  /** The %3 contraction as a kernel edge list (u, v, n_edges, w),
+    * re-seeded from the artifact — graph_louvain_level2's input.
     */
   private def louvainCoarseTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    louvainArt(s, d).coarse.toDF("c_a", "c_b", "n_edges", "weight")
+    louvainArt(s, d).coarse.toDF("u", "v", "n_edges", "w")
   }
 
   /** graph_louvain_converged's phase-1 fixpoint on the %10 witness graph
@@ -129,110 +116,25 @@ object Graph {
       old => graft.ArtifactMemo.deferDelete(old.labelsPath))
   }
 
-  /** graph_louvain_converged's training loop, extracted verbatim as
-    * the single-flight memo value (round 13): builds the %10 witness
-    * graph, iterates the Q-monotone synchronous sweep to its dip,
-    * persists the fixpoint labels as the scratch parquet artifact,
-    * and returns the art record. See the query's scaladoc for the
-    * algorithmic contract; this def exists so ArtifactMemo.once owns
-    * the only call site (no check-then-act).
+  /** graph_louvain_converged's training, the single-flight memo value
+    * (round 13): the kernel's Q-dip loop ([[phase1]]) on the %10 witness
+    * graph from the id % 64 start, its fixpoint labels persisted as the
+    * scratch parquet artifact. ArtifactMemo.once owns the only call
+    * site (no check-then-act).
     */
   private def trainLouvain10(s: SparkSession, d: String,
       memoKey: String): Louvain10Art = {
-      val und = undirectedEdges(s, d, 10)
-        .persist()
-      val adj = und.select(col("u").as("i"), col("v").as("j"))
-        .unionByName(und.select(col("v").as("i"), col("u").as("j")))
-        .localCheckpoint(eager = false).persist() // probed every round
-      val deg = adj.groupBy("i").agg(count(lit(1)).as("ki"))
-        .localCheckpoint(eager = false).persist() // static
-      val m = und.agg(count(lit(1))).head().getLong(0) // O(1), read once
-      def sweep(lab: DataFrame): DataFrame = {
-        val kin = adj.join(lab.select(col("i").as("j"), col("c")), "j")
-          .groupBy("i", "c").agg(count(lit(1)).as("kin"))
-        val stay = deg.join(lab, "i")
-          .select(col("i"), col("c"), lit(0L).as("kin"))
-        val cand = kin.unionByName(stay)
-          .groupBy("i", "c").agg(max(col("kin")).as("kin"))
-        val ktot = deg.join(lab, "i")
-          .groupBy("c").agg(sum(col("ki")).as("ktot"))
-        // Argmax as an aggregate, not a rank window (round 14, guide
-        // §2.3): max(struct(gain, −c)) IS (gain DESC, c ASC), partial-
-        // combines map-side, and drops the window's per-partition sort.
-        cand.join(ktot, "c").join(deg, "i")
-          .join(lab.select(col("i"), col("c").as("c0")), "i")
-          .withColumn("sigma", col("ktot") -
-            when(col("c") === col("c0"), col("ki")).otherwise(lit(0L)))
-          .withColumn("gain", round(
-            col("kin").cast(DoubleType) / lit(m.toDouble) -
-              col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
-                (lit(2.0) * lit(m.toDouble) * lit(m.toDouble)), 9))
-          .groupBy("i")
-          .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
-          .select(col("i"), (-col("b.negc")).as("c"))
-      }
-      // Exact Q of a label table — graph_modularity's arithmetic
-      // verbatim (1e-9 terms, decimal capture, round 6). One O(1)
-      // driver read per sweep. (A fused variant deriving Q from the
-      // sweep's own kin/ktot — no edge joins — was MEASURED SLOWER:
-      // 44 s vs 32 s at the %3 graph; caching the wide pre-argmax
-      // frame cost more than the two small edge joins it saved.)
-      def modularity(lab: DataFrame): Double = {
-        val dC = deg.join(lab, "i").groupBy("c").agg(sum(col("ki")).as("d_c"))
-        val eC = und
-          .join(lab.select(col("i").as("u"), col("c").as("lu")), "u")
-          .join(lab.select(col("i").as("v"), col("c").as("lv")), "v")
-          .filter(col("lu") === col("lv"))
-          .groupBy(col("lu").as("c")).agg(count(lit(1)).as("e_c"))
-        dC.join(eC, Seq("c"), "left")
-          .select(round(
-            coalesce(col("e_c"), lit(0L)).cast(DoubleType) / lit(m.toDouble) -
-              (col("d_c").cast(DoubleType) / lit(2.0 * m)) *
-                (col("d_c").cast(DoubleType) / lit(2.0 * m)), 9).as("term"))
-          .agg(round(sum(col("term").cast(DecimalType(28, 9)))
-            .cast(DoubleType), 6))
-          .head().getDouble(0)
-      }
-      var prevBase = deg.select(col("i"), pmod(col("i"), lit(64)).as("c"))
-        .localCheckpoint(eager = false).persist()
-      var prevLab = prevBase // lab_{k-1}: view over the PERSISTED frame
-      var prevQ = modularity(prevLab)
-      var grand: DataFrame = null // lab_{k-2} backing, safe to release
-      var rounds = 0
-      var dipped = false
-      while (!dipped && rounds < 40) {
-        val nxt = sweep(prevLab)
-          .localCheckpoint(eager = false).persist()
-        // The round's ONE action materializes nxt and reads its Q.
-        val q = modularity(nxt)
-        dipped = q <= prevQ
-        if (!dipped) {
-          // nxt improved: it becomes lab_{k-1}; the grandparent frame
-          // is dead (never unpersist a frame a live view still reads —
-          // a localCheckpoint's blocks ARE its lineage).
-          if (grand != null) grand.unpersist()
-          grand = prevBase
-          prevBase = nxt
-          prevLab = nxt
-          prevQ = q
-        } else nxt.unpersist() // the dip round's partition is discarded
-        rounds += 1
-      }
-      require(dipped,
-        s"graph_louvain_converged: Q still strictly improving after " +
-          s"$rounds sweeps (Q=$prevQ) — raise the cap; emitting a " +
-          "mid-ascent partition would under-report the refinement")
-      if (grand != null) grand.unpersist()
-      // Fixpoint reached: persist the artifact as a parquet label
-      // table (node-sized = corpus-proportional, so never driver
-      // memory — r12 review), release everything, emit the read-back.
-      val labPath = graft.Tables.scratch(s,
-        "artlouv10" + graft.Tables.md5hex(memoKey).take(12), d)
-      prevLab.select(col("i"), col("c")).write.mode("overwrite")
-        .parquet(labPath)
-      prevBase.unpersist()
-      adj.unpersist(); deg.unpersist(); und.unpersist()
-      Louvain10Art(labPath, prevQ, rounds - 1) // last round was the dip
+    val und = undirectedEdges(s, d, 10).persist()
+    val g = CGraph.of(unit(und)).held
+    val (lab, q, sweeps) = phase1(g, hash64,
+      modularity(g, hash64).head().getDouble(0), 40, "graph_louvain_converged")
+    // Node-sized (corpus-proportional) labels: a parquet label table,
+    // never driver memory (r12 review).
+    val labPath = graft.Tables.scratch(s,
+      "artlouv10" + graft.Tables.md5hex(memoKey).take(12), d)
+    lab.write.mode("overwrite").parquet(labPath)
+    Cc.release(lab); Cc.release(g.deg); und.unpersist()
+    Louvain10Art(labPath, q, sweeps)
   }
 
   /** The lineitem-derived co-occurrence WITNESS GRAPHS every graph
@@ -255,6 +157,241 @@ object Graph {
         col("x.o") === col("y.o") && col("x.p") < col("y.p"))
       .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
   }
+
+  /* ---- The community kernel ----
+   *
+   * One definition each of the Louvain insertion-gain sweep ([[sweep]]),
+   * the community rollup and its modularity Q ([[rollup]],
+   * [[modularity]]), the degree-mass-preserving contraction
+   * ([[contract]]) and the phase-1 Q-dip loop ([[phase1]]); every
+   * community key calls them.
+   *
+   * The graph ([[CGraph]]) is a weighted edge list (u, v, w), each
+   * undirected edge listed once; u = v is a self-loop. A cut-free edge's
+   * weight counts toward both endpoints' degree k, a self-loop's weight
+   * once toward its node's, and m = Σk/2. The fine co-occurrence graph
+   * is the case w = 1 with no self-loops, where k is the plain degree
+   * and m the edge count. A contraction folds each community's internal
+   * edges into a self-loop of twice their weight, so every community
+   * keeps its degree mass and the singleton Q of the contracted graph
+   * equals the partition's Q on the finer one — which is why one sweep
+   * and one Q serve every level (graph_coarsen_invariant measures it).
+   *
+   * Sweep: every node i moves to the community c among its own and its
+   * neighbors' with the largest insertion gain
+   *   ΔQ(i→c) = kin(i,c)/m − k_i·Σtot(c∖i)/(2m²),
+   * kin = the weight from i into c, Σtot(c∖i) = c's degree mass without
+   * i (remove-then-insert, so staying is always a candidate, at kin 0
+   * when i has no neighbor in its own community). All nodes move at
+   * once (synchronous). Q = Σ_c [e_c/m − (d_c/2m)²], e_c = the weight
+   * inside c with self-loops at half weight, d_c = c's degree mass.
+   *
+   * Exactness: kin, Σtot, k, e_c, d_c and m are exact longs. The gain
+   * is one IEEE expression rounded at 1e-9 before the argmax, and the
+   * argmax is max(struct(gain, −c)) = (gain DESC, c ASC) as an
+   * aggregate, which partial-combines map-side. Q's per-community terms
+   * are rounded at 1e-9, summed exactly as DECIMAL(28,9) and rounded at
+   * 1e-6. Nothing depends on summation order, so the DuckDB oracles
+   * reproduce each key bit for bit.
+   */
+
+  /** A kernel graph: `edges` (u, v, w) as above, `deg` its degree table
+    * (i, ki, sw = self-loop weight). m is a column: a 1-row broadcast
+    * that [[withM]] attaches, or, once read on the driver ([[held]],
+    * [[readM]]), a literal.
+    */
+  private final case class CGraph(edges: DataFrame, deg: DataFrame,
+      mRead: Option[Long]) {
+    /** (i, j, w): both directions of every edge but the self-loops. */
+    def adj: DataFrame = edges.filter(col("u") =!= col("v"))
+      .select(explode(array(
+        struct(col("u").as("i"), col("v").as("j"), col("w")),
+        struct(col("v").as("i"), col("u").as("j"), col("w")))).as("e"))
+      .select("e.*")
+    def mRow: DataFrame = edges.agg((coalesce(sum(
+        when(col("u") === col("v"), col("w")).otherwise(col("w") * 2)), lit(0L)) / 2)
+      .cast(LongType).as("m"))
+    def m: Column = mRead.fold(col("m"))(lit(_))
+    def withM(df: DataFrame): DataFrame =
+      if (mRead.isEmpty) df.crossJoin(broadcast(mRow)) else df
+    /** m read once on the driver (one O(1) action). */
+    def readM: CGraph = copy(mRead = Some(mRow.head().getLong(0)))
+    /** For a loop that probes the graph every sweep: m read once and the
+      * degree table checkpointed once — [[Cc.release]] it when done.
+      */
+    def held: CGraph = CGraph(edges, deg.localCheckpoint(eager = true), None).readM
+  }
+
+  private object CGraph {
+    def of(edges: DataFrame): CGraph = {
+      // One row per edge end: a self-loop has one end, and its weight
+      // is also its node's self-loop weight.
+      val ends = edges.select(explode(array(
+          struct(col("u").as("i"), col("w").as("k"),
+            when(col("u") === col("v"), col("w")).otherwise(lit(0L)).as("s")),
+          when(col("u") =!= col("v"),
+            struct(col("v").as("i"), col("w").as("k"), lit(0L).as("s"))))).as("e"))
+        .filter(col("e").isNotNull)
+      CGraph(edges, ends.groupBy(col("e.i").as("i"))
+        .agg(sum(col("e.k")).as("ki"), sum(col("e.s")).as("sw")), None)
+    }
+  }
+
+  /** A witness graph's (u < v) edges at weight 1. */
+  private def unit(und: DataFrame): DataFrame =
+    und.select(col("u"), col("v"), lit(1L).as("w"))
+
+  /** A partition of a kernel graph's nodes. `attach` adds the community
+    * of `df`'s node column `node` as column `as`: a label table (i, c)
+    * is joined in; a label that is a function of the node id needs no
+    * join. An injective partition (every node its own community) lets
+    * the sweep skip its rollups, since each (node, community) pair then
+    * occurs once.
+    */
+  private sealed trait Part {
+    def attach(df: DataFrame, node: String, as: String): DataFrame
+    def injective: Boolean = false
+    /** The partition as an (i, c) label table over g's nodes. */
+    def table(g: CGraph): DataFrame = attach(g.deg, "i", "c").select("i", "c")
+  }
+
+  private final case class Labels(lab: DataFrame) extends Part {
+    def attach(df: DataFrame, node: String, as: String): DataFrame =
+      df.join(lab.select(col("i").as(node), col("c").as(as)), node)
+    override def table(g: CGraph): DataFrame = lab
+  }
+
+  private final case class LabelOf(f: Column => Column,
+      override val injective: Boolean = false) extends Part {
+    def attach(df: DataFrame, node: String, as: String): DataFrame =
+      df.withColumn(as, f(col(node)))
+  }
+
+  /** The id % 64 hash communities the fine sweeps start from. */
+  private val hash64 = LabelOf(pmod(_, lit(64)))
+
+  /** Every node its own community: each weighted level's restart. */
+  private val singletons = LabelOf(identity, injective = true)
+
+  /** One synchronous sweep from partition p: (i, c, gain), each node's
+    * best community and the gain of moving there.
+    */
+  private def sweep(g: CGraph, p: Part): DataFrame = {
+    val kin = p.attach(g.adj, "j", "c").select(col("i"), col("c"), col("w").as("kin"))
+    val own = p.attach(g.deg, "i", "c0")
+    val stay = own.select(col("i"), col("c0").as("c"), lit(0L).as("kin"))
+    val (cand, ktot) =
+      if (p.injective)
+        (kin.unionByName(stay), own.select(col("c0").as("c"), col("ki").as("ktot")))
+      else
+        (kin.groupBy("i", "c").agg(sum(col("kin")).as("kin")).unionByName(stay)
+          .groupBy("i", "c").agg(max(col("kin")).as("kin")),
+          own.groupBy(col("c0").as("c")).agg(sum(col("ki")).as("ktot")))
+    val sigma = col("ktot") - when(col("c") === col("c0"), col("ki")).otherwise(lit(0L))
+    g.withM(cand.join(ktot, "c").join(own.select("i", "ki", "c0"), "i"))
+      .withColumn("gain", round(col("kin").cast(DoubleType) / g.m -
+        col("ki").cast(DoubleType) * sigma.cast(DoubleType) / (lit(2.0) * g.m * g.m), 9))
+      .groupBy("i")
+      .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
+      .select(col("i"), (-col("b.negc")).as("c"), col("b.gain").as("gain"))
+  }
+
+  /** Per community c of p: n_nodes, d_c (degree mass) and e_c (the
+    * weight inside c, self-loops at half weight).
+    */
+  private def rollup(g: CGraph, p: Part): DataFrame = {
+    val dC = p.attach(g.deg, "i", "c").groupBy("c")
+      .agg(count(lit(1)).as("n_nodes"), sum(col("ki")).as("d_c"),
+        (sum(col("sw")) / 2).cast(LongType).as("sh"))
+    val inner = p.attach(p.attach(g.edges.filter(col("u") =!= col("v")), "u", "cu"), "v", "cv")
+      .filter(col("cu") === col("cv"))
+      .groupBy(col("cu").as("c")).agg(sum(col("w")).as("iw"))
+    dC.join(inner, Seq("c"), "left")
+      .select(col("c"), col("n_nodes"), col("d_c"),
+        (coalesce(col("iw"), lit(0L)) + col("sh")).as("e_c"))
+  }
+
+  /** Q of partition p as a 1-row frame: q, then the `more` aggregates
+    * over the per-community terms.
+    */
+  private def modularity(g: CGraph, p: Part, more: Column*): DataFrame =
+    g.withM(rollup(g, p))
+      .select(round(col("e_c").cast(DoubleType) / g.m -
+        (col("d_c").cast(DoubleType) / (g.m * 2)) *
+          (col("d_c").cast(DoubleType) / (g.m * 2)), 9).as("term"))
+      .agg(round(sum(col("term").cast(DecimalType(28, 9))).cast(DoubleType), 6).as("q"),
+        more: _*)
+
+  /** Phase 2: every community of p becomes one node. Edges roll up by
+    * community pair into (u ≤ v, n_edges = edges folded, w); an edge
+    * inside a community doubles as it folds into the self-loop, so
+    * every community keeps its degree mass.
+    */
+  private def contract(edges: DataFrame, p: Part): DataFrame =
+    p.attach(p.attach(edges, "u", "cu"), "v", "cv")
+      .select(least(col("cu"), col("cv")).as("a"), greatest(col("cu"), col("cv")).as("b"),
+        when(col("cu") === col("cv") && col("u") =!= col("v"), col("w") * 2)
+          .otherwise(col("w")).as("wc"))
+      .groupBy(col("a").as("u"), col("b").as("v"))
+      .agg(count(lit(1)).as("n_edges"), sum(col("wc")).as("w"))
+
+  /** Louvain phase 1 to its Q dip: sweeps from `start`, whose Q is `q0`,
+    * while Q strictly improves, and returns the last improving
+    * partition as an (i, c) table, its Q and the number of improving
+    * sweeps; the first sweep that does not improve is discarded. Throws
+    * if Q still improves after `cap` sweeps: a mid-ascent partition
+    * would under-report the refinement. Zero moves is no stop rule here:
+    * the synchronous sweep can swap nodes forever, while Q rises and
+    * then dips. Each sweep's labels are one eager, row-count-sized
+    * checkpoint ([[Cc.round]]), so plans stay flat and their estimates
+    * real; Q is one O(1) driver read per sweep. (A variant deriving Q
+    * from the sweep's own kin/ktot, with no edge joins, measured slower:
+    * 44 s vs 32 s on the %3 graph; caching the wide pre-argmax frame
+    * cost more than the two small edge joins it saved.) `g` is meant to
+    * be [[CGraph.held]].
+    */
+  private def phase1(g: CGraph, start: Part, q0: Double, cap: Int,
+      what: String): (DataFrame, Double, Int) = {
+    var lab = start
+    var q = q0
+    var sweeps = 0
+    var dipped = false
+    while (!dipped && sweeps < cap) {
+      val nxt = Cc.round(sweep(g, lab), lit(false), col("i"), col("c"))._1
+      val qn = modularity(g, Labels(nxt)).head().getDouble(0)
+      dipped = qn <= q
+      if (dipped) Cc.release(nxt)
+      else {
+        if (lab ne start) Cc.release(lab.table(g))
+        lab = Labels(nxt)
+        q = qn
+      }
+      sweeps += 1
+    }
+    require(dipped,
+      s"$what: Q still strictly improving after $sweeps sweeps (Q=$q) — " +
+        "raise the cap; emitting a mid-ascent partition would under-report " +
+        "the refinement")
+    (lab.table(g), q, sweeps - 1)
+  }
+
+  /** One synchronous plurality-vote step of label propagation from the
+    * id % 64 start: every node of und takes the label most of its
+    * neighbors carry, ties to the smaller label — (node, lbl, votes).
+    * The vote is max(struct(votes, −lbl)) = (votes DESC, lbl ASC) as an
+    * aggregate. Both edge directions come from one explode: a union of
+    * two selects re-executes the pair-join + distinct subtree once per
+    * direction (see graph_degree_dist).
+    */
+  private def plurality(und: DataFrame): DataFrame =
+    und.select(explode(array(
+        struct(col("u").as("node"), (col("v") % 64).as("lbl")),
+        struct(col("v").as("node"), (col("u") % 64).as("lbl")))).as("e"))
+      .select(col("e.node").as("node"), col("e.lbl").as("lbl"))
+      .groupBy("node", "lbl").agg(count(lit(1)).as("votes"))
+      .groupBy("node")
+      .agg(max(struct(col("votes"), (-col("lbl")).as("neglbl"))).as("b"))
+      .select(col("node"), (-col("b.neglbl")).as("lbl"), col("b.votes").as("votes"))
 
   val queries: Map[String, Q] = keyed(
     "graph_pagerank_step" -> { (s, d) =>
@@ -896,148 +1033,65 @@ object Graph {
     "graph_modularity" -> { (s, d) =>
       // Modularity Q of the one-step LPA partition — the number that
       // says whether a community assignment is BETTER THAN CHANCE
-      // (Q = Σ_c [e_c/m − (d_c/2m)²]; 0 = random, >0.3 = real
-      // structure), the acceptance test every community detector
-      // reports. Reuses graph_label_prop's exact construction (same
-      // %3 graph, same deterministic plurality step) so the two
-      // queries read as detect → score. Shape: e_c needs the edge
-      // list joined to the label table on BOTH endpoints (two
-      // O(edges) equi-joins); d_c rides the node-sized degree table;
-      // m attaches as a 1-row broadcast. All inputs exact longs;
-      // per-community terms snap to 1e-9 and decimal-sum.
+      // (0 = random, >0.3 = real structure), the acceptance test every
+      // community detector reports. graph_label_prop's plurality step
+      // (same %3 graph) scored by the kernel's Q, so the two queries
+      // read as detect → score. Shape: e_c joins the edge list to the
+      // label table on BOTH endpoints (two O(edges) equi-joins); d_c
+      // rides the node-sized degree table; m attaches as a 1-row
+      // broadcast.
       val und = undirectedEdges(s, d, 3)
         .persist() // consumed by votes, deg, e_c, and m
-      val votes = und
-        .select(explode(array(
-          struct(col("u").as("node"), (col("v") % 64).as("lbl")),
-          struct(col("v").as("node"), (col("u") % 64).as("lbl")))).as("e"))
-        .select(col("e.node").as("node"), col("e.lbl").as("lbl"))
-        .groupBy("node", "lbl").agg(count(lit(1)).as("votes"))
-      // Plurality vote as an aggregate, not a rank window (round 14,
-      // guide §2.3): max(struct(votes, −lbl)) IS (votes DESC, lbl ASC),
-      // partial-combines map-side, no per-partition sort.
-      val labels = votes.groupBy("node")
-        .agg(max(struct(col("votes"), (-col("lbl")).as("neglbl"))).as("b"))
-        .select(col("node"), (-col("b.neglbl")).as("lbl"))
+      val labels = plurality(und).select(col("node").as("i"), col("lbl").as("c"))
         .persist() // joined onto both edge endpoints + the degree table
-      val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val dC = deg.join(labels, "node")
-        .groupBy("lbl").agg(sum(col("deg")).as("d_c"))
-      val eC = und
-        .join(labels.select(col("node").as("u"), col("lbl").as("lu")), "u")
-        .join(labels.select(col("node").as("v"), col("lbl").as("lv")), "v")
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("lbl")).agg(count(lit(1)).as("e_c"))
-      val mRow = und.agg(count(lit(1)).as("m"))
-      dC.join(eC, Seq("lbl"), "left")
-        .crossJoin(broadcast(mRow))
-        .select(round(coalesce(col("e_c"), lit(0L)).cast(DoubleType) / col("m") -
-          (col("d_c").cast(DoubleType) / (col("m") * 2)) *
-            (col("d_c").cast(DoubleType) / (col("m") * 2)), 9).as("term"))
-        .agg(count(lit(1)).as("n_communities"),
-          round(sum(col("term").cast(DecimalType(28, 9))).cast(DoubleType), 6)
-            .as("q"))
-        .crossJoin(broadcast(mRow.select(col("m").as("m_edges"))))
+      val g = CGraph.of(unit(und))
+      modularity(g, Labels(labels), count(lit(1)).as("n_communities"))
+        .crossJoin(broadcast(g.mRow.select(col("m").as("m_edges"))))
         .select(col("n_communities"), col("m_edges"), col("q"))
     },
 
     "graph_louvain_step" -> { (s, d) =>
       // One synchronous Louvain phase-1 sweep — the REFINE step that
       // completes the community trio (graph_label_prop detects,
-      // graph_modularity scores, this moves): every node evaluates
-      // moving to each neighboring community and takes the
-      // modularity-gain argmax, the standard insertion-gain comparator
-      // ΔQ(i→c) = kin(i,c)/m − k_i·Σtot(c∖i)/(2m²), staying allowed
-      // (its Σtot excludes i — the remove-then-insert bookkeeping).
-      // Starting partition is id % 64, the same coarse hash communities
-      // label_prop steps from, so the three queries read as one
-      // pipeline over the same %3 co-occurrence graph. Deterministic:
-      // kin/ktot/k_i/m are exact longs, the gain is one identical IEEE
-      // expression rounded at 1e-9 BEFORE the argmax, ties → lower
-      // community id. Shape: two O(edges) rollups (kin by (node,
-      // neighbor community), degrees), a ≤64-row community-mass table,
-      // m as a 1-row broadcast (the graph_modularity attach), argmax
-      // on a per-node window — nothing denser than the edge list.
-      val und = undirectedEdges(s, d, 3)
-        .persist() // consumed by adj (twice via union), deg, and m
-      val adj = und.select(col("u").as("i"), col("v").as("j"))
-        .unionByName(und.select(col("v").as("i"), col("u").as("j")))
-      val deg = adj.groupBy("i").agg(count(lit(1)).as("ki"))
-      val kin = adj.select(col("i"), pmod(col("j"), lit(64)).as("c"))
-        .groupBy("i", "c").agg(count(lit(1)).as("kin"))
-      // Staying is always a candidate, even with zero same-community
-      // neighbors (kin = 0).
-      val stay = deg.select(col("i"), pmod(col("i"), lit(64)).as("c"),
-        lit(0L).as("kin"))
-      val cand = kin.unionByName(stay)
-        .groupBy("i", "c").agg(max(col("kin")).as("kin"))
-      val ktot = deg.select(pmod(col("i"), lit(64)).as("c"), col("ki"))
-        .groupBy("c").agg(sum(col("ki")).as("ktot"))
-      val mRow = und.agg(count(lit(1)).as("m"))
-      val scored = cand.join(ktot, "c").join(deg, "i")
-        .crossJoin(broadcast(mRow))
-        .withColumn("c0", pmod(col("i"), lit(64)))
-        .withColumn("sigma", col("ktot") -
-          when(col("c") === col("c0"), col("ki")).otherwise(lit(0L)))
-        .withColumn("gain", round(
-          col("kin").cast(DoubleType) / col("m") -
-            col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
-              (lit(2.0) * col("m") * col("m")), 9))
-      // Argmax as an aggregate, not a rank window (round 14, guide
-      // §2.3): max(struct(gain, −c)) IS (gain DESC, c ASC) and
-      // partial-combines map-side — the exchange carries one row per
-      // node instead of one per (node, neighbor community), and the
-      // window's per-partition sort disappears. c0 = pmod(i, 64) is
-      // re-derived arithmetically after the aggregate.
-      scored.groupBy("i")
-        .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
-        .select(col("i").as("node_id"),
-          pmod(col("i"), lit(64)).as("cid_old"),
-          (-col("b.negc")).as("cid_new"),
-          ((-col("b.negc")) =!= pmod(col("i"), lit(64))).as("moved"),
-          col("b.gain").as("gain"))
+      // graph_modularity scores, this moves): the kernel's sweep over
+      // the %3 co-occurrence graph from the id % 64 communities
+      // label_prop steps from. The start is arithmetic, so no label
+      // table is joined: kin rolls up by (node, neighbor id % 64), and
+      // m attaches as a 1-row broadcast (the graph_modularity attach) —
+      // nothing denser than the edge list.
+      val g = CGraph.of(unit(undirectedEdges(s, d, 3)
+        .persist())) // consumed by adj, deg, and m
+      hash64.attach(sweep(g, hash64), "i", "c0")
+        .select(col("i").as("node_id"), col("c0").as("cid_old"),
+          col("c").as("cid_new"), (col("c") =!= col("c0")).as("moved"),
+          col("gain"))
         .orderBy("node_id")
     },
 
     "graph_louvain_converged" -> { (s, d) =>
       // Louvain phase-1 iterated to ITS OWN convergence criterion
-      // (VERDICT r10 item 4): repeat graph_louvain_step's synchronous
-      // sweep WHILE MODULARITY STRICTLY IMPROVES, stop at the first
-      // non-improving sweep, emit the last improving partition — the
-      // textbook phase-1 contract ("repeat until no gain"). Zero-moves
-      // stationarity was MEASURED to be the wrong criterion for the
-      // synchronous schedule: the sweep enters a persistent swap limit
-      // cycle (~451 nodes at sf0.01, ~4 900 at sf0.1, flat to round
-      // 200 — the AdjLoop6 probe), and an alternating-parity dampener
-      // converges at sf0.01 (52 sub-rounds) but still cycles past 200
-      // at sf0.1; both probed on the %3
-      // graph). Q, however, rises monotonically and dips exactly once
-      // inside the cap at both gate scales — so the Q-monotone rule is both
-      // the honest algorithmic contract and a deterministic, bounded
-      // stop. Labels become a TABLE (the step derives round-1 labels
-      // from id%64 arithmetically; iterating promotes that to a
-      // node-keyed join, as graph_label_prop's scaladoc predicts).
+      // (VERDICT r10 item 4): the kernel's Q-dip loop ([[phase1]]) —
+      // repeat the sweep WHILE MODULARITY STRICTLY IMPROVES, stop at the
+      // first non-improving sweep, emit the last improving partition,
+      // the textbook phase-1 contract ("repeat until no gain"). Zero-
+      // moves stationarity was MEASURED to be the wrong criterion for
+      // the synchronous schedule: the sweep enters a persistent swap
+      // limit cycle (~451 nodes at sf0.01, ~4 900 at sf0.1, flat to
+      // round 200), and an alternating-parity dampener converges at
+      // sf0.01 (52 sub-rounds) but still cycles past 200 at sf0.1; both
+      // probed on the %3 graph. Q, however, rises monotonically and dips
+      // exactly once inside the cap at both gate scales — so the
+      // Q-monotone rule is both the honest algorithmic contract and a
+      // deterministic, bounded stop.
       //
-      // Oracle-able without a fixpoint: gains are round(·, 9) of one
-      // identical IEEE expression over exact longs, the argmax is
-      // (gain DESC, c ASC), Q is graph_modularity's exact construction
-      // (1e-9-snapped terms, decimal sum, round 6), and the stop round
-      // k* = min{k : Q_k ≤ Q_{k-1}} is a pure function of the Q
-      // sequence — the oracle unrolls the 40-round cap, reproduces the
-      // Q ladder, computes k* with a self-join, and emits lab_{k*−1}.
-      // The cap + require make a never-dipping trajectory a loud
-      // failure on the Spark side and a zero-row emission in the
-      // oracle — either way a red gate, never a silent wrong answer.
+      // Oracle-able without a fixpoint: the stop round k* = min{k : Q_k
+      // ≤ Q_{k-1}} is a pure function of the exact Q sequence — the
+      // oracle unrolls the 40-round cap, reproduces the Q ladder,
+      // computes k* with a self-join, and emits lab_{k*−1}. The cap +
+      // require make a never-dipping trajectory a loud failure on the
+      // Spark side and a zero-row emission in the oracle — either way a
+      // red gate, never a silent wrong answer.
       //
-      // Scale shape per round: one O(edges) kin rollup (map-side
-      // combine keyed by (node, neighbor community)), node-sized
-      // joins, a ≤|C|-row community-mass table, the per-node argmax
-      // window, and Q's two label joins — nothing denser than the
-      // edge list, and the driver reads ONE scalar (the round's Q)
-      // per sweep. Static tables (adj, deg) persist once; per-round
-      // labels localCheckpoint to keep lineage flat (the ccLabels
-      // necessity measurement).
       // %10 witness graph (the graph_clustering_coefficient bound, NOT
       // the step's %3): the iterated sweep pays its stage overhead per
       // ROUND, and the %3 graph's Q ladder runs 23 sweeps at sf0.1 vs
@@ -1058,151 +1112,77 @@ object Graph {
 
 
     "graph_louvain_coarsen" -> { (s, d) =>
-      // Louvain PHASE 2 — community contraction, the step the outer
-      // Louvain loop alternates with phase 1 (sweep → contract →
-      // sweep the supernode graph): every community becomes one
-      // supernode, inter-community edge counts become weighted
-      // super-edges, and intra-community edges fold into a self-loop
-      // of weight 2·e_c (the standard convention that preserves every
-      // node's degree mass, so modularity on the coarse graph equals
-      // modularity on the fine partition). Input partition is
-      // graph_louvain_step's one-sweep argmax — the coarsen consumes
-      // the sweep's emission verbatim, so the two operators read as
-      // phase1 → phase2. Scale shape: two O(edges) label joins (the
-      // graph_modularity e_c construction) + a ≤|C|²-bounded pair
-      // rollup. DELIBERATELY LIVE even though louvainArt holds this
-      // exact emission: the family needs one benched witness of the
+      // Louvain PHASE 2 — the kernel's contraction, the step the outer
+      // Louvain loop alternates with phase 1 (sweep → contract → sweep
+      // the supernode graph): every community becomes one supernode,
+      // inter-community edge counts become weighted super-edges, and
+      // intra-community edges fold into a self-loop of weight 2·e_c.
+      // Input partition is graph_louvain_step's one-sweep argmax, so the
+      // two operators read as phase1 → phase2. Scale shape: two
+      // O(edges) label joins + a ≤|C|²-bounded pair rollup.
+      // DELIBERATELY LIVE even though louvainArt holds this exact
+      // emission: the family needs one benched witness of the
       // contraction's edge-linear cost (the g-tier SCALING rows key on
       // it), and re-emitting the artifact here would leave the
       // contraction's plan shape unexercised — labels re-seed, the
       // contraction is this query's own work.
-      val lab = louvainStepLabels(s, d)
-      val und = undirectedEdges(s, d, 3)
-      und
-        .join(lab.select(col("i").as("u"), col("c").as("cu")), "u")
-        .join(lab.select(col("i").as("v"), col("c").as("cv")), "v")
-        .select(least(col("cu"), col("cv")).as("c_a"),
-          greatest(col("cu"), col("cv")).as("c_b"))
-        .groupBy("c_a", "c_b").agg(count(lit(1)).as("n_edges"))
-        .withColumn("weight",
-          when(col("c_a") === col("c_b"), col("n_edges") * 2)
-            .otherwise(col("n_edges")))
+      contract(unit(undirectedEdges(s, d, 3)), Labels(louvainStepLabels(s, d)))
+        .select(col("u").as("c_a"), col("v").as("c_b"), col("n_edges"),
+          col("w").as("weight"))
         .orderBy("c_a", "c_b")
     },
 
     "graph_louvain_level2" -> { (s, d) =>
       // The WEIGHTED phase-1 sweep over the coarsened supernode graph —
       // the step multi-level Louvain alternates with contraction
-      // (phase1 → coarsen → THIS → coarsen → …), completing the
-      // multi-level story: graph_louvain_step sweeps the fine graph,
-      // graph_louvain_coarsen contracts it, this sweeps the contraction
-      // with the weighted insertion gain ΔQ(i→{j}) = w_ij/m −
-      // k_i·k_j/(2m²). Level-2 restart is the standard singleton
-      // partition (every supernode its own community), so kin(i, c_j) =
-      // w_ij, Σtot({j}) = k_j (weighted degree INCLUDING the self-loop
-      // — the 2·e_c convention preserves degree mass, which is exactly
-      // why coarse-graph modularity arithmetic carries over unchanged),
-      // and staying scores 0 (empty community after self-removal).
-      // Everything is exact longs into one 1e-9-snapped IEEE gain, ties
-      // → lower cid, the fine sweep's comparator. Scale shape: the
-      // coarse graph of a 10⁹-node corpus still has millions of
-      // supernodes, so the sweep keeps the fine step's edge-rollup
-      // shape — symmetrized weighted adjacency, degree rollup, argmax
-      // window; m attaches as a 1-row broadcast (an exact long: half
-      // the degree-mass sum).
+      // (phase1 → coarsen → THIS → coarsen → …): the kernel's sweep over
+      // graph_louvain_coarsen's contraction from the standard singleton
+      // restart (every supernode its own community), so kin(i, {j}) =
+      // w_ij, Σtot({j}) = k_j (weighted degree INCLUDING the self-loop)
+      // and staying scores 0. The restart is arithmetic (label = id),
+      // so no label table is joined and no rollup runs; m attaches as a
+      // 1-row broadcast. Scale shape: the coarse graph of a 10⁹-node
+      // corpus still has millions of supernodes, so the sweep keeps the
+      // fine step's edge-rollup shape.
       // Input re-seeds from the once-per-dataset artifact (louvainArt —
       // VERDICT r11 item 2): the ≤2 080-row contraction arrives as a
-      // broadcast-sized local relation, so the four plan branches that
+      // broadcast-sized local relation, so the plan branches that
       // consume it share it for free — the r11 shape (eager checkpoint
       // of a live coarsen subtree, itself the fix for the measured
       // 12.5 s first-compute race) paid the whole step+contraction
       // subtree inside this query; the memo pays it once per dataset.
-      val ce = louvainCoarseTable(s, d)
-      val adjw = ce.filter(col("c_a") =!= col("c_b"))
-        .select(col("c_a").as("i"), col("c_b").as("j"), col("weight").as("w"))
-        .unionByName(ce.filter(col("c_a") =!= col("c_b"))
-          .select(col("c_b").as("i"), col("c_a").as("j"),
-            col("weight").as("w")))
-      val selfw = ce.filter(col("c_a") === col("c_b"))
-        .select(col("c_a").as("i"), col("weight").as("sw"))
-      val deg = adjw.groupBy("i").agg(sum(col("w")).as("nw"))
-        .join(selfw, Seq("i"), "full")
-        .select(col("i"),
-          (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
-            .as("ki"))
-      val mRow = deg.agg((sum(col("ki")) / 2).cast(LongType).as("m"))
-      val cand = adjw.select(col("i"), col("j").as("c"), col("w").as("kin"))
-        .unionByName(deg.select(col("i"), col("i").as("c"),
-          lit(0L).as("kin")))
-      cand
-        .join(deg.select(col("i").as("c"), col("ki").as("ktot")), "c")
-        .join(deg, "i")
-        .crossJoin(broadcast(mRow))
-        .withColumn("sigma",
-          when(col("c") === col("i"), lit(0L)).otherwise(col("ktot")))
-        .withColumn("gain", round(
-          col("kin").cast(DoubleType) / col("m") -
-            col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
-              (lit(2.0) * col("m") * col("m")), 9))
-        // Argmax as an aggregate, not a rank window (round 14, guide
-        // §2.3 — the graph_louvain_step rationale).
-        .groupBy("i")
-        .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
-        .select(col("i").as("node_id"), (-col("b.negc")).as("cid_new"),
-          ((-col("b.negc")) =!= col("i")).as("moved"),
-          col("b.gain").as("gain"))
+      sweep(CGraph.of(louvainCoarseTable(s, d)), singletons)
+        .select(col("i").as("node_id"), col("c").as("cid_new"),
+          (col("c") =!= col("i")).as("moved"), col("gain"))
         .orderBy("node_id")
     },
 
     "graph_coarsen_invariant" -> { (s, d) =>
       // The coarsening CORRECTNESS WITNESS: modularity computed along
-      // two INDEPENDENT paths — Q_fine over the fine graph (und ⋈
-      // labels, the graph_modularity construction) and Q_coarse over
-      // the CONTRACTED graph's own tables (singleton partition:
-      // Q = Σ_i [sw_i/2m − (k_i/2m)²] with sw = the 2·e_c self-loops,
-      // k = weighted degree, m = half the degree-mass sum) — must be
-      // EXACTLY equal: the 2·e_c convention preserves degree mass, so
-      // per-community terms are the same rationals (e_c/m vs 2e_c/2m —
-      // IEEE division is correctly rounded, so equal quotients round
-      // identically), the 1e-9 snap and decimal sum commute, and the
-      // equality is exact double equality, not an epsilon. A
-      // bookkeeping slip anywhere in the contraction (missed cut edge,
-      // single-counted self-loop, dropped community) breaks the flag —
-      // this is the property graph_louvain_coarsen's scaladoc argues;
-      // here it is measured and hash-gated. Scale shape: the fine path
+      // two INDEPENDENT paths — Q_fine, the kernel's Q of the step
+      // labels over the fine graph, and Q_coarse over the CONTRACTED
+      // graph's own tables (singleton partition: Q = Σ_i [sw_i/2m −
+      // (k_i/2m)²] with sw = the 2·e_c self-loops, k = weighted degree,
+      // m = half the degree-mass sum), written out here on purpose
+      // rather than taken from the kernel — must be EXACTLY equal: the
+      // 2·e_c convention preserves degree mass, so per-community terms
+      // are the same rationals (e_c/m vs 2e_c/2m — IEEE division is
+      // correctly rounded, so equal quotients round identically), the
+      // 1e-9 snap and decimal sum commute, and the equality is exact
+      // double equality, not an epsilon. A bookkeeping slip anywhere in
+      // the contraction (missed cut edge, single-counted self-loop,
+      // dropped community) breaks the flag. Scale shape: the fine path
       // is two O(edges) label joins; the coarse path is ≤|C|²-row
       // arithmetic; both m's are O(1) driver reads.
-      val lab = louvainStepLabels(s, d)
-      val und = undirectedEdges(s, d, 3)
-        .localCheckpoint(eager = true) // fine path + contraction consume it
-      val m = und.agg(count(lit(1))).head().getLong(0) // O(1), read once
-      // Fine path: graph_modularity's exact construction over lab.
-      val dC = und.select(explode(array(col("u"), col("v"))).as("i"))
-        .groupBy("i").agg(count(lit(1)).as("ki"))
-        .join(lab, "i").groupBy("c").agg(sum(col("ki")).as("d_c"))
-      val eC = und
-        .join(lab.select(col("i").as("u"), col("c").as("lu")), "u")
-        .join(lab.select(col("i").as("v"), col("c").as("lv")), "v")
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("c")).agg(count(lit(1)).as("e_c"))
-      val qFine = dC.join(eC, Seq("c"), "left")
-        .select(round(
-          coalesce(col("e_c"), lit(0L)).cast(DoubleType) / lit(m.toDouble) -
-            (col("d_c").cast(DoubleType) / lit(2.0 * m)) *
-              (col("d_c").cast(DoubleType) / lit(2.0 * m)), 9).as("term"))
-        .agg(round(sum(col("term").cast(DecimalType(28, 9)))
-          .cast(DoubleType), 6).as("q_fine"))
+      val lab = Labels(louvainStepLabels(s, d))
+      val g = CGraph.of(unit(undirectedEdges(s, d, 3)
+        .localCheckpoint(eager = true))) // fine path + contraction consume it
+        .readM
+      val qFine = modularity(g, lab).select(col("q").as("q_fine"))
       // Coarse path: contract independently, then singleton-partition
       // weighted modularity over the CONTRACTED tables only.
-      val cw = und
-        .join(lab.select(col("i").as("u"), col("c").as("cu")), "u")
-        .join(lab.select(col("i").as("v"), col("c").as("cv")), "v")
-        .select(least(col("cu"), col("cv")).as("c_a"),
-          greatest(col("cu"), col("cv")).as("c_b"))
-        .groupBy("c_a", "c_b").agg(count(lit(1)).as("n_edges"))
-        .select(col("c_a"), col("c_b"),
-          when(col("c_a") === col("c_b"), col("n_edges") * 2)
-            .otherwise(col("n_edges")).as("weight"))
+      val cw = contract(g.edges, lab)
+        .select(col("u").as("c_a"), col("v").as("c_b"), col("w").as("weight"))
         .localCheckpoint(eager = true) // adjacency + self-loops + degrees
       val adjw = cw.filter(col("c_a") =!= col("c_b"))
         .select(col("c_a").as("i"), col("weight").as("w"))
@@ -1226,7 +1206,7 @@ object Graph {
       qFine.crossJoin(broadcast(qCoarse))
         .select(col("q_fine"), col("q_coarse"),
           (col("q_fine") === col("q_coarse")).as("invariant_holds"),
-          lit(m).as("m_fine"), lit(m2).as("m_coarse"))
+          g.m.as("m_fine"), lit(m2).as("m_coarse"))
     },
 
     "graph_louvain_full" -> { (s, d) =>
@@ -1235,14 +1215,11 @@ object Graph {
       // proof parts. Alternates phase 1 and phase 2 on the %10 witness
       // graph: level-1 phase-1 to the Q-monotone fixpoint
       // (graph_louvain_converged — re-seeded from the once-per-dataset
-      // artifact), contract (graph_louvain_coarsen's degree-mass-
-      // preserving convention, generalized to weighted graphs), then
-      // per level ≥2 a WEIGHTED phase-1 iterated to its own Q-monotone
-      // fixpoint from the singleton restart (graph_louvain_level2's
-      // comparator, generalized past round 1 to a label-table join),
-      // re-contract, repeat — STOPPING at the first level whose
-      // converged sweep yields no Q gain (level-over-level gain ≤ 0 on
-      // the round-6-quantized ladder). Emits the FINE-node → final-
+      // artifact), contract, then per level ≥2 the kernel's Q-dip loop
+      // from the singleton restart (graph_louvain_level2's sweep,
+      // iterated), re-contract, repeat — STOPPING at the first level
+      // whose converged sweep yields no Q gain (level-over-level gain ≤
+      // 0 on the round-6-quantized ladder). Emits the FINE-node → final-
       // community map (label tables composed down the levels) plus the
       // level count and final Q.
       //
@@ -1255,141 +1232,38 @@ object Graph {
       // loop require()s termination within the level cap — a still-
       // improving level-4 is a red gate, never a truncated emission.
       //
-      // Oracle-able by composition: every piece is the deterministic
-      // arithmetic the existing converged/coarsen/level2 oracles
-      // replicate (exact-long kin/ktot/degree mass, one 1e-9-snapped
-      // IEEE gain, (gain DESC, c ASC) argmax, 1e-9-term/decimal-sum/
-      // round-6 Q); the oracle unrolls the fine ladder (40) + two
-      // weighted ladders (16 each) and selects the stop level with the
-      // kstar self-join pattern.
+      // Oracle-able by composition: the oracle unrolls the fine ladder
+      // (40) + two weighted ladders (16 each) of the same arithmetic
+      // and selects the stop level with the kstar self-join pattern.
       //
       // Scale shape: the level-1 input is the held artifact (node-
       // sized); the fine contraction is one O(edges) rollup; each
       // level-l graph stays a DATAFRAME (the coarse graph of a 10⁹-
       // node corpus still has millions of supernodes — level2's bound)
-      // with per-sweep O(coarse-edges) rollups, node-sized joins, the
-      // argmax window, and ONE O(1) driver scalar (the sweep's Q) per
-      // round; label composition is one node-sized join per level.
-      // Witness-graph instance: every coarse table here is ≤
-      // C(64,2)+64 = 2 080 rows (communities ⊂ the 64 hash seeds), so
-      // the inner rounds are pure stage-floor — the honest gate-scale
-      // cost of the scale-true plan (the HITS finding).
+      // with per-sweep O(coarse-edges) rollups, node-sized joins and
+      // ONE O(1) driver scalar (the sweep's Q) per round; label
+      // composition is one node-sized join per level. Witness-graph
+      // instance: every coarse table here is ≤ C(64,2)+64 = 2 080 rows
+      // (communities ⊂ the 64 hash seeds), so the inner rounds are pure
+      // stage-floor — the honest gate-scale cost of the scale-true plan
+      // (the HITS finding).
       val art = louvain10Art(s, d)
       val lab1 = s.read.parquet(art.labelsPath) // (i, c), node-sized
-      val und = undirectedEdges(s, d, 10)
-      // R-representation: (c_a ≤ c_b, w); self-loop weight counts once
-      // toward its node's degree (the 2·e_c convention pre-applied).
-      // Contraction preserves degree mass: intra non-self edges double
-      // (both endpoints' degree contributions fold in), self-loops and
-      // cut edges carry their weight.
-      def contract(g: DataFrame, lab: DataFrame): DataFrame = g
-        .join(lab.select(col("i").as("c_a"), col("c").as("la")), "c_a")
-        .join(lab.select(col("i").as("c_b"), col("c").as("lb")), "c_b")
-        .select(least(col("la"), col("lb")).as("a2"),
-          greatest(col("la"), col("lb")).as("b2"),
-          when(col("la") === col("lb") && col("c_a") =!= col("c_b"),
-            col("w") * 2).otherwise(col("w")).as("wc"))
-        .groupBy(col("a2").as("c_a"), col("b2").as("c_b"))
-        .agg(sum(col("wc")).as("w"))
-      var cur = contract(
-        und.select(col("u").as("c_a"), col("v").as("c_b"), lit(1L).as("w")),
-        lab1).localCheckpoint(eager = true) // many consumers per level
+      var cur = contract(unit(undirectedEdges(s, d, 10)), Labels(lab1))
+        .localCheckpoint(eager = true) // many consumers per level
       var curQ = art.q
       var compo = lab1 // fine i → community at the current final level
       var levels = 1
       var improving = true
       while (improving && levels < 4) {
-        val adjw = cur.filter(col("c_a") =!= col("c_b"))
-          .select(col("c_a").as("i"), col("c_b").as("j"), col("w"))
-          .unionByName(cur.filter(col("c_a") =!= col("c_b"))
-            .select(col("c_b").as("i"), col("c_a").as("j"), col("w")))
-        val degw = adjw.groupBy("i").agg(sum(col("w")).as("nw"))
-          .join(cur.filter(col("c_a") === col("c_b"))
-            .select(col("c_a").as("i"), col("w").as("sw")), Seq("i"), "full")
-          .select(col("i"),
-            (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
-              .as("ki"),
-            coalesce(col("sw"), lit(0L)).as("sw"))
-          .localCheckpoint(eager = true) // probed every sweep + by Q
-        val m = degw.agg((sum(col("ki")) / 2).cast(LongType))
-          .head().getLong(0) // O(1), once per level
-        // Labeled weighted modularity on the SAME Q scale as the fine
-        // graph: e_c = intra cut-free weight + half the self-loop mass
-        // (exact longs — sw is even by construction), then the fine
-        // term grid verbatim (1e-9 terms, decimal sum, round 6).
-        def qW(lab: DataFrame): Double = {
-          val rolled = degw.join(lab, "i").groupBy("c")
-            .agg(sum(col("ki")).as("d_c"),
-              (sum(col("sw")) / 2).cast(LongType).as("sh"))
-          val intra = cur.filter(col("c_a") =!= col("c_b"))
-            .join(lab.select(col("i").as("c_a"), col("c").as("la")), "c_a")
-            .join(lab.select(col("i").as("c_b"), col("c").as("lb")), "c_b")
-            .filter(col("la") === col("lb"))
-            .groupBy(col("la").as("c")).agg(sum(col("w")).as("iw"))
-          rolled.join(intra, Seq("c"), "left")
-            .select(round(
-              (coalesce(col("iw"), lit(0L)) + col("sh")).cast(DoubleType) /
-                lit(m.toDouble) -
-                (col("d_c").cast(DoubleType) / lit(2.0 * m)) *
-                  (col("d_c").cast(DoubleType) / lit(2.0 * m)), 9).as("term"))
-            .agg(round(sum(col("term").cast(DecimalType(28, 9)))
-              .cast(DoubleType), 6))
-            .head().getDouble(0)
-        }
-        // The weighted sweep with a label TABLE (level2's comparator
-        // generalized past the singleton round).
-        def sweepW(lab: DataFrame): DataFrame = {
-          val kin = adjw.join(lab.select(col("i").as("j"), col("c")), "j")
-            .groupBy("i", "c").agg(sum(col("w")).as("kin"))
-          val stay = degw.join(lab, "i")
-            .select(col("i"), col("c"), lit(0L).as("kin"))
-          val cand = kin.unionByName(stay)
-            .groupBy("i", "c").agg(max(col("kin")).as("kin"))
-          val ktot = degw.join(lab, "i")
-            .groupBy("c").agg(sum(col("ki")).as("ktot"))
-          // Argmax as an aggregate (round 14, guide §2.3 — the
-          // graph_louvain_step rationale).
-          cand.join(ktot, "c")
-            .join(degw.select(col("i"), col("ki")), "i")
-            .join(lab.select(col("i"), col("c").as("c0")), "i")
-            .withColumn("sigma", col("ktot") -
-              when(col("c") === col("c0"), col("ki")).otherwise(lit(0L)))
-            .withColumn("gain", round(
-              col("kin").cast(DoubleType) / lit(m.toDouble) -
-                col("ki").cast(DoubleType) * col("sigma").cast(DoubleType) /
-                  (lit(2.0) * lit(m.toDouble) * lit(m.toDouble)), 9))
-            .groupBy("i")
-            .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("b"))
-            .select(col("i"), (-col("b.negc")).as("c"))
-        }
-        val singleton = degw.select(col("i"), col("i").as("c"))
+        val g = CGraph.of(cur).held
         // Witness (1): the coarsen invariant, loud, per level.
-        val q0 = qW(singleton)
+        val q0 = modularity(g, singletons).head().getDouble(0)
         require(q0 == curQ,
           s"graph_louvain_full: contraction broke the modularity " +
             s"invariant at level $levels (singleton Q=$q0 vs $curQ)")
-        var lab = singleton
-        var q = curQ
-        var labPersisted: DataFrame = null
-        var dipped = false
-        var sweeps = 0
-        while (!dipped && sweeps < 16) {
-          // EAGER: qW(nxt) consumes nxt through multiple sibling plan
-          // branches inside one action — a lazy first materialization
-          // loses the first-compute race and re-runs the sweep subtree
-          // per branch (the measured level2/ce finding; r12 review).
-          val nxt = sweepW(lab).localCheckpoint(eager = true)
-          val qn = qW(nxt)
-          dipped = qn <= q
-          if (!dipped) {
-            if (labPersisted != null) labPersisted.unpersist()
-            labPersisted = nxt; lab = nxt; q = qn
-          } else nxt.unpersist()
-          sweeps += 1
-        }
-        require(dipped, s"graph_louvain_full: level ${levels + 1} inner " +
-          s"sweep still improving after $sweeps rounds (Q=$q) — raise " +
-          "the cap")
+        val (lab, q, _) = phase1(g, singletons, q0, 16,
+          s"graph_louvain_full: level ${levels + 1}")
         if (q <= curQ) improving = false // level added nothing: stop
         else {
           val prevCompo = compo
@@ -1398,21 +1272,21 @@ object Graph {
             .join(lab.select(col("i").as("c"), col("c").as("c2")), "c")
             .select(col("i"), col("c2").as("c"))
             .localCheckpoint(eager = true) // node-sized, next level joins it
-          cur = contract(cur, lab).localCheckpoint(eager = true)
+          cur = contract(cur, Labels(lab)).localCheckpoint(eager = true)
           // Superseded level state released only AFTER the eager
           // checkpoints above materialized from it.
-          if (prevCompo ne lab1) prevCompo.unpersist()
-          prevCur.unpersist()
+          if (prevCompo ne lab1) Cc.release(prevCompo)
+          Cc.release(prevCur)
           curQ = q
           levels += 1
         }
-        if (labPersisted != null) labPersisted.unpersist()
-        degw.unpersist()
+        Cc.release(lab)
+        Cc.release(g.deg)
       }
       require(!improving,
         s"graph_louvain_full: still improving at the $levels-level cap " +
           "— raise the outer cap; truncating would under-report")
-      cur.unpersist() // the final coarse graph; the emission reads compo
+      Cc.release(cur) // the final coarse graph; the emission reads compo
       compo.select(col("i").as("node_id"), col("c").as("cid"),
         lit(levels.toLong).as("levels"), lit(curQ).as("q_final"))
         .orderBy("node_id")
@@ -1430,69 +1304,39 @@ object Graph {
       // community-level quality priors). Everything is exact longs
       // (vol = Σ ki, cut = vol − 2·e_c) with ONE rounded division at
       // emission; a community owning all edge mass (min = 0) emits
-      // φ = 0 by convention instead of 0/0. Scale shape: the
-      // graph_modularity construction — two O(edges) label joins +
-      // community-sized rollups; labels re-read from the artifact
-      // table, never recomputed.
-      val lab = s.read.parquet(louvain10Art(s, d).labelsPath) // (i, c)
-      val und = undirectedEdges(s, d, 10)
-        .localCheckpoint(eager = true) // deg + both e_c joins consume it
-      val m = und.agg(count(lit(1))).head().getLong(0) // O(1), once
-      val deg = und.select(explode(array(col("u"), col("v"))).as("i"))
-        .groupBy("i").agg(count(lit(1)).as("ki"))
-      val dC = deg.join(lab, "i").groupBy("c")
-        .agg(sum(col("ki")).as("d_c"), count(lit(1)).as("n_nodes"))
-      val eC = und
-        .join(lab.select(col("i").as("u"), col("c").as("lu")), "u")
-        .join(lab.select(col("i").as("v"), col("c").as("lv")), "v")
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("c")).agg(count(lit(1)).as("e_c"))
-      dC.join(eC, Seq("c"), "left")
-        .select(col("c").as("community_id"), col("n_nodes"),
-          coalesce(col("e_c"), lit(0L)).as("e_c"), col("d_c"),
-          (col("d_c") - lit(2) * coalesce(col("e_c"), lit(0L))).as("cut"),
-          when(least(col("d_c"), lit(2 * m) - col("d_c")) === 0, lit(0.0))
-            .otherwise(round(
-              (col("d_c") - lit(2) * coalesce(col("e_c"), lit(0L)))
-                .cast(DoubleType) /
-                least(col("d_c"), lit(2 * m) - col("d_c")), 6))
+      // φ = 0 by convention instead of 0/0. Scale shape: the kernel's
+      // community rollup — two O(edges) label joins + community-sized
+      // rollups; labels re-read from the artifact table, never
+      // recomputed.
+      val lab = Labels(s.read.parquet(louvain10Art(s, d).labelsPath))
+      val g = CGraph.of(unit(undirectedEdges(s, d, 10)
+        .localCheckpoint(eager = true))) // deg + both e_c joins consume it
+        .readM
+      val cut = col("d_c") - col("e_c") * 2
+      val vol = least(col("d_c"), g.m * 2 - col("d_c"))
+      rollup(g, lab)
+        .select(col("c").as("community_id"), col("n_nodes"), col("e_c"),
+          col("d_c"), cut.as("cut"),
+          when(vol === 0, lit(0.0)).otherwise(round(cut.cast(DoubleType) / vol, 6))
             .as("conductance"))
         .orderBy("community_id")
     },
 
     "graph_label_prop" -> { (s, d) =>
       // One synchronous label-propagation step (community detection's
-      // workhorse): every node adopts the plurality label among its
-      // neighbors, ties broken toward the smaller label — the
-      // deterministic LPA variant. Labels start as id % 64 (coarse
-      // hash communities), so on step 1 a neighbor's label is
-      // derivable from its id and no label-table join is needed;
-      // iterating would turn that select into a shuffled equi-join on
-      // node id, same shape. Distributed schedule: symmetrize the edge
-      // list (map-side union), one map-side-combined groupBy
-      // (node, label) for the votes, and a row_number argmax window
-      // partitioned by node — parallelism scales with nodes, and no
+      // workhorse), the kernel's plurality vote: every node adopts the
+      // plurality label among its neighbors, ties broken toward the
+      // smaller label — the deterministic LPA variant. Labels start as
+      // id % 64 (coarse hash communities), so on step 1 a neighbor's
+      // label is derivable from its id and no label-table join is
+      // needed; iterating would turn that select into a shuffled
+      // equi-join on node id, same shape. Distributed schedule: one
+      // map-side-combined groupBy (node, label) for the votes and one
+      // by node for the winner — parallelism scales with nodes, and no
       // step exceeds O(edges) shuffle bytes. Same %3 witness bound as
       // graph_triangles (see there).
-      val und = undirectedEdges(s, d, 3)
-      // Symmetrize via explode, not unionAll-of-selects: the union form
-      // re-executes the pair-join + distinct subtree once per direction
-      // (see graph_degree_dist).
-      val votes = und
-        .select(explode(array(
-          struct(col("u").as("node"), (col("v") % 64).as("lbl")),
-          struct(col("v").as("node"), (col("u") % 64).as("lbl")))).as("e"))
-        .select(col("e.node").as("node"), col("e.lbl").as("lbl"))
-        .groupBy("node", "lbl").agg(count(lit(1)).as("votes"))
-      // Plurality vote as an aggregate, not a rank window (round 14,
-      // guide §2.3): max(struct(votes, −lbl)) IS (votes DESC, lbl ASC);
-      // the winner's vote count rides the same struct, the hash
-      // aggregate partial-combines map-side, and the window's
-      // per-partition sort disappears.
-      votes.groupBy("node")
-        .agg(max(struct(col("votes"), (-col("lbl")).as("neglbl"))).as("b"))
-        .select(col("node"), (-col("b.neglbl")).as("new_label"),
-          col("b.votes").as("votes"))
+      plurality(undirectedEdges(s, d, 3))
+        .select(col("node"), col("lbl").as("new_label"), col("votes"))
         .orderBy("node")
     },
 
@@ -1660,54 +1504,16 @@ object Graph {
   /** Connected-component census of an undirected edge frame (u, v;
     * each edge listed in either or both directions): one row per
     * component — component_id (= its min node), n_nodes, min_node,
-    * max_node. Same min-label fixpoint schedule as [[Cc.minLabel]] with
-    * the graph swapped: label(v) ← min(label(v), min over neighbors)
-    * each round, O(edges) per round. Plain propagation, not pointer
-    * jumping: a co-occurrence graph's diameter is tiny (measured at
-    * sf0.01: labels settle in 4 rounds and a 5th confirms the
-    * fixpoint); Cc.minLabel documents the jumping variant.
-    * Each round is ONE SQL execution ([[Cc.round]]): the eager
-    * checkpoint that truncates lineage also observes how many labels
-    * dropped. Edges are symmetric, so no label drops exactly when no
-    * edge joins two different labels — the fixpoint. Throws if that has
-    * not happened after 20 rounds.
+    * max_node. The fixpoint is [[Cc.minLabel]]'s: its pointer-jumping
+    * label is at most plain propagation's after every round, so it
+    * settles in no more rounds, one SQL execution each.
     */
-  def componentCensus(und: DataFrame, what: String): DataFrame = {
-    val edges = und.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist() // joined every propagation round
-    var lab = Cc.round(edges.groupBy(col("u").as("id")).agg(min(col("v")).as("mn")),
-      lit(false), col("id"), least(col("id"), col("mn")).as("lbl"))._1
-    val none = lit(null).cast(lab.schema("lbl").dataType)
-    var changed = -1L
-    var rounds = 0
-    while (changed != 0L && rounds < 20) {
-      // Neighbor labels and each node's own label meet in one groupBy:
-      // nbl = min neighbor label, lbl = the node's current label (set
-      // only on its self row). Every node has an edge, so nbl is set.
-      val viaEdges = edges.join(lab, col("v") === col("id"))
-        .select(col("u").as("id"), col("lbl").as("nbl"), none.as("lbl"))
-      val self = lab.select(col("id"), none.as("nbl"), col("lbl"))
-      val next = viaEdges.unionByName(self)
-        .groupBy("id").agg(min(col("nbl")).as("nbl"), max(col("lbl")).as("lbl"))
-      val (cp, n) = Cc.round(next, col("nbl") < col("lbl"),
-        col("id"), least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-      Cc.release(lab)
-      lab = cp
-      changed = n
-      rounds += 1
-    }
-    require(changed == 0L,
-      s"$what: no fixpoint in $rounds rounds — " +
-        "emission would carry stale labels, not components")
-    edges.unpersist()
-    lab.groupBy(col("lbl").as("component_id"))
+  def componentCensus(und: DataFrame, what: String): DataFrame =
+    Cc.minLabel(und.select(col("u").as("id_a"), col("v").as("id_b")), what)
+      .groupBy(col("label").as("component_id"))
       .agg(count(lit(1)).as("n_nodes"),
         min(col("id")).as("min_node"), max(col("id")).as("max_node"))
       .orderBy("component_id")
-  }
 
   /** The graph_louvain_converged oracle's CTE chain on the %10 graph:
     * op/und/adj/deg/m, the 40-round unrolled fine sweep, the exact Q
@@ -1776,11 +1582,11 @@ object Graph {
   /** One weighted level's CTE block for the graph_louvain_full oracle:
     * given the level's coarse table cw$lv(c_a, c_b, w), emits
     * adjw/degw/mm, the `rounds`-round weighted ladder from the
-    * singleton restart (graph_louvain_full's sweepW arithmetic
-    * verbatim: exact-long weighted kin/ktot/degrees incl. self-loops,
-    * the 1e-9-snapped gain, (gain DESC, c ASC) argmax), the per-round
-    * labeled weighted Q (qW verbatim: e_c = intra weight + sw/2, fine
-    * term grid), the first-dip selection wks$lv, the level's final
+    * singleton restart (the kernel's sweep: exact-long weighted
+    * kin/ktot/degrees incl. self-loops, the 1e-9-snapped gain, (gain
+    * DESC, c ASC) argmax), the per-round labeled weighted Q (the
+    * kernel's Q: e_c = intra weight + sw/2, the same term grid), the
+    * first-dip selection wks$lv, the level's final
     * labels wfin$lv(i, c) and final Q wqf$lv(q).
     */
   private def louvainWeightedLevelCtes(lv: Int, rounds: Int): String = {

@@ -190,12 +190,11 @@ object TextPipeline {
     // this wrapper adds the per-session memoization the converged/
     // full siblings rely on.
     val labels = Cc.minLabel(truthPairs, "ccLabels")
-    // Best-effort release: the previous table may belong to an earlier
-    // (now-stopped) SparkSession — unpersist on a dead context NPEs in
+    // The previous table may belong to an earlier (now-stopped)
+    // SparkSession: unpersist on a dead context NPEs in
     // BlockManagerMaster, and a dead context has nothing to free.
     lastCcLabels.foreach { prev =>
-      try if (!prev.sparkSession.sparkContext.isStopped) Cc.release(prev)
-      catch { case _: Throwable => }
+      if (!prev.sparkSession.sparkContext.isStopped) Cc.release(prev)
     }
     lastCcLabels = Some(labels)
     labels

@@ -10,8 +10,8 @@ import graft.queries.{Cc, Graph}
 /** The connected-components fixpoints against an in-memory
   * union-find: `Cc.minLabel` (min-label propagation with pointer
   * jumping) must label every node with the min id of its component,
-  * and `Graph.componentCensus` (plain propagation) must emit exactly
-  * the union-find components. The fixtures cover seeded random graphs,
+  * and `Graph.componentCensus` (its census over `Cc.minLabel`) must
+  * emit exactly the union-find components. The fixtures cover seeded random graphs,
   * a 300-node path (many rounds) and a shuffled one past the round
   * cap, fixpoints that land on odd and on even rounds, duplicate and
   * reversed pairs, and an empty pair frame.
@@ -139,19 +139,14 @@ object CcSpec {
     * the round that finds no change: an in-memory replay of its
     * schedule (min of own label, neighbor labels and label(label)).
     */
-  def minLabelRounds(pairs: Seq[(Long, Long)]): Int = rounds(pairs, jump = true)
-
-  /** The same replay for `Graph.componentCensus` (no label(label)). */
-  def censusRounds(pairs: Seq[(Long, Long)]): Int = rounds(pairs, jump = false)
-
-  private def rounds(pairs: Seq[(Long, Long)], jump: Boolean): Int = {
+  def minLabelRounds(pairs: Seq[(Long, Long)]): Int = {
     val adj = (pairs ++ pairs.map(_.swap)).groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
     var lab = adj.map { case (v, ns) => v -> (ns :+ v).min }
     var n = 0
     var changed = true
     while (changed) {
       val next = lab.map { case (v, l) =>
-        v -> ((adj(v).map(lab) :+ l) ++ (if (jump) Seq(lab(l)) else Nil)).min
+        v -> (adj(v).map(lab) :+ l :+ lab(l)).min
       }
       changed = next != lab
       lab = next

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{Cc, Graph}
+import graft.queries.Cc
 
 /** Job counts as a gated, noise-free metric. At gate scale the
   * fixpoint keys are bound by fixed cost per Spark job and per SQL
@@ -22,9 +22,11 @@ import graft.queries.{Cc, Graph}
   * suite pins, per call at sf0.001 under the shipped profile:
   *
   *  - a job budget and an SQL-execution budget for each connected-
-  *    components key, counted over construction plus one consuming
-  *    collect, and that two calls count exactly the same;
-  *  - that every fixpoint round is exactly ONE SQL execution (its
+  *    components key and each community (Louvain/modularity) key,
+  *    counted over construction plus one consuming collect, and that
+  *    two calls count exactly the same, except for the few keys whose
+  *    job count differs between calls; those assert the budget only;
+  *  - that every `Cc.minLabel` round is exactly ONE SQL execution (its
   *    eager localCheckpoint, which also carries the convergence count),
   *    checked against an in-memory replay of the round schedule.
   *
@@ -71,42 +73,60 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
     Counts(jobs.get, execs.asScala.toSeq)
   }
 
-  // Per call at sf0.001: (jobs, SQL executions), set at the counts of
-  // the one-execution-per-round fixpoints. Lower is fine; higher fails.
-  private val budgets = Seq(
-    "dedup_clusters" -> (28, 6),
-    "pipeline_dedup_corpus" -> (29, 6),
-    "pipeline_mm_dedup" -> (15, 4),
-    "graph_connected_components" -> (24, 7))
-
-  test("connected-components keys stay within their job and SQL-execution budgets") {
+  /** Per call at sf0.001: (jobs, SQL executions). Lower is fine;
+    * higher fails. Keys in `varying` assert the budget only.
+    */
+  private def checkBudgets(budgets: Seq[(String, (Int, Int))],
+      varying: Set[String] = Set.empty): Unit =
     for ((key, (jobBudget, execBudget)) <- budgets) {
       def call(): Counts = measure { SparkEntry.queries(key)(spark, sf).collect(): Unit }
-      call() // warm-up: one-time table reads and layout work
+      call() // warm-up: one-time table reads, layout work and artifacts
       val (a, b) = (call(), call())
       info(s"$key: ${a.jobs} jobs, SQL executions ${a.execs.mkString(", ")}")
-      assert(a == b, s"$key: counts differ between two calls: $a vs $b")
+      if (!varying(key)) assert(a == b, s"$key: counts differ between two calls: $a vs $b")
       assert(a.jobs <= jobBudget, s"$key: ${a.jobs} jobs > budget $jobBudget (${a.execs})")
       assert(a.execs.size <= execBudget,
         s"$key: ${a.execs.size} SQL executions > budget $execBudget (${a.execs})")
     }
+
+  test("connected-components keys stay within their job and SQL-execution budgets") {
+    // Set at the counts of the one-execution-per-round fixpoints.
+    checkBudgets(Seq(
+      "dedup_clusters" -> (28, 6),
+      "pipeline_dedup_corpus" -> (29, 6),
+      "pipeline_mm_dedup" -> (15, 4),
+      "graph_connected_components" -> (21, 6)))
+  }
+
+  test("community keys stay within their job and SQL-execution budgets") {
+    // Set at the counts before these keys shared one community kernel.
+    // Job counts measured to differ between calls: graph_louvain_level2
+    // (11 or 12 before the kernel), graph_louvain_step (21 or 22 on it)
+    // and graph_louvain_full (32 or 33 on it).
+    checkBudgets(Seq(
+      "graph_modularity" -> (22, 1),
+      "graph_louvain_step" -> (26, 1),
+      "graph_louvain_level2" -> (12, 1),
+      "graph_louvain_coarsen" -> (10, 1),
+      "graph_coarsen_invariant" -> (28, 5),
+      "graph_community_conductance" -> (17, 3),
+      "graph_louvain_full" -> (55, 7)),
+      varying = Set("graph_louvain_level2", "graph_louvain_step", "graph_louvain_full"))
   }
 
   test("every fixpoint round is exactly one SQL execution") {
     val sp = spark
     import sp.implicits._
     val path = (0L until 299L).map(i => (i, i + 1))
-    val cc = measure { Cc.minLabel(path.toDF("id_a", "id_b"), "path300").collect(): Unit }
-    // The init step and each round: one localCheckpoint each; then
-    // the consuming collect, and no other action (no aggregate probe).
-    assert(cc.execs.count(_ == "localCheckpoint") == CcSpec.minLabelRounds(path) + 1, cc)
-    assert(cc.execs.size == CcSpec.minLabelRounds(path) + 2, cc)
-
+    // The census chain: graph_connected_components' fixpoint is
+    // Cc.minLabel too.
     val chain = (1L until 12L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (21L, 22L))
-    val census = measure {
-      Graph.componentCensus(chain.toDF("u", "v"), "chain").collect(): Unit
+    for ((what, pairs) <- Seq("path300" -> path, "chain" -> chain)) {
+      val cc = measure { Cc.minLabel(pairs.toDF("id_a", "id_b"), what).collect(): Unit }
+      // The init step and each round: one localCheckpoint each; then
+      // the consuming collect, and no other action (no aggregate probe).
+      assert(cc.execs.count(_ == "localCheckpoint") == CcSpec.minLabelRounds(pairs) + 1, cc)
+      assert(cc.execs.size == CcSpec.minLabelRounds(pairs) + 2, cc)
     }
-    assert(census.execs.count(_ == "localCheckpoint") == CcSpec.censusRounds(chain) + 1, census)
-    assert(census.execs.size == CcSpec.censusRounds(chain) + 2, census)
   }
 }

@@ -453,6 +453,7 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
       case (name, _) if allowed(name) => None
       case (name, q) =>
         val p = q(spark, sf).queryExecution.executedPlan.toString
+        CacheDrain.drain(spark) // between keys, as Bench does
         if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
           Some(name)
         else None
@@ -496,6 +497,7 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
       case (name, _) if boundedByDomain(name) => None
       case (name, q) =>
         val lp = q(spark, sf).queryExecution.optimizedPlan
+        CacheDrain.drain(spark) // between keys, as Bench does
         val bad = lp.collect {
           case w: LWindow if w.partitionSpec.isEmpty && !bounded(w.child) => w
         }
