@@ -1,9 +1,10 @@
 package graft.queries
 
+import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Observation}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
@@ -12,18 +13,34 @@ import org.apache.spark.sql.graftbridge.OfRows
 
 /** Connected components via min-label propagation with pointer
   * jumping — the shared fixpoint behind dedup_clusters /
-  * pipeline_dedup_corpus (text near-dup graphs) and pipeline_mm_dedup
-  * (perceptual-hash graphs). Extracted round 14 so the mm survivor
-  * pipeline provably rides the identical schedule the text CC keys
-  * have been oracle-green on since round 8.
+  * pipeline_dedup_corpus (text near-dup graphs), pipeline_mm_dedup
+  * (perceptual-hash graphs) and graph_connected_components.
   *
   * Scale design:
   *
-  * - Both edge directions come from ONE pass over the pair frame: a
-  *   union of the pair query with its swap re-executes the whole
-  *   upstream subtree per branch (measured ~2× the pair-join cost);
-  *   explode emits (a,b) and (b,a) from each row instead.
-  * - One SQL execution per round ([[round]]): an eager localCheckpoint
+  * - Contraction first ([[contract]]): a union-find over each task's
+  *   rows of the pair frame, in the pair scan's own stage, emits
+  *   (id, root) for every node it saw, root being the smallest id of
+  *   the node's component among that task's pairs. This star forest S
+  *   has the pairs' components (every pair is unioned in some task, and
+  *   every root lies in its node's component) and one row per node
+  *   per flush window, at most two per pair, so never more rows than
+  *   the pairs' two directions. Its memory is bounded: the map is
+  *   flushed every [[FlushNodes]] nodes, so a task holds a few MB at
+  *   any scale. Which rows share a flush window depends on row order,
+  *   and a retried task may cut different windows; any window still
+  *   emits roots that are nodes of the same component with root ≤ id.
+  * - Init is one [[round]] over S grouped by id: label = min(root),
+  *   and the round counts the CONTESTED nodes, min(root) < max(root).
+  *   Zero contested is a certificate, not a heuristic: every node then
+  *   has one root, and each root, which has its own (r, r) row, is its
+  *   own label; so both ends of every S edge carry the same label and
+  *   every label is a fixed point, which by min-label's fixpoint
+  *   argument forces each label to its component's minimum. No
+  *   propagation round runs. Only zero versus non-zero of the count is
+  *   read, and that survives a retried task.
+  * - Otherwise propagation runs over S in both directions, one SQL
+  *   execution per round ([[round]]): an eager localCheckpoint
   *   materializes the round's label table, and the convergence count
   *   rides that same job as an Observation — no separate aggregate
   *   action. The checkpoint also truncates lineage: the round-k plan
@@ -47,12 +64,12 @@ import org.apache.spark.sql.graftbridge.OfRows
   *   retried; zero versus non-zero survives that, equality of two sums
   *   does not.
   * - ONE join per round brings each node its neighbors' labels and its
-  *   label's label (pointer jumping). Jumping shortens chains whose ids
-  *   grow along the chain (a 300-node path in id order settles in 10
-  *   rounds), but it is no log-depth guarantee: the same path with
-  *   shuffled ids needed 69-133 rounds over three random shufflings,
-  *   past the 30-round cap, where the loop fails loudly instead of
-  *   emitting a split clustering.
+  *   label's label (pointer jumping). Neither the contraction nor the
+  *   jumping bounds the depth: laid out one pair per task the
+  *   contraction is the identity, and a 300-node path with shuffled ids
+  *   then needs 69-133 rounds over three random shufflings, past the
+  *   30-round cap, where the loop fails loudly instead of emitting a
+  *   split clustering.
   */
 object Cc {
 
@@ -64,21 +81,21 @@ object Cc {
     * own id. Throws if propagation has not converged after 30 rounds.
     */
   def minLabel(pairs: DataFrame, what: String): DataFrame = {
-    val edges = pairs
-      .select(explode(array(
-        struct(col("id_a"), col("id_b")),
-        struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("e"))
-      .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"))
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val star = pairs.select(col("id_a"), col("id_b")).as(longPair)
+      .mapPartitions(contract(_))(longPair)
+      .toDF("id", "root")
       .persist() // joined every propagation round
-    // Init already performs round 1 (min of self and direct
-    // neighbors) — the groupBy that would otherwise just distinct the
-    // node ids computes the neighbor min for free, saving one full
-    // propagation round of fixed job overhead.
-    var labels = round(
-      edges.groupBy(col("id_a").as("id")).agg(min(col("id_b")).as("nmin")),
-      lit(false), col("id"), least(col("id"), col("nmin")).as("label"))._1
+    var (labels, changed) = round(
+      star.groupBy("id").agg(min(col("root")).as("label"), max(col("root")).as("top")),
+      col("label") < col("top"), col("id"), col("label"))
+    // Both directions of every star edge, from one pass over S.
+    val edges = star
+      .select(explode(array(
+        struct(col("id").as("id_a"), col("root").as("id_b")),
+        struct(col("root").as("id_a"), col("id").as("id_b")))).as("e"))
+      .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"))
     val noPrev = lit(null).cast(labels.schema("label").dataType)
-    var changed = -1L
     var rounds = 0
     while (changed != 0L && rounds < 30) {
       // ONE join brings each node its neighbors' labels AND its
@@ -106,8 +123,53 @@ object Cc {
     require(changed == 0L,
       s"$what: min-label propagation did not converge in $rounds rounds" +
         " — emission would be a partial (split) clustering")
-    edges.unpersist()
+    star.unpersist()
     labels
+  }
+
+  /** Nodes a [[contract]] map holds before it flushes: a few MB. */
+  val FlushNodes: Int = 1 << 16
+
+  /** Union-find over `pairs`, emitting (node, root) for every node
+    * seen, root being the smallest id of the node's component among
+    * the pairs seen since the last flush. Every `flushAt` nodes the map
+    * is flushed and cleared, so memory stays bounded; each emitted root
+    * is then still a node of the same component with root ≤ node.
+    */
+  def contract(pairs: Iterator[(Long, Long)],
+      flushAt: Int = FlushNodes): Iterator[(Long, Long)] = new Iterator[(Long, Long)] {
+    private val parent = mutable.LongMap.empty[Long]
+    private var out: Iterator[(Long, Long)] = Iterator.empty
+
+    private def find(x: Long): Long = {
+      var v = x
+      var p = parent.getOrElseUpdate(v, v)
+      while (p != v) { // path splitting
+        val g = parent(p)
+        parent(v) = g
+        v = p
+        p = g
+      }
+      v
+    }
+
+    /** Unions the next window of pairs; false once the input is spent. */
+    private def fill(): Boolean = {
+      parent.clear()
+      while (parent.size < flushAt && pairs.hasNext) {
+        val (a, b) = pairs.next()
+        val (ra, rb) = (find(a), find(b))
+        // Root at the smaller id, so a root is its window's component min.
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      val nodes = parent.keysIterator.toArray
+      out = nodes.iterator.map(v => (v, find(v)))
+      nodes.nonEmpty
+    }
+
+    def hasNext: Boolean = out.hasNext || fill()
+    def next(): (Long, Long) =
+      if (hasNext) out.next() else throw new NoSuchElementException("contract")
   }
 
   /** One fixpoint round in ONE SQL execution: eagerly localCheckpoints

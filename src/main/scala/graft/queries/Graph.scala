@@ -1504,9 +1504,10 @@ object Graph {
   /** Connected-component census of an undirected edge frame (u, v;
     * each edge listed in either or both directions): one row per
     * component — component_id (= its min node), n_nodes, min_node,
-    * max_node. The fixpoint is [[Cc.minLabel]]'s: its pointer-jumping
-    * label is at most plain propagation's after every round, so it
-    * settles in no more rounds, one SQL execution each.
+    * max_node. The components are [[Cc.minLabel]]'s: its per-partition
+    * union-find settles every component that no partition boundary
+    * splits in its init step, and propagation rounds, one SQL execution
+    * each, run only when some node got two roots.
     */
   def componentCensus(und: DataFrame, what: String): DataFrame =
     Cc.minLabel(und.select(col("u").as("id_a"), col("v").as("id_b")), what)

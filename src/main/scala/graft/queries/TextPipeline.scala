@@ -160,13 +160,12 @@ object TextPipeline {
   }
 
   /** Min-label connected components over the verified near-dup edge set
-    * (the dedup_jaccard_pairs truth pairs): each round a node takes the
-    * min label among itself, its neighbors, AND its label's label
-    * (pointer jumping, which shortens long chains; [[Cc]] states its
-    * limits); measured at sf0.01: 3 rounds, the last of which only
-    * confirms the fixpoint, with per-round cost dominated by fixed job
-    * overhead at test size, not data. The loop reads back one
-    * observed count per round; all data stays distributed. Returns
+    * (the dedup_jaccard_pairs truth pairs) by [[Cc.minLabel]]: a
+    * union-find per partition, then min-label rounds with pointer
+    * jumping only where a partition boundary split a component ([[Cc]]
+    * states its limits); measured at sf0.01 and sf0.001: no round, the
+    * init step's one SQL execution settles every component. Each step
+    * reads back one observed count; all data stays distributed. Returns
     * the converged (id, label) table, checkpointed and already
     * materialized. Shared by dedup_clusters (cluster emission) and
     * pipeline_dedup_corpus (survivor mapping over the full corpus).

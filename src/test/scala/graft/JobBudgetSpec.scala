@@ -28,7 +28,8 @@ import graft.queries.Cc
   *    job count differs between calls; those assert the budget only;
   *  - that every `Cc.minLabel` round is exactly ONE SQL execution (its
   *    eager localCheckpoint, which also carries the convergence count),
-  *    checked against an in-memory replay of the round schedule.
+  *    checked against an in-memory replay of the contraction and the
+  *    round schedule on pair frames of explicit partition layouts.
   *
   * Jobs are attributed by job group, SQL executions by a listener on a
   * session of this suite's own, so suites sharing the SparkContext do
@@ -90,12 +91,13 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
     }
 
   test("connected-components keys stay within their job and SQL-execution budgets") {
-    // Set at the counts of the one-execution-per-round fixpoints.
+    // Set at the counts of the contracted fixpoints: at sf0.001 every
+    // component settles in the init step, so no propagation round runs.
     checkBudgets(Seq(
-      "dedup_clusters" -> (28, 6),
-      "pipeline_dedup_corpus" -> (29, 6),
-      "pipeline_mm_dedup" -> (15, 4),
-      "graph_connected_components" -> (21, 6)))
+      "dedup_clusters" -> (19, 3),
+      "pipeline_dedup_corpus" -> (20, 3),
+      "pipeline_mm_dedup" -> (14, 3),
+      "graph_connected_components" -> (9, 2)))
   }
 
   test("community keys stay within their job and SQL-execution budgets") {
@@ -115,18 +117,27 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
   }
 
   test("every fixpoint round is exactly one SQL execution") {
-    val sp = spark
-    import sp.implicits._
+    import CcSpec.{minLabelRounds, onePairEach, pairFrame, shuffledPath, slices}
     val path = (0L until 299L).map(i => (i, i + 1))
     // The census chain: graph_connected_components' fixpoint is
     // Cc.minLabel too.
     val chain = (1L until 12L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (21L, 22L))
-    for ((what, pairs) <- Seq("path300" -> path, "chain" -> chain)) {
-      val cc = measure { Cc.minLabel(pairs.toDF("id_a", "id_b"), what).collect(): Unit }
+    // Explicit layouts, because the contraction's reach sets the round
+    // count: one partition settles the shuffled path in the init step.
+    val fixtures = Seq(
+      "path300, one pair each" -> onePairEach(path),
+      "path300, four slices" -> slices(path, 4),
+      "path300 shuffled, one partition" -> slices(shuffledPath, 1),
+      "chain, two slices" -> slices(chain, 2))
+    val rounds = fixtures.map { case (what, layout) =>
+      val cc = measure { Cc.minLabel(pairFrame(spark, layout), what).collect(): Unit }
+      val n = minLabelRounds(layout)
       // The init step and each round: one localCheckpoint each; then
       // the consuming collect, and no other action (no aggregate probe).
-      assert(cc.execs.count(_ == "localCheckpoint") == CcSpec.minLabelRounds(pairs) + 1, cc)
-      assert(cc.execs.size == CcSpec.minLabelRounds(pairs) + 2, cc)
+      assert(cc.execs.count(_ == "localCheckpoint") == n + 1, s"$what: $cc")
+      assert(cc.execs.size == n + 2, s"$what: $cc")
+      n
     }
+    assert(rounds.contains(0) && rounds.max >= 8, s"fixtures must cover 0 and many rounds: $rounds")
   }
 }
