@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Unpersist
 
 /** Per-query scratch-cache drain (VERDICT r10 item 2).
   *
@@ -41,7 +42,6 @@ object CacheDrain {
     */
   def drain(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(Unpersist(_))
   }
 }

@@ -4,12 +4,12 @@ import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.OfRows
+import org.apache.spark.sql.graftbridge.{OfRows, Unpersist}
 
 /** Connected components via min-label propagation with pointer
   * jumping — the shared fixpoint behind dedup_clusters /
@@ -86,9 +86,11 @@ object Cc {
       .mapPartitions(contract(_))(longPair)
       .toDF("id", "root")
       .persist() // joined every propagation round
-    var (labels, changed) = round(
+    val (init, r0) = round(
       star.groupBy("id").agg(min(col("root")).as("label"), max(col("root")).as("top")),
-      col("label") < col("top"), col("id"), col("label"))
+      col("label") < col("top"), Seq("id", "label"))
+    var labels = init
+    var changed = r0.getAs[Long]("changed")
     // Both directions of every star edge, from one pass over S.
     val edges = star
       .select(explode(array(
@@ -110,10 +112,10 @@ object Cc {
       val next = viaHops.unionByName(self)
         .groupBy("id")
         .agg(min(col("label")).as("label"), max(col("prev")).as("prev"))
-      val (cp, n) = round(next, col("label") < col("prev"), col("id"), col("label"))
+      val (cp, r) = round(next, col("label") < col("prev"), Seq("id", "label"))
       release(labels)
       labels = cp
-      changed = n
+      changed = r.getAs[Long]("changed")
       rounds += 1
     }
     // An unconverged fixpoint must fail loudly: a partial propagation
@@ -173,22 +175,27 @@ object Cc {
   }
 
   /** One fixpoint round in ONE SQL execution: eagerly localCheckpoints
-    * `df` projected to `out`, and counts its rows and the rows where
-    * `changed` holds through an Observation on that same job. Returns
-    * the checkpointed frame, sized by its row count ([[sized]]), and
-    * the changed count. Only zero versus non-zero of that count is
-    * meaningful: a retried task may add its rows twice.
+    * `df` projected to `out`, and observes on that same job its row
+    * count (`rows`), the count of rows where `changed` holds (`changed`)
+    * and the `extra` aggregates, named by their aliases. Returns the
+    * checkpointed frame, sized by its row count ([[sized]]), and the
+    * observed row. Observed metrics merge task results, and a retried
+    * task may add its rows twice, so read them only where a double
+    * count cannot change the answer: `changed` as zero versus non-zero,
+    * a `max` or `min` as is, and a sum only after checking `rows`
+    * against a row count known in advance, so a double count fails
+    * instead of shifting the sum.
     */
-  def round(df: DataFrame, changed: Column, out: Column*): (DataFrame, Long) = {
+  def round(df: DataFrame, changed: Column, out: Seq[String], extra: Column*): (DataFrame, Row) = {
     val obs = Observation()
     val cp = df.observe(obs, count(lit(1)).as("rows"),
-        count(when(changed, lit(1))).as("changed"))
-      .select(out: _*)
+        count(when(changed, lit(1))).as("changed") +: extra: _*)
+      .select(out.map(col): _*)
       .localCheckpoint(eager = true)
     // The metrics arrive with the execution's end event; a missing
     // report is a failure, not a silent "converged".
     val row = Await.result(obs.future, 5.minutes)
-    (sized(cp, row.getLong(0)), row.getLong(1))
+    (sized(cp, row.getAs[Long]("rows")), row)
   }
 
   /** The checkpoint `cp` with statistics taken from its observed row
@@ -212,12 +219,12 @@ object Cc {
 
   /** Releases the blocks of a frame returned by [[round]] or
     * `localCheckpoint`: `Dataset.unpersist()` does nothing for a
-    * checkpoint that was never persisted, so the checkpoint RDD itself
-    * is unpersisted. Call only once nothing will read the frame again —
-    * the checkpoint is the data's only copy.
+    * checkpoint that was never persisted, so the checkpoint RDD's own
+    * blocks are freed ([[Unpersist]]). Call only once nothing will read
+    * the frame again — the checkpoint is the data's only copy.
     */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+    case r: LogicalRDD => Unpersist(r.rdd)
     case _ => df.unpersist(): Unit
   }
 }

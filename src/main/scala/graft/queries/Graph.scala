@@ -357,7 +357,7 @@ object Graph {
     var sweeps = 0
     var dipped = false
     while (!dipped && sweeps < cap) {
-      val nxt = Cc.round(sweep(g, lab), lit(false), col("i"), col("c"))._1
+      val nxt = Cc.round(sweep(g, lab), lit(false), Seq("i", "c"))._1
       val qn = modularity(g, Labels(nxt)).head().getDouble(0)
       dipped = qn <= q
       if (dipped) Cc.release(nxt)
@@ -458,17 +458,12 @@ object Graph {
       // Scale shape per round: ONE data shuffle (contribution sum by
       // dst; the corpus-side join auto-broadcasts the O(|V|)-row pr
       // table under the threshold and degrades to a shuffle join above
-      // it — no forced hint, the graph_triangles rationale). The two
-      // per-round scalars (dangling mass D, change fingerprint) ride
-      // the SAME single-row aggregate read back each round, so a round
-      // is exactly one job with no broadcast-exchange sub-jobs
-      // (the first cut paid 2 broadcast jobs/round; this shape halved
-      // the wall). Stationarity detection
-      // is a collision-resistant fingerprint (exact decimal sum of
-      // q·salted-hash — changes iff some q changed, w.h.p.); the loud
-      // EXACT certificate below makes a fingerprint collision a noisy
-      // failure, never a wrong emission. n is read once up front (an
-      // O(1) driver read, not a collect).
+      // it — no forced hint, the graph_triangles rationale). Each round
+      // is one [[Cc.round]]: its checkpoint job also observes the
+      // dangling mass D of the new q and the count of nodes whose q
+      // changed, each node carrying its previous q through the round's
+      // join. Zero changed nodes is itself the proof of a fixed point.
+      // n is the init round's observed row count.
       //
       // ARTIFACT MEMO (round 12): the converged vector is the shipped
       // crawl-quality prior (this scaladoc's own framing) — trained
@@ -484,23 +479,9 @@ object Graph {
         .distinct()
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val wed = edges.join(outdeg, "src").persist() // static, probed every round
-      val nodes = wed.select(lit("s").as("ntype"), col("src").as("node_id")).distinct()
-        .unionByName(
-          wed.select(lit("p").as("ntype"), col("dst").as("node_id")).distinct())
-        .localCheckpoint(eager = false).persist()
-      val n = nodes.count().toDouble
-      // One row per round: exact dangling mass (next round's D) and the
-      // change fingerprint. Both exact decimal sums -> deterministic.
-      def scalars(cur: DataFrame): (Double, java.math.BigDecimal) = {
-        val r = cur.agg(
-          coalesce(sum(when(col("ntype") === lit("p"), col("q"))
-            .cast(DecimalType(38, 4))), lit(0)).cast(DoubleType).as("dmass"),
-          sum((pmod(xxhash64(col("ntype"), col("node_id")), lit(1000000007L))
-            .cast(DecimalType(38, 0)) *
-            (col("q") * 10000).cast(DecimalType(38, 0)))
-            .cast(DecimalType(38, 0))).as("fp")).head()
-        (r.getDouble(0), r.getDecimal(1))
-      }
+      // Exact over the quantized q (a decimal sum): deterministic.
+      val dmass = coalesce(sum(when(col("ntype") === lit("p"), col("q"))
+        .cast(DecimalType(38, 4))), lit(0)).cast(DoubleType).as("dmass")
       def step(cur: DataFrame, dOverN: Double): DataFrame = {
         val contrib = cur.filter(col("ntype") === lit("s"))
           .join(wed, col("node_id") === col("src"))
@@ -510,52 +491,41 @@ object Graph {
           // sum while per-node Σ|c| < 9e6 (c ≤ q ≤ total mass / node —
           // holds for graphs to ~10⁹ in-edges per node at q ≤ 1e-3·n).
           .agg(lsum(col("c"), 9).as("msum"))
-        nodes.join(contrib,
-            col("ntype") === lit("p") && col("node_id") === col("dst"), "left")
-          .select(col("ntype"), col("node_id"),
+        cur.select(col("ntype"), col("node_id"), col("q").as("prev"))
+          .join(contrib, col("ntype") === lit("p") && col("node_id") === col("dst"), "left")
+          .select(col("ntype"), col("node_id"), col("prev"),
             round(lit(0.15) + lit(0.85) *
               (coalesce(col("msum"), lit(0.0)) + lit(dOverN)), 4)
               .as("q"))
-          .localCheckpoint(eager = false).persist()
       }
-      // Quantized q compares EXACTLY (every value is round(·, 4)), so
-      // the certificate is a changed-row count, not an epsilon test.
-      def changed(a: DataFrame, b: DataFrame): Long =
-        a.select(col("ntype"), col("node_id"), col("q").as("qa"))
-          .join(b.select(col("ntype"), col("node_id"), col("q").as("qb")),
-            Seq("ntype", "node_id"))
-          .filter(col("qa") =!= col("qb"))
-          .agg(count(lit(1))).head().getLong(0)
-      var q = nodes.select(col("ntype"), col("node_id"), lit(1.0).as("q"))
-        .localCheckpoint(eager = false).persist()
-      var (dmass, fp) = scalars(q)
+      val out = Seq("ntype", "node_id", "q")
+      var (q, r) = Cc.round(
+        wed.select(lit("s").as("ntype"), col("src").as("node_id")).distinct()
+          .unionByName(
+            wed.select(lit("p").as("ntype"), col("dst").as("node_id")).distinct())
+          .withColumn("q", lit(1.0)),
+        lit(false), out, dmass)
+      val n = r.getAs[Long]("rows")
       var rounds = 0
-      var converged = false
-      while (!converged && rounds < 100) {
-        val next = step(q, dmass / n)
-        val (d2, fp2) = scalars(next) // the round's ONE job
-        converged = fp2 == fp
-        dmass = d2; fp = fp2
-        q.unpersist()
-        q = next
+      do {
+        // Quantized q compares EXACTLY (every value is round(·, 4)).
+        val (next, rn) = Cc.round(step(q, r.getAs[Double]("dmass") / n),
+          col("q") =!= col("prev"), out, dmass)
+        // D is a sum: a task counted twice would shift it, and it would
+        // also add rows, so a double count fails here instead.
+        require(rn.getAs[Long]("rows") == n,
+          s"graph_pagerank_converged: round ${rounds + 1} observed " +
+            s"${rn.getAs[Long]("rows")} rows, not $n")
+        Cc.release(q)
+        q = next; r = rn
         rounds += 1
-      }
-      require(converged,
+      } while (r.getAs[Long]("changed") != 0L && rounds < 100)
+      require(r.getAs[Long]("changed") == 0L,
         s"graph_pagerank_converged: no stationary point in $rounds rounds" +
           " — emission would be a truncated, non-converged vector")
-      // EXACT certificate: fingerprint equality is probabilistic; one
-      // more round + exact row compare proves a genuine fixed point.
-      val cert = step(q, dmass / n)
-      require(changed(q, cert) == 0L,
-        "graph_pagerank_converged: fingerprint-stationary vector is not an " +
-          "exact single-round fixed point — refusing to emit")
-      cert.unpersist()
       wed.unpersist()
-      // q is localCheckpointed (lineage truncated at its loop-time
-      // materialization), so the emission no longer references nodes —
-      // releasable here; q itself backs the returned plan and is the
-      // caller's to drain (CacheDrain).
-      nodes.unpersist()
+      // q backs the returned plan and is the caller's to drain
+      // (CacheDrain).
       q.select(col("ntype"), col("node_id"), col("q").as("pr_n"))
       }.orderBy("ntype", "node_id")
     },
@@ -585,26 +555,25 @@ object Graph {
       // unstable (the scale obeys s_k ≈ λ·s_{k-1}/max(λ·s_{k-2}·u), a
       // ratio recursion that oscillates through 1e5 → 1e-5 until the
       // 1e-6 quantizer flushes the vector to zero — measured r0-r3
-      // maxima 41 → 5.6e5 → 1.3e4 → 7e-5). So a round pays TWO O(1)
-      // driver scalar reads (the MLlib-literal pattern): the a-side
-      // aggregate (its max + the change fingerprint) and the h-side
-      // max. With current-max normalization every quantized score
-      // lives in [0,1] and the converged maxima are exactly 1 — the
-      // textbook max-normalized HITS solution. Stationarity needs only
-      // the A-SIDE fingerprint: qh = g(qa) and qa' = f(qh) are pure
-      // functions of the quantized state, so a stationary a-side drags
-      // the h-side with it (the exact certificate below re-checks both
-      // sides row-for-row anyway). Fingerprint is over the EXACT
-      // decimal raw sums (collision-resistant salted-hash dot, the
-      // pagerank construction). Per-edge sums capture the 4-dp scores
-      // in DECIMAL(38,6) (exact, order-free); raw→double and the
-      // division are identical IEEE in both engines.
+      // maxima 41 → 5.6e5 → 1.3e4 → 7e-5). So each side of a round is
+      // one [[Cc.round]] that observes its max on its own checkpoint
+      // job, and the driver reads it back (the MLlib-literal pattern).
+      // With current-max normalization every quantized score lives in
+      // [0,1] and the converged maxima are exactly 1 — the textbook
+      // max-normalized HITS solution. Stationarity needs only the
+      // A-SIDE: each authority carries its previous raw through the
+      // authority groupBy, and qh = g(qa) and qa' = f(qh) are pure
+      // functions of the quantized state, so zero changed authorities
+      // drag the h-side with them and prove the fixed point. Per-edge
+      // sums capture the 4-dp scores in DECIMAL(38,6) (exact,
+      // order-free); raw→double and the division are identical IEEE in
+      // both engines.
       //
       // Scale shape per round: two O(edges) key shuffles (authority
       // sum by dst, hub sum by src), map-side combine bounding every
       // task's emission by its distinct-key count; the state stays on
-      // the executors (drivers see 3 scalars). localCheckpoint per
-      // round truncates lineage (the ccLabels necessity measurement).
+      // the executors (drivers see 3 scalars). The checkpoint per side
+      // truncates lineage (the ccLabels necessity measurement).
       //
       // ARTIFACT MEMO (round 12): the converged hub/authority vector
       // is the shipped crawl-seeding prior — trained once per dataset
@@ -615,76 +584,43 @@ object Graph {
       val edges = lineitem(s, d)
         .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
         .distinct().persist()
-      val fpCol = sum((pmod(xxhash64(col("node_id")), lit(1000000007L))
-        .cast(DecimalType(38, 0)) *
-        (col("raw") * 10000).cast(DecimalType(38, 0)))
-        .cast(DecimalType(38, 0))).as("fp")
-      // One round: quantized hub scores in → (aRaw, hRaw — the round's
-      // two PERSISTED tables, q derives from them by a literal divide —
-      // plus ma, mh, fp). Callers unpersist the raws.
-      case class Round(aRaw: DataFrame, hRaw: DataFrame, ma: Double,
-          mh: Double, fp: java.math.BigDecimal) {
-        def aSide: DataFrame = aRaw.select(col("node_id"),
-          round(col("raw") / lit(ma), 4).as("q"))
-        def hSide: DataFrame = hRaw.select(col("node_id"),
-          round(col("raw") / lit(mh), 4).as("q"))
-        def unpersist(): Unit = { aRaw.unpersist(); hRaw.unpersist(): Unit }
-      }
-      def step(hubQ: DataFrame): Round = {
-        val aRaw = edges.join(hubQ, "src")
-          .groupBy("dst")
-          // Exact long capture (Tables.lsum): qh is 1e-4-quantized in
-          // [0,1], so per-node Σ|qh| < 9e9 holds to ~9 billion in-edges.
-          .agg(lsum(col("qh"), 6).as("raw"))
-          .withColumnRenamed("dst", "node_id")
-          .localCheckpoint(eager = false).persist()
-        val r1 = aRaw.agg(max(col("raw")).as("ma"), fpCol).head()
-        val (ma, fp) = (r1.getDouble(0), r1.getDecimal(1))
-        val aQ = aRaw.select(col("node_id"),
-          round(col("raw") / lit(ma), 4).as("q"))
-        val hRaw = edges
-          .join(aQ.select(col("node_id").as("dst"), col("q").as("qa")), "dst")
-          .groupBy("src")
-          .agg(lsum(col("qa"), 6).as("raw"))
-          .withColumnRenamed("src", "node_id")
-          .localCheckpoint(eager = false).persist()
-        val mh = hRaw.agg(max(col("raw"))).head().getDouble(0)
-        Round(aRaw, hRaw, ma, mh, fp)
-      }
-      var hubQ = edges.select(col("src")).distinct()
-        .select(col("src"), lit(1.0).as("qh"))
-      var last: Round = null
+      val raw = Seq("node_id", "raw")
+      val noRaw = lit(null).cast(DoubleType)
+      // Round 0: every hub at raw 1 (so qh = 1); no authority yet.
+      var hRaw = edges.select(col("src").as("node_id")).distinct().withColumn("raw", lit(1.0))
+      var aRaw = edges.limit(0).select(col("dst").as("node_id"), noRaw.as("raw"))
+      var (ma, mh, changed) = (1.0, 1.0, 1L)
       var rounds = 0
-      var converged = false
-      while (!converged && rounds < 60) {
-        val r = step(hubQ)
-        converged = last != null && r.fp == last.fp && r.ma == last.ma &&
-          r.mh == last.mh
-        hubQ = r.hSide.select(col("node_id").as("src"), col("q").as("qh"))
-        if (last != null) last.unpersist()
-        last = r
+      while (changed != 0L && rounds < 60) {
+        val hubQ = hRaw.select(col("node_id").as("src"), round(col("raw") / lit(mh), 4).as("qh"))
+        val (a, ra) = Cc.round(
+          edges.join(hubQ, "src").select(col("dst").as("node_id"), col("qh"), noRaw.as("prev"))
+            .unionByName(aRaw.select(col("node_id"), noRaw.as("qh"), col("raw").as("prev")))
+            .groupBy("node_id")
+            // Exact long capture (Tables.lsum): qh is 1e-4-quantized in
+            // [0,1], so per-node Σ|qh| < 9e9 holds to ~9 billion in-edges.
+            .agg(lsum(col("qh"), 6).as("raw"), max(col("prev")).as("prev")),
+          !(col("raw") <=> col("prev")), raw, max(col("raw")).as("ma"))
+        ma = ra.getAs[Double]("ma")
+        val (h, rh) = Cc.round(
+          edges.join(a.select(col("node_id").as("dst"),
+              round(col("raw") / lit(ma), 4).as("qa")), "dst")
+            .groupBy(col("src").as("node_id"))
+            .agg(lsum(col("qa"), 6).as("raw")),
+          lit(false), raw, max(col("raw")).as("mh"))
+        mh = rh.getAs[Double]("mh")
+        Cc.release(aRaw); Cc.release(hRaw)
+        aRaw = a; hRaw = h
+        changed = ra.getAs[Long]("changed")
         rounds += 1
       }
-      require(converged,
+      require(changed == 0L,
         s"graph_hits_converged: no stationary point in $rounds rounds" +
           " — emission would be a truncated, non-converged vector")
-      // Exact certificate behind the probabilistic fingerprint: one
-      // more round must reproduce both sides row-for-row.
-      val cert = step(hubQ)
-      def changed(a: DataFrame, b: DataFrame): Long =
-        a.select(col("node_id"), col("q").as("qa"))
-          .join(b.select(col("node_id"), col("q").as("qb")), "node_id")
-          .filter(col("qa") =!= col("qb"))
-          .agg(count(lit(1))).head().getLong(0)
-      require(changed(last.aSide, cert.aSide) == 0L &&
-          changed(last.hSide, cert.hSide) == 0L,
-        "graph_hits_converged: fingerprint-stationary vector is not an " +
-          "exact single-round fixed point — refusing to emit")
-      cert.unpersist(); edges.unpersist()
-      last.aSide.select(lit("p").as("ntype"), col("node_id"),
-          col("q").as("score"))
-        .unionByName(last.hSide.select(lit("s").as("ntype"), col("node_id"),
-          col("q").as("score")))
+      edges.unpersist()
+      aRaw.select(lit("p").as("ntype"), col("node_id"), round(col("raw") / lit(ma), 4).as("score"))
+        .unionByName(hRaw.select(lit("s").as("ntype"), col("node_id"),
+          round(col("raw") / lit(mh), 4).as("score")))
       }.orderBy("ntype", "node_id")
     },
 
@@ -1249,8 +1185,10 @@ object Graph {
       // (the HITS finding).
       val art = louvain10Art(s, d)
       val lab1 = s.read.parquet(art.labelsPath) // (i, c), node-sized
-      var cur = contract(unit(undirectedEdges(s, d, 10)), Labels(lab1))
-        .localCheckpoint(eager = true) // many consumers per level
+      // Level state as eager checkpoints sized by their observed row
+      // counts ([[Cc.round]]), not by the plan's estimate.
+      def checkpoint(df: DataFrame): DataFrame = Cc.round(df, lit(false), df.columns.toSeq)._1
+      var cur = checkpoint(contract(unit(undirectedEdges(s, d, 10)), Labels(lab1)))
       var curQ = art.q
       var compo = lab1 // fine i → community at the current final level
       var levels = 1
@@ -1268,11 +1206,10 @@ object Graph {
         else {
           val prevCompo = compo
           val prevCur = cur
-          compo = compo
+          compo = checkpoint(compo // node-sized, next level joins it
             .join(lab.select(col("i").as("c"), col("c").as("c2")), "c")
-            .select(col("i"), col("c2").as("c"))
-            .localCheckpoint(eager = true) // node-sized, next level joins it
-          cur = contract(cur, Labels(lab)).localCheckpoint(eager = true)
+            .select(col("i"), col("c2").as("c")))
+          cur = checkpoint(contract(cur, Labels(lab)))
           // Superseded level state released only AFTER the eager
           // checkpoints above materialized from it.
           if (prevCompo ne lab1) Cc.release(prevCompo)
@@ -1345,8 +1282,8 @@ object Graph {
       // node id) to depth 4 over the part co-occurrence graph — the
       // neighborhood-expansion primitive behind crawl-frontier
       // scheduling, influence radii, and graph feature extraction.
-      // Iterative-driver schedule, but UNLIKE ccLabels/k_core there is
-      // NO per-round driver read at all: depth is a fixed contract
+      // Iterative-driver schedule, but UNLIKE Cc.minLabel/k_core there
+      // is NO per-round driver read at all: depth is a fixed contract
       // (4), so the loop body is pure plan construction — Spark runs
       // all four frontier expansions as one job tree at the final
       // count. Per round: one frontier⋈edges equi-join + one anti-join
@@ -1383,37 +1320,33 @@ object Graph {
       // filter that keeps densely-linked hosts/docs and drops the
       // sparsely-connected fringe (spam/orphan pruning on a crawl
       // graph). Iterative-driver schedule like dedup_clusters: each
-      // round is one degree groupBy + two semi-join-shaped filters of
-      // the edge list against the surviving-node table, O(edges)
-      // shuffle bytes per round, and the driver reads only the one
-      // edge-count aggregate that doubles as the convergence test (the
-      // count is strictly decreasing until fixpoint). Round count is
-      // bounded by the peel cascade depth (measured: 3 rounds at both
-      // sf0.01 and sf0.1; %10 witness bound — see graph_triangles).
-      // Same per-round localCheckpoint as ccLabels: truncates the
-      // exponentially re-analyzed lineage. Oracle: the peel UNROLLED 6
+      // round is one degree groupBy joined to both endpoints of every
+      // surviving edge, O(edges) shuffle bytes per round, checkpointed
+      // as (u, v, peel) by one [[Cc.round]] that counts the peeled
+      // edges on the same job; the next round reads the unpeeled ones,
+      // and zero peeled is the fixpoint. Round count is bounded by the
+      // peel cascade depth (measured: 3 rounds at both sf0.01 and
+      // sf0.1; %10 witness bound — see graph_triangles). The per-round
+      // checkpoint truncates the exponentially re-analyzed lineage, as
+      // in Cc.minLabel. Oracle: the peel UNROLLED 6
       // times — peeling is idempotent at fixpoint, so any graph that
       // converges within 6 rounds hash-matches exactly; one that
       // doesn't fails the gate loudly (the drift alarm we want).
-      var edges = undirectedEdges(s, d, 10)
-        .localCheckpoint(eager = false).persist()
-      var prev = edges.count()
+      var cur = undirectedEdges(s, d, 10).withColumn("peel", lit(false))
+      var peeled = 1L
       var rounds = 0
-      var converged = prev == 0L
-      while (!converged && rounds < 30) {
+      while (peeled != 0L && rounds < 30) {
+        val edges = cur.filter(!col("peel"))
         val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
           .groupBy("node").agg(count(lit(1)).as("deg"))
-        val keep = deg.filter(col("deg") >= 5).select("node")
-        val next = edges
-          .join(keep.select(col("node").as("u")), "u")
-          .join(keep.select(col("node").as("v")), "v")
-          .select("u", "v")
-          .localCheckpoint(eager = false).persist()
-        val n2 = next.count()
-        converged = n2 == prev
-        prev = n2
-        edges.unpersist()
-        edges = next
+        def degOf(end: String) = deg.select(col("node").as(end), col("deg").as(s"d$end"))
+        val (next, r) = Cc.round(
+          edges.join(degOf("u"), "u").join(degOf("v"), "v")
+            .withColumn("peel", col("du") < 5 || col("dv") < 5),
+          col("peel"), Seq("u", "v", "peel"))
+        Cc.release(cur)
+        cur = next
+        peeled = r.getAs[Long]("changed")
         rounds += 1
       }
       // A partial peel is NOT a 5-core — it still contains nodes whose
@@ -1422,10 +1355,11 @@ object Graph {
       // cascade depth is ≤ the node count and measured at 3 here, so
       // 30 rounds only trips on a genuine bug. Fail loudly so a
       // standalone caller (not just the gate hash) sees it.
-      require(converged,
+      require(peeled == 0L,
         s"graph_k_core: peel did not reach fixpoint in $rounds rounds" +
           " — emission would be a partial peel, not a 5-core")
-      edges.select(explode(array(col("u"), col("v"))).as("node"))
+      // No edge peeled: every edge of cur is in the 5-core.
+      cur.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("core_deg"))
         .orderBy("node")
     },

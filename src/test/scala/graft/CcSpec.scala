@@ -1,8 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, max, sum}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Cc, Graph}
@@ -20,7 +27,8 @@ import graft.queries.{Cc, Graph}
   * shuffled one past the round cap and the same one settled by the
   * contraction, fixpoints that land on odd and on even rounds,
   * duplicate and reversed pairs, an empty pair frame, and the
-  * contraction's union-find without Spark.
+  * contraction's union-find without Spark. `Cc.round`, the fixpoint
+  * step every loop runs on, is checked on its own too.
   */
 class CcSpec extends AnyFunSuite with GraftSuite {
   import CcSpec._
@@ -136,6 +144,36 @@ class CcSpec extends AnyFunSuite with GraftSuite {
       val whole = Cc.contract(pairs.iterator).toSeq
       assert(whole.size == comp.size && whole.toMap == comp, s"seed $seed")
     }
+  }
+
+  test("Cc.round returns rows, changed and extra aggregates from one SQL execution") {
+    // A session of its own, so the listener sees only this round.
+    val sp = spark.newSession()
+    import sp.implicits._
+    val execs = new ConcurrentLinkedQueue[String]()
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = execs.add(f): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = execs.add(f): Unit
+    }
+    // (id, label, prev) over three partitions; two labels dropped.
+    val df = sp.sparkContext.parallelize(Seq((1L, 1L, 5L), (2L, 2L, 2L), (3L, 3L, 7L),
+      (4L, 4L, 4L), (5L, 5L, 5L)), 3).toDF("id", "label", "prev")
+    sp.listenerManager.register(ql)
+    val (cp, r) =
+      try Cc.round(df, col("label") < col("prev"), Seq("id", "label"),
+        max(col("prev")).as("top"), sum(col("label")).as("total"))
+      finally {
+        ListenerBusDrain(sp.sparkContext)
+        sp.listenerManager.unregister(ql)
+      }
+    assert(execs.asScala.toSeq == Seq("localCheckpoint"))
+    assert((r.getAs[Long]("rows"), r.getAs[Long]("changed"), r.getAs[Long]("top"),
+      r.getAs[Long]("total")) == ((5L, 2L, 7L, 15L)))
+    // The checkpoint holds `out` only, sized by its observed row count.
+    assert(cp.columns.toSeq == Seq("id", "label"))
+    assert(cp.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(5)))
+    assert(cp.as[(Long, Long)].collect().sorted.toSeq == (1L to 5L).map(i => (i, i)))
+    Cc.release(cp)
   }
 
   test("graph component census matches union-find on a small fixture") {

@@ -22,8 +22,10 @@ import graft.queries.Cc
   * suite pins, per call at sf0.001 under the shipped profile:
   *
   *  - a job budget and an SQL-execution budget for each connected-
-  *    components key and each community (Louvain/modularity) key,
-  *    counted over construction plus one consuming collect, and that
+  *    components key, each community (Louvain/modularity) key and
+  *    each converging graph loop (PageRank, HITS, k-core; the first
+  *    two on their training calls), counted over construction plus
+  *    one consuming collect, and that
   *    two calls count exactly the same, except for the few keys whose
   *    job count differs between calls; those assert the budget only;
   *  - that every `Cc.minLabel` round is exactly ONE SQL execution (its
@@ -75,12 +77,18 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
   }
 
   /** Per call at sf0.001: (jobs, SQL executions). Lower is fine;
-    * higher fails. Keys in `varying` assert the budget only.
+    * higher fails. Keys in `varying` assert the budget only. With
+    * `train`, every call first clears the artifact store, so it trains
+    * the key's artifact instead of reading it. Returns one call's
+    * counts per key.
     */
   private def checkBudgets(budgets: Seq[(String, (Int, Int))],
-      varying: Set[String] = Set.empty): Unit =
-    for ((key, (jobBudget, execBudget)) <- budgets) {
-      def call(): Counts = measure { SparkEntry.queries(key)(spark, sf).collect(): Unit }
+      varying: Set[String] = Set.empty, train: Boolean = false): Map[String, Counts] =
+    budgets.map { case (key, (jobBudget, execBudget)) =>
+      def call(): Counts = {
+        if (train) ArtifactMemo.clearStoreForTest()
+        measure { SparkEntry.queries(key)(spark, sf).collect(): Unit }
+      }
       call() // warm-up: one-time table reads, layout work and artifacts
       val (a, b) = (call(), call())
       info(s"$key: ${a.jobs} jobs, SQL executions ${a.execs.mkString(", ")}")
@@ -88,7 +96,8 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
       assert(a.jobs <= jobBudget, s"$key: ${a.jobs} jobs > budget $jobBudget (${a.execs})")
       assert(a.execs.size <= execBudget,
         s"$key: ${a.execs.size} SQL executions > budget $execBudget (${a.execs})")
-    }
+      key -> a
+    }.toMap
 
   test("connected-components keys stay within their job and SQL-execution budgets") {
     // Set at the counts of the contracted fixpoints: at sf0.001 every
@@ -114,6 +123,17 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
       "graph_community_conductance" -> (17, 3),
       "graph_louvain_full" -> (55, 7)),
       varying = Set("graph_louvain_level2", "graph_louvain_step", "graph_louvain_full"))
+  }
+
+  test("PageRank, HITS and k-core stay within their budgets, with no driver read per round") {
+    // Each round is one Cc.round: its checkpoint also observes the
+    // round's changed count and the scalars the next round needs.
+    val counts = checkBudgets(Seq("graph_k_core" -> (16, 3))) ++
+      checkBudgets(Seq(
+        "graph_pagerank_converged" -> (33, 7),
+        "graph_hits_converged" -> (34, 10)), train = true)
+    for ((key, c) <- counts)
+      assert(!c.execs.exists(Set("head", "count")), s"$key: a driver read remains: ${c.execs}")
   }
 
   test("every fixpoint round is exactly one SQL execution") {

@@ -329,6 +329,77 @@ class PipelineSpec extends AnyFunSuite with GraftSuite {
       s"total=$total n=$n nSupp=$nSupp")
   }
 
+  /** The distinct (supplier, part) edges both converged graph keys
+    * iterate over.
+    */
+  private def supplierPartEdges(): Seq[(Long, Long)] = {
+    val sp = spark
+    import sp.implicits._
+    Tables.lineitem(spark, sf)
+      .select(col("l_suppkey").cast("long"), col("l_partkey").cast("long"))
+      .distinct().as[(Long, Long)].collect().toSeq
+  }
+
+  /** (ntype, node_id) -> value of a converged graph key's emission,
+    * trained in this call: an artifact an earlier process published
+    * would not test this build's loop.
+    */
+  private def emitted(key: String, value: String): Map[(String, Long), Double] = {
+    val sp = spark
+    import sp.implicits._
+    ArtifactMemo.clearStoreForTest()
+    SparkEntry.queries(key)(spark, sf)
+      .select(col("ntype"), col("node_id").cast("long"), col(value))
+      .as[(String, Long, Double)].collect()
+      .map { case (t, id, v) => (t, id) -> v }.toMap
+  }
+
+  /** Spark's round(x, k) on a double: HALF_UP on its decimal form. */
+  private def roundHalfUp(x: Double, k: Int): Double =
+    BigDecimal(x).setScale(k, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Tables.lsum: each value captured as a long at `scale` decimals. */
+  private def lsum(xs: Iterable[Double], scale: Int): Double = {
+    val f = math.pow(10, scale)
+    xs.map(x => BigDecimal(x * f).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong).sum
+      .toDouble / f
+  }
+
+  test("graph_pagerank_converged emits a fixed point of one damped step") {
+    val q = emitted("graph_pagerank_converged", "pr_n")
+    val edges = supplierPartEdges()
+    val n = q.size
+    assert(n == edges.map(_._1).distinct.size + edges.map(_._2).distinct.size)
+    val outdeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size }
+    // Dangling mass: the exact sum of the parts' quantized q.
+    val dmass = q.collect { case (("p", _), v) => BigDecimal(v).setScale(4) }.sum.toDouble
+    val msum = edges.groupBy(_._2).map { case (p, es) =>
+      p -> lsum(es.map { case (s, _) => roundHalfUp(q(("s", s)) / outdeg(s), 9) }, 9)
+    }
+    val changed = q.filter { case ((t, id), v) =>
+      val m = if (t == "p") msum(id) else 0.0
+      roundHalfUp(0.15 + 0.85 * (m + dmass / n), 4) != v
+    }
+    assert(changed.isEmpty, s"${changed.size} of $n nodes move in one more step: ${changed.take(5)}")
+  }
+
+  test("graph_hits_converged emits a fixed point of one HITS step, max-normalized to 1") {
+    val score = emitted("graph_hits_converged", "score")
+    val edges = supplierPartEdges()
+    def side(t: String) = score.collect { case ((`t`, id), v) => id -> v }
+    val (hub, auth) = (side("s"), side("p"))
+    assert(hub.values.max == 1.0 && auth.values.max == 1.0, "a side's max score is not 1")
+    def normalized(raw: Map[Long, Double]): Map[Long, Double] = {
+      val m = raw.values.max
+      raw.map { case (id, r) => id -> roundHalfUp(r / m, 4) }
+    }
+    val auth2 = normalized(edges.groupBy(_._2).map { case (p, es) => p -> lsum(es.map(e => hub(e._1)), 6) })
+    val hub2 = normalized(edges.groupBy(_._1).map { case (s, es) => s -> lsum(es.map(e => auth2(e._2)), 6) })
+    assert(auth2.keySet == auth.keySet && hub2.keySet == hub.keySet)
+    val moved = auth.count { case (id, v) => auth2(id) != v } + hub.count { case (id, v) => hub2(id) != v }
+    assert(moved == 0, s"$moved of ${score.size} scores move in one more step")
+  }
+
   test("shuffle_global emits the exact md5-order permutation") {
     val out = SparkEntry.queries("shuffle_global")(spark, sf).collect()
     val n = out.length
