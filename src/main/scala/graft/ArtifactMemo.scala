@@ -1,281 +1,84 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Once-per-dataset trained-EMISSION memo — the generalization of the
-  * PQ trained-codebook memo (r11, Vectors.pqMemo) and the Louvain
-  * artifact memos (r12, Graph.louvainArt/louvain10Art) to every
-  * to-convergence trainer whose emission IS a shipped artifact:
-  * converged PageRank/HITS scores (the crawl-quality priors a curation
-  * pipeline ships with the corpus), k-means centroids (the IVF coarse
-  * quantizer / SemDeDup blocks), the PCA basis, the BPE merge list
-  * (literally the tokenizer). Each is a deterministic pure function of
-  * the parquet under its dataset dir; in production it is trained once
-  * and PERSISTED — recomputing it inside every consuming query is the
-  * unrealistic schedule, not the memo. Within a JVM: first invocation
-  * trains (the full loop, timed as rep1 / the SCALING "train" path),
-  * repeats re-emit the held rows (what Bench floors, per the
-  * BASELINE.md r11/r12 floor-RESET rule).
+/** Once-per-dataset memo for trained artifacts: converged PageRank/HITS
+  * scores, k-means centroids, the PCA basis, the PQ codebook, the BPE
+  * merge list and the Louvain partitions. Each is a deterministic pure
+  * function of the parquet under its dataset dir, so within a JVM the
+  * first call trains (the full loop) and later calls re-emit the
+  * trained artifact.
   *
-  * Concurrency contract (rounds 13-14):
-  *  - WITHIN a JVM training is SINGLE-FLIGHT: one holder per key wins
-  *    `putIfAbsent`, its `lazy val` runs the training block at most
-  *    once, and concurrent callers of the same key block on the
-  *    winner instead of re-training. If the training block THROWS,
-  *    the lazy val stays uninitialized, so every concurrent caller of
-  *    that attempt observes the exception and a LATER call retries
-  *    the training — transient failures (an executor OOM, a missing
-  *    file during regeneration) heal on the next invocation instead
-  *    of poisoning the key for the JVM's lifetime.
-  *  - ACROSS JVMs (round 14, VERDICT r13 item 6) the parquet-backed
-  *    forms share one content-addressed ARTIFACT STORE under a fixed
-  *    scratch root ({java.io.tmpdir}/graft_artstore/art<md5(key)> —
-  *    no applicationId in the path): a second driver finds the first
-  *    driver's published artifact and CONSUMES it instead of
-  *    retraining (the r13 two-JVM stress protocol double-trained
-  *    every artifact; the x64 PQ fixpoint alone was 422.8 s per JVM).
-  *    The temp-dir + atomic-rename publish is the cross-process lock:
-  *    concurrent trainers race the rename, and a loser deletes its
-  *    attempt and reads the winner's table. The key embeds the
-  *    dataset's parquet content fingerprint (Tables.artifactKey), so
-  *    the store is self-invalidating — regenerated data is a new key,
-  *    a new path, never a stale read.
-  *  - Publication is ATOMIC: the trainer writes to a sibling temp dir
-  *    and renames it into the keyed path, so no reader can ever
-  *    observe a half-written parquet directory; `_SUCCESS` inside the
-  *    renamed dir is the published marker.
-  *
-  * Lifecycle (rounds 13-14): keys carry a parquet content fingerprint
-  * (Tables.artifactKey) so in-place dataset regeneration retrains —
-  * and the SUPERSEDED key is evicted when its replacement registers:
-  * same eviction GROUP (key minus the fingerprint segment), different
-  * fingerprint ⇒ the old entry's driver rows are dropped and its
-  * scratch parquet scheduled for deletion. Deletion is DEFERRED to
-  * JVM exit (round 14, ADVICE r13): an eager delete could yank the
-  * directory out from under a consumer's lazily-built DataFrame that
-  * executes after the regeneration — the deferred delete lets
-  * outstanding readers finish, and the eviction is logged so a
-  * FileNotFound after exit-race is diagnosable. Regenerating a
-  * dataset while a query is mid-flight on the old artifact remains
-  * undefined behavior; the grace window just makes the common case
-  * (consumer built before regeneration, executed shortly after)
-  * succeed instead of failing mid-scan.
-  *
-  * Bounds: every cached emission is structurally bounded (node-sized
-  * scores, ≤k×dim centroid rows, vocab-sized merges — never
-  * corpus-proportional data); the require makes an unbounded misuse
-  * loud. Driver-held rows are the gate-scale stand-in for reading the
-  * persisted artifact table back — and survive CacheDrain between
-  * Bench reps by construction (they live outside the block manager).
+  * Contract:
+  *  - Training is single-flight: one holder per key wins `putIfAbsent`,
+  *    its `lazy val` runs the training block at most once, and
+  *    concurrent callers of the same key block on the winner.
+  *  - A throwing training run is retried by the next call: the lazy val
+  *    stays uninitialized, so the failure reaches every caller of that
+  *    attempt and does not poison the key.
+  *  - The driver-held form ([[cached]]) is bounded by its `require` to
+  *    structurally small artifacts; node-sized emissions use
+  *    [[cachedTable]].
+  *  - Keys are content-addressed: callers build them with
+  *    `Tables.artifactKey`, which fingerprints the backing parquet, so a
+  *    dataset regenerated in place is a new key and retrains.
+  *  - Nothing outlives the JVM: [[cachedTable]]'s parquet lives in an
+  *    application-scoped `Tables.scratch` dir, deleted at exit, and no
+  *    process reads what another one trained.
   */
 object ArtifactMemo {
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Single-flight lazy holder: the `lazy val` guarantees the thunk
-    * runs at most once per JVM (a THROWING run leaves it
-    * uninitialized — see the retry semantics in the contract above);
-    * `computed` lets eviction act on the value without triggering a
-    * pointless training run.
+  /** Single-flight lazy holder: the `lazy val` runs the thunk at most
+    * once; a throwing run leaves it uninitialized for the next caller.
     */
   private final class Holder[T](thunk: () => T) {
-    @volatile private var done = false
-    lazy val value: T = { val v = thunk(); done = true; v }
-    def ifComputed(f: T => Unit): Unit = if (done) f(value)
+    lazy val value: T = thunk()
   }
 
   private val entries =
     scala.collection.concurrent.TrieMap.empty[String, Holder[_]]
-  // eviction group -> currently-registered full key
-  private val groups =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Eviction group: the key minus its content-fingerprint segment
-    * (`path#fp#variant` → `path#variant`), i.e. "this artifact of
-    * this dataset path, whatever its current bytes".
-    */
-  private def group(key: String): String = {
-    val seg = key.split("#", -1)
-    if (seg.length < 2) key else (seg(0) +: seg.drop(2).toSeq).mkString("#")
-  }
-
-  /** Generic single-flight keyed memo with superseded-key eviction.
-    * `onEvict` runs against an OLD key's value when a new fingerprint
-    * registers for the same group (schedule its scratch dir for
-    * deletion, etc.). Evictions are logged.
-    */
-  def once[T](key: String)(train: => T)(onEvict: T => Unit): T = {
+  /** Generic single-flight keyed memo. */
+  def once[T](key: String)(train: => T): T = {
     val holder = new Holder[T](() => train)
-    val winner = entries.putIfAbsent(key, holder) match {
-      case Some(h) => h.asInstanceOf[Holder[T]]
-      case None =>
-        // This call registered a NEW key: retire any superseded
-        // sibling (same group, older fingerprint) eagerly.
-        groups.put(group(key), key).filter(_ != key).foreach { oldKey =>
-          log.info(s"ArtifactMemo: evicting superseded key $oldKey " +
-            s"(replaced by $key)")
-          entries.remove(oldKey)
-            .foreach(_.asInstanceOf[Holder[T]].ifComputed(onEvict))
-        }
-        holder
-    }
-    winner.value
+    entries.putIfAbsent(key, holder).getOrElse(holder)
+      .asInstanceOf[Holder[T]].value
   }
 
-  private[graft] def deleteDir(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
-  private val deferred =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Schedule a directory for deletion at JVM exit — the eviction
-    * grace window (ADVICE r13): outstanding lazy readers of the old
-    * artifact finish; the disk is reclaimed when the process ends.
-    */
-  private[graft] def deferDelete(path: String): Unit =
-    if (deferred.add(path)) {
-      log.info(s"ArtifactMemo: deferring delete of evicted artifact $path " +
-        "to JVM exit")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteDir(path)))
-    }
-
-  // ---- The shared cross-JVM artifact store (round 14). ----
-
-  /** Content-addressed store path for a memo key: a fixed root, no
-    * applicationId — the whole point is that another JVM finds it.
-    */
-  private def storePath(key: String): String = {
-    val root = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_artstore")
-    root.mkdirs()
-    new java.io.File(root, "art" + Tables.md5hex(key)).getAbsolutePath
-  }
-
-  private def published(p: String): Boolean =
-    new java.io.File(p, "_SUCCESS").isFile
-
-  /** Train-or-consume against the shared store: if a published
-    * artifact exists for `key`, return its path without training;
-    * otherwise train, write to a temp sibling, and attempt the atomic
-    * rename publish. A loser of the publish race (another JVM renamed
-    * first) deletes its attempt and consumes the winner's artifact.
-    */
-  private def publishOrConsume(key: String, appId: String)
-      (write: String => Unit): String = {
-    val p = storePath(key)
-    if (published(p)) {
-      log.info(s"ArtifactMemo: consuming published artifact for $key at $p")
-      p
-    } else {
-      // A directory without _SUCCESS is a torn leftover (a crashed
-      // pre-round-14 writer or interrupted rename target): clear it so
-      // the rename can land.
-      if (new java.io.File(p).exists()) deleteDir(p)
-      val tmp = p + "_tmp_" + appId
-      write(tmp)
-      if (!new java.io.File(tmp).renameTo(new java.io.File(p))) {
-        require(published(p),
-          s"ArtifactMemo($key): publish rename $tmp -> $p failed and no " +
-            "winner is published — artifact store is corrupt")
-        log.info(s"ArtifactMemo: lost the publish race for $key; " +
-          s"consuming the winner at $p")
-        deleteDir(tmp)
-      }
-      p
-    }
-  }
-
-  /** Driver-held form — ONLY for artifacts whose size is structurally
-    * bounded by the algorithm (≤k×dim centroids, vocab-sized merges,
-    * the ≤|C|²-bounded contraction), never by the corpus. The require
-    * makes a corpus-proportional misuse loud (r12 review finding: a
-    * node-sized emission belongs in cachedTable below). Cross-JVM:
-    * the bounded rows are ALSO published to the shared store, and the
-    * held rows are read back FROM the published parquet — so JVM-1
-    * and JVM-2 hold byte-identical artifacts whichever trained.
+  /** Driver-held form, only for artifacts whose size the algorithm
+    * bounds (≤k×dim centroids, vocab-sized merges), never the corpus:
+    * the require makes a corpus-proportional misuse loud.
     */
   def cached(s: SparkSession, key: String)(train: => DataFrame): DataFrame = {
     val (schema, rows) = once(key) {
-      val p = publishOrConsume(key, s.sparkContext.applicationId) { tmp =>
-        val df = train
-        val n = df.persist().count()
-        require(n <= 10000,
-          s"ArtifactMemo($key): $n rows — the driver-held " +
-            "memo is for structurally-bounded trained artifacts; " +
-            "corpus-proportional (node-sized) emissions must use " +
-            "cachedTable, which persists a parquet artifact instead")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        df.unpersist(): Unit
-      }
-      val back = s.read.parquet(p)
-      (back.schema, back.collect())
-    }((_: (StructType, Array[Row])) => ()) // superseded rows drop to GC
+      val df = train.persist()
+      val n = df.count()
+      require(n <= 10000,
+        s"ArtifactMemo($key): $n rows — the driver-held " +
+          "memo is for structurally-bounded trained artifacts; " +
+          "corpus-proportional (node-sized) emissions must use " +
+          "cachedTable, which persists a parquet artifact instead")
+      try (df.schema, df.collect()) finally df.unpersist()
+    }
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Parquet-backed form for NODE-SIZED artifacts (converged score
-    * vectors, label tables — one row per graph node, corpus-
-    * proportional): the first invocation trains and WRITES the
-    * emission into the shared store; every consumption re-READS it —
-    * the literal production pattern (the artifact table ships with
-    * the corpus; consumers scan it). Driver memory never holds the
-    * rows, so this form scales to any node count; the read-back is a
-    * columnar scan parallelized like any other source. A superseded
-    * fingerprint's dir is scheduled for JVM-exit deletion when its
-    * replacement registers.
+  /** Parquet-backed form for node-sized artifacts (converged score
+    * vectors, one row per graph node): the first call writes the
+    * emission once into an application-scoped scratch dir, and every
+    * call re-reads that parquet, so driver memory never holds the rows.
     */
   def cachedTable(s: SparkSession, key: String)
       (train: => DataFrame): DataFrame = {
     val path = once(key) {
-      publishOrConsume(key, s.sparkContext.applicationId) { tmp =>
-        train.write.mode("overwrite").parquet(tmp)
-      }
-    }(deferDelete)
+      val p = Tables.scratch(s, "art" + Tables.md5hex(key).take(12), key)
+      train.write.mode("overwrite").parquet(p)
+      p
+    }
     s.read.parquet(path)
   }
 
-  /** Typed cross-JVM form for non-DataFrame trained values (the PQ
-    * codebook's Seq of centroids): the caller supplies the
-    * to/from-DataFrame codec; the store holds the parquet rendering,
-    * so a second JVM reconstructs the value instead of re-running the
-    * training fixpoint.
+  /** Test hook: forget every trained artifact, so the next call of each
+    * key trains again.
     */
-  def cachedValue[T](s: SparkSession, key: String)(train: => T)(
-      toDf: T => DataFrame)(fromDf: DataFrame => T): T =
-    once(key) {
-      val p = publishOrConsume(key, s.sparkContext.applicationId) { tmp =>
-        toDf(train).coalesce(1).write.mode("overwrite").parquet(tmp)
-      }
-      // Read back the PUBLISHED artifact rather than returning the
-      // freshly-trained in-memory value: every JVM — trainer, race
-      // loser, late consumer — reconstructs from identical bytes.
-      fromDf(s.read.parquet(p))
-    }((_: T) => ())
-
-  /** Test hook: drop all in-JVM memo state (the shared store on disk
-    * is untouched) — lets one JVM exercise the cross-JVM consume path.
-    */
-  private[graft] def resetForTest(): Unit = {
-    entries.clear()
-    groups.clear()
-  }
-
-  /** Test hook: drop the in-JVM memo state AND the on-disk shared
-    * store — for gates that must observe the TRAINING run itself
-    * (ShuffleSpec's vocabulary-bounded-bytes witness): with the
-    * round-14 cross-JVM store, a bench/verify run in an earlier
-    * process publishes the artifact and a later test JVM would
-    * otherwise consume it and measure zero shuffle, making the
-    * assert vacuous.
-    */
-  private[graft] def clearStoreForTest(): Unit = {
-    resetForTest()
-    deleteDir(new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_artstore").getAbsolutePath)
-  }
+  private[graft] def resetForTest(): Unit = entries.clear()
 }

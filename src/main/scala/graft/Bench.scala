@@ -12,16 +12,19 @@ import scala.util.control.NonFatal
   * `$SPARK_GRAFT_BENCH_OUT`. A query failing ANY repeat lands on the
   * "errors" list; its value is the best successful time, or -1 when
   * every repeat failed. The files also carry "causes": per failed key,
-  * the first failure's exception class and message (300 chars at most).
+  * the first failure's exception class and message (300 chars at most),
+  * and "first": each key's first-repeat time (-1 when it failed). No
+  * process inherits another's trained artifacts, so a trainer key's
+  * first minus its value is its training cost; a key that only reads an
+  * artifact an earlier key trained shows none.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.envCores)
     // ERROR, not WARN: several queries make Spark log EXPECTED warnings
-    // that carry full stack traces (fs_cat_binary's glob probe hits
-    // FileStreamSink's FileNotFoundException warning; the torn-parquet
-    // witness logs each ignoreCorruptFiles rejection) — harmless, but
+    // that carry full stack traces (the torn-parquet witness logs each
+    // ignoreCorruptFiles rejection) — harmless, but
     // they dominate the driver's captured stdout tail and read like
     // failures next to the clean JSON line (the r3/r4 "anomaly").
     spark.sparkContext.setLogLevel("ERROR")
@@ -72,7 +75,8 @@ object Bench {
         CacheDrain.drain(spark)
         if (ok) Some(secs) else None
       }
-      var times = (1 to repeat).flatMap(_ => rep())
+      val base = (1 to repeat).map(_ => rep())
+      var times = base.flatten
       // Only BASE repeats decide the errors flag (below): a query that
       // works only sometimes is exactly what the driver needs to see.
       val baseFailed = times.size < repeat
@@ -110,20 +114,22 @@ object Bench {
       // failure still reports the best successful time alongside its
       // error.
       if (baseFailed) failed ::= name
-      name -> (if (times.nonEmpty) times.min else -1.0)
+      name -> ((if (times.nonEmpty) times.min else -1.0, base.head.getOrElse(-1.0)))
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(m: Map[String, Double]): String =
+      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, (v, _)) => k -> v })
+    val first = obj(results.map { case (k, (_, f)) => k -> f })
     val errs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val why = failed.sorted.flatMap(k => causes.get(k).map(c => s"\"$k\":${Report.json(c)}"))
       .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
+    val total = results.values.map(_._1).filter(_ >= 0).sum
     val totalR = math.round(total * 1000) / 1000.0
     // Compact line for stdout (fits any tail buffer); full map for files.
     val shortLine =
       s"""{"metric":"total","value":$totalR,"unit":"sec","errors":$errs,"sf":"$sfDir"}"""
     val fullLine =
-      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"errors":$errs,"causes":$why,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qs,"first":$first,"errors":$errs,"causes":$why,"sf":"$sfDir"}"""
     val outPaths = "bench_result.json" :: sys.env.get("SPARK_GRAFT_BENCH_OUT").toList
     outPaths.foreach { p =>
       try Files.write(Paths.get(p), (fullLine + "\n").getBytes(StandardCharsets.UTF_8))

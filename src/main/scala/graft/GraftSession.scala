@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    materialization of persisted plans too.
   *  - UTC, and µs-int64 output timestamps (not int96), so the DuckDB
   *    oracle compare reads plain timestamps.
+  *  - `parquet.nanosAsLong`: a TIMESTAMP(NANOS) column, which Spark 4
+  *    otherwise rejects, reads as int64 nanos (the older `events.ts`
+  *    generation; see `Tables.events`). Spark has no per-read option
+  *    for this, so it is set here once, not by the queries.
   */
 object GraftSession {
   def apply(cores: Int): SparkSession = SparkSession.builder()
@@ -33,6 +37,7 @@ object GraftSession {
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -48,7 +48,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** `events.ts` has shipped under two physical types across testdata
     * generations: TIMESTAMP(NANOS) — which Spark 4 rejects outright
-    * (PARQUET_TYPE_ILLEGAL) unless read as raw int64 nanos — and, since
+    * (PARQUET_TYPE_ILLEGAL) unless read as raw int64 nanos, which
+    * GraftSession's `nanosAsLong` does — and, since
     * the 2026-08-13 regeneration, plain timestamp[us] (surfacing as
     * TIMESTAMP_NTZ). Every downstream query was written against the
     * int64-nanos shape, so normalize HERE to `ts` = epoch nanos long
@@ -61,11 +62,6 @@ object Tables {
     * TimestampType plus `us` = epoch micros.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // Session-conf mutation at query-build time is deliberate: Spark 4
-    // exposes no per-read option for this (verified — ParquetOptions has
-    // no nanosAsLong key), the set is idempotent, and no other table
-    // carries a nanos column, so the widened scope changes nothing else.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw // TIMESTAMP(NANOS) generation, read as nanos

@@ -563,7 +563,7 @@ object FsQueries {
       val uploaded = FsOps.ls(s, dst)
         .filter(!col("is_dir") && col("name").endsWith(".dat"))
         .select(col("name"), col("length"))
-      val digests = s.read.format("binaryFile").load(s"$dst/*.dat")
+      val digests = s.read.format("binaryFile").load(got.map(_.getPath.toString): _*)
         .select(element_at(split(col("path"), "/"), -1).as("name"),
           md5(hex(col("content"))).as("bin_md5"))
       uploaded.join(digests, Seq("name"), "left")
@@ -633,7 +633,8 @@ object FsQueries {
       val copied = FsOps.ls(s, dst)
         .filter(!col("is_dir") && col("name").rlike(parquetGlobRegex))
         .select(col("name"), col("length"))
-      val digests = s.read.format("binaryFile").load(s"$dst/*.parquet")
+      val digests = s.read.format("binaryFile")
+        .load(copiedFiles.map(_.getPath.toString): _*)
         .select(element_at(split(col("path"), "/"), -1).as("name"),
           md5(hex(col("content"))).as("bin_md5"))
       copied.join(digests, Seq("name"), "left")
@@ -659,7 +660,7 @@ object FsQueries {
         .globStatus(hp)
       require(matches != null && matches.nonEmpty,
         s"fs_checksum_manifest: no *.parquet under $d")
-      s.read.format("binaryFile").load(s"$d/*.parquet")
+      s.read.format("binaryFile").load(matches.map(_.getPath.toString): _*)
         .select(
           element_at(split(col("path"), "/"), -1).as("name"),
           col("length"),
@@ -683,7 +684,7 @@ object FsQueries {
       val hp = new org.apache.hadoop.fs.Path(s"$d/*.parquet")
       val matches = hp.getFileSystem(s.sparkContext.hadoopConfiguration).globStatus(hp)
       require(matches != null && matches.nonEmpty, s"fs_cat_binary: no *.parquet under $d")
-      s.read.format("binaryFile").load(s"$d/*.parquet")
+      s.read.format("binaryFile").load(matches.map(_.getPath.toString): _*)
         .select(
           element_at(split(col("path"), "/"), -1).as("name"),
           col("length"),

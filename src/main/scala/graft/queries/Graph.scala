@@ -49,10 +49,6 @@ object Graph {
   private case class LouvainArt(labelsPath: String,
       coarse: Seq[(Long, Long, Long, Long)])
 
-  // Single-flight + superseded-fingerprint eviction via
-  // ArtifactMemo.once (round 13, ADVICE r12: the getOrElseUpdate
-  // by-name block could train in several threads at once; a stale
-  // fingerprint's label parquet stranded until JVM exit).
   private def louvainArt(s: SparkSession, d: String): LouvainArt =
     graft.ArtifactMemo.once(artifactKey(d, "lineitem") + "#louvstep") {
       val lab = queries("graph_louvain_step")(s, d)
@@ -69,7 +65,7 @@ object Graph {
         .toSeq
       Cc.release(lab)
       LouvainArt(labPath, cws)
-    }(old => graft.ArtifactMemo.deleteDir(old.labelsPath))
+    }
 
   /** graph_louvain_step's partition as an (i, c) label table, re-read
     * from the once-per-dataset parquet artifact (node-sized; consumers
@@ -100,20 +96,12 @@ object Graph {
       sweeps: Int)
 
   /** The %10 phase-1 fixpoint artifact — single-flight through
-    * ArtifactMemo.once (round 13): the trainer itself is the memo
-    * value, so the r12 check-then-act (run converged for its side
-    * effect, then an unchecked memo lookup that threw a bare
-    * NoSuchElementException on a mid-run fingerprint shift — ADVICE
-    * r12) is gone by construction; a superseded fingerprint's label
-    * parquet is deleted when its replacement registers.
+    * ArtifactMemo.once: the trainer itself is the memo value, so no
+    * caller checks for the artifact and then looks it up separately.
     */
   private def louvain10Art(s: SparkSession, d: String): Louvain10Art = {
     val key = artifactKey(d, "lineitem") + "#p10"
-    graft.ArtifactMemo.once(key)(trainLouvain10(s, d, key))(
-      // Deferred, not eager (ADVICE r13): a consumer's lazy DataFrame
-      // over the old labels parquet may still execute after a
-      // regeneration — let it finish; disk is reclaimed at JVM exit.
-      old => graft.ArtifactMemo.deferDelete(old.labelsPath))
+    graft.ArtifactMemo.once(key)(trainLouvain10(s, d, key))
   }
 
   /** graph_louvain_converged's training, the single-flight memo value

@@ -247,11 +247,8 @@ object TextPipeline {
   private def bpeTrainMergesMemo(s: SparkSession, d: String,
       all: DataFrame, k: Int)
       : (Seq[(String, String)], Map[String, String]) =
-    // Single-flight + superseded-fingerprint eviction via
-    // ArtifactMemo.once (round 13 — the shared concurrency contract).
     graft.ArtifactMemo.once(artifactKey(d, "documents") + s"#merges$k")(
-      bpeTrainMerges(all, k))(
-      (_: (Seq[(String, String)], Map[String, String])) => ())
+      bpeTrainMerges(all, k))
 
   /** The trained merge list for external consumers (the streaming
     * tokenizer twin): same memo, same single-flight training.

@@ -216,8 +216,6 @@ object Vectors {
     * repeat invocations re-seed from the held artifact, exactly like
     * the one-time clustered-layout writes the scan-skipping witnesses
     * exclude from their timed region (BASELINE.md r8 precedent).
-    * Single-flight + superseded-fingerprint eviction via
-    * ArtifactMemo.once (round 13 — the shared concurrency contract).
     */
 
   private def trainPq(s: SparkSession, d: String): PqTrained = {
@@ -270,17 +268,8 @@ object Vectors {
             / count(lit(1)) * 1000000 + 0.5).cast("double") / 1000000.0)
             .as("centroid"))
     }
-    // Cross-JVM through the shared artifact store (round 14, VERDICT
-    // r13 item 6): the codebook is the estate's single most expensive
-    // trained artifact (422.8 s Lloyd fixpoint at x64), so a second
-    // driver consuming the first's published parquet — instead of
-    // re-running the fixpoint — is the whole point of the store.
-    val art = graft.ArtifactMemo.cachedValue(s, memoKey + "#pqcb") {
-      trainPqCodebook(slices, K, assignRecompute)
-    } { v => v.toDF("j", "cid", "ce") } { df =>
-      df.collect().toSeq.map(r =>
-        (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
-    }
+    val art = graft.ArtifactMemo.once(memoKey + "#pqcb")(
+      trainPqCodebook(slices, K, assignRecompute))
     val cbOut = art.groupBy(_._1).map { case (j, rs) =>
       j -> rs.map { case (_, cid, ce) => (cid, ce) } }
     PqTrained(assignRecompute(cbOut), art, 0)

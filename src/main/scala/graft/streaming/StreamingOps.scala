@@ -28,7 +28,6 @@ object StreamingOps {
   /** Unbounded events source over a directory of parquet files. */
   def readEvents(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val r = spark.readStream.schema(eventsSchema)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(dir)

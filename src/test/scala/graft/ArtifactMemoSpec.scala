@@ -67,70 +67,26 @@ class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
     } finally pool.shutdown()
   }
 
-  private def storeDir(key: String) = new java.io.File(
-    s"${System.getProperty("java.io.tmpdir")}/graft_artstore/" +
-      s"art${Tables.md5hex(key)}")
-
-  test("a superseded fingerprint is evicted with a DEFERRED delete; " +
-      "re-registering it consumes the still-published artifact") {
-    // ADVICE r13 (low): the r13 eager delete could (a) yank a dir out
-    // from under a consumer's lazily-built reader and (b) thrash
-    // retrain+delete under alternating keys. Round 14: eviction only
-    // SCHEDULES the delete for JVM exit, and a re-registered key finds
-    // its published artifact still on disk and consumes it — zero
-    // retrains in the alternating pattern.
+  test("after resetForTest the next once, cached and cachedTable call " +
+      "each trains again") {
+    // JobBudgetSpec, PipelineSpec and ShuffleSpec reset the memo to
+    // measure or check a training run rather than a re-read.
     val tag = System.nanoTime()
-    val k1 = s"/specds$tag#fp1#gc"
-    val k2 = s"/specds$tag#fp2#gc"
-    var trains = 0
-    def train = { trains += 1; spark.range(10).toDF("x") }
-    ArtifactMemo.cachedTable(spark, k1)(train).count()
-    assert(storeDir(k1).isDirectory, "first artifact dir must exist")
-    ArtifactMemo.cachedTable(spark, k2)(train).count()
-    assert(storeDir(k1).isDirectory,
-      "superseded dir must SURVIVE until JVM exit (deferred delete)")
-    assert(storeDir(k2).isDirectory, "successor artifact dir must exist")
-    assert(trains === 2)
-    // Alternating back: the evicted key's entry is gone from the memo,
-    // but its published artifact is not — the fresh holder consumes it.
-    val n = ArtifactMemo.cachedTable(spark, k1)(train).count()
-    assert(n === 10L)
-    assert(trains === 2, "re-registered evicted key must consume, not retrain")
-  }
-
-  test("cross-JVM consume: a fresh memo (JVM-2 stand-in) reads JVM-1's " +
-      "published artifact without training") {
-    // VERDICT r13 item 6: store paths are content-addressed with NO
-    // applicationId, so a second driver finds the first's publish.
-    // Simulated in one JVM by dropping all in-memory memo state.
-    val key = s"spec-xjvm#${System.nanoTime()}"
-    ArtifactMemo.cachedTable(spark, key)(spark.range(77).toDF("x")).count()
+    val trains = scala.collection.mutable.Map.empty[String, Int]
+      .withDefaultValue(0)
+    def train(form: String): Int = { trains(form) += 1; trains(form) }
+    def callAll(): (Int, Long, Long) = (
+      ArtifactMemo.once(s"spec-reset-once#$tag")(train("once")),
+      ArtifactMemo.cached(spark, s"spec-reset-cached#$tag")(
+        spark.range(10L + train("cached")).toDF("x")).count(),
+      ArtifactMemo.cachedTable(spark, s"spec-reset-table#$tag")(
+        spark.range(70L + train("table")).toDF("x")).count())
+    assert(callAll() === ((1, 11L, 71L)))
+    assert(callAll() === ((1, 11L, 71L)), "repeats must re-emit, not retrain")
     ArtifactMemo.resetForTest()
-    val n = ArtifactMemo.cachedTable(spark, key) {
-      fail("JVM-2 must consume the published artifact, not retrain")
-    }.count()
-    assert(n === 77L)
-    // Same for the driver-held form…
-    val key2 = s"spec-xjvm2#${System.nanoTime()}"
-    ArtifactMemo.cached(spark, key2)(spark.range(9).toDF("x")).count()
-    ArtifactMemo.resetForTest()
-    val m = ArtifactMemo.cached(spark, key2) {
-      fail("cached() must consume the published artifact, not retrain")
-    }.count()
-    assert(m === 9L)
-    // …and the typed form (the PQ codebook's shape).
-    val key3 = s"spec-xjvm3#${System.nanoTime()}"
-    val sp = spark
-    import sp.implicits._
-    def codec(v: Seq[(Int, String)]) = v.toDF("a", "b")
-    val v1 = ArtifactMemo.cachedValue(spark, key3)(
-      Seq((1, "x"), (2, "y")))(codec)(df =>
-      df.collect().toSeq.map(r => (r.getInt(0), r.getString(1))).sorted)
-    ArtifactMemo.resetForTest()
-    val v2 = ArtifactMemo.cachedValue[Seq[(Int, String)]](spark, key3)(
-      fail("cachedValue must consume the published artifact"))(codec)(df =>
-      df.collect().toSeq.map(r => (r.getInt(0), r.getString(1))).sorted)
-    assert(v1 === v2 && v2 === Seq((1, "x"), (2, "y")))
+    assert(callAll() === ((2, 12L, 72L)),
+      "each form must train again after the reset, and emit the new run")
+    assert(trains.toMap === Map("once" -> 2, "cached" -> 2, "table" -> 2))
   }
 
   test("a THROWING training run does not poison the key: later calls retry") {

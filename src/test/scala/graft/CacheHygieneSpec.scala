@@ -65,40 +65,26 @@ class CacheHygieneSpec extends AnyFunSuite with GraftSuite {
   test("artifact scratch parquet stays bounded across repeated consumption") {
     // VERDICT r12 item 3: the block-manager drain above says nothing
     // about the DISK layer — ArtifactMemo.cachedTable and the Louvain
-    // label tables write scratch parquet dirs. The single-flight memo
-    // must mint each artifact's dir ONCE: re-running every artifact
-    // consumer may not grow the scratch-dir count (a regression to
-    // per-invocation writes would double it here). The count is
-    // restricted to THIS test's expected artifact tags (computed from
-    // the same key formulas the production code uses) because sbt
-    // runs suites in parallel in one JVM/appId — ArtifactMemoSpec
-    // legitimately mints its own art* dirs concurrently. Eviction of
-    // a superseded fingerprint deleting its dir is gated separately
-    // in ArtifactMemoSpec.
+    // label tables write app-scoped Tables.scratch parquet dirs. The
+    // single-flight memo must mint each artifact's dir ONCE:
+    // re-running every artifact consumer may not grow the scratch-dir
+    // count (a regression to per-invocation writes would double it
+    // here). The count is restricted to THIS test's expected artifact
+    // tags, computed from the same key formulas the production code
+    // uses, so dirs other suites mint do not enter it.
     val liKey = Tables.artifactKey(sf, "lineitem")
-    // Two layers since round 14: cachedTable artifacts live in the
-    // shared cross-JVM store (graft_artstore/art<md5(key)>, no appId);
-    // the Louvain label tables still write app-scoped Tables.scratch
-    // dirs. Count both.
-    val storeNames = Seq(
-      "art" + Tables.md5hex(liKey + "#pagerank"),
-      "art" + Tables.md5hex(liKey + "#hits"))
     val tags = Seq(
+      "art" + Tables.md5hex(liKey + "#pagerank").take(12),
+      "art" + Tables.md5hex(liKey + "#hits").take(12),
       "artlouv10" + Tables.md5hex(liKey + "#p10").take(12),
       "artlouv" + Tables.md5hex(liKey).take(12))
     // Tag-prefix match, no appId suffix: the md5-of-key tag is unique
     // to these artifacts, so the stability assertion below is exact
     // whichever application minted a dir.
-    def artDirs: Int = {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val scratch = Option(new java.io.File(tmp).listFiles())
+    def artDirs: Int =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
         .getOrElse(Array.empty)
         .count(f => tags.exists(t => f.getName.startsWith(s"graft_${t}_")))
-      val store = Option(new java.io.File(tmp, "graft_artstore").listFiles())
-        .getOrElse(Array.empty)
-        .count(f => storeNames.contains(f.getName))
-      scratch + store
-    }
     val consumers = Seq("graph_pagerank_converged", "graph_hits_converged",
       "graph_louvain_converged", "graph_community_conductance",
       "feat_pca_project", "graph_louvain_full")

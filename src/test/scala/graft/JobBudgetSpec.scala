@@ -78,7 +78,7 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
 
   /** Per call at sf0.001: (jobs, SQL executions). Lower is fine;
     * higher fails. Keys in `varying` assert the budget only. With
-    * `train`, every call first clears the artifact store, so it trains
+    * `train`, every call first resets the artifact memo, so it trains
     * the key's artifact instead of reading it. Returns one call's
     * counts per key.
     */
@@ -86,7 +86,7 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
       varying: Set[String] = Set.empty, train: Boolean = false): Map[String, Counts] =
     budgets.map { case (key, (jobBudget, execBudget)) =>
       def call(): Counts = {
-        if (train) ArtifactMemo.clearStoreForTest()
+        if (train) ArtifactMemo.resetForTest()
         measure { SparkEntry.queries(key)(spark, sf).collect(): Unit }
       }
       call() // warm-up: one-time table reads, layout work and artifacts

@@ -341,13 +341,13 @@ class PipelineSpec extends AnyFunSuite with GraftSuite {
   }
 
   /** (ntype, node_id) -> value of a converged graph key's emission,
-    * trained in this call: an artifact an earlier process published
-    * would not test this build's loop.
+    * trained in this call: an artifact an earlier spec trained in this
+    * JVM would not test the loop here.
     */
   private def emitted(key: String, value: String): Map[(String, Long), Double] = {
     val sp = spark
     import sp.implicits._
-    ArtifactMemo.clearStoreForTest()
+    ArtifactMemo.resetForTest()
     SparkEntry.queries(key)(spark, sf)
       .select(col("ntype"), col("node_id").cast("long"), col(value))
       .as[(String, Long, Double)].collect()

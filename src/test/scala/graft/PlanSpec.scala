@@ -493,12 +493,17 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
       "pipeline_mixture_weights", "sample_mixture_resample",
       "shuffle_global", "text_js_divergence", "ts_cusum_changepoint",
       "ts_downsample_ltob", "ts_seasonal_profile", "ts_stl_decompose")
+    // Every key's plan is built here, so this test also checks that
+    // building a query leaves the caller's session conf as it was.
+    val conf = spark.conf.getAll
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if boundedByDomain(name) => None
       case (name, q) =>
         val lp = q(spark, sf).queryExecution.optimizedPlan
         CacheDrain.drain(spark) // between keys, as Bench does
-        val bad = lp.collect {
+        val now = spark.conf.getAll
+        assert(now === conf, s"building $name changed the session conf: " +
+          (now.keySet ++ conf.keySet).filter(k => now.get(k) != conf.get(k)))
+        val bad = if (boundedByDomain(name)) Nil else lp.collect {
           case w: LWindow if w.partitionSpec.isEmpty && !bounded(w.child) => w
         }
         if (bad.nonEmpty) Some(name) else None

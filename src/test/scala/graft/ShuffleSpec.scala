@@ -73,13 +73,13 @@ class ShuffleSpec extends AnyFunSuite with GraftSuite {
   }
 
   test("sim_pq_adc moves input-size-invariant shuffle bytes (map-only claim)") {
-    // Both tiers must measure the same path: a codebook an earlier
-    // process published to the cross-JVM store would let one tier
-    // consume it (0 shuffle bytes) while the other trains. Clear the
-    // store before each tier so both train, as bpe_train_loop's does.
-    ArtifactMemo.clearStoreForTest()
+    // Both tiers must measure the same path: a codebook another spec
+    // already trained in this JVM would let one tier re-read it (0
+    // shuffle bytes) while the other trains. Reset the memo before
+    // each tier so both train, as bpe_train_loop's does.
+    ArtifactMemo.resetForTest()
     val small = shuffleBytes("sim_pq_adc", sfSmall)
-    ArtifactMemo.clearStoreForTest()
+    ArtifactMemo.resetForTest()
     val big = shuffleBytes("sim_pq_adc", sfBig)
     assert(big <= math.max(small, 1L) * 3 + (64 << 10),
       s"sim_pq_adc shuffle bytes grew with input: $small -> $big on a 10x tier step")
@@ -109,14 +109,13 @@ class ShuffleSpec extends AnyFunSuite with GraftSuite {
     // only with the VOCABULARY (Heaps-law sub-linear, ≈√n at worst),
     // never with the corpus. 4× is the loose bound for a 10× step —
     // well under linear while leaving Heaps growth room.
-    // The round-14 cross-JVM artifact store would otherwise satisfy
-    // both tiers from an artifact published by an earlier process
-    // (bench/verify in another JVM) — zero shuffle bytes, vacuous
-    // assert. Clear the memo AND the store so the training loop
-    // itself is what gets measured, at both tiers.
-    ArtifactMemo.clearStoreForTest()
+    // A merge list another spec already trained in this JVM would
+    // otherwise satisfy a tier from the memo — zero shuffle bytes,
+    // vacuous assert. Reset the memo so the training loop itself is
+    // what gets measured, at both tiers.
+    ArtifactMemo.resetForTest()
     val small = shuffleBytes("bpe_train_loop", sfSmall)
-    ArtifactMemo.clearStoreForTest()
+    ArtifactMemo.resetForTest()
     val big = shuffleBytes("bpe_train_loop", sfBig)
     assert(small > 0, "expected a real shuffle at the small tier")
     assert(big <= small * 4 + (64 << 10),

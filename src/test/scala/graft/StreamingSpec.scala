@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
@@ -17,15 +17,6 @@ class StreamingSpec extends AnyFunSuite with GraftSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private var srcDir: Path = _
-
-  /** A session of this suite's own: the nanos-as-long parquet read of
-    * the events source must not leak into later suites.
-    */
-  override lazy val spark: SparkSession = {
-    val s = GraftSuite.shared.newSession()
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s
-  }
 
   override def beforeAll(): Unit = {
     // Split events into 8 files, shuffled across time (partitioned by
