@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Once-per-dataset memo for trained artifacts: converged PageRank/HITS
   * scores, k-means centroids, the PCA basis, the PQ codebook, the BPE
@@ -16,8 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - A throwing training run is retried by the next call: the lazy val
   *    stays uninitialized, so the failure reaches every caller of that
   *    attempt and does not poison the key.
-  *  - The driver-held form ([[cached]]) is bounded by its `require` to
-  *    structurally small artifacts; node-sized emissions use
+  *  - The driver-held form ([[cached]]) holds a trained table's
+  *    collected rows, never a plan to re-run: its trainer reads every
+  *    round through [[collectBounded]], whose `require` keeps the
+  *    driver to structurally small tables; node-sized emissions use
   *    [[cachedTable]].
   *  - Keys are content-addressed: callers build them with
   *    `Tables.artifactKey`, which fingerprints the backing parquet, so a
@@ -44,22 +49,33 @@ object ArtifactMemo {
       .asInstanceOf[Holder[T]].value
   }
 
-  /** Driver-held form, only for artifacts whose size the algorithm
-    * bounds (≤k×dim centroids, vocab-sized merges), never the corpus:
-    * the require makes a corpus-proportional misuse loud.
+  /** Driver-held form, for trained tables whose size the algorithm
+    * bounds (≤k×dim centroids, a codebook, a basis), never the corpus:
+    * the first call runs `train`, which returns the table's schema and
+    * its rows, read with [[collectBounded]]; every call re-emits the
+    * held rows as a local DataFrame of the caller's session. It is
+    * [[once]] plus that emission, so a consumer that needs the rows
+    * themselves reads them with `once` under the same key.
     */
-  def cached(s: SparkSession, key: String)(train: => DataFrame): DataFrame = {
-    val (schema, rows) = once(key) {
-      val df = train.persist()
-      val n = df.count()
-      require(n <= 10000,
-        s"ArtifactMemo($key): $n rows — the driver-held " +
-          "memo is for structurally-bounded trained artifacts; " +
-          "corpus-proportional (node-sized) emissions must use " +
-          "cachedTable, which persists a parquet artifact instead")
-      try (df.schema, df.collect()) finally df.unpersist()
-    }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  def cached(s: SparkSession, key: String)
+      (train: => (StructType, Seq[Row])): DataFrame = {
+    val (schema, rows) = once(key)(train)
+    s.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The driver bound of every small-state training round: collect a
+    * table whose size the algorithm bounds, reading at most 10,001 rows
+    * and refusing more than 10,000, so a corpus-proportional misuse
+    * fails loudly here instead of in driver memory.
+    */
+  def collectBounded(df: DataFrame, what: String): Array[Row] = {
+    val rows = df.limit(10001).collect()
+    require(rows.length <= 10000,
+      s"$what: more than 10000 rows — the driver holds only " +
+        "structurally-bounded trained tables; corpus-proportional " +
+        "(node-sized) emissions must use cachedTable, which persists " +
+        "a parquet artifact instead")
+    rows
   }
 
   /** Parquet-backed form for node-sized artifacts (converged score

@@ -200,18 +200,19 @@ object TextPipeline {
   }
 
   /** Train the first `k` BPE merges on a collapsed (w, c) word table —
-    * bpe_encode's loop, factored so the tokenizer-EVAL operators
-    * (text_tokenizer_fertility) train the identical vocabulary. Each
-    * learned merge gets a fresh control-char placeholder; returns the
-    * rank-ordered (pair, placeholder) list and the placeholder→text
+    * the one BPE training loop: bpe_train_loop emits it, and bpe_encode
+    * and the tokenizer-EVAL operators (text_tokenizer_fertility) train
+    * the identical vocabulary. Each learned merge gets a fresh
+    * control-char placeholder; returns the rank-ordered (pair,
+    * placeholder, weighted count) list and the placeholder→text
     * expansion map. One O(1) driver row per round; per-round work is
     * vocabulary-bounded (the bpe_train_loop Zipf argument).
     */
   private def bpeTrainMerges(all: DataFrame, k: Int)
-      : (Seq[(String, String)], Map[String, String]) = {
+      : (Seq[(String, String, Long)], Map[String, String]) = {
     var words = all.filter(length(col("w")) >= 2).persist()
     val exp = scala.collection.mutable.Map[String, String]()
-    val merges = scala.collection.mutable.ListBuffer[(String, String)]()
+    val merges = scala.collection.mutable.ListBuffer[(String, String, Long)]()
     var prevWords: DataFrame = null
     for (r <- 1 to k) {
       val top = words.select(explode(expr(
@@ -219,13 +220,18 @@ object TextPipeline {
           .as("pair"), col("c"))
         .groupBy("pair").agg(sum(col("c")).as("n"))
         .orderBy(desc("n"), asc("pair")).limit(1)
-        .head()
+        .head() // the round's ONE job; materializes this round's vocab
+      // This round's vocab is now cached — the parent round's cache is
+      // dead weight from here on (k rounds would otherwise stack k
+      // cached vocab tables for Bench's repeats to multiply).
       if (prevWords != null) prevWords.unpersist()
       prevWords = words
       val pair = top.getString(0)
       val ph = (r + 1).toChar.toString
       exp(ph) = pair.map(ch => exp.getOrElse(ch.toString, ch.toString)).mkString
-      merges += ((pair, ph))
+      merges += ((pair, ph, top.getLong(1)))
+      // Column-literal search/replacement strings (never SQL text —
+      // the pair may contain earlier placeholder control chars).
       words = words
         .select(call_function("replace", col("w"), lit(pair), lit(ph)).as("w"),
           col("c"))
@@ -246,21 +252,26 @@ object TextPipeline {
     */
   private def bpeTrainMergesMemo(s: SparkSession, d: String,
       all: DataFrame, k: Int)
-      : (Seq[(String, String)], Map[String, String]) =
+      : (Seq[(String, String, Long)], Map[String, String]) =
     graft.ArtifactMemo.once(artifactKey(d, "documents") + s"#merges$k")(
       bpeTrainMerges(all, k))
+
+  /** The corpus collapsed to its (distinct lowercase [a-z]+ word w,
+    * count c) table, the BPE family's training input.
+    */
+  private def wordCounts(s: SparkSession, d: String): DataFrame =
+    documents(s, d)
+      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
+      .filter(length(col("w")) >= 1)
+      .groupBy("w").agg(count(lit(1)).as("c"))
 
   /** The trained merge list for external consumers (the streaming
     * tokenizer twin): same memo, same single-flight training.
     */
   private[graft] def trainedBpeMerges(s: SparkSession, d: String,
-      k: Int = 6): Seq[(String, String)] = {
-    val all = documents(s, d)
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-      .filter(length(col("w")) >= 1)
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    bpeTrainMergesMemo(s, d, all, k)._1
-  }
+      k: Int = 6): Seq[(String, String)] =
+    bpeTrainMergesMemo(s, d, wordCounts(s, d), k)._1
+      .map { case (pair, ph, _) => (pair, ph) }
 
   val queries: Map[String, Q] = keyed(
     "dedup_exact" -> { (s, d) =>
@@ -756,48 +767,14 @@ object TextPipeline {
       // map-side combine caps task emissions by (alphabet+merges)²)
       // and the merge decode is 12 driver-side string substitutions.
       // 12 is the gate-bounded round count; production trains 30k
-      // merges with the identical loop.
-      // ARTIFACT MEMO (round 12): the ordered merge list IS the
-      // tokenizer — trained once per dataset, re-emitted from the held
-      // 12 rows on repeats (graft.ArtifactMemo; floor RESET; train
-      // path timed as rep1).
+      // merges with the identical loop. The loop is bpeTrainMerges, and
+      // the ordered merge list IS the tokenizer: trained once per
+      // dataset (bpeTrainMergesMemo), emitted with each merge's text
+      // expansion and weighted count.
       import s.implicits._
-      graft.ArtifactMemo.cached(s, artifactKey(d, "documents") + "#bpe12") {
-      var words = documents(s, d)
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-        .filter(length(col("w")) >= 2)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        .persist()
-      val exp = scala.collection.mutable.Map[String, String]()
-      val out = scala.collection.mutable.ListBuffer[(Int, String, Long)]()
-      var prevWords: DataFrame = null
-      for (k <- 1 to 12) {
-        val top = words.select(explode(expr(
-            "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
-            .as("pair"), col("c"))
-          .groupBy("pair").agg(sum(col("c")).as("n"))
-          .orderBy(desc("n"), asc("pair")).limit(1)
-          .head() // the round's ONE job; materializes this round's vocab
-        // This round's vocab is now cached — the parent round's cache
-        // is dead weight from here on (12 rounds would otherwise stack
-        // 12 cached vocab tables for Bench's repeats to multiply).
-        if (prevWords != null) prevWords.unpersist()
-        prevWords = words
-        val pair = top.getString(0)
-        val ph = (k + 1).toChar.toString
-        exp(ph) = pair.map(ch => exp.getOrElse(ch.toString, ch.toString)).mkString
-        out += ((k, exp(ph), top.getLong(1)))
-        // Column-literal search/replacement strings (never SQL text —
-        // the pair may contain earlier placeholder control chars).
-        words = words
-          .select(call_function("replace", col("w"), lit(pair), lit(ph)).as("w"),
-            col("c"))
-          .filter(length(col("w")) >= 2)
-          .persist()
-      }
-      words.unpersist(); if (prevWords != null) prevWords.unpersist()
-      out.toSeq.toDF("rank", "merge", "n").orderBy("rank")
-      }
+      val (merges, exp) = bpeTrainMergesMemo(s, d, wordCounts(s, d), 12)
+      merges.zipWithIndex.map { case ((_, ph, n), i) => (i + 1, exp(ph), n) }
+        .toDF("rank", "merge", "n").orderBy("rank")
     },
 
     "bpe_encode" -> { (s, d) =>
@@ -815,13 +792,9 @@ object TextPipeline {
       // shape as the loop (vocabulary-bounded rounds) plus a
       // vocab-sized histogram groupBy.
       import s.implicits._
-      val all = documents(s, d)
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        .persist()
+      val all = wordCounts(s, d).persist()
       val (merges, exp) = bpeTrainMergesMemo(s, d, all, 6)
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
+      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
         call_function("replace", c, lit(pair), lit(ph))
       }
       val expDf = exp.toSeq.toDF("sym", "tok")
@@ -852,15 +825,10 @@ object TextPipeline {
       // symbol is one token), weighted by occurrence count. Scale
       // shape: vocabulary-bounded training + a ≤langs-key rollup —
       // map-side combine bounds every task at any corpus size.
-      import s.implicits._
-      val all = documents(s, d)
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        .persist()
+      val all = wordCounts(s, d).persist()
       val (merges, _) = bpeTrainMergesMemo(s, d, all, 6)
       all.unpersist()
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
+      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
         call_function("replace", c, lit(pair), lit(ph))
       }
       documents(s, d)
@@ -896,12 +864,8 @@ object TextPipeline {
       // doc-keyed rollup of encoded lengths (every surviving symbol is
       // one token — the fertility rule; [a-z]+ separator convention of
       // the whole BPE family).
-      val all = documents(s, d)
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      val (merges, _) = bpeTrainMergesMemo(s, d, all, 6)
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
+      val (merges, _) = bpeTrainMergesMemo(s, d, wordCounts(s, d), 6)
+      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
         call_function("replace", c, lit(pair), lit(ph))
       }
       // spread: the tokenize explode + per-(doc, word) partial combine
@@ -3750,9 +3714,9 @@ object TextPipeline {
 
     "sample_stratified_k" ->
       """SELECT doc_id, lang, rn FROM (
-        |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
+        |  SELECT doc_id, lang, CAST(row_number() OVER (PARTITION BY lang
         |    ORDER BY md5('graft-ksample:' || CAST(doc_id AS VARCHAR)),
-        |      doc_id) AS rn
+        |      doc_id) AS INTEGER) AS rn
         |  FROM documents) t
         |WHERE rn <= 30 ORDER BY lang, rn""".stripMargin,
 

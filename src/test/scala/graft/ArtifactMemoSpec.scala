@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates for the once-per-dataset trained-artifact machinery
@@ -8,10 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * keying silently re-seeds from stale artifacts).
   */
 class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
+  /** A trainer's result as the driver-held form takes it. */
+  private def table(df: DataFrame) = (df.schema, ArtifactMemo.collectBounded(df, "spec").toSeq)
+
   test("cached() trains exactly once per key and re-emits identical rows") {
     var trains = 0
     val key = s"spec#${System.nanoTime()}"
-    def train = { trains += 1; spark.range(5).toDF("x") }
+    def train = { trains += 1; table(spark.range(5).toDF("x")) }
     val a = ArtifactMemo.cached(spark, key)(train).collect()
     val b = ArtifactMemo.cached(spark, key)(train).collect()
     assert(trains === 1, "second invocation must re-emit, not retrain")
@@ -35,9 +39,12 @@ class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
   }
 
   test("the structural-bound require trips loudly on oversized emissions") {
+    // Every training round of a driver-held artifact is read through
+    // collectBounded, so the bound holds on each round's table, not
+    // only on the emission; 10,000 rows still pass.
+    assert(ArtifactMemo.collectBounded(spark.range(10000).toDF("x"), "spec").length === 10000)
     val e = intercept[IllegalArgumentException] {
-      ArtifactMemo.cached(spark, s"spec-big#${System.nanoTime()}")(
-        spark.range(10001).toDF("x"))
+      ArtifactMemo.collectBounded(spark.range(10001).toDF("x"), "spec-big")
     }
     assert(e.getMessage.contains("structurally-bounded"))
   }
@@ -78,7 +85,7 @@ class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
     def callAll(): (Int, Long, Long) = (
       ArtifactMemo.once(s"spec-reset-once#$tag")(train("once")),
       ArtifactMemo.cached(spark, s"spec-reset-cached#$tag")(
-        spark.range(10L + train("cached")).toDF("x")).count(),
+        table(spark.range(10L + train("cached")).toDF("x"))).count(),
       ArtifactMemo.cachedTable(spark, s"spec-reset-table#$tag")(
         spark.range(70L + train("table")).toDF("x")).count())
     assert(callAll() === ((1, 11L, 71L)))

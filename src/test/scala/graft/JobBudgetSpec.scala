@@ -24,8 +24,9 @@ import graft.queries.Cc
   *  - a job budget and an SQL-execution budget for each connected-
   *    components key, each community (Louvain/modularity) key and
   *    each converging graph loop (PageRank, HITS, k-core; the first
-  *    two on their training calls), counted over construction plus
-  *    one consuming collect, and that
+  *    two on their training calls) and each small-state trainer
+  *    (k-means, PQ, PCA, BPE; training calls), counted over
+  *    construction plus one consuming collect, and that
   *    two calls count exactly the same, except for the few keys whose
   *    job count differs between calls; those assert the budget only;
   *  - that every `Cc.minLabel` round is exactly ONE SQL execution (its
@@ -134,6 +135,17 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
         "graph_hits_converged" -> (34, 10)), train = true)
     for ((key, c) <- counts)
       assert(!c.execs.exists(Set("head", "count")), s"$key: a driver read remains: ${c.execs}")
+  }
+
+  test("the small-state trainers stay within their training budgets") {
+    // Training calls: a seed read, one collect per round (13 k-means,
+    // 29 PQ, 9 PCA rounds; 12 BPE merges) and the consuming collect of
+    // the held last round.
+    checkBudgets(Seq(
+      "sim_kmeans_converged" -> (45, 15),
+      "sim_pq_train_converged" -> (93, 31),
+      "feat_pca_power_converged" -> (61, 11),
+      "bpe_train_loop" -> (41, 13)), train = true)
   }
 
   test("every fixpoint round is exactly one SQL execution") {

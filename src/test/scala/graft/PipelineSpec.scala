@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -398,6 +398,80 @@ class PipelineSpec extends AnyFunSuite with GraftSuite {
     assert(auth2.keySet == auth.keySet && hub2.keySet == hub.keySet)
     val moved = auth.count { case (id, v) => auth2(id) != v } + hub.count { case (id, v) => hub2(id) != v }
     assert(moved == 0, s"$moved of ${score.size} scores move in one more step")
+  }
+
+  /** The embeddings corpus as (vec_id, embedding). */
+  private def corpus(): Seq[(Long, Seq[Float])] =
+    Tables.embeddings(spark, sf).select(col("vec_id").cast("long"), col("embedding"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
+
+  /** graft_dot: double-widened products summed in index order. */
+  private def dotF(a: Seq[Float], b: Seq[Float]): Double =
+    a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+
+  /** A converged trainer's emission, trained in this call. */
+  private def trained(key: String): Array[Row] = {
+    ArtifactMemo.resetForTest()
+    SparkEntry.queries(key)(spark, sf).collect()
+  }
+
+  /** A Lloyd table, (j, cid, dim) -> (n_members, centroid). */
+  private type Lloyd = Map[(Int, Int, Int), (Long, Double)]
+
+  private def lloydTable(rows: Array[Row], j: Row => Int): Lloyd =
+    rows.map(r => (j(r), r.getAs[Int]("cid"), r.getAs[Int]("dim")) ->
+      ((r.getAs[Long]("n_members"), r.getAs[Double]("centroid")))).toMap
+
+  /** One Lloyd sweep over (j, slice) rows from the codebook a table
+    * feeds back (each centroid cast to float): dist² rounded half-up at
+    * 1e-6 before the (dist2, cid) argmin, member values at 1e-6 through
+    * the exact long capture, the mean through floor(·*1e6+0.5)/1e6.
+    */
+  private def lloydStep(slices: Seq[(Int, Seq[Float])], t: Lloyd): Lloyd = {
+    val cb = t.toSeq.groupBy { case ((j, cid, _), _) => (j, cid) }.map { case (jc, ds) =>
+      jc -> ds.sortBy(_._1._3).map(_._2._2.toFloat) }
+    slices.map { case (j, v) =>
+      val ee = dotF(v, v)
+      val cid = cb.toSeq.collect { case ((`j`, c), ce) =>
+        (BigDecimal(ee - 2.0 * dotF(v, ce) + dotF(ce, ce)).setScale(6, BigDecimal.RoundingMode.HALF_UP), c)
+      }.min._2
+      (j, cid, v)
+    }.flatMap { case (j, cid, v) => v.indices.map(dim => (j, cid, dim) -> v(dim)) }
+      .groupBy(_._1).map { case (k, xs) =>
+        val n = xs.size.toLong
+        val sum = lsum(xs.map(x => roundHalfUp(x._2.toDouble, 6)), 6)
+        k -> ((n, math.floor(sum / n * 1000000 + 0.5) / 1000000.0))
+      }
+  }
+
+  test("sim_kmeans_converged emits a fixed point of one Lloyd step") {
+    val t = lloydTable(trained("sim_kmeans_converged"), _ => 0)
+    val next = lloydStep(corpus().map { case (_, e) => (0, e) }, t)
+    val moved = (t.keySet ++ next.keySet).filter(k => t.get(k) != next.get(k))
+    assert(moved.isEmpty, s"${moved.size} of ${t.size} (cid, dim) cells move in one more step: ${moved.take(5)}")
+  }
+
+  test("sim_pq_train_converged emits a fixed point of one Lloyd step") {
+    val t = lloydTable(trained("sim_pq_train_converged"), _.getAs[Int]("j"))
+    val slices = corpus().flatMap { case (_, e) => (0 until 8).map(j => (j, e.slice(j * 8, j * 8 + 8))) }
+    val next = lloydStep(slices, t)
+    val moved = (t.keySet ++ next.keySet).filter(k => t.get(k) != next.get(k))
+    assert(moved.isEmpty, s"${moved.size} of ${t.size} (j, cid, dim) cells move in one more step: ${moved.take(5)}")
+  }
+
+  test("feat_pca_power_converged emits a fixed point of one power step") {
+    val w = trained("feat_pca_power_converged").map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val v = w.toSeq.sortBy(_._1).map(_._2.toFloat)
+    // The planted corpus: one copy of vec_id 0 per 10 corpus rows.
+    val base = corpus()
+    val v0 = base.find(_._1 == 0L).get._2
+    val emb = base.map(_._2) ++ base.filter(_._1 % 10 == 0).map(_ => v0)
+    val sc = emb.map(e => roundHalfUp(dotF(e, v), 6))
+    val raw = v.indices.map(dim => lsum(emb.zip(sc).map { case (e, x) => roundHalfUp(e(dim).toDouble * x, 9) }, 9))
+    val n2 = raw.map(x => BigDecimal(roundHalfUp(x * x, 9))).sum.toDouble
+    val next = raw.indices.map(dim => dim -> roundHalfUp(raw(dim) / math.sqrt(n2), 6)).toMap
+    val moved = w.keySet.filter(k => next.get(k) != w.get(k))
+    assert(w.size == 64 && moved.isEmpty, s"${moved.size} of ${w.size} dims move in one more step: ${moved.take(5)}")
   }
 
   test("shuffle_global emits the exact md5-order permutation") {

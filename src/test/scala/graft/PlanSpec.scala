@@ -422,22 +422,17 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
     // (lo, hi, …) global-range row. text_bm25_score attaches its 1-row
     // (N, Σlen) corpus globals the same way (the text_tfidf
     // corpus-count argument; its df side joins as a broadcast
-    // equi-join, never nested-loop). Round-10 addition:
-    // sim_kmeans_converged attaches its 1-row centroid-array struct
-    // (k×dim = O(1) by construction, independent of corpus size) as
-    // broadcast DATA each round — the sim_kmeans_step argument; the
-    // emitted stationary round is the same single-row attach.
-    // feat_pca_power_converged carries the step's two 1-row attaches
-    // (iterate vector as broadcast DATA, norm scalar) plus the 1-row
-    // v0 plant attach — all O(1) rows by construction. sim_pq_train
-    // attaches the same 1-row 128-struct codebook as sim_pq_adc.
+    // equi-join, never nested-loop). sim_pq_train attaches the same 1-row 128-struct codebook as
+    // sim_pq_adc. The converging trainers (sim_kmeans_converged,
+    // sim_pq_train_converged, feat_pca_power_converged) emit their
+    // held last round, a local table, so their plans are checked here
+    // like any other key.
     val allowed = Set("join_cross", "agg_ks_test", "agg_mannwhitney_u",
       "agg_roc_auc", "agg_calibration_bins", "feat_psi_drift",
       "text_perplexity_filter", "fs_tier_plan", "text_bm25_score",
       "text_tfidf", "text_langid", "sim_cosine_topk", "sim_ann_ivf",
       "sim_quantized_rerank", "agg_decay_halflife", "dedup_semantic",
-      "sim_kmeans_step", "sim_kmeans_converged", "sim_pq_train_converged",
-      "graph_pagerank_step",
+      "sim_kmeans_step", "graph_pagerank_step",
       "text_unigram_logprob",
       "graph_triangles", "profile_summary_approx", "sample_curriculum",
       "sim_ann_recall", "sim_ann_recall_multiprobe", "sim_ann_multitable",
@@ -447,7 +442,7 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
       "graph_louvain_step", "graph_louvain_coarsen", "graph_louvain_level2",
       "graph_coarsen_invariant",
       "join_point_in_interval", "ts_mk_trend", "bpe_merge_apply",
-      "feat_pca_power_step", "feat_pca_power_converged", "text_kneser_ney",
+      "feat_pca_power_step", "text_kneser_ney",
       "agg_hll_intersect")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, _) if allowed(name) => None
@@ -468,14 +463,18 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
     // top-k anti-pattern when the input is data-sized (a global
     // row_number over a 10⁷-term vocabulary ranks everything to keep
     // 500). Legitimate instances are windows over PROVABLY BOUNDED
-    // inputs: below a GlobalLimit (the orderBy().limit(k) + re-rank
-    // pattern — sim_pq_adc, text_vocab_build) or above a zero-grouping
-    // (1-row) aggregate. Anything else fails the suite.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LogicalPlan, Window => LWindow}
-    def bounded(p: LogicalPlan): Boolean = p.collectFirst {
-      case _: GlobalLimit => ()
-      case a: Aggregate if a.groupingExpressions.isEmpty => ()
-    }.isDefined
+    // inputs: every path from the window down to a leaf passes a
+    // GlobalLimit (the orderBy().limit(k) + re-rank pattern —
+    // sim_pq_adc, text_vocab_build) or a zero-grouping (1-row)
+    // aggregate, or ends in a LocalRelation. One bounded branch does
+    // not bound a join with a data-sized one. Anything else fails the
+    // suite.
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalRelation, LogicalPlan, Window => LWindow}
+    def bounded(p: LogicalPlan): Boolean = p match {
+      case _: GlobalLimit | _: LocalRelation => true
+      case a: Aggregate if a.groupingExpressions.isEmpty => true
+      case _ => p.children.nonEmpty && p.children.forall(bounded)
+    }
     // Audited instances (round 15): every window here runs over a table
     // ALREADY REDUCED by a grouped aggregate whose key domain is
     // structurally bounded — value grids (spearman: quantity 1..50 /
@@ -487,7 +486,16 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
     // contingency). Their scaladocs carry the boundedness argument;
     // the gate exists to stop NEW data-sized instances (the
     // text_vocab_build / zipf / bigram_lm class this round removed).
+    // Fixed-bin tables over a clamped bin key belong here too, though
+    // a 1-row range aggregate on one branch let them pass the old
+    // any-node rule: the 256 ECDF bands of agg_ks_test,
+    // agg_mannwhitney_u and agg_roc_auc (least(255, floor((v − lo) /
+    // width)) over values ≥ the broadcast minimum lo) and the 10 score
+    // deciles of agg_calibration_bins and feat_psi_drift (least(9,
+    // floor(10p)) over p ∈ [0, 1], plus one null bin when hi = lo).
     val boundedByDomain = Set("agg_benford_test", "agg_chi_square",
+      "agg_ks_test", "agg_mannwhitney_u", "agg_roc_auc",
+      "agg_calibration_bins", "feat_psi_drift",
       "agg_cramers_v", "agg_mutual_information", "agg_spearman_corr",
       "pipeline_epoch_plan", "pipeline_interleave_sources",
       "pipeline_mixture_weights", "sample_mixture_resample",
