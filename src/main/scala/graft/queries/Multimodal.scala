@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.awt.image.BufferedImage
+import javax.imageio.{IIOException, IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.{MemoryCacheImageInputStream,
+  MemoryCacheImageOutputStream}
 import graft.Tables._
 import graft.SparkEntry.keyed
 
@@ -20,23 +24,21 @@ import graft.SparkEntry.keyed
   * mm_phash_dedup and the other pixel keys build an 8-bit image per
   * document (pixels tiled from the text bytes — the corpus has no
   * binary column, so the construction is the oracle's prediction
-  * handle), encode it as a spec-conformant PNG — per-scanline filters
-  * cycling the complete PNG filter set (None/Sub/Up/Average/Paeth), a
-  * zlib IDAT, CRC-32 per chunk — and then DECODE it back from the
-  * bytes alone (chunk walk, zlib inflate, filter reversal) before doing
-  * any pixel math. zlib is the JDK's java.util.zip (the native zlib);
-  * the chunk walk, filter codec and clip container are implemented
-  * here. Each document picks its deflate mode (stored / fastest / best
-  * compression) from `id % 3`, so the decoder sees a mixed corpus. Any
-  * slip in the filter encode OR decode, the chunk framing, or the
-  * downstream resample/histogram/hash arithmetic breaks the DuckDB hash
-  * gate, because the oracle predicts results from the pixel
-  * construction while Spark must RECOVER them through the codec.
+  * handle), encode it as a PNG and DECODE it back from the bytes alone
+  * before doing any pixel math. The codec is the JDK's javax.imageio
+  * PNG writer and reader ([[PngCodec]]); the clip container is
+  * implemented here. Each document picks its deflate mode (stored /
+  * middle / best compression) from `id % 3`, so the decoder sees a
+  * mixed corpus. PNG is lossless and every key reads the decoded
+  * pixels, never the encoded bytes, so any slip in the codec round
+  * trip, the clip framing, or the downstream resample/histogram/hash
+  * arithmetic breaks the DuckDB hash gate: the oracle predicts results
+  * from the pixel construction while Spark must RECOVER them through
+  * the codec.
   * The plumbing is real throughout: binary column → typed Dataset →
   * `mapPartitions` (the Scala analogue of a batched Pandas UDF: one
-  * iterator per partition, amortized per-batch setup — a hardware
-  * codec would open its context once per partition exactly where the
-  * init comments sit).
+  * iterator per partition, amortized per-batch setup — each partition
+  * builds one PngCodec and reuses it for every row).
   */
 object Multimodal {
   type Q = (SparkSession, String) => DataFrame
@@ -139,212 +141,81 @@ object Multimodal {
     } else ("unknown", 0, 0, false)
   }
 
-  // ---- Pixel codec: JDK zlib (java.util.zip wraps the native zlib),
-  // then the PNG scanline-filter set.
+  // ---- Pixel codec: the JDK's javax.imageio PNG reader and writer.
 
-  /** zlib stream in mode 0 = stored, 1 = fastest, 2 = best compression.
-    * The queries pass `id % 3`, so the decoder sees a mixed corpus.
+  /** 8-bit PNG codec over javax.imageio for grayscale (bpp = 1) and
+    * truecolor (bpp = 3, samples as row-major RGB triplets) images.
+    * Building a reader and a writer costs milliseconds while the JVM is
+    * cold and about as much as a round trip once warm (~25 µs on JDK
+    * 17), so each partition builds one codec and reuses it for every
+    * row; it is not thread-safe. Both directions run over in-memory
+    * image streams:
+    * ImageIO's own stream factories would cache through files in
+    * java.io.tmpdir.
     */
-  def zlibDeflate(raw: Array[Byte], mode: Int): Array[Byte] = {
-    import java.util.zip.Deflater._
-    require(0 <= mode && mode <= 2, s"zlibDeflate: unknown mode $mode")
-    val d = new java.util.zip.Deflater(
-      Array(NO_COMPRESSION, BEST_SPEED, BEST_COMPRESSION)(mode))
-    try {
-      d.setInput(raw); d.finish()
-      val out = new java.io.ByteArrayOutputStream(raw.length + 64)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
+  final class PngCodec {
+    private val writer = ImageIO.getImageWritersByFormatName("png").next()
+    private val reader = ImageIO.getImageReadersByFormatName("png").next()
 
-  /** Inflate an untrusted zlib stream that must decode to exactly
-    * `expectedLen` bytes; any other stream fails with an
-    * IllegalArgumentException whose message starts "zlib:".
-    */
-  def zlibInflate(b: Array[Byte], expectedLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b)
-      val out = new Array[Byte](expectedLen + 1) // one spare byte detects overlong output
-      var n = 0
+    /** Encode a w×h image in deflate mode 0 (stored), 1 or 2 (best
+      * compression), written as compression quality 1.0, 0.5 or 0.0. The
+      * queries pass `id % 3`, so the decoder sees a mixed corpus. The
+      * writer picks each scanline's filter.
+      */
+    def encode(pix: Array[Byte], w: Int, h: Int, bpp: Int,
+        deflateMode: Int): Array[Byte] = {
+      require(bpp == 1 || bpp == 3, s"png: unsupported bpp=$bpp")
+      require(pix.length == w * h * bpp, s"png: ${pix.length} != $w*$h*$bpp")
+      require(0 <= deflateMode && deflateMode <= 2,
+        s"png: unknown deflate mode $deflateMode")
+      val img = new BufferedImage(w, h,
+        if (bpp == 1) BufferedImage.TYPE_BYTE_GRAY
+        else BufferedImage.TYPE_3BYTE_BGR)
+      img.getRaster.setDataElements(0, 0, w, h, pix) // R, G, B band order
+      val param = writer.getDefaultWriteParam
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(1.0f - 0.5f * deflateMode)
+      val bytes = new java.io.ByteArrayOutputStream(pix.length + 128)
+      val out = new MemoryCacheImageOutputStream(bytes)
       try {
-        while (n < out.length && !inf.finished() && !inf.needsInput() &&
-            !inf.needsDictionary())
-          n += inf.inflate(out, n, out.length - n)
+        writer.setOutput(out)
+        writer.write(null, new IIOImage(img, null, null), param)
+      } finally out.close()
+      bytes.toByteArray
+    }
+
+    /** Decode a PNG from the bytes alone into (w, h, samples), refusing
+      * any image that does not hold 8-bit samples in `bpp` channels.
+      * ImageIO verifies the zlib stream but not the chunk CRCs. Every
+      * refusal is an IllegalArgumentException whose message starts
+      * "png:".
+      */
+    def decode(b: Array[Byte], bpp: Int): (Int, Int, Array[Byte]) = {
+      val in = new MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(b))
+      try {
+        reader.setInput(in, true, true)
+        val w = reader.getWidth(0); val h = reader.getHeight(0)
+        val raw = reader.getRawImageType(0)
+        require(raw.getNumBands == bpp && raw.getBitsPerBand(0) == 8 &&
+          raw.getColorModel.getNumComponents == bpp,
+          s"png: expected 8-bit ${if (bpp == 1) "grayscale" else "truecolor"}" +
+            s", got ${raw.getNumBands} bands of ${raw.getBitsPerBand(0)} bits")
+        // Deflate expands at most 1032:1, so a larger claim is corrupt and
+        // is refused before ImageIO allocates the image.
+        require(h.toLong * (w.toLong * bpp + 1) <= 1032L * b.length,
+          s"png: ${w}x$h scanlines cannot fit in a ${b.length}-byte PNG")
+        val img = reader.read(0)
+        (w, h, img.getRaster.getDataElements(0, 0, w, h, null)
+          .asInstanceOf[Array[Byte]])
       } catch {
-        case e: java.util.zip.DataFormatException =>
-          throw new IllegalArgumentException(s"zlib: ${e.getMessage}", e)
+        case e: IIOException =>
+          throw new IllegalArgumentException(s"png: ${e.getMessage}", e)
+      } finally {
+        reader.setInput(null)
+        in.close()
       }
-      require(!inf.needsDictionary(), "zlib: preset dictionary unsupported")
-      require(n <= expectedLen, s"zlib: output exceeds $expectedLen bytes")
-      require(inf.finished(), "zlib: truncated stream")
-      require(n == expectedLen, s"zlib: inflated $n bytes, expected $expectedLen")
-      java.util.Arrays.copyOf(out, n)
-    } finally inf.end()
-  }
-
-  /** PNG Paeth predictor: nearest of left/up/up-left to a+b−c. */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** Filter predictor for 8-bit grayscale (bpp=1): a=left, b=up,
-    * c=up-left, all 0 beyond the image edge.
-    */
-  private def predict(f: Int, a: Int, b: Int, c: Int): Int = f match {
-    case 0 => 0
-    case 1 => a
-    case 2 => b
-    case 3 => (a + b) / 2
-    case 4 => paeth(a, b, c)
-    case other =>
-      throw new IllegalArgumentException(s"png: unknown filter $other")
-  }
-
-  /** Encode a w×h 8-bit image as a spec-conformant PNG — GRAYSCALE
-    * (bpp=1, color type 0) or TRUECOLOR (bpp=3, color type 2; round
-    * 14, VERDICT r13 item 3). Scanlines are filtered with type y % 5,
-    * deliberately cycling ALL FIVE standard PNG filters so the
-    * decoder's filter reversal is exercised on every image; the
-    * filters operate bytewise with the left neighbor at offset bpp,
-    * exactly the PNG spec's bpp-parametric rule. IDAT is zlib in the
-    * caller's deflate mode (0 stored / 1 fastest / 2 best compression),
-    * CRC-32 per chunk.
-    */
-  def encodePng(pix: Array[Byte], w: Int, h: Int, bpp: Int,
-      filterOffset: Int = 0, deflateMode: Int = 0): Array[Byte] = {
-    require(bpp == 1 || bpp == 3, s"encodePng: unsupported bpp=$bpp")
-    require(pix.length == w * h * bpp,
-      s"encodePng: ${pix.length} != $w*$h*$bpp")
-    val stride = w * bpp
-    val raw = new Array[Byte](h * (stride + 1))
-    var y = 0
-    while (y < h) {
-      val f = (y + filterOffset) % 5
-      raw(y * (stride + 1)) = f.toByte
-      var x = 0
-      while (x < stride) {
-        val cur = pix(y * stride + x) & 0xFF
-        val a = if (x >= bpp) pix(y * stride + x - bpp) & 0xFF else 0
-        val b = if (y > 0) pix((y - 1) * stride + x) & 0xFF else 0
-        val c = if (x >= bpp && y > 0)
-          pix((y - 1) * stride + x - bpp) & 0xFF else 0
-        raw(y * (stride + 1) + 1 + x) =
-          ((cur - predict(f, a, b, c)) & 0xFF).toByte
-        x += 1
-      }
-      y += 1
     }
-    val out = new java.io.ByteArrayOutputStream(69 + raw.length)
-    out.write(pngSig, 0, 8)
-    def chunk(typ: String, body: Array[Byte]): Unit = {
-      val tb = typ.getBytes(ascii)
-      out.write(be32(body.length.toLong), 0, 4)
-      out.write(tb, 0, 4)
-      out.write(body, 0, body.length)
-      val crc = new java.util.zip.CRC32
-      crc.update(tb); crc.update(body)
-      out.write(be32(crc.getValue), 0, 4)
-    }
-    val colorType: Byte = if (bpp == 1) 0 else 2
-    chunk("IHDR", be32(w.toLong) ++ be32(h.toLong) ++
-      Array[Byte](8, colorType, 0, 0, 0))
-    chunk("IDAT", zlibDeflate(raw, deflateMode))
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
-  /** Grayscale convenience wrapper (the r13 surface, unchanged). */
-  def encodeGrayPng(pix: Array[Byte], w: Int, h: Int,
-      filterOffset: Int = 0, deflateMode: Int = 0): Array[Byte] =
-    encodePng(pix, w, h, 1, filterOffset, deflateMode)
-
-  /** Decode an 8-bit PNG from the BYTES ALONE — grayscale (color type
-    * 0) or truecolor (color type 2): signature sniff, chunk walk with
-    * per-chunk CRC-32 verification (ancillary chunks skipped, multiple
-    * IDATs concatenated per spec, IHDR-before-IDAT ordering enforced),
-    * zlib inflate to exactly h·(stride+1) bytes, then per-scanline
-    * bpp-parametric filter REVERSAL for all five filter types. Returns
-    * (w, h, bpp, samples row-major — 1 byte per pixel for grayscale,
-    * RGB triplets for truecolor).
-    */
-  def decodePng(b: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    require(b.length >= 8 && b.take(8).sameElements(pngSig),
-      "png: bad signature")
-    var p = 8
-    var w = 0; var h = 0; var bpp = 0
-    var ihdrSeen = false
-    val idat = new java.io.ByteArrayOutputStream()
-    var done = false
-    while (!done) {
-      require(b.length >= p + 12, "png: truncated chunk header")
-      val len = rbe32(b, p).toInt
-      require(b.length >= p + 12 + len, "png: truncated chunk body")
-      val typ = new String(b, p + 4, 4, ascii)
-      val crc = new java.util.zip.CRC32
-      crc.update(b, p + 4, 4 + len)
-      require(rbe32(b, p + 8 + len) == crc.getValue,
-        s"png: CRC-32 mismatch in $typ chunk")
-      typ match {
-        case "IHDR" =>
-          w = rbe32(b, p + 8).toInt; h = rbe32(b, p + 12).toInt
-          require(w > 0 && h > 0, s"png: non-positive dimensions ${w}x$h")
-          require(b(p + 16) == 8,
-            "png: decoder handles 8-bit samples only")
-          bpp = b(p + 17) match {
-            case 0 => 1
-            case 2 => 3
-            case other => throw new IllegalArgumentException(
-              s"png: unsupported color type $other (grayscale/truecolor only)")
-          }
-          ihdrSeen = true
-        case "IDAT" =>
-          require(ihdrSeen, "png: IDAT before IHDR")
-          idat.write(b, p + 8, len)
-        case "IEND" => done = true
-        case _ => () // ancillary chunk: CRC-checked above, content skipped
-      }
-      p += 12 + len
-    }
-    require(ihdrSeen, "png: missing IHDR chunk")
-    val stride = w * bpp
-    val rawLen = h.toLong * (w.toLong * bpp + 1)
-    // Deflate expands at most 1032:1, so a larger claim is corrupt and is
-    // rejected before the output buffer is allocated.
-    require(rawLen < Int.MaxValue && rawLen <= 1032L * idat.size + 64,
-      s"png: ${w}x$h scanlines cannot fit in a ${idat.size}-byte IDAT")
-    val raw = zlibInflate(idat.toByteArray, rawLen.toInt)
-    val pix = new Array[Byte](stride * h)
-    var y = 0
-    while (y < h) {
-      val f = raw(y * (stride + 1)) & 0xFF
-      var x = 0
-      while (x < stride) {
-        val enc = raw(y * (stride + 1) + 1 + x) & 0xFF
-        val a = if (x >= bpp) pix(y * stride + x - bpp) & 0xFF else 0
-        val up = if (y > 0) pix((y - 1) * stride + x) & 0xFF else 0
-        val c = if (x >= bpp && y > 0)
-          pix((y - 1) * stride + x - bpp) & 0xFF else 0
-        pix(y * stride + x) = ((enc + predict(f, a, up, c)) & 0xFF).toByte
-        x += 1
-      }
-      y += 1
-    }
-    (w, h, bpp, pix)
-  }
-
-  /** Grayscale convenience wrapper (the r13 surface, unchanged):
-    * rejects a truecolor container rather than silently reinterpreting
-    * its triplets.
-    */
-  def decodeGrayPng(b: Array[Byte]): (Int, Int, Array[Byte]) = {
-    val (w, h, bpp, pix) = decodePng(b)
-    require(bpp == 1, "png: expected grayscale, got truecolor")
-    (w, h, pix)
   }
 
   /** Length-prefixed concatenated-PNG CLIP container (round 14,
@@ -497,7 +368,7 @@ object Multimodal {
     spread(base.unionByName(planted))
       .as[(Long, String, Boolean)]
       .mapPartitions { rows =>
-        // per-partition init of a hardware codec context would go here
+        val codec = new PngCodec
         rows.map { case (id, text, perturb) =>
           val data =
             text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -511,8 +382,8 @@ object Multimodal {
               else ((pix0(k) + 1) & 0xFF).toByte
             }
           }
-          val (dw, dh, pix) = decodeGrayPng(encodeGrayPng(img, w, h,
-            deflateMode = (id % 3).toInt))
+          val (dw, dh, pix) =
+            codec.decode(codec.encode(img, w, h, 1, (id % 3).toInt), 1)
           val smp = Array.tabulate(64)(c =>
             pix((c / 8 * dh / 8) * dw + (c % 8) * dw / 8) & 0xFF)
           val total = smp.sum
@@ -563,28 +434,26 @@ object Multimodal {
     "mm_decode_rgb" -> { (s, d) =>
       // TRUECOLOR decode (round 14, VERDICT r13 item 3): each doc's
       // bytes tile an RGB image (sample k = data(k % n), row-major
-      // triplets), encoded as a color-type-2 PNG — the bpp=3 filter
-      // walk with the left neighbor at byte offset 3 — in the doc's
-      // deflate mode, DECODED back from the bytes alone, then reduced
-      // per pixel to the integer BT.601 luminance (77R + 150G + 29B)
-      // >> 8 (no float weights) feeding the same 8-bin histogram
-      // shape as mm_feature_extract. The oracle predicts every channel
-      // sample from the construction; a bpp offset slip (grayscale's
-      // x−1 left neighbor instead of x−3) corrupts every Sub/Average/
-      // Paeth row's triplets and with them the hash gate.
+      // triplets), encoded as a color-type-2 PNG in the doc's deflate
+      // mode, DECODED back from the bytes alone, then reduced per
+      // pixel to the integer BT.601 luminance (77R + 150G + 29B) >> 8
+      // (no float weights) feeding the same 8-bin histogram shape as
+      // mm_feature_extract. The oracle predicts every channel sample
+      // from the construction; a channel-order or triplet-offset slip
+      // in the codec round trip breaks the hash gate.
       val sp = s
       import sp.implicits._
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val (w, h) = pixDims(data.length)
-            val png = encodePng(tilePixels(data, 3 * w, h), w, h, 3,
-              deflateMode = (id % 3).toInt)
-            val (dw, dh, bpp, pix) = decodePng(png)
+            val png =
+              codec.encode(tilePixels(data, 3 * w, h), w, h, 3, (id % 3).toInt)
+            val (dw, dh, pix) = codec.decode(png, 3)
             val hist = new Array[Long](8)
             var lumSum = 0L
             var k = 0
@@ -596,7 +465,7 @@ object Multimodal {
               lumSum += lum
               k += 1
             }
-            (id, dw, dh, bpp, lumSum, hist.mkString(","))
+            (id, dw, dh, 3, lumSum, hist.mkString(","))
           }
         }
         .toDF("doc_id", "width", "height", "channels", "lum_sum",
@@ -606,11 +475,11 @@ object Multimodal {
 
     "mm_resize" -> { (s, d) =>
       // REAL pixel resize (round 13). Each doc's text bytes become a
-      // w×h grayscale image (tilePixels), written as a spec-conformant
-      // PNG (all-five-filter scanlines + zlib IDAT in the doc's mode),
-      // then DECODED back from the bytes alone and nearest-neighbor
-      // resampled to a fixed 4×4 thumbnail — the fixed-size-output-
-      // per-variable-size-blob batch shape image loaders need. The
+      // w×h grayscale image (tilePixels), written as a PNG in the doc's
+      // deflate mode, then DECODED back from the bytes alone and
+      // nearest-neighbor resampled to a fixed 4×4 thumbnail — the
+      // fixed-size-output-per-variable-size-blob batch shape image
+      // loaders need. The
       // oracle predicts the thumbnail from the construction, so a slip
       // anywhere in the codec roundtrip or the resample's floor-index
       // arithmetic (x = i·w/4, y = j·h/4) breaks the hash gate.
@@ -619,14 +488,14 @@ object Multimodal {
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val (w, h) = pixDims(data.length)
-            val png = encodeGrayPng(tilePixels(data, w, h), w, h,
-              deflateMode = (id % 3).toInt)
-            val (dw, dh, pix) = decodeGrayPng(png)
+            val png =
+              codec.encode(tilePixels(data, w, h), w, h, 1, (id % 3).toInt)
+            val (dw, dh, pix) = codec.decode(png, 1)
             val thumb = Array.tabulate(16) { k =>
               val j = k / 4; val i = k % 4
               pix((j * dh / 4) * dw + (i * dw / 4)) & 0xFF
@@ -657,14 +526,13 @@ object Multimodal {
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val (w, h) = pixDims(data.length)
-            val (dw, dh, pix) =
-              decodeGrayPng(encodeGrayPng(tilePixels(data, w, h), w, h,
-                deflateMode = (id % 3).toInt))
+            val (dw, dh, pix) = codec.decode(
+              codec.encode(tilePixels(data, w, h), w, h, 1, (id % 3).toInt), 1)
             @inline def p(x: Int, y: Int): Long = pix(y * dw + x) & 0xFF
             val thumb = Array.tabulate(16) { k =>
               val sx = (2 * (k % 4) + 1) * dw * 32 - 128
@@ -698,14 +566,14 @@ object Multimodal {
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val (w, h) = pixDims(data.length)
-            val png = encodeGrayPng(tilePixels(data, w, h), w, h,
-              deflateMode = (id % 3).toInt)
-            val (dw, dh, pix) = decodeGrayPng(png)
+            val png =
+              codec.encode(tilePixels(data, w, h), w, h, 1, (id % 3).toInt)
+            val (dw, dh, pix) = codec.decode(png, 1)
             val hist = new Array[Long](8)
             pix.foreach(p => hist((p & 0xFF) / 32) += 1)
             // ','-joined string, not a raw array: comparator-safe output.
@@ -731,26 +599,29 @@ object Multimodal {
       import sp.implicits._
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          val data =
-            text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val n = data.length
-          val (w, h) = pixDims(n)
-          val clip = wrapClip((0 until clipFrameCount(n)).map { f =>
-            encodePng(Array.tabulate(w * h)(k => data((k + f) % n)),
-              w, h, 1, deflateMode = ((id + f) % 3).toInt)
-          })
-          clipFrames(clip).zipWithIndex.collect {
-            case (png, f) if f % 2 == 0 =>
-              val (dw, dh, pix) = decodeGrayPng(png)
-              var sum = 0L; var mx = 0
-              var k = 0
-              while (k < dw * dh) {
-                val p = pix(k) & 0xFF
-                sum += p; if (p > mx) mx = p
-                k += 1
-              }
-              (id, f, dw * dh, sum, mx)
+        .mapPartitions { rows =>
+          val codec = new PngCodec
+          rows.flatMap { case (id, text) =>
+            val data =
+              text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            val n = data.length
+            val (w, h) = pixDims(n)
+            val clip = wrapClip((0 until clipFrameCount(n)).map { f =>
+              codec.encode(Array.tabulate(w * h)(k => data((k + f) % n)),
+                w, h, 1, ((id + f) % 3).toInt)
+            })
+            clipFrames(clip).zipWithIndex.collect {
+              case (png, f) if f % 2 == 0 =>
+                val (dw, dh, pix) = codec.decode(png, 1)
+                var sum = 0L; var mx = 0
+                var k = 0
+                while (k < dw * dh) {
+                  val p = pix(k) & 0xFF
+                  sum += p; if (p > mx) mx = p
+                  k += 1
+                }
+                (id, f, dw * dh, sum, mx)
+            }
           }
         }
         .toDF("doc_id", "frame_idx", "frame_px", "frame_sum", "frame_max")
@@ -815,8 +686,8 @@ object Multimodal {
       // the perceptual-collision property aHash exists to provide.
       // The oracle predicts both branches' hashes from the UNPERTURBED
       // sample values; a Spark-side slip that touches a sample point
-      // (wrong sample grid, filter-reversal bug on the perturbed
-      // image) breaks the hash gate.
+      // (wrong sample grid, a codec slip on the perturbed image)
+      // breaks the hash gate.
       val hashed = aHashWithPlants(s, d, "mm_phash_dedup")
       val bandArr = array((0 until 4).map(k =>
         shiftright(col("phash"), k * 15).bitwiseAND(lit(32767L))): _*)
@@ -911,16 +782,16 @@ object Multimodal {
         .select(col("doc_id"), col("source"), col("text")))
         .as[(Long, String, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, source, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val n = data.length
             if (id % 2 == 0) {
               val (w, h) = pixDims(n)
-              val png = encodeGrayPng(tilePixels(data, w, h), w, h,
-                deflateMode = (id % 3).toInt)
-              val (dw, dh, pix) = decodeGrayPng(png)
+              val png =
+                codec.encode(tilePixels(data, w, h), w, h, 1, (id % 3).toInt)
+              val (dw, dh, pix) = codec.decode(png, 1)
               var cuts = 0L
               var y = 1
               while (y < dh) {
@@ -982,7 +853,7 @@ object Multimodal {
       spread(documents(s, d)
         .select(col("doc_id"), col("text"))).as[(Long, String)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -995,9 +866,9 @@ object Multimodal {
                 val v = data((k + f) % n) & 0xFF
                 (if (f >= cut) 255 - v else v).toByte
               }
-              encodePng(img, w, h, 1, deflateMode = ((id + f) % 3).toInt)
+              codec.encode(img, w, h, 1, ((id + f) % 3).toInt)
             })
-            val frames = clipFrames(clip).map(decodeGrayPng)
+            val frames = clipFrames(clip).map(codec.decode(_, 1))
             var cuts = 0L; var maxSad = 0L
             var f = 1
             while (f < nf) {
@@ -1023,11 +894,11 @@ object Multimodal {
       // Decode-NORMALIZED exact dedup (round 13): the same image
       // stored twice under different encoder choices has different
       // container BYTES — a byte digest (mm_exact_dedup's shape)
-      // misses it. Planted copies re-encode the SAME pixels under a
-      // SHIFTED filter schedule ((y+1) % 5 instead of y % 5): the PNGs
-      // differ byte-for-byte (MultimodalSpec asserts it), but decoding
-      // normalizes them — the digest-of-DECODED-PIXELS groupBy
-      // recovers every planted pair. Scale shape: decode is the
+      // misses it. Planted copies re-encode the SAME pixels in another
+      // deflate mode: the PNGs differ byte-for-byte (MultimodalSpec
+      // asserts it), but decoding normalizes them — the
+      // digest-of-DECODED-PIXELS groupBy recovers every planted pair.
+      // Scale shape: decode is the
       // map-only batch pass, then ONE fingerprint-sized shuffle on the
       // 16-byte digest (dedup_exact's shape). The oracle predicts each
       // digest from the construction: the pixel bytes are the text
@@ -1048,18 +919,16 @@ object Multimodal {
       spread(base.unionByName(planted))
         .as[(Long, String, Boolean)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text, reenc) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val (w, h) = pixDims(data.length)
-            // Re-encodes diverge from the original on BOTH axes a real
-            // re-compressor moves: the filter schedule AND the deflate
-            // mode — decode still normalizes them to one digest.
-            val png = encodeGrayPng(tilePixels(data, w, h), w, h,
-              filterOffset = if (reenc) 1 else 0,
-              deflateMode = (if (reenc) (id + 1) % 3 else id % 3).toInt)
-            val (_, _, pix) = decodeGrayPng(png)
+            // A re-encode moves to another deflate mode, so its bytes
+            // differ; decode still normalizes both to one digest.
+            val png = codec.encode(tilePixels(data, w, h), w, h, 1,
+              (if (reenc) (id + 1) % 3 else id % 3).toInt)
+            val (_, _, pix) = codec.decode(png, 1)
             (id, pix)
           }
         }
@@ -1149,7 +1018,7 @@ object Multimodal {
       val hashed = spread(base.unionByName(planted))
         .as[(Long, String, Boolean)]
         .mapPartitions { rows =>
-          // per-partition init of a hardware codec context would go here
+          val codec = new PngCodec
           rows.map { case (id, text, perturb) =>
             val data =
               text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -1163,8 +1032,8 @@ object Multimodal {
                 else ((pix0(k) + 1) & 0xFF).toByte
               }
             }
-            val (dw, dh, pix) = decodeGrayPng(encodeGrayPng(img, w, h,
-              deflateMode = (id % 3).toInt))
+            val (dw, dh, pix) =
+              codec.decode(codec.encode(img, w, h, 1, (id % 3).toInt), 1)
             val smp = Array.tabulate(64)(c =>
               (pix((c / 8 * dh / 8) * dw + (c % 8) * dw / 8) & 0xFF).toLong)
             // C = B · P · Bᵀ in two exact integer matmuls.
@@ -1390,8 +1259,8 @@ object Multimodal {
     // The pixel construction (tilePixels): pixel k row-major =
     // ord(text[(k % n) + 1]) — ASCII ⇒ char == byte. The oracle
     // PREDICTS each op from that construction; the Spark side must
-    // RECOVER it through the PNG encode→decode roundtrip (five-filter
-    // scanlines, zlib in the doc's mode, CRC/Adler verification).
+    // RECOVER it through the PNG encode→decode roundtrip (ImageIO, zlib
+    // in the doc's deflate mode).
     // Thumbnail sample (i, j): pixel at x = i·w/4, y = j·h/4.
     "mm_resize" ->
       """WITH t AS (

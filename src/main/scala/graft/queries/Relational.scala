@@ -83,11 +83,11 @@ object Relational {
     */
   private val typeGlobRegex = Glob.toRegex("{STANDARD,SMALL}*")
 
-  /** One-time scratch layouts (year-partitioned orders, the two
-    * clustered lineitems). Written once per (app, tier): the _SUCCESS
-    * marker skips redundant rewrites across queries and bench repeats —
-    * each layout is a pure function of the tier, and the app-unique
-    * scratch path can't be a stale leftover. The single lock
+  /** One-time scratch layouts (partitioned, clustered and deliberately
+    * damaged copies of a tier's tables). Written once per (app, tier):
+    * the _SUCCESS marker skips redundant rewrites across queries and
+    * bench repeats — each layout is a pure function of the tier, and
+    * the app-unique scratch path can't be a stale leftover. The single lock
     * serializes the check-then-write so a harness running two layout
     * consumers concurrently in one JVM (same appId → same scratch
     * path) can't race.
@@ -261,18 +261,12 @@ object Relational {
       // first bad footer can't finish a day; ignoreCorruptFiles degrades
       // the bad split to a logged skip. Witnessed for real: a valid
       // nation copy plus a planted garbage .parquet in one directory —
-      // the read must return exactly the valid rows. (Same one-time
-      // layout idiom as partitionedOrders; the lock keeps the
-      // check-then-write race-free within the JVM.)
-      val tmp = layoutLock.synchronized {
-        val t = scratch(s, "corrupt_scan", d)
-        if (!new java.io.File(t, "_SUCCESS").exists()) {
-          nation(s, d).coalesce(1).write.mode("overwrite").parquet(t)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(t, "part-torn.snappy.parquet"),
-            "these bytes are not a parquet footer".getBytes("UTF-8"))
-        }
-        t
+      // the read must return exactly the valid rows.
+      val tmp = oneTimeLayout(s, "corrupt_scan", d) { t =>
+        nation(s, d).coalesce(1).write.mode("overwrite").parquet(t)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(t, "part-torn.snappy.parquet"),
+          "these bytes are not a parquet footer".getBytes("UTF-8"))
       }
       s.read.option("ignoreCorruptFiles", "true").parquet(tmp)
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -286,19 +280,15 @@ object Relational {
       // land whole in the corrupt-record column for quarantine instead
       // of killing the job. Bad rows group under key -1; the oracle
       // reconstructs both populations from the source table.
-      val tmp = layoutLock.synchronized {
-        val t = scratch(s, "malformed_rows", d)
-        if (!new java.io.File(t, "_SUCCESS").exists()) {
-          val n = nation(s, d)
-          n.filter(col("n_nationkey") % 5 =!= 0)
-            .select(to_json(struct(col("n_nationkey"), col("n_name"),
-              col("n_regionkey"))).as("value"))
-            .unionByName(n.filter(col("n_nationkey") % 5 === 0)
-              .select(concat(lit("{torn json line "),
-                col("n_nationkey").cast(StringType)).as("value")))
-            .coalesce(1).write.mode("overwrite").text(t)
-        }
-        t
+      val tmp = oneTimeLayout(s, "malformed_rows", d) { t =>
+        val n = nation(s, d)
+        n.filter(col("n_nationkey") % 5 =!= 0)
+          .select(to_json(struct(col("n_nationkey"), col("n_name"),
+            col("n_regionkey"))).as("value"))
+          .unionByName(n.filter(col("n_nationkey") % 5 === 0)
+            .select(concat(lit("{torn json line "),
+              col("n_nationkey").cast(StringType)).as("value")))
+          .coalesce(1).write.mode("overwrite").text(t)
       }
       val schema = StructType(Seq(
         StructField("n_nationkey", LongType),

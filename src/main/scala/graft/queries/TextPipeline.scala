@@ -242,19 +242,28 @@ object TextPipeline {
     (merges.toSeq, exp.toMap)
   }
 
+  /** The most merges any key reads: bpe_train_loop emits 12. */
+  private val bpeMaxMerges = 12
+
   /** Once-per-dataset memo over bpeTrainMerges — the merge list IS the
     * tokenizer artifact (the BPE-family instance of the r11/r12
     * trained-artifact pattern: trained once, shipped, consumed by every
-    * encode). bpe_encode and text_tokenizer_fertility share the same
-    * 6-merge vocabulary by construction; the memo makes that sharing
-    * literal — one training loop per dataset instead of one per
-    * consumer. Keyed on the documents parquet fingerprint + k.
+    * encode). The loop is greedy and deterministic, so the first k of
+    * the `bpeMaxMerges` trained merges are exactly the k-merge list: a
+    * consumer of k merges takes those and only their expansions, and
+    * one training loop per dataset serves every k. Keyed on the
+    * documents parquet fingerprint.
     */
   private def bpeTrainMergesMemo(s: SparkSession, d: String,
       all: DataFrame, k: Int)
-      : (Seq[(String, String, Long)], Map[String, String]) =
-    graft.ArtifactMemo.once(artifactKey(d, "documents") + s"#merges$k")(
-      bpeTrainMerges(all, k))
+      : (Seq[(String, String, Long)], Map[String, String]) = {
+    require(k <= bpeMaxMerges, s"bpe: $k merges asked, $bpeMaxMerges trained")
+    val (merges, exp) =
+      graft.ArtifactMemo.once(artifactKey(d, "documents") + "#merges")(
+        bpeTrainMerges(all, bpeMaxMerges))
+    val first = merges.take(k)
+    (first, first.map { case (_, ph, _) => ph -> exp(ph) }.toMap)
+  }
 
   /** The corpus collapsed to its (distinct lowercase [a-z]+ word w,
     * count c) table, the BPE family's training input.
@@ -772,7 +781,8 @@ object TextPipeline {
       // dataset (bpeTrainMergesMemo), emitted with each merge's text
       // expansion and weighted count.
       import s.implicits._
-      val (merges, exp) = bpeTrainMergesMemo(s, d, wordCounts(s, d), 12)
+      val (merges, exp) =
+        bpeTrainMergesMemo(s, d, wordCounts(s, d), bpeMaxMerges)
       merges.zipWithIndex.map { case ((_, ph, n), i) => (i + 1, exp(ph), n) }
         .toDF("rank", "merge", "n").orderBy("rank")
     },
@@ -853,8 +863,8 @@ object TextPipeline {
     "bpe_tokenize_corpus" -> { (s, d) =>
       // The production OUTPUT of the tokenizer story (round 12):
       // actually TOKENIZE the corpus under the trained vocabulary —
-      // train (bpe_train_loop), share the vocabulary (the 6-merge
-      // artifact memo), evaluate (text_tokenizer_fertility), and now
+      // train (bpe_train_loop), share the vocabulary (6 merges of the
+      // one artifact memo), evaluate (text_tokenizer_fertility), and now
       // EMIT per-document token counts, the table a training-data
       // pipeline materializes at 100 TB before sequence packing
       // (pack_sequences' input in a real run). Embarrassingly

@@ -3,95 +3,96 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Multimodal._
 
-/** Unit gates for the pixel codec (SURVEY.md §2i multimodal): the zlib
-  * modes over java.util.zip, the full five-filter PNG encode→decode
-  * roundtrip, and loud rejection of corrupted streams. These run
-  * WITHOUT Spark, so a framing slip fails in milliseconds, not via the
-  * oracle gate.
+/** Unit gates for the pixel codec (SURVEY.md §2i multimodal): the
+  * javax.imageio PNG round trip over every pixel-op image size in all
+  * three deflate modes, decode of frozen five-filter PNGs, loud
+  * rejection of corrupted input, and no temp files. These run WITHOUT
+  * Spark, so a codec slip fails in milliseconds, not via the oracle
+  * gate.
   */
 class MultimodalSpec extends AnyFunSuite {
 
   private def pix(n: Int): Array[Byte] =
     Array.tabulate(n)(i => ((i * 31 + 7) % 256).toByte)
 
-  test("zlib stored roundtrip, including the multi-block path past 65535 bytes") {
-    for (n <- Seq(0, 1, 2, 3, 17, 100, 5000, 65534, 65535, 65536, 70000, 200000)) {
-      val raw = pix(n)
-      val z = zlibDeflate(raw, 0)
-      assert((z(0) & 0x0F) == 8 && ((z(0) & 0xFF) * 256 + (z(1) & 0xFF)) % 31 == 0,
-        s"bad zlib header for n=$n")
-      assert((z(2) >> 1 & 3) == 0, s"mode 0 must emit stored blocks at n=$n")
-      assert(zlibInflate(z, n).sameElements(raw), s"roundtrip broke at n=$n")
-    }
-  }
+  private def unhex(h: String): Array[Byte] =
+    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  test("zlib inflate rejects LEN/NLEN and Adler-32 corruption loudly") {
-    val z = zlibDeflate(pix(100), 0)
-    val nlenBad = z.clone(); nlenBad(5) = (nlenBad(5) ^ 0x01).toByte
-    val e1 = intercept[IllegalArgumentException](zlibInflate(nlenBad, 100))
-    assert(e1.getMessage.startsWith("zlib:"), e1.getMessage)
-    assert(e1.getMessage.contains("stored block lengths"), e1.getMessage)
-    val adlerBad = z.clone(); adlerBad(z.length - 1) = (adlerBad(z.length - 1) ^ 0x01).toByte
-    val e2 = intercept[IllegalArgumentException](zlibInflate(adlerBad, 100))
-    assert(e2.getMessage.contains("data check"), e2.getMessage)
-  }
+  private val codec = new PngCodec
 
-  test("inflate and PNG decode reject wrong or oversized lengths and a preset dictionary") {
-    val z = zlibDeflate(pix(100), 1)
-    val e1 = intercept[IllegalArgumentException](zlibInflate(z, 99))
-    assert(e1.getMessage.contains("exceeds 99"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](zlibInflate(z, 101))
-    assert(e2.getMessage.contains("expected 101"), e2.getMessage)
-    val d = new java.util.zip.Deflater()
-    val withDict = try {
-      d.setDictionary(pix(32)); d.setInput(pix(100)); d.finish()
-      val buf = new Array[Byte](512)
-      java.util.Arrays.copyOf(buf, d.deflate(buf))
-    } finally d.end()
-    val e3 = intercept[IllegalArgumentException](zlibInflate(withDict, 100))
-    assert(e3.getMessage.contains("preset dictionary"), e3.getMessage)
+  // Frozen output of the hand-written encoder this codec replaced, in
+  // deflate mode 1 with scanline filter y % 5, so every row type
+  // None/Sub/Up/Average/Paeth reaches the decoder: pix(120) as 12x10
+  // grayscale, pix(192) as 8x8 RGB (the bpp = 3 left-neighbor offset).
+  private val goldenGray = unhex(
+    "89504e470d0a1a0a0000000d494844520000000c0000000a0800000000a547e0" +
+    "260000004d494441547801636057734d695e74f0c17f39db18c66a7904602a41" +
+    "02cc6fbcc0e0d42920c5520256052119bcb33a571c7fc6aae29cd4b880713f42" +
+    "bf3caa017d408da7c0da21064074039503008739283fca5c4e8e000000004945" +
+    "4e44ae426082")
+  private val goldenRgb = unhex(
+    "89504e470d0a1a0a0000000d49484452000000080000000808020000004b6d29" +
+    "dc00000066494441547801636057734d695e74f0c17f39db98ea593b6f7c1733" +
+    "0d299eb4f102e37b3edd586c80e9050ec01c92fc79f1e2c5ca4000a490681654" +
+    "0db1506eec0b86fe7567df706b7966b42f3bfa8459c931a17edede3bbfa52c23" +
+    "18cba76dc566772c4ecb01000c7457a0b9ca1b0000000049454e44ae426082")
+
+  test("PNG decode refuses an IHDR too large for its data") {
     // An IHDR (with a valid CRC) claiming 30000x30000 is refused before
-    // a 900 MB scanline buffer is allocated.
-    val big = encodeGrayPng(pix(64), 8, 8).clone()
+    // ImageIO allocates a 900 MB image.
+    val big = codec.encode(pix(64), 8, 8, 1, 0).clone()
     for (o <- Seq(16, 20)) {
       big(o + 2) = (30000 >> 8).toByte; big(o + 3) = (30000 & 0xFF).toByte
     }
     val crc = new java.util.zip.CRC32
     crc.update(big, 12, 17)
     for (k <- 0 until 4) big(29 + k) = (crc.getValue >>> (24 - 8 * k)).toByte
-    val e4 = intercept[IllegalArgumentException](decodeGrayPng(big))
-    assert(e4.getMessage.contains("cannot fit"), e4.getMessage)
+    val e = intercept[IllegalArgumentException](codec.decode(big, 1))
+    assert(e.getMessage.contains("cannot fit"), e.getMessage)
   }
 
   test("PNG grayscale roundtrip exercises all five filters and every small dim") {
-    // h >= 5 cycles every filter type (y % 5); sweep the pixDims range.
-    for (w <- 8 to 16; h <- 8 to 14) {
+    for (w <- 8 to 16; h <- 8 to 14; mode <- 0 to 2) {
       val img = pix(w * h)
-      val (dw, dh, out) = decodeGrayPng(encodeGrayPng(img, w, h))
-      assert(dw == w && dh == h, s"dims drifted at ${w}x$h")
-      assert(out.sameElements(img), s"pixels drifted at ${w}x$h")
+      val (dw, dh, out) = codec.decode(codec.encode(img, w, h, 1, mode), 1)
+      assert(dw == w && dh == h, s"dims drifted at ${w}x$h mode $mode")
+      assert(out.sameElements(img), s"pixels drifted at ${w}x$h mode $mode")
+    }
+    val (gw, gh, gout) = codec.decode(goldenGray, 1)
+    assert(gw == 12 && gh == 10 && gout.sameElements(pix(120)),
+      "five-filter grayscale PNG decoded to other pixels")
+  }
+
+  test("decode rejects a corrupted or truncated IDAT in every mode") {
+    // A compressible image, so modes 1 and 2 emit real Huffman blocks.
+    val img = Array.tabulate(16 * 14)(i => (i % 7 * 20).toByte)
+    for (mode <- 0 to 2) {
+      val png = codec.encode(img, 16, 14, 1, mode)
+      assert(new String(png, 37, 4, "US-ASCII") == "IDAT")
+      val len = java.nio.ByteBuffer.wrap(png, 33, 4).getInt
+      // A flip in the deflate data and one in the Adler-32 trailer; the
+      // chunk CRC is left stale, which ImageIO does not check.
+      for (o <- Seq(41 + len / 2, 41 + len - 2)) {
+        val bad = png.clone(); bad(o) = (bad(o) ^ 0x10).toByte
+        val e = intercept[IllegalArgumentException](codec.decode(bad, 1))
+        assert(e.getMessage.startsWith("png:"), s"mode $mode: ${e.getMessage}")
+      }
+      val e = intercept[IllegalArgumentException](
+        codec.decode(png.take(41 + len / 2), 1))
+      assert(e.getMessage.startsWith("png:"), s"mode $mode: ${e.getMessage}")
     }
   }
 
-  test("PNG decode rejects chunk-CRC corruption loudly") {
-    val png = encodeGrayPng(pix(64), 8, 8)
-    // Flip a byte inside the IDAT body (well past the 33-byte IHDR span).
-    val bad = png.clone(); bad(45) = (bad(45) ^ 0x10).toByte
-    val e = intercept[IllegalArgumentException](decodeGrayPng(bad))
-    assert(e.getMessage.contains("CRC-32"))
-  }
-
-  test("a shifted filter schedule changes the bytes but not the decoded pixels") {
-    // The mm_dedup_pixels_exact premise: re-encoding the same image
-    // under a different (still spec-conformant) filter choice yields a
-    // byte-DIFFERENT container that decodes to the IDENTICAL image.
+  test("a different deflate mode changes the bytes but not the pixels") {
+    // The mm_dedup_pixels_exact premise: re-encoding the same image in
+    // another deflate mode yields a byte-DIFFERENT container that
+    // decodes to the IDENTICAL image.
     val img = pix(12 * 10)
-    val a = encodeGrayPng(img, 12, 10)
-    val b = encodeGrayPng(img, 12, 10, filterOffset = 1)
-    assert(!a.sameElements(b), "filter shift must change container bytes")
-    assert(decodeGrayPng(a)._3.sameElements(img))
-    assert(decodeGrayPng(b)._3.sameElements(img),
-      "shifted-schedule PNG must decode to the same pixels")
+    val pngs = (0 to 2).map(codec.encode(img, 12, 10, 1, _))
+    for (a <- 0 to 2; b <- a + 1 to 2)
+      assert(!pngs(a).sameElements(pngs(b)),
+        s"modes $a and $b must give different container bytes")
+    for (png <- pngs) assert(codec.decode(png, 1)._3.sameElements(img))
   }
 
   test("parseWavSamples: LE sign extension, odd tail drop, framing checks") {
@@ -106,107 +107,32 @@ class MultimodalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("WAV"), s"unexpected: ${e.getMessage}")
   }
 
-  // ---- Compressed modes. Corpus shapes force both the literal path
-  // and the LZ77 window-copy path (including overlapping copies with
-  // dist < len).
-
-  private def repetitive(n: Int): Array[Byte] =
-    Array.tabulate(n)(i => ("graft".charAt(i % 5)).toByte)
-
-  for ((mode, name) <- Seq(1 -> "BEST_SPEED", 2 -> "BEST_COMPRESSION"))
-    test(s"mode-$mode ($name) deflate roundtrips through the inflate") {
-      for (n <- Seq(0, 1, 2, 3, 100, 5000, 70000)) {
-        for (raw <- Seq(pix(n), repetitive(n))) {
-          val z = zlibDeflate(raw, mode)
-          assert(((z(0) & 0xFF) * 256 + (z(1) & 0xFF)) % 31 == 0)
-          assert(zlibInflate(z, n).sameElements(raw),
-            s"mode-$mode roundtrip broke at n=$n")
-        }
-      }
-    }
-
-  test("overlapping LZ77 copy (dist < len) decodes correctly in both modes") {
-    // 3-byte period over 600 bytes: dist=3 matches far longer than 3,
-    // so the decoder must copy byte-by-byte. The size bound also shows
-    // that modes 1 and 2 really compress.
-    val raw = Array.tabulate(600)(i => "abc".charAt(i % 3).toByte)
-    for (mode <- Seq(1, 2)) {
-      val z = zlibDeflate(raw, mode)
-      assert(z.length < raw.length / 4,
-        s"mode $mode should compress a period-3 stream hard (${z.length})")
-      assert(zlibInflate(z, raw.length).sameElements(raw))
-    }
-  }
-
-  test("full inflate also accepts the stored subset and mixed corpora agree") {
-    for (n <- Seq(0, 1, 100, 70000)) {
-      val raw = pix(n)
-      // All three modes carry the same payload.
-      for (mode <- 0 to 2)
-        assert(zlibInflate(zlibDeflate(raw, mode), n).sameElements(raw),
-          s"mode $mode broke at n=$n")
-    }
-  }
-
-  test("full inflate rejects corruption loudly: trailer, truncation, reserved btype") {
-    val raw = pix(500)
-    for (mode <- Seq(1, 2)) {
-      val z = zlibDeflate(raw, mode)
-      val adlerBad = z.clone()
-      adlerBad(z.length - 1) = (adlerBad(z.length - 1) ^ 0x01).toByte
-      val e1 = intercept[IllegalArgumentException](zlibInflate(adlerBad, 500))
-      assert(e1.getMessage.contains("data check"), s"mode $mode: ${e1.getMessage}")
-      val trunc = z.take(z.length / 2)
-      val e2 = intercept[IllegalArgumentException](zlibInflate(trunc, 500))
-      assert(e2.getMessage.contains("truncated"), s"mode $mode: ${e2.getMessage}")
-    }
-    // Reserved btype=11: header bits BFINAL=1, BTYPE=3 -> byte 0b00000111.
-    val res = Array[Byte](0x78, 0x01, 0x07, 0, 0, 0, 0, 1)
-    val e3 = intercept[IllegalArgumentException](zlibInflate(res, 0))
-    assert(e3.getMessage.contains("invalid block type"), e3.getMessage)
-  }
-
-  test("full inflate rejects an over-subscribed dynamic Huffman header") {
-    // Hand-packed dynamic block: HLIT=257, HDIST=1, HCLEN=4, and all
-    // four transmitted code-length-code lengths (syms 16,17,18,0) set
-    // to 1 -> four 1-bit codes is over-subscribed (max two).
-    val bits = new scala.collection.mutable.ArrayBuffer[Int]
-    def put(v: Int, n: Int): Unit = (0 until n).foreach(i => bits += ((v >>> i) & 1))
-    put(1, 1); put(2, 2) // BFINAL, BTYPE=dynamic
-    put(0, 5); put(0, 5); put(0, 4) // HLIT-257, HDIST-1, HCLEN-4
-    (0 until 4).foreach(_ => put(1, 3))
-    val body = bits.grouped(8).map(g =>
-      g.zipWithIndex.map { case (b, i) => b << i }.sum.toByte).toArray
-    val stream = Array[Byte](0x78, 0x01) ++ body ++ Array[Byte](0, 0, 0, 1)
-    val e = intercept[IllegalArgumentException](zlibInflate(stream, 0))
-    assert(e.getMessage.contains("invalid code lengths set"), e.getMessage)
-  }
-
   test("PNG roundtrip holds under the compressed IDAT modes") {
     for (w <- Seq(8, 11, 16); h <- Seq(8, 10, 14); mode <- Seq(1, 2)) {
       val img = pix(w * h)
-      val png = encodeGrayPng(img, w, h, deflateMode = mode)
-      val (dw, dh, out) = decodeGrayPng(png)
+      val png = codec.encode(img, w, h, 1, mode)
+      val (dw, dh, out) = codec.decode(png, 1)
       assert(dw == w && dh == h && out.sameElements(img),
         s"mode-$mode PNG roundtrip broke at ${w}x$h")
       // And the compressed container is byte-different from stored mode.
-      assert(!png.sameElements(encodeGrayPng(img, w, h)),
+      assert(!png.sameElements(codec.encode(img, w, h, 1, 0)),
         "deflate mode must change container bytes")
     }
   }
 
   test("truecolor PNG roundtrip: bpp=3 filter walk over all five filters and modes") {
-    for (w <- Seq(8, 11, 16); h <- Seq(8, 10, 14); mode <- Seq(0, 1, 2)) {
+    for (w <- 8 to 16; h <- 8 to 14; mode <- 0 to 2) {
       val img = pix(w * h * 3)
-      val png = encodePng(img, w, h, 3, deflateMode = mode)
-      val (dw, dh, bpp, out) = decodePng(png)
-      assert(dw == w && dh == h && bpp == 3, s"RGB dims drifted at ${w}x$h")
+      val (dw, dh, out) = codec.decode(codec.encode(img, w, h, 3, mode), 3)
+      assert(dw == w && dh == h, s"RGB dims drifted at ${w}x$h")
       assert(out.sameElements(img), s"RGB pixels drifted at ${w}x$h mode $mode")
     }
-    // The grayscale wrapper refuses to reinterpret truecolor triplets.
-    val rgb = encodePng(pix(8 * 8 * 3), 8, 8, 3)
-    val e = intercept[IllegalArgumentException](decodeGrayPng(rgb))
-    assert(e.getMessage.contains("truecolor"))
+    val (gw, gh, gout) = codec.decode(goldenRgb, 3)
+    assert(gw == 8 && gh == 8 && gout.sameElements(pix(192)),
+      "five-filter truecolor PNG decoded to other pixels")
+    // A grayscale decode refuses to reinterpret truecolor triplets.
+    val e = intercept[IllegalArgumentException](codec.decode(goldenRgb, 1))
+    assert(e.getMessage.contains("expected 8-bit grayscale"), e.getMessage)
   }
 
   test("BT.601 integer luminance of a known triplet") {
@@ -218,14 +144,13 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("GCLP clip container: write/walk roundtrip, bounds, trailing-byte rejection") {
-    val frames = (0 until 5).map(f => encodeGrayPng(pix(8 * 8), 8, 8,
-      deflateMode = f % 3))
+    val frames = (0 until 5).map(f => codec.encode(pix(8 * 8), 8, 8, 1, f % 3))
     val clip = wrapClip(frames)
     val back = clipFrames(clip)
     assert(back.length == 5)
     for (f <- 0 until 5) {
       assert(back(f).sameElements(frames(f)), s"frame $f bytes drifted")
-      assert(decodeGrayPng(back(f))._3.sameElements(pix(64)))
+      assert(codec.decode(back(f), 1)._3.sameElements(pix(64)))
     }
     // Empty clip is legal; garbage is not.
     assert(clipFrames(wrapClip(Seq.empty)).isEmpty)
@@ -237,6 +162,45 @@ class MultimodalSpec extends AnyFunSuite {
     val badMagic = clip.clone(); badMagic(0) = 'X'
     val e3 = intercept[IllegalArgumentException](clipFrames(badMagic))
     assert(e3.getMessage.contains("magic"))
+  }
+
+  test("1,000 codec round trips create no file under java.io.tmpdir") {
+    // ImageIO's file-backed streams cache through "imageio*.tmp" files
+    // there and delete them on close, so a listing taken afterwards
+    // cannot see them: watch the directory while the codec runs.
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val ws = tmp.getFileSystem.newWatchService()
+    def created(): Seq[String] = {
+      val names = Seq.newBuilder[String]
+      var key = ws.poll(1, java.util.concurrent.TimeUnit.SECONDS)
+      while (key != null) {
+        // An overflow event, with no name, stands for too many to list.
+        key.pollEvents().forEach(e =>
+          names += (if (e.context == null) "overflow" else e.context.toString))
+        key.reset()
+        key = ws.poll(1, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      names.result().filter(n => n == "overflow" || n.startsWith("imageio"))
+    }
+    try {
+      tmp.register(ws, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+      val before = tmp.toFile.list().toSet
+      for (i <- 0 until 1000) {
+        val (w, h) = pixDims(i)
+        val bpp = 1 + i % 2 * 2
+        val img = pix(w * h * bpp)
+        assert(codec.decode(codec.encode(img, w, h, bpp, i % 3), bpp)._3
+          .sameElements(img), s"round trip $i drifted")
+      }
+      val left = tmp.toFile.list().toSet -- before
+      val seen = created()
+      assert(seen.isEmpty, s"ImageIO cache files were created: $seen")
+      assert(!left.exists(_.startsWith("imageio")), s"left behind: $left")
+      // The watch does see a file-backed ImageIO stream.
+      new javax.imageio.stream.FileCacheImageOutputStream(
+        new java.io.ByteArrayOutputStream, null).close()
+      assert(created().nonEmpty, "the tmpdir watch saw no ImageIO cache file")
+    } finally ws.close()
   }
 
   test("tilePixels matches the oracle's construction pixel-for-pixel") {
