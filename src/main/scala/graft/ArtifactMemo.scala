@@ -5,12 +5,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Once-per-dataset memo for trained artifacts: converged PageRank/HITS
+/** Once-per-dataset memo for trained artifacts (converged PageRank/HITS
   * scores, k-means centroids, the PCA basis, the PQ codebook, the BPE
-  * merge list and the Louvain partitions. Each is a deterministic pure
-  * function of the parquet under its dataset dir, so within a JVM the
-  * first call trains (the full loop) and later calls re-emit the
-  * trained artifact.
+  * merge list and the Louvain partitions) and for the write-once
+  * scratch dirs (Relational's layouts, FsQueries' fixtures). Each is a
+  * deterministic pure function of the parquet under its dataset dir,
+  * so within a JVM the first call trains or writes and later calls
+  * re-emit the artifact or return the dir.
   *
   * Contract:
   *  - Training is single-flight: one holder per key wins `putIfAbsent`,
@@ -27,9 +28,12 @@ import org.apache.spark.sql.types.StructType
   *  - Keys are content-addressed: callers build them with
   *    `Tables.artifactKey`, which fingerprints the backing parquet, so a
   *    dataset regenerated in place is a new key and retrains.
-  *  - Nothing outlives the JVM: [[cachedTable]]'s parquet lives in an
-  *    application-scoped `Tables.scratch` dir, deleted at exit, and no
-  *    process reads what another one trained.
+  *  - Nothing outlives the JVM: [[cachedTable]]'s parquet and every
+  *    [[written]] dir live in application-scoped `Tables.scratch` dirs,
+  *    deleted at exit, and no process reads what another one trained
+  *    or wrote. So "written before" is asked of this memo, never of the
+  *    file system: a write that throws half way leaves its key empty,
+  *    and the next call writes the dir again from the start.
   */
 object ArtifactMemo {
   /** Single-flight lazy holder: the `lazy val` runs the thunk at most
@@ -93,8 +97,22 @@ object ArtifactMemo {
     s.read.parquet(path)
   }
 
-  /** Test hook: forget every trained artifact, so the next call of each
-    * key trains again.
+  /** Write-once scratch dir: [[once]] keyed by the path
+    * `Tables.scratch(s, tag, d)` returns. The first call runs
+    * `write(path)`; every call returns the path. Concurrent callers of
+    * one path wait for its writer, distinct paths never wait on each
+    * other, and a `write` that throws is run again by the next call, so
+    * `write` must start from whatever a failed attempt left there
+    * (Spark's `mode("overwrite")`, or a delete first).
+    */
+  def written(s: SparkSession, tag: String, d: String)
+      (write: String => Unit): String = {
+    val path = Tables.scratch(s, tag, d)
+    once(path) { write(path); path }
+  }
+
+  /** Test hook: forget every trained artifact and written dir, so the
+    * next call of each key trains or writes again.
     */
   private[graft] def resetForTest(): Unit = entries.clear()
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.ArtifactMemo
 import graft.SparkEntry.keyed
 import graft.functions.Glob
 import graft.sources.FsOps
@@ -47,15 +48,6 @@ object FsQueries {
     ("lsl_e.tmp", "eee",   Integer.parseInt("1644", 8), "-rw-r--r-T"),
     ("lsl_f.sh",  "f",     Integer.parseInt("1755", 8), "-rwxr-xr-t"))
 
-  /** Plants the fs_ls_long fixture once per (app, tier): files with
-    * DECLARED names, contents, and modes, created and chmod'd through
-    * the same Hadoop FileSystem API the listing reads back — so the
-    * oracle can be a pure known-construction VALUES emission (fn_url
-    * precedent) and the hash gate proves the whole create → stat →
-    * render chain reproduces the declaration. _SUCCESS-guarded like
-    * Relational's layouts; the lock serializes concurrent consumers in
-    * one JVM.
-    */
   /** The fs_audit_perms fixture: DECLARED modes spanning every audit
     * rule — world-writable (666 / 777 / sticky-1777), group-writable
     * (664), and two clean files (644, 400). Hadoop's FsPermission
@@ -72,49 +64,43 @@ object FsQueries {
     ("ap_e.key", "secret",   Integer.parseInt("400", 8),  "-r--------", "none"),
     ("ap_f.tmp", "scratch",  Integer.parseInt("1777", 8), "-rwxrwxrwt", "world_writable"))
 
-  private val plantLock = new Object
-
-  /** lsLongDir's planter shape for the audit fixture (declared modes,
-    * chmod'd through the same FileSystem API the listing reads back).
+  /** One planted fixture file: DECLARED name and content, and
+    * optionally a mode (chmod'd) and an mtime in epoch ms (stamped).
     */
-  private def auditDir(s: SparkSession, d: String): String = plantLock.synchronized {
-    val dir = scratch(s, "audit", d)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))) {
-      fs.mkdirs(root)
-      auditFixture.foreach { case (name, content, mode, _, _) =>
-        val p = new org.apache.hadoop.fs.Path(root, name)
-        val out = fs.create(p, true)
-        out.write(content.getBytes("UTF-8"))
-        out.close()
-        fs.setPermission(p,
-          new org.apache.hadoop.fs.permission.FsPermission(mode.toShort))
-      }
-      fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
-    }
-    dir
-  }
+  private final case class Planted(name: String, content: String,
+      mode: Option[Int] = None, mtimeMs: Option[Long] = None)
 
-  def lsLongDir(s: SparkSession, d: String): String = plantLock.synchronized {
-    val dir = scratch(s, "lsl", d)
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))) {
+  /** Plants a fixture once per (app, tier) through `ArtifactMemo.written`:
+    * files with DECLARED names, contents and, where given, modes and
+    * mtimes, written and stat'd through the same Hadoop FileSystem API
+    * the listing reads back — so each oracle can be a pure
+    * known-construction VALUES emission (fn_url precedent) and the hash
+    * gate proves the whole create → chmod/touch → list chain reproduces
+    * the declaration. The dir holds the fixture files only; a plant
+    * that throws half way is planted again from an empty dir by the
+    * next call.
+    */
+  private def plant(s: SparkSession, tag: String, d: String,
+      files: Seq[Planted]): String =
+    ArtifactMemo.written(s, tag, d) { dir =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.delete(root, true)
       fs.mkdirs(root)
-      lsLongFixture.foreach { case (name, content, mode, _) =>
-        val p = new org.apache.hadoop.fs.Path(root, name)
+      files.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(root, f.name)
         val out = fs.create(p, true)
-        out.write(content.getBytes("UTF-8"))
-        out.close()
-        fs.setPermission(p,
-          new org.apache.hadoop.fs.permission.FsPermission(mode.toShort))
+        try out.write(f.content.getBytes("UTF-8")) finally out.close()
+        f.mode.foreach(m => fs.setPermission(p,
+          new org.apache.hadoop.fs.permission.FsPermission(m.toShort)))
+        f.mtimeMs.foreach(fs.setTimes(p, _, -1))
       }
-      fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
     }
-    dir
-  }
+
+  /** The planted fs_ls_long fixture dir (FsSpec re-stats it). */
+  def lsLongDir(s: SparkSession, d: String): String =
+    plant(s, "lsl", d,
+      lsLongFixture.map { case (n, c, m, _) => Planted(n, c, Some(m)) })
 
   /** Renders the ls -l permission string (nine rwx chars) from a %04o
     * octal mode column, including the POSIX special bits carried by
@@ -151,38 +137,21 @@ object FsQueries {
     * empty file identical on both sides (→ keep; pins the zero-byte
     * path the binaryFile source silently drops elsewhere).
     */
-  private val syncSrcFixture: Seq[(String, String)] = Seq(
-    ("sp_a.dat", "alpha"), ("sp_b.dat", "bravo!"),
-    ("sp_c.dat", "charlie"), ("sp_e.dat", ""))
-  private val syncDstFixture: Seq[(String, String)] = Seq(
-    ("sp_b.dat", "bravo"), ("sp_c.dat", "charlie"),
-    ("sp_d.dat", "delta"), ("sp_e.dat", ""))
+  private val syncSrcFixture = Seq(
+    Planted("sp_a.dat", "alpha"), Planted("sp_b.dat", "bravo!"),
+    Planted("sp_c.dat", "charlie"), Planted("sp_e.dat", ""))
+  private val syncDstFixture = Seq(
+    Planted("sp_b.dat", "bravo"), Planted("sp_c.dat", "charlie"),
+    Planted("sp_d.dat", "delta"), Planted("sp_e.dat", ""))
 
   /** fs_put's client-side fixture: printable-ASCII contents whose hex
     * renderings the oracle re-digests (md5-of-hex, the fs_distcp rule),
     * plus a zero-byte file pinning the binaryFile empty-file path on
     * the UPLOAD direction too.
     */
-  private val putFixture: Seq[(String, String)] = Seq(
-    ("up_a.dat", "alpha"), ("up_b.dat", "bravo-bravo"),
-    ("up_c.dat", "delta-42\n"), ("up_e.dat", ""))
-
-  private def plantDir(s: SparkSession, tag: String, d: String,
-      files: Seq[(String, String)]): String = plantLock.synchronized {
-    val dir = scratch(s, tag, d)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))) {
-      fs.mkdirs(root)
-      files.foreach { case (name, content) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(root, name), true)
-        out.write(content.getBytes("UTF-8"))
-        out.close()
-      }
-      fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
-    }
-    dir
-  }
+  private val putFixture = Seq(
+    Planted("up_a.dat", "alpha"), Planted("up_b.dat", "bravo-bravo"),
+    Planted("up_c.dat", "delta-42\n"), Planted("up_e.dat", ""))
 
   /** The fs_du_quota fixture: a three-subtree estate with DECLARED
     * per-subtree quotas — the HDFS ContentSummary surface (`hh du`
@@ -194,18 +163,18 @@ object FsQueries {
     * within both, qd_tmp breaching SPACE (61 B > 48), qd_data at its
     * exact namespace limit (full, not breached) with space unset.
     */
-  private val duQuotaFiles: Seq[(String, String)] = Seq(
-    ("qd_logs/app.log", "level=INFO boot"),
-    ("qd_logs/gc.log", "pause 3ms"),
-    ("qd_tmp/stage0.tmp", "intermediate shuffle spill block"),
-    ("qd_tmp/stage1.tmp", "second spill, pushes over quota"),
-    ("qd_data/part-0.dat", "the durable bytes"))
+  private val duQuotaFiles = Seq(
+    Planted("qd_logs/app.log", "level=INFO boot"),
+    Planted("qd_logs/gc.log", "pause 3ms"),
+    Planted("qd_tmp/stage0.tmp", "intermediate shuffle spill block"),
+    Planted("qd_tmp/stage1.tmp", "second spill, pushes over quota"),
+    Planted("qd_data/part-0.dat", "the durable bytes"))
   private val duQuotas: Seq[(String, Long, Long)] = Seq(
     ("qd_logs", 10L, 4096L), ("qd_tmp", 8L, 48L), ("qd_data", 1L, -1L))
 
   private def duQuotaOracle: String = {
-    val frows = duQuotaFiles.map { case (n, c) =>
-      s"('${n.split('/').head}', ${c.getBytes("UTF-8").length})"
+    val frows = duQuotaFiles.map { f =>
+      s"('${f.name.split('/').head}', ${f.content.getBytes("UTF-8").length})"
     }
     val qrows = duQuotas.map { case (e, nq, sq) =>
       s"('$e', CAST($nq AS BIGINT), CAST($sq AS BIGINT))"
@@ -245,26 +214,6 @@ object FsQueries {
     ("tp_d.dat", "quarterly snapshot", tierBaseMs + 340 * tierDayMs),
     ("tp_e.dat", "", tierBaseMs))
 
-  /** plantDir variant that also stamps each file's declared mtime. */
-  private def plantDirTimes(s: SparkSession, tag: String, d: String,
-      files: Seq[(String, String, Long)]): String = plantLock.synchronized {
-    val dir = scratch(s, tag, d)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))) {
-      fs.mkdirs(root)
-      files.foreach { case (name, content, mtime) =>
-        val p = new org.apache.hadoop.fs.Path(root, name)
-        val out = fs.create(p, true)
-        out.write(content.getBytes("UTF-8"))
-        out.close()
-        fs.setTimes(p, mtime, -1)
-      }
-      fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
-    }
-    dir
-  }
-
   /** Oracle generated from the same fixture Seq as the query plants —
     * the corrMatrixOracle can't-drift pattern.
     */
@@ -282,6 +231,70 @@ object FsQueries {
        |FROM f, r ORDER BY name""".stripMargin
   }
 
+  /** The files a Hadoop glob matches, refused up front when there are
+    * none: binaryFile.load on an empty match throws a deep
+    * AnalysisException out of query *construction* (round-3's bench
+    * tail showed exactly that trace from a transiently-empty dir), so
+    * the failure is one clear, caught line instead.
+    */
+  private def globbed(s: SparkSession, glob: String)(
+      err: => String): Seq[String] = {
+    val hp = new org.apache.hadoop.fs.Path(glob)
+    val got = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .globStatus(hp)
+    require(got != null && got.nonEmpty, err)
+    got.toSeq.map(_.getPath.toString)
+  }
+
+  /** Copies the files of a listing's `path` column flat into `dst`:
+    * parallelize the FILE LIST, not the bytes, and stream each file's
+    * copy through Hadoop FileSystem I/O inside an executor task — no
+    * driver materialization, no shuffle; DistCp's shape, so copies run
+    * at aggregate disk/network bandwidth at any file count.
+    */
+  private def copyFlat(s: SparkSession, files: DataFrame,
+      dst: String): Unit = {
+    import s.implicits._
+    val hconf = new org.apache.spark.util.SerializableConfiguration(
+      s.sparkContext.hadoopConfiguration)
+    files.select("path").as[String]
+      .foreachPartition { (it: Iterator[String]) =>
+        val c = hconf.value
+        it.foreach { p =>
+          val src = new org.apache.hadoop.fs.Path(p)
+          val out = new org.apache.hadoop.fs.Path(dst, src.getName)
+          org.apache.hadoop.fs.FileUtil.copy(
+            src.getFileSystem(c), src, out.getFileSystem(c), out,
+            false /* deleteSource */, true /* overwrite */, c)
+        }
+      }
+  }
+
+  /** (name, length, content_md5) of the files in `dir` whose names
+    * match `pattern`. The manifest comes from the LISTING and the
+    * digests from the binaryFile re-read: binaryFile silently yields no
+    * row for a zero-byte file, and real estates do hold empty
+    * part/marker files, so a manifest driven by the content scan alone
+    * would drop them. Empty files take md5 of the empty string
+    * (= md5(hex(<empty content>)), the same md5-of-hex digest rule;
+    * DuckDB's md5 cannot take a raw BLOB, and hex equality across the
+    * two engines is pinned by fs_cat_binary).
+    */
+  private def md5Manifest(s: SparkSession, dir: String, pattern: String)(
+      err: => String): DataFrame = {
+    val listed = FsOps.ls(s, dir)
+      .filter(!col("is_dir") && col("name").rlike(Glob.toRegex(pattern)))
+      .select(col("name"), col("length"))
+    val digests = s.read.format("binaryFile")
+      .load(globbed(s, s"$dir/$pattern")(err): _*)
+      .select(element_at(split(col("path"), "/"), -1).as("name"),
+        md5(hex(col("content"))).as("bin_md5"))
+    listed.join(digests, Seq("name"), "left")
+      .select(col("name"), col("length"),
+        coalesce(col("bin_md5"), md5(lit(""))).as("content_md5"))
+      .orderBy("name")
+  }
+
   val queries: Map[String, Q] = keyed(
     "fs_tier_plan" -> { (s, d) =>
       // Storage-tier planner (`hh`-layer lifecycle management — the
@@ -294,7 +307,8 @@ object FsQueries {
       // At estate scale this is listings-only: executor-streamed
       // FileStatus rows, map-side tier arithmetic, bytes ∝ file
       // count; the 1-row ref instant rides a broadcast.
-      val dir = plantDirTimes(s, "tier", d, tierFixture)
+      val dir = plant(s, "tier", d, tierFixture.map { case (n, c, t) =>
+        Planted(n, c, mtimeMs = Some(t)) })
       val ls = FsOps.ls(s, dir)
         .filter(!col("is_dir") && col("name").endsWith(".dat"))
       val ref = ls.agg(max(col("mtime_ms")).as("ref_ms"))
@@ -326,8 +340,9 @@ object FsQueries {
       val finding = when(o.bitwiseAND(lit(2)) =!= 0, "world_writable")
         .when(g.bitwiseAND(lit(2)) =!= 0, "group_writable")
         .otherwise("none")
-      FsOps.ls(s, auditDir(s, d))
-        .filter(!col("is_dir") && col("name") =!= "_SUCCESS")
+      val dir = plant(s, "audit", d,
+        auditFixture.map { case (n, c, m, _, _) => Planted(n, c, Some(m)) })
+      FsOps.ls(s, dir).filter(!col("is_dir"))
         .withColumn("perm", concat(lit("-"), permString(col("perm_octal"))))
         .withColumn("finding", finding)
         .withColumn("flagged", col("finding") =!= "none")
@@ -348,8 +363,8 @@ object FsQueries {
       // pays data I/O when executed. The oracle recomputes the plan
       // from read_blob lengths over the same planted dirs — the whole
       // list → join → decide chain is hash-gated.
-      val src = plantDir(s, "syncsrc", d, syncSrcFixture)
-      val dst = plantDir(s, "syncdst", d, syncDstFixture)
+      val src = plant(s, "syncsrc", d, syncSrcFixture)
+      val dst = plant(s, "syncdst", d, syncDstFixture)
       def side(dir: String, p: String) = FsOps.ls(s, dir)
         .filter(!col("is_dir") && col("name").endsWith(".dat"))
         .select(col("name").as(s"${p}_name"), col("length").as(s"${p}_len"))
@@ -395,8 +410,7 @@ object FsQueries {
       // reproduces the declaration exactly. FsSpec additionally asserts
       // the same rows against java.nio filesystem truth (independent of
       // the construction) and permString against literal modes.
-      FsOps.ls(s, lsLongDir(s, d))
-        .filter(!col("is_dir") && col("name") =!= "_SUCCESS")
+      FsOps.ls(s, lsLongDir(s, d)).filter(!col("is_dir"))
         .withColumn("perm", concat(
           when(col("is_dir"), lit("d"))
             .when(col("is_symlink"), lit("l")).otherwise(lit("-")),
@@ -444,14 +458,13 @@ object FsQueries {
       // remaining/breach are pure column arithmetic — no per-file
       // stat re-fetch at any estate size.
       import s.implicits._
-      val dir = plantDir(s, "duquota", d, duQuotaFiles)
+      val dir = plant(s, "duquota", d, duQuotaFiles)
       val root = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
         .makeQualified(new org.apache.hadoop.fs.Path(dir))
         .toUri.getPath.stripSuffix("/")
       val quotas = duQuotas.toDF("entry", "ns_quota", "space_quota")
-      FsOps.find(s, dir)
-        .filter(!col("is_dir") && col("name") =!= "_SUCCESS")
+      FsOps.find(s, dir).filter(!col("is_dir"))
         .withColumn("entry", element_at(
           split(expr(s"substring(path, ${root.length + 2})"), "/"), 1))
         .groupBy("entry")
@@ -535,41 +548,12 @@ object FsQueries {
       // list them — but the fixture is DECLARED, and the hash gate
       // proves the plant → upload → list → digest chain reproduces the
       // declaration byte-for-byte, zero-byte upload included).
-      val srcDir = plantDir(s, "putsrc", d, putFixture)
+      val srcDir = plant(s, "putsrc", d, putFixture)
       val dst = scratch(s, "putdst", d)
-      import s.implicits._
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        s.sparkContext.hadoopConfiguration)
-      FsOps.ls(s, srcDir)
-        .filter(!col("is_dir") && col("name").endsWith(".dat"))
-        .select("path").as[String]
-        .foreachPartition { (it: Iterator[String]) =>
-          val c = hconf.value
-          it.foreach { p =>
-            val src = new org.apache.hadoop.fs.Path(p)
-            val out = new org.apache.hadoop.fs.Path(dst, src.getName)
-            org.apache.hadoop.fs.FileUtil.copy(
-              src.getFileSystem(c), src, out.getFileSystem(c), out,
-              false /* deleteSource */, true /* overwrite */, c)
-          }
-        }
-      val glob = new org.apache.hadoop.fs.Path(s"$dst/*.dat")
-      val got = glob.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .globStatus(glob)
-      require(got != null && got.nonEmpty,
+      copyFlat(s, FsOps.ls(s, srcDir)
+        .filter(!col("is_dir") && col("name").endsWith(".dat")), dst)
+      md5Manifest(s, dst, "*.dat")(
         s"fs_put: upload produced no .dat files in $dst")
-      // Manifest from the LISTING, digests from the binaryFile re-read;
-      // zero-byte files take md5("") — the fs_distcp digest rule.
-      val uploaded = FsOps.ls(s, dst)
-        .filter(!col("is_dir") && col("name").endsWith(".dat"))
-        .select(col("name"), col("length"))
-      val digests = s.read.format("binaryFile").load(got.map(_.getPath.toString): _*)
-        .select(element_at(split(col("path"), "/"), -1).as("name"),
-          md5(hex(col("content"))).as("bin_md5"))
-      uploaded.join(digests, Seq("name"), "left")
-        .select(col("name"), col("length"),
-          coalesce(col("bin_md5"), md5(lit(""))).as("content_md5"))
-        .orderBy("name")
     },
 
     "fs_distcp" -> { (s, d) =>
@@ -586,9 +570,6 @@ object FsQueries {
       // can't take a raw BLOB, and hex equality across the two engines
       // is already pinned by fs_cat_binary.)
       val dst = scratch(s, "distcp", d)
-      import s.implicits._
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        s.sparkContext.hadoopConfiguration)
       // Recursive find, not one-level ls: table-shaped layouts keep
       // their part files one level down (dir/table.parquet/part-*), and
       // a copy tool that silently skips them "passes" on flat dirs
@@ -605,42 +586,11 @@ object FsQueries {
       val collisions = srcFiles.groupBy("name").count().filter(col("count") > 1).count()
       require(collisions == 0,
         s"fs_distcp: $collisions basename collisions under $d; flat copy would lose files")
-      srcFiles.select("path").as[String]
-        .foreachPartition { (it: Iterator[String]) =>
-          val c = hconf.value
-          it.foreach { p =>
-            val src = new org.apache.hadoop.fs.Path(p)
-            val out = new org.apache.hadoop.fs.Path(dst, src.getName)
-            org.apache.hadoop.fs.FileUtil.copy(
-              src.getFileSystem(c), src, out.getFileSystem(c), out,
-              false /* deleteSource */, true /* overwrite */, c)
-          }
-        }
-      // Same empty-glob guard as fs_cat_binary (binaryFile.load throws a
-      // deep AnalysisException out of query construction on an empty
-      // match): covers both an empty source dir and a failed copy.
-      val dstGlob = new org.apache.hadoop.fs.Path(s"$dst/*.parquet")
-      val copiedFiles = dstGlob.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .globStatus(dstGlob)
-      require(copiedFiles != null && copiedFiles.nonEmpty,
+      copyFlat(s, srcFiles, dst)
+      // The manifest's glob guard covers both an empty source dir and a
+      // failed copy.
+      md5Manifest(s, dst, "*.parquet")(
         s"fs_distcp: no *.parquet copied from $d to $dst")
-      // Manifest from the LISTING of the copies, digests from the
-      // binaryFile re-read: binaryFile silently yields no row for a
-      // zero-byte file, and real estates do hold empty part/marker
-      // files — a manifest driven by the content scan alone would
-      // silently drop them from the gate. Empty files take md5 of the
-      // empty string (= md5(hex(<empty content>)), same digest rule).
-      val copied = FsOps.ls(s, dst)
-        .filter(!col("is_dir") && col("name").rlike(parquetGlobRegex))
-        .select(col("name"), col("length"))
-      val digests = s.read.format("binaryFile")
-        .load(copiedFiles.map(_.getPath.toString): _*)
-        .select(element_at(split(col("path"), "/"), -1).as("name"),
-          md5(hex(col("content"))).as("bin_md5"))
-      copied.join(digests, Seq("name"), "left")
-        .select(col("name"), col("length"),
-          coalesce(col("bin_md5"), md5(lit(""))).as("content_md5"))
-        .orderBy("name")
     },
 
     "fs_checksum_manifest" -> { (s, d) =>
@@ -655,12 +605,8 @@ object FsQueries {
       // digest blobs, so it compared a 16-byte head): the md5-of-
       // UPPERCASE-HEX form IS oracle-expressible (the fs_put digest
       // rule), so this gate proves full-content integrity end to end.
-      val hp = new org.apache.hadoop.fs.Path(s"$d/*.parquet")
-      val matches = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .globStatus(hp)
-      require(matches != null && matches.nonEmpty,
-        s"fs_checksum_manifest: no *.parquet under $d")
-      s.read.format("binaryFile").load(matches.map(_.getPath.toString): _*)
+      s.read.format("binaryFile").load(globbed(s, s"$d/*.parquet")(
+          s"fs_checksum_manifest: no *.parquet under $d"): _*)
         .select(
           element_at(split(col("path"), "/"), -1).as("name"),
           col("length"),
@@ -676,15 +622,8 @@ object FsQueries {
       // oracle recomputes via read_blob (whole-content md5 is not
       // blob-expressible in the oracle engine; full-content equality is
       // covered by length + header in practice for these files).
-      //
-      // Existence guard: binaryFile.load on an empty glob throws a deep
-      // AnalysisException out of query *construction* (round-3's bench
-      // tail showed exactly that trace from a transiently-empty dir);
-      // check up front so the failure is one clear, caught line instead.
-      val hp = new org.apache.hadoop.fs.Path(s"$d/*.parquet")
-      val matches = hp.getFileSystem(s.sparkContext.hadoopConfiguration).globStatus(hp)
-      require(matches != null && matches.nonEmpty, s"fs_cat_binary: no *.parquet under $d")
-      s.read.format("binaryFile").load(matches.map(_.getPath.toString): _*)
+      s.read.format("binaryFile").load(globbed(s, s"$d/*.parquet")(
+          s"fs_cat_binary: no *.parquet under $d"): _*)
         .select(
           element_at(split(col("path"), "/"), -1).as("name"),
           col("length"),

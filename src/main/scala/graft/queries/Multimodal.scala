@@ -186,24 +186,25 @@ object Multimodal {
 
     /** Decode a PNG from the bytes alone into (w, h, samples), refusing
       * any image that does not hold 8-bit samples in `bpp` channels.
-      * ImageIO verifies the zlib stream but not the chunk CRCs. Every
-      * refusal is an IllegalArgumentException whose message starts
-      * "png:".
+      * The chunks are walked first ([[checkChunks]]); ImageIO then
+      * verifies the zlib stream. Every refusal is an
+      * IllegalArgumentException whose message starts "png:".
       */
     def decode(b: Array[Byte], bpp: Int): (Int, Int, Array[Byte]) = {
+      checkChunks(b)
       val in = new MemoryCacheImageInputStream(
         new java.io.ByteArrayInputStream(b))
       try {
         reader.setInput(in, true, true)
         val w = reader.getWidth(0); val h = reader.getHeight(0)
         val raw = reader.getRawImageType(0)
-        require(raw.getNumBands == bpp && raw.getBitsPerBand(0) == 8 &&
+        check(raw.getNumBands == bpp && raw.getBitsPerBand(0) == 8 &&
           raw.getColorModel.getNumComponents == bpp,
           s"png: expected 8-bit ${if (bpp == 1) "grayscale" else "truecolor"}" +
             s", got ${raw.getNumBands} bands of ${raw.getBitsPerBand(0)} bits")
         // Deflate expands at most 1032:1, so a larger claim is corrupt and
         // is refused before ImageIO allocates the image.
-        require(h.toLong * (w.toLong * bpp + 1) <= 1032L * b.length,
+        check(h.toLong * (w.toLong * bpp + 1) <= 1032L * b.length,
           s"png: ${w}x$h scanlines cannot fit in a ${b.length}-byte PNG")
         val img = reader.read(0)
         (w, h, img.getRaster.getDataElements(0, 0, w, h, null)
@@ -216,6 +217,36 @@ object Multimodal {
         in.close()
       }
     }
+
+    /** One walk over the chunks after the signature: each length must
+      * fit, each CRC-32 over type + data must match, and the walk must
+      * end at IEND on the last byte. ImageIO checks none of this: it
+      * never verifies chunk CRCs and stops reading the IDAT once it has
+      * the pixels, so a flipped CRC, or a PNG cut inside its Adler-32
+      * trailer, would otherwise decode.
+      */
+    private def checkChunks(b: Array[Byte]): Unit = {
+      val crc = new java.util.zip.CRC32
+      var p = 8
+      var end = false
+      while (!end) {
+        check(p + 12 <= b.length, s"png: chunk at byte $p is cut off")
+        val len = rbe32(b, p)
+        check(len <= b.length - p - 12L,
+          s"png: chunk at byte $p claims $len bytes, more than remain")
+        crc.reset()
+        crc.update(b, p + 4, 4 + len.toInt)
+        check(rbe32(b, p + 8 + len.toInt) == crc.getValue,
+          s"png: chunk CRC mismatch at byte $p")
+        end = new String(b, p + 4, 4, ascii) == "IEND"
+        p += 12 + len.toInt
+      }
+      check(p == b.length, s"png: ${b.length - p} bytes after IEND")
+    }
+
+    /** `require` whose refusal message is the "png:" text itself. */
+    private def check(ok: Boolean, msg: => String): Unit =
+      if (!ok) throw new IllegalArgumentException(msg)
   }
 
   /** Length-prefixed concatenated-PNG CLIP container (round 14,
@@ -341,51 +372,67 @@ object Multimodal {
   private def dctBSql: String =
     dctB.flatten.mkString("[", ", ", "]")
 
+  /** Planted copies of the doc_id % `mod` rows of `df` under doc_id +
+    * 1e12. The collision guard is folded into the projected id
+    * (coalesce of the always-null assert_true) so pruning can't drop
+    * it: a corpus with ids at or past the offset would otherwise merge
+    * planted and base rows silently in BOTH engines (the oracles
+    * replicate the construction, so the hash gate could never see it).
+    */
+  private def plantedAt1e12(df: DataFrame, mod: Int,
+      what: String): DataFrame =
+    df.filter(col("doc_id") % mod === 0)
+      .withColumn("doc_id", col("doc_id") + 1000000000000L +
+        coalesce(assert_true(col("doc_id") < 1000000000000L,
+          lit(s"$what: base doc_id >= 1e12 collides with the " +
+            "planted-id offset — regenerate or raise the offset"))
+          .cast(LongType), lit(0L)))
+
+  /** The pixel stage SHARED by the two perceptual hashes: the
+    * document's tiled grayscale image — with every NON-SAMPLE pixel
+    * bumped +1 (mod 256) when `perturb`, so a plant is a byte-different
+    * image with the IDENTICAL 8×8 sample grid — through the PNG
+    * encode→decode roundtrip (per-doc deflate mode), then the 8×8
+    * nearest-neighbor sample of the decoded pixels, row-major.
+    */
+  private def sample8x8(codec: PngCodec, id: Long, text: String,
+      perturb: Boolean): Array[Int] = {
+    val data = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val (w, h) = pixDims(data.length)
+    val pix0 = tilePixels(data, w, h)
+    val img = if (!perturb) pix0 else {
+      val sx = Array.tabulate(8)(i => i * w / 8).toSet
+      val sy = Array.tabulate(8)(j => j * h / 8).toSet
+      Array.tabulate(w * h) { k =>
+        if (sx(k % w) && sy(k / w)) pix0(k)
+        else ((pix0(k) + 1) & 0xFF).toByte
+      }
+    }
+    val (dw, dh, pix) =
+      codec.decode(codec.encode(img, w, h, 1, (id % 3).toInt), 1)
+    Array.tabulate(64)(c =>
+      pix((c / 8 * dh / 8) * dw + (c % 8) * dw / 8) & 0xFF)
+  }
+
   /** The average-hash stage SHARED by mm_phash_dedup (pair emission)
     * and pipeline_mm_dedup (survivor emission, round 14): base corpus
     * plus planted perceptual dups — every doc_id % 10 re-planted at
-    * +1e12 with every NON-SAMPLE pixel bumped +1 (mod 256), so the
-    * plant is a byte-different image that aHashes IDENTICAL to its
-    * source — then the PNG encode→decode roundtrip (per-doc deflate
-    * mode) and the 60-bit integer average hash over the decoded 8×8
-    * sample grid. The standing +1e12 collision guard is folded into
-    * the projected id (coalesce of the always-null assert_true) so
-    * pruning can't drop it.
+    * +1e12 with its non-sample pixels bumped ([[sample8x8]]), so the
+    * plant aHashes IDENTICAL to its source — and the 60-bit integer
+    * average hash over the decoded 8×8 sample grid.
     */
   private def aHashWithPlants(s: SparkSession, d: String,
       what: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val base = documents(s, d)
-      .select(col("doc_id"), col("text"), lit(false).as("perturb"))
-    val planted = documents(s, d).filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000000000L +
-        coalesce(assert_true(col("doc_id") < 1000000000000L,
-          lit(s"$what: base doc_id >= 1e12 collides with the " +
-            "planted-id offset — regenerate or raise the offset"))
-          .cast(LongType), lit(0L))).as("doc_id"),
-        col("text"), lit(true).as("perturb"))
-    spread(base.unionByName(planted))
+    def corpus(perturb: Boolean) = documents(s, d)
+      .select(col("doc_id"), col("text"), lit(perturb).as("perturb"))
+    spread(corpus(false).unionByName(plantedAt1e12(corpus(true), 10, what)))
       .as[(Long, String, Boolean)]
       .mapPartitions { rows =>
         val codec = new PngCodec
         rows.map { case (id, text, perturb) =>
-          val data =
-            text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val (w, h) = pixDims(data.length)
-          val pix0 = tilePixels(data, w, h)
-          val img = if (!perturb) pix0 else {
-            val sx = Array.tabulate(8)(i => i * w / 8).toSet
-            val sy = Array.tabulate(8)(j => j * h / 8).toSet
-            Array.tabulate(w * h) { k =>
-              if (sx(k % w) && sy(k / w)) pix0(k)
-              else ((pix0(k) + 1) & 0xFF).toByte
-            }
-          }
-          val (dw, dh, pix) =
-            codec.decode(codec.encode(img, w, h, 1, (id % 3).toInt), 1)
-          val smp = Array.tabulate(64)(c =>
-            pix((c / 8 * dh / 8) * dw + (c % 8) * dw / 8) & 0xFF)
+          val smp = sample8x8(codec, id, text, perturb)
           val total = smp.sum
           var hsh = 0L
           var c = 0
@@ -645,18 +692,7 @@ object Multimodal {
       // members.
       val base = documents(s, d)
         .select(col("doc_id"), col("text").cast(BinaryType).as("blob"))
-      // Planted ids at doc_id + 1e12 with the phash variant's fold-in
-      // collision guard: a 1M+-doc corpus would have collided with the
-      // original unguarded 1e6 offset, silently merging groups in BOTH
-      // engines (the oracle replicates the construction, so the hash
-      // gate could never see it).
-      val planted = base.filter(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 1000000000000L +
-          coalesce(assert_true(col("doc_id") < 1000000000000L,
-            lit("mm_exact_dedup: base doc_id >= 1e12 collides with the " +
-              "planted-id offset — regenerate or raise the offset"))
-            .cast(LongType), lit(0L))).as("doc_id"), col("blob"))
-      base.unionByName(planted)
+      base.unionByName(plantedAt1e12(base, 20, "mm_exact_dedup"))
         .groupBy(md5(col("blob")).as("digest"))
         .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("survivor_id"),
           max(col("doc_id")).as("dup_id"))
@@ -907,16 +943,10 @@ object Multimodal {
       // slips all break the digest equality.
       val sp = s
       import sp.implicits._
-      val base = documents(s, d)
-        .select(col("doc_id"), col("text"), lit(false).as("reenc"))
-      val planted = documents(s, d).filter(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 1000000000000L +
-          coalesce(assert_true(col("doc_id") < 1000000000000L,
-            lit("mm_dedup_pixels_exact: base doc_id >= 1e12 collides " +
-              "with the planted-id offset"))
-            .cast(LongType), lit(0L))).as("doc_id"),
-          col("text"), lit(true).as("reenc"))
-      spread(base.unionByName(planted))
+      def corpus(reenc: Boolean) = documents(s, d)
+        .select(col("doc_id"), col("text"), lit(reenc).as("reenc"))
+      spread(corpus(false).unionByName(
+          plantedAt1e12(corpus(true), 20, "mm_dedup_pixels_exact")))
         .as[(Long, String, Boolean)]
         .mapPartitions { rows =>
           val codec = new PngCodec
@@ -1006,36 +1036,15 @@ object Multimodal {
       // oracle replays the same integer DCT from the construction.
       val sp = s
       import sp.implicits._
-      val base = documents(s, d)
-        .select(col("doc_id"), col("text"), lit(false).as("perturb"))
-      val planted = documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000000000L +
-          coalesce(assert_true(col("doc_id") < 1000000000000L,
-            lit("mm_phash_dct: base doc_id >= 1e12 collides with the " +
-              "planted-id offset — regenerate or raise the offset"))
-            .cast(LongType), lit(0L))).as("doc_id"),
-          col("text"), lit(true).as("perturb"))
-      val hashed = spread(base.unionByName(planted))
+      def corpus(perturb: Boolean) = documents(s, d)
+        .select(col("doc_id"), col("text"), lit(perturb).as("perturb"))
+      val hashed = spread(corpus(false).unionByName(
+          plantedAt1e12(corpus(true), 10, "mm_phash_dct")))
         .as[(Long, String, Boolean)]
         .mapPartitions { rows =>
           val codec = new PngCodec
           rows.map { case (id, text, perturb) =>
-            val data =
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val (w, h) = pixDims(data.length)
-            val pix0 = tilePixels(data, w, h)
-            val img = if (!perturb) pix0 else {
-              val sx = Array.tabulate(8)(i => i * w / 8).toSet
-              val sy = Array.tabulate(8)(j => j * h / 8).toSet
-              Array.tabulate(w * h) { k =>
-                if (sx(k % w) && sy(k / w)) pix0(k)
-                else ((pix0(k) + 1) & 0xFF).toByte
-              }
-            }
-            val (dw, dh, pix) =
-              codec.decode(codec.encode(img, w, h, 1, (id % 3).toInt), 1)
-            val smp = Array.tabulate(64)(c =>
-              (pix((c / 8 * dh / 8) * dw + (c % 8) * dw / 8) & 0xFF).toLong)
+            val smp = sample8x8(codec, id, text, perturb)
             // C = B · P · Bᵀ in two exact integer matmuls.
             val r = Array.ofDim[Long](8, 8) // R[x][v] = Σ_y P[x][y]·B[v][y]
             var x = 0

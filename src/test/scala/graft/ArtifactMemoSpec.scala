@@ -115,6 +115,49 @@ class ArtifactMemoSpec extends AnyFunSuite with GraftSuite {
       "second call must retry the training after a throwing first run")
   }
 
+  test("written() writes each scratch dir once, retries a throwing " +
+      "write, and keeps tags apart") {
+    // The write-once path of every Relational layout and FsQueries
+    // fixture: eight concurrent callers of one tag run `write` once and
+    // get the same path; a `write` that throws leaves the dir unwritten
+    // for the next call; a second tag is written on its own.
+    val d = s"spec-written#${System.nanoTime()}"
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def write(p: String): Unit = {
+      writes.merge(p, 1, _ + _)
+      Thread.sleep(200) // widen the race window
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val paths = try {
+      (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = ArtifactMemo.written(spark, "spec_a", d)(write)
+        })
+      }.map(_.get())
+    } finally pool.shutdown()
+    val pathA = Tables.scratch(spark, "spec_a", d)
+    assert(paths.toSet === Set(pathA))
+    assert(writes.get(pathA) === 1,
+      s"write ran ${writes.get(pathA)} times under 8-way contention")
+    var attempts = 0
+    def flaky(p: String): Unit = {
+      attempts += 1
+      if (attempts == 1) sys.error("transient write failure")
+      write(p)
+    }
+    val e = intercept[RuntimeException](
+      ArtifactMemo.written(spark, "spec_b", d)(flaky))
+    assert(e.getMessage.contains("transient"))
+    val pathB = ArtifactMemo.written(spark, "spec_b", d)(flaky)
+    assert(pathB === Tables.scratch(spark, "spec_b", d))
+    assert(pathB !== pathA)
+    assert(attempts === 2 && writes.get(pathB) === 1,
+      "the call after a throwing write must write again")
+    assert(ArtifactMemo.written(spark, "spec_b", d)(flaky) === pathB)
+    assert(attempts === 2, "a written dir is not written again")
+    assert(writes.get(pathA) === 1, "tag spec_b must not rewrite spec_a")
+  }
+
   test("cachedTable persists once and re-reads the parquet artifact") {
     var trains = 0
     val key = s"spec-table#${System.nanoTime()}"

@@ -70,16 +70,22 @@ class MultimodalSpec extends AnyFunSuite {
       val png = codec.encode(img, 16, 14, 1, mode)
       assert(new String(png, 37, 4, "US-ASCII") == "IDAT")
       val len = java.nio.ByteBuffer.wrap(png, 33, 4).getInt
-      // A flip in the deflate data and one in the Adler-32 trailer; the
-      // chunk CRC is left stale, which ImageIO does not check.
-      for (o <- Seq(41 + len / 2, 41 + len - 2)) {
+      // A flip in the deflate data, one in the Adler-32 trailer (each
+      // with the chunk CRC left stale) and one in the IDAT CRC alone,
+      // over intact data: ImageIO checks no chunk CRC, the chunk walk
+      // before it does.
+      for (o <- Seq(41 + len / 2, 41 + len - 2, 41 + len + 1)) {
         val bad = png.clone(); bad(o) = (bad(o) ^ 0x10).toByte
         val e = intercept[IllegalArgumentException](codec.decode(bad, 1))
         assert(e.getMessage.startsWith("png:"), s"mode $mode: ${e.getMessage}")
       }
-      val e = intercept[IllegalArgumentException](
-        codec.decode(png.take(41 + len / 2), 1))
-      assert(e.getMessage.startsWith("png:"), s"mode $mode: ${e.getMessage}")
+      // Cut mid-IDAT, and cut by the last byte only: ImageIO stops
+      // reading once it has the pixels, so only the walk sees the cut.
+      for (n <- Seq(41 + len / 2, png.length - 1)) {
+        val e = intercept[IllegalArgumentException](
+          codec.decode(png.take(n), 1))
+        assert(e.getMessage.startsWith("png:"), s"mode $mode: ${e.getMessage}")
+      }
     }
   }
 

@@ -107,8 +107,7 @@ class StatsSpec extends AnyFunSuite with GraftSuite {
       .select("l_orderkey", "l_linenumber").collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted
     assert(got.nonEmpty && got.toSeq === want.toSeq)
-    val layout = s"${System.getProperty("java.io.tmpdir")}/graft_bloom_li_" +
-      s"${sf.hashCode.toHexString}_${spark.sparkContext.applicationId}"
+    val layout = Tables.scratch(spark, "bloom_li", sf)
     val parts = new java.io.File(layout).listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(parts.nonEmpty, s"no part files under $layout")
