@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -201,6 +202,43 @@ object Tables {
   def wide(df: DataFrame, cols: Column*): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (cols.isEmpty) df.repartition(want) else df.repartition(want, cols: _*)
+  }
+
+  /** Two-level running sum, the blocked scan of Blelloch's "Prefix Sums
+    * and Their Applications": for each `(name, v)` adds column `name`,
+    * the exact long sum of the integral `v` over the rows before this
+    * one in `order` within `by` (0 for the first), with no window whose
+    * partition is a whole `by` group (one task for all of it at 100 TB).
+    * A row's sum is its bucket's start plus a running sum inside the
+    * bucket: the start is an exclusive prefix over the (by, bucket)
+    * totals, windowed per `by` over one row a bucket, and the running
+    * sum is windowed per (by, bucket). The one contract is that
+    * `bucket` never decreases along `order` within `by` (a prefix of
+    * the order key, or a monotone band of it); any such bucket gives
+    * the same sums, and `order` must be unique within `by` for them to
+    * be deterministic. The start join is an inner equi-join, so a row
+    * whose `by` or bucket is null is dropped. It takes no hint:
+    * Catalyst broadcasts the totals table by its estimate, and where it
+    * does not, the join reuses the in-bucket window's (by, bucket)
+    * exchange, so `df` is still shuffled once.
+    */
+  def sumBefore(df: DataFrame, by: Seq[String], bucket: Column,
+      order: Seq[Column], sums: (String, Column)*): DataFrame = {
+    val keys = by :+ "__sb_bucket"
+    def start(n: String) = s"__sb_start_$n"
+    val keyed = df.withColumn("__sb_bucket", bucket)
+    val wStart = Window.partitionBy(by.map(col): _*).orderBy("__sb_bucket")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val totals = sums.map { case (n, v) => sum(v).as(n) }
+    val starts = keyed.groupBy(keys.map(col): _*)
+      .agg(totals.head, totals.tail: _*)
+      .select(keys.map(col) ++ sums.map { case (n, _) =>
+        coalesce(sum(col(n)).over(wStart), lit(0L)).as(start(n)) }: _*)
+    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    sums.foldLeft(keyed.join(starts, keys)) { case (f, (n, v)) =>
+      f.withColumn(n, col(start(n)) + coalesce(sum(v).over(wIn), lit(0L)))
+    }.select((df.columns.toSeq ++ sums.map(_._1)).map(c => col(s"`$c`")): _*)
   }
 
   /** Memo key for a once-per-dataset trained artifact (the PQ-codebook /

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.awt.image.BufferedImage
@@ -1106,30 +1105,18 @@ object Multimodal {
       // (source, doc_id) order — offset-based sharding, gap-free and
       // rerun-stable. The naive form is a per-source running sum — ONE
       // window partition per source, a straggler when a source is
-      // most of the corpus — so this uses the shuffle_global /
-      // sample_token_budget two-level decomposition: per-(source,
-      // 512-doc bucket) byte subtotals, an exclusive prefix over the
-      // per-source BUCKET table (corpus-size/512 rows), and an
-      // in-bucket running sum partitioned by (source, bucket); offset
-      // + in-bucket prefix is the exact global byte position. All
-      // integer arithmetic; n_chars stands for blob length (the
-      // container-less mm convention — a real estate sums
-      // length(payload)). The oracle is the FLAT per-source window —
-      // the hash gate proves the decomposition exact.
+      // most of the corpus — so the bytes before a blob are a
+      // per-source [[Tables.sumBefore]] over 512-doc buckets (doc_id
+      // DIV 512 rises with doc_id), whose in-bucket windows partition
+      // by (source, bucket). All integer arithmetic; n_chars stands
+      // for blob length (the container-less mm convention — a real
+      // estate sums length(payload)). The oracle is the FLAT
+      // per-source window — the hash gate proves the decomposition
+      // exact.
       val docs = documents(s, d)
-        .select(col("source"), col("doc_id"), col("n_chars"),
-          expr("doc_id DIV 512").as("bkt"))
-      val bt = docs.groupBy("source", "bkt")
-        .agg(sum(col("n_chars")).as("b_bytes"))
-      val wOff = Window.partitionBy("source").orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val off = bt.select(col("source"), col("bkt"),
-        coalesce(sum(col("b_bytes")).over(wOff), lit(0L)).as("off"))
-      val wIn = Window.partitionBy("source", "bkt").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      docs.join(off, Seq("source", "bkt"))
-        .withColumn("cum_before",
-          col("off") + coalesce(sum(col("n_chars")).over(wIn), lit(0L)))
+        .select(col("source"), col("doc_id"), col("n_chars"))
+      sumBefore(docs, Seq("source"), expr("doc_id DIV 512"),
+          Seq(col("doc_id")), "cum_before" -> col("n_chars"))
         .groupBy(col("source"), expr("cum_before DIV 65536").as("shard_idx"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("shard_bytes"),
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
@@ -1618,8 +1605,8 @@ object Multimodal {
         |WHERE bit_count(xor(a.phash, b.phash)) <= 3
         |ORDER BY id_a, id_b""".stripMargin,
 
-    // The FLAT per-source running sum — the Spark side runs the
-    // two-level (source, bucket) decomposition; hash match proves it.
+    // The FLAT per-source running sum — the Spark side runs it as a
+    // Tables.sumBefore over (source, bucket); hash match proves it.
     "mm_shard_pack" ->
       """WITH c AS (
         |  SELECT source, doc_id, n_chars,

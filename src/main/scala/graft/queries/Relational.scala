@@ -1537,7 +1537,7 @@ object Relational {
       val counts = binned.groupBy("bin").agg(
         sum(when(col("cur") === 0, 1L).otherwise(0L)).as("nr"),
         sum(when(col("cur") === 1, 1L).otherwise(0L)).as("nc"))
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       val shares = counts
         .withColumn("tr", sum(col("nr")).over(wAll))
         .withColumn("tc", sum(col("nc")).over(wAll))
@@ -1629,47 +1629,19 @@ object Relational {
       // KS fires when the mean holds but the shape moves — the
       // training-data drift case). D = max |F0(v) − F1(v)| over
       // observed values. A naive ECDF is a GLOBAL sort — at 100 TB an
-      // unpartitioned window over every distinct value. Instead the
-      // shuffle_global / agg_weighted_median two-level decomposition:
-      // per-value arm counts (one data-sized groupBy), values band
-      // into 256 range buckets off a 1-row (min,max) broadcast, bucket
-      // subtotals make a ≤256-row table whose exclusive prefix sums
-      // ride a tiny unpartitioned window, and the within-bucket
-      // cumulative is a window PARTITIONED by bucket — so no stage
-      // sorts more than one bucket's values on one task. All
-      // cumulative counts are exact longs; each |F0−F1| is one
+      // unpartitioned window over every distinct value — so the
+      // cumulative counts come from [[bandedEcdf]] over the per-value
+      // arm counts (one data-sized groupBy): exact longs, the inclusive
+      // CDF of each arm read as F + c. Each |F0−F1| is one
       // identical-IEEE expression, and max is order-free. The oracle
       // is the FLAT global-window ECDF — the hash gate proves the
-      // bucket decomposition lossless. D's critical scaling
-      // sqrt(n0·n1/(n0+n1)) emits alongside (reject at 5% when
-      // scaled D > 1.358).
-      val arm0 = col("user_id") % 2 === 0
-      val pv = eventsTs(s, d).filter(col("value").isNotNull)
-        .groupBy("value").agg(
-          sum(when(arm0, 1L).otherwise(0L)).as("c0"),
-          sum(when(arm0, 0L).otherwise(1L)).as("c1"))
-      val rng = pv.agg(min("value").as("lo"), max("value").as("hi"),
-        sum("c0").as("n0"), sum("c1").as("n1"))
-      val nB = 256
-      val width = (col("hi") - col("lo")) / nB
-      val withB = pv.crossJoin(broadcast(rng))
-        .withColumn("b",
-          when(col("hi") === col("lo"), lit(0))
-            .otherwise(least(lit(nB - 1),
-              floor((col("value") - col("lo")) / width).cast(IntegerType))))
-      val bt = withB.groupBy("b")
-        .agg(sum(col("c0")).as("b0"), sum(col("c1")).as("b1"))
-      val wPre = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-      val pre = bt.select(col("b"),
-        coalesce(sum(col("b0")).over(wPre), lit(0L)).as("p0"),
-        coalesce(sum(col("b1")).over(wPre), lit(0L)).as("p1"))
-      val wIn = Window.partitionBy("b").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val dRow = withB.join(pre, "b")
+      // banding lossless. D's critical scaling sqrt(n0·n1/(n0+n1))
+      // emits alongside (reject at 5% when scaled D > 1.358).
+      val dRow = bandedEcdf(valueClassCounts(eventsTs(s, d), userArm0))
         .withColumn("gap", abs(
-          (col("p0") + sum(col("c0")).over(wIn)).cast(DoubleType) / col("n0") -
-            (col("p1") + sum(col("c1")).over(wIn)).cast(DoubleType) / col("n1")))
-        .agg(max(col("n0")).as("n0"), max(col("n1")).as("n1"),
+          (col("fa") + col("ca")).cast(DoubleType) / col("n_a") -
+            (col("fb") + col("cb")).cast(DoubleType) / col("n_b")))
+        .agg(max(col("n_a")).as("n0"), max(col("n_b")).as("n1"),
           max(col("gap")).as("d_raw"))
       dRow.select(col("n0"), col("n1"),
         round(col("d_raw"), 6).as("ks_d"),
@@ -1704,53 +1676,21 @@ object Relational {
       // arms over `value` — the nonparametric location test the
       // experimentation platform reaches for when Welch's normality
       // assumption is indefensible (heavy-tailed revenue/latency).
-      // Rank enumeration is the scale trap; U never needs it:
-      // U₀ = Σ_v c₀(v)·F₁⁻(v) + ½·Σ_v c₀(v)·c₁(v) over per-value arm
-      // counts, where F₁⁻ is the exclusive cumulative of the other
-      // arm — kept ×2 as exact integers, with the cumulative from the
-      // same 256-bucket two-level decomposition as agg_ks_test (no
-      // global sort at any size). The tie-corrected normal z uses
-      // Σ(t³−t) over tie-group sizes: computed as doubles (exact
-      // while t < 2¹⁷ — ties are per-DISTINCT-VALUE groups, tiny for
-      // a continuous metric; both engines compute identical IEEE
-      // regardless), decimal-captured so the sum is order-free.
-      val arm0 = col("user_id") % 2 === 0
-      val pv = eventsTs(s, d).filter(col("value").isNotNull)
-        .groupBy("value").agg(
-          sum(when(arm0, 1L).otherwise(0L)).as("c0"),
-          sum(when(arm0, 0L).otherwise(1L)).as("c1"))
-      val rng = pv.agg(min("value").as("lo"), max("value").as("hi"),
-        sum("c0").as("n0"), sum("c1").as("n1"))
-      val nB = 256
-      val width = (col("hi") - col("lo")) / nB
-      val withB = pv.crossJoin(broadcast(rng))
-        .withColumn("b",
-          when(col("hi") === col("lo"), lit(0))
-            .otherwise(least(lit(nB - 1),
-              floor((col("value") - col("lo")) / width).cast(IntegerType))))
-      val bt = withB.groupBy("b").agg(sum(col("c1")).as("b1"))
-      val wPre = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-      val pre = bt.select(col("b"),
-        coalesce(sum(col("b1")).over(wPre), lit(0L)).as("p1"))
-      val wIn = Window.partitionBy("b").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val d19 = DecimalType(19, 0)
-      val rows = withB.join(pre, "b")
-        .withColumn("f1x",
-          col("p1") + coalesce(sum(col("c1")).over(wIn), lit(0L)))
-        // ×2 folds into the LONG factor before the decimal cast: a
-        // (38,0)×(1,0) decimal product would need width 39, which
-        // DuckDB rejects outright.
-        .withColumn("u2row",
-          (col("c0") * 2).cast(d19) * col("f1x").cast(d19)
-            + col("c0").cast(d19) * col("c1").cast(d19))
-        .withColumn("t", (col("c0") + col("c1")).cast(DoubleType))
+      // Rank enumeration is the scale trap; U never needs it: U₀ is
+      // [[u2Sum]]/2 over the per-value arm counts, its cumulative from
+      // [[bandedEcdf]] as in agg_ks_test (no global sort at any size).
+      // The tie-corrected normal z uses Σ(t³−t) over tie-group sizes:
+      // computed as doubles (exact while t < 2¹⁷ — ties are
+      // per-DISTINCT-VALUE groups, tiny for a continuous metric; both
+      // engines compute identical IEEE regardless), decimal-captured so
+      // the sum is order-free.
+      val rows = bandedEcdf(valueClassCounts(eventsTs(s, d), userArm0))
+        .withColumn("t", (col("ca") + col("cb")).cast(DoubleType))
         .withColumn("tt",
           round(col("t") * col("t") * col("t") - col("t"), 0)
             .cast(DecimalType(38, 0)))
-      val agg = rows.agg(max(col("n0")).as("n0"), max(col("n1")).as("n1"),
-        sum(col("u2row")).cast(DoubleType).as("u2"),
-        sum(col("tt")).cast(DoubleType).as("ties"))
+      val agg = rows.agg(max(col("n_a")).as("n0"), max(col("n_b")).as("n1"),
+        u2Sum.as("u2"), sum(col("tt")).cast(DoubleType).as("ties"))
       val n0D = col("n0").cast(DoubleType)
       val n1D = col("n1").cast(DoubleType)
       val nD = n0D + n1D
@@ -1770,14 +1710,14 @@ object Relational {
       // Mann–Whitney statistic rescaled (AUC = U⁺/(n⁺·n⁻) = P(score⁺ >
       // score⁻) + ½P(tie)), so it inherits the whole no-rank-enumeration
       // decomposition: per-value class counts (valueClassCounts — the
-      // table the streaming twin maintains), the negative arm's
-      // exclusive cumulative from the agg_ks_test 256-bucket two-level
-      // ECDF (no global sort at any size), everything ×2 as exact
-      // integers decimal-summed; the ONLY IEEE steps are the two closing
-      // divisions, identical in both engines (rocAucTail — shared with
-      // the streaming form). Emits the Gini/accuracy-ratio twin
-      // (2·AUC−1) from the same sum. At 100 TB the per-value table is
-      // the one shuffle; the bucket table is 256 rows.
+      // table the streaming twin maintains), then [[u2Sum]] over the
+      // negative arm's cumulative from [[bandedEcdf]] (no global sort at
+      // any size), everything ×2 as exact integers decimal-summed; the
+      // ONLY IEEE steps are the two closing divisions, identical in both
+      // engines (rocAucTail — shared with the streaming form). Emits the
+      // Gini/accuracy-ratio twin (2·AUC−1) from the same sum. At 100 TB
+      // the per-value table is the one shuffle; the band table is 256
+      // rows.
       rocAucTail(valueClassCounts(eventsTs(s, d)))
     },
 
@@ -1813,7 +1753,7 @@ object Relational {
         .withColumn("pos_rate",
           snap(col("n_pos").cast(DoubleType) / col("n_events")))
         .withColumn("gap", snap(abs(col("avg_score") - col("pos_rate"))))
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       bins
         // (10,6)×(19,0) keeps the product inside width 38 in BOTH
         // engines (gap ≤ 1 at 6 dp; DuckDB rejects wider outright).
@@ -2287,66 +2227,68 @@ object Relational {
         .orderBy("c_nationkey", "c_mktsegment"))
   )
 
-  /** Per-arm (user parity) value sums — the ONLY part of
-    * agg_welch_ttest that touches raw events, hence exactly what its
-    * streaming twin maintains (complete-mode agg, 2 keys forever).
-    * Exact decimal capture per the ts_anomaly_zscore recipe; the
-    * doubles emitted here are the unique decimal→double conversions,
-    * identical wherever the table was accumulated.
+  /** Per-value two-arm counts over the non-null `value`s: `ca` counts
+    * the events where `armA` holds, `cb` the rest. It is the ONLY part of
+    * agg_ks_test, agg_mannwhitney_u and agg_roc_auc that touches raw
+    * events, so it is what agg_roc_auc's streaming twin maintains
+    * (complete-mode agg; state is one key per distinct score, exactly
+    * the batch shuffle's key cardinality — a production deployment with
+    * a truly continuous score pre-bins to its declared score grid and
+    * feeds the same tail). The default arm is agg_roc_auc's positives.
     */
-  /** Per-score-value class counts behind agg_roc_auc — the ONLY part of
-    * the operator that touches raw events, so it is what the streaming
-    * twin maintains (complete-mode agg; state is one key per distinct
-    * score, exactly the batch shuffle's key cardinality — a production
-    * deployment with a truly continuous score pre-bins to its declared
-    * score grid and feeds the same tail).
-    */
-  private[graft] def valueClassCounts(events: DataFrame): DataFrame = {
-    val pos = col("event_type") === "purchase"
+  private[graft] def valueClassCounts(events: DataFrame,
+      armA: Column = col("event_type") === "purchase"): DataFrame =
     events.filter(col("value").isNotNull)
       .groupBy("value").agg(
-        sum(when(pos, 1L).otherwise(0L)).as("cp"),
-        sum(when(pos, 0L).otherwise(1L)).as("cn"))
-  }
+        sum(when(armA, 1L).otherwise(0L)).as("ca"),
+        sum(when(armA, 0L).otherwise(1L)).as("cb"))
 
-  /** AUC/Gini tail over the per-value class-count table: the 256-bucket
-    * two-level ECDF recomposition shared verbatim by the batch operator
-    * and the streaming twin.
+  /** The even-user arm of the user-parity A/B split. */
+  private def userArm0: Column = col("user_id") % 2 === 0
+
+  /** Banded ECDF over a [[valueClassCounts]] table: attaches the 1-row
+    * (lo, hi, n_a, n_b) range and adds `fa` and `fb`, each arm's count
+    * over the values strictly below this one. The values band into 256
+    * equal-width ranges of [lo, hi], a band that rises with the value,
+    * so [[Tables.sumBefore]] computes the exact cumulative with no
+    * global sort of the distinct values at any size, equal to the flat
+    * global-window ECDF the oracles compute.
     */
-  private[graft] def rocAucTail(pv: DataFrame): DataFrame = {
+  private def bandedEcdf(pv: DataFrame): DataFrame = {
     val rng = pv.agg(min("value").as("lo"), max("value").as("hi"),
-      sum("cp").as("np"), sum("cn").as("nn"))
+      sum("ca").as("n_a"), sum("cb").as("n_b"))
     val nB = 256
     val width = (col("hi") - col("lo")) / nB
-    val withB = pv.crossJoin(broadcast(rng))
-      .withColumn("b",
-        when(col("hi") === col("lo"), lit(0))
-          .otherwise(least(lit(nB - 1),
-            floor((col("value") - col("lo")) / width).cast(IntegerType))))
-    val bt = withB.groupBy("b").agg(sum(col("cn")).as("bn"))
-    val wPre = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    val pre = bt.select(col("b"),
-      coalesce(sum(col("bn")).over(wPre), lit(0L)).as("pn"))
-    val wIn = Window.partitionBy("b").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val d19 = DecimalType(19, 0)
-    val rows = withB.join(pre, "b")
-      .withColumn("fnx",
-        col("pn") + coalesce(sum(col("cn")).over(wIn), lit(0L)))
-      // ×2 folds into the LONG factor before the decimal cast (the
-      // agg_mannwhitney_u width-39 rationale).
-      .withColumn("a2row",
-        (col("cp") * 2).cast(d19) * col("fnx").cast(d19)
-          + col("cp").cast(d19) * col("cn").cast(d19))
-    val agg2 = rows.agg(max(col("np")).as("n_pos"),
-      max(col("nn")).as("n_neg"),
-      sum(col("a2row")).cast(DoubleType).as("a2"))
-    agg2.select(col("n_pos"), col("n_neg"),
-      round(col("a2") / 2 /
-        (col("n_pos").cast(DoubleType) * col("n_neg")), 6).as("auc"),
-      round(col("a2") /
-        (col("n_pos").cast(DoubleType) * col("n_neg")) - 1, 6).as("gini_ar"))
+    val band = when(col("hi") === col("lo"), lit(0))
+      .otherwise(least(lit(nB - 1),
+        floor((col("value") - col("lo")) / width).cast(IntegerType)))
+    sumBefore(pv.crossJoin(broadcast(rng)), Nil, band, Seq(col("value")),
+      "fa" -> col("ca"), "fb" -> col("cb"))
   }
+
+  /** 2·U of arm a against arm b over a [[bandedEcdf]] table,
+    * Σ_v 2·c_a·F_b + c_a·c_b, summed exactly in DECIMAL(19,0) and read
+    * as a double. The ×2 folds into the LONG factor before the decimal
+    * cast: a (38,0)×(1,0) decimal product would need width 39, which
+    * DuckDB rejects outright.
+    */
+  private def u2Sum: Column = {
+    val d19 = DecimalType(19, 0)
+    sum((col("ca") * 2).cast(d19) * col("fb").cast(d19)
+      + col("ca").cast(d19) * col("cb").cast(d19)).cast(DoubleType)
+  }
+
+  /** AUC/Gini tail over the per-value class-count table, shared
+    * verbatim by the batch operator and the streaming twin.
+    */
+  private[graft] def rocAucTail(pv: DataFrame): DataFrame =
+    bandedEcdf(pv).agg(max(col("n_a")).as("n_pos"),
+        max(col("n_b")).as("n_neg"), u2Sum.as("a2"))
+      .select(col("n_pos"), col("n_neg"),
+        round(col("a2") / 2 /
+          (col("n_pos").cast(DoubleType) * col("n_neg")), 6).as("auc"),
+        round(col("a2") /
+          (col("n_pos").cast(DoubleType) * col("n_neg")) - 1, 6).as("gini_ar"))
 
   /** Cohen's d tail over the same 2-row per-arm table as welchTail —
     * the effect-size readout that tells an experimenter whether a
@@ -2377,6 +2319,13 @@ object Relational {
         .otherwise("large").as("magnitude"))
   }
 
+  /** Per-arm (user parity) value sums — the ONLY part of
+    * agg_welch_ttest that touches raw events, hence exactly what its
+    * streaming twin maintains (complete-mode agg, 2 keys forever).
+    * Exact decimal capture per the ts_anomaly_zscore recipe; the
+    * doubles emitted here are the unique decimal→double conversions,
+    * identical wherever the table was accumulated.
+    */
   private[graft] def armValueSums(events: DataFrame): DataFrame = {
     val d6 = col("value").cast(DecimalType(18, 6))
     events.groupBy((col("user_id") % 2).as("arm"))
@@ -3203,8 +3152,8 @@ object Relational {
         |    / ((sxx - sb) / (n - k)) * 1000000 + 0.5) / 1000000.0 AS f_stat
         |FROM t""".stripMargin,
 
-    // The FLAT global-window ECDF — the Spark side runs the 256-bucket
-    // two-level decomposition; the hash gate proves it lossless.
+    // The FLAT global-window ECDF — the Spark side runs it as a
+    // Tables.sumBefore over 256 bands; the hash gate proves it lossless.
     "agg_ks_test" ->
       """WITH pv AS (
         |  SELECT value,
@@ -3245,7 +3194,7 @@ object Relational {
         |FROM c""".stripMargin,
 
     // The FLAT global-window form (like agg_ks_test's oracle) — the
-    // Spark side runs the 256-bucket decomposition.
+    // Spark side runs the same 256-band ECDF.
     "agg_mannwhitney_u" ->
       """WITH pv AS (
         |  SELECT value,
@@ -3278,7 +3227,7 @@ object Relational {
         |FROM s, t""".stripMargin,
 
     // The FLAT global-window form again — the Spark side runs the same
-    // 256-bucket decomposition as agg_mannwhitney_u with the class flag
+    // 256-band ECDF and U sum as agg_mannwhitney_u with the class flag
     // swapped from user parity to event_type.
     "agg_roc_auc" ->
       """WITH pv AS (

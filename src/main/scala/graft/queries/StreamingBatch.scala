@@ -500,7 +500,7 @@ object StreamingBatch {
         .select(expr("(us DIV 86400000000 + 4) % 7").as("dow"), col("value"))
         .groupBy("dow")
         .agg(sum(dec(col("value"))).as("sv"), count(lit(1)).as("n"))
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       byDow
         .withColumn("sv_all", sum(col("sv")).over(wAll))
         .withColumn("n_all", sum(col("n")).over(wAll))
@@ -1314,7 +1314,7 @@ object StreamingBatch {
     def r6(c: org.apache.spark.sql.Column) =
       floor(c * 1000000 + 0.5).cast(DoubleType) / 1000000.0
     val w = Window.orderBy("h")
-    val wAll = Window.partitionBy(lit(1))
+    val wAll = Window.partitionBy()
     hc.withColumn("k", row_number().over(w).cast(LongType))
       .withColumn("cum", sum("n").over(w))
       .withColumn("tot", sum("n").over(wAll))
@@ -1443,7 +1443,7 @@ object StreamingBatch {
       val centered = seas
         .withColumn("grand",
           (sum(col("idx").cast(DecimalType(28, 9)))
-            .over(Window.partitionBy(lit(1)))).cast(DoubleType) / lit(24.0))
+            .over(Window.partitionBy())).cast(DoubleType) / lit(24.0))
         .select(col("hod"), (col("idx") - col("grand")).as("seasonal_idx"))
       t.join(broadcast(centered), "hod")
         .select(col("h"), col("n"),

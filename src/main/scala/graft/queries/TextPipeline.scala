@@ -170,33 +170,16 @@ object TextPipeline {
     * materialized. Shared by dedup_clusters (cluster emission) and
     * pipeline_dedup_corpus (survivor mapping over the full corpus).
     */
-  // The converged label table's checkpoint blocks back each consumer
-  // (cluster emission, corpus label join). Callers receive a LAZY
-  // DataFrame, so releasing them inside this method would drop the
-  // only copy before materialization; instead the PREVIOUS call's
-  // table is released on the next call, bounding the session to one
-  // live label table (KBs per 10^6 near-dup nodes) instead of one per
-  // query execution.
-  private var lastCcLabels: Option[DataFrame] = None
-
-  private def ccLabels(s: SparkSession, d: String): DataFrame = synchronized {
+  private def ccLabels(s: SparkSession, d: String): DataFrame = {
     // The unsorted pairs, not the dedup_jaccard_pairs emission:
     // its orderBy would cost a range-sampling job and an exchange the
     // fixpoint never needs.
     val truthPairs = jaccardPairs(s, d).select(col("id_a"), col("id_b"))
     // The min-label pointer-jumping fixpoint itself lives in
-    // [[Cc.minLabel]] (shared with pipeline_mm_dedup since round 14);
-    // this wrapper adds the per-session memoization the converged/
-    // full siblings rely on.
-    val labels = Cc.minLabel(truthPairs, "ccLabels")
-    // The previous table may belong to an earlier (now-stopped)
-    // SparkSession: unpersist on a dead context NPEs in
-    // BlockManagerMaster, and a dead context has nothing to free.
-    lastCcLabels.foreach { prev =>
-      if (!prev.sparkSession.sparkContext.isStopped) Cc.release(prev)
-    }
-    lastCcLabels = Some(labels)
-    labels
+    // [[Cc.minLabel]] (shared with pipeline_mm_dedup). Its checkpoint
+    // is the label table's only copy: the caller's [[CacheDrain]]
+    // releases it once the emission has run, as for every fixpoint key.
+    Cc.minLabel(truthPairs, "ccLabels")
   }
 
   /** Train the first `k` BPE merges on a collapsed (w, c) word table —
@@ -1015,8 +998,10 @@ object TextPipeline {
       // even on disjoint vocab — exactly why it beats raw KL here).
       // Terms ABSENT from a source contribute 0.5·ln2·q_t in closed
       // form (m = q/2 there), so every sum runs only over the (source,
-      // term) table: one vocab-bounded shuffle, with the corpus term
-      // table broadcast back carrying its window-computed total. Each
+      // term) table: one vocab-bounded shuffle, joined to the
+      // per-source totals and to the corpus term counts. The corpus
+      // total n is a window over the #sources-row totals table (the
+      // pipeline_mixture_weights shape), never over the vocabulary. Each
       // per-term contribution is rounded to a 1e-9 grid and summed in
       // exact decimals (order-free — the ln ulp hazard and the
       // double-sum order hazard both die at the grid), so the oracle
@@ -1026,9 +1011,9 @@ object TextPipeline {
         .select(col("source"), explode(split(col("text"), " ")).as("term"))
       val st = toks.groupBy("source", "term").agg(count(lit(1)).as("c_st"))
       val ns = st.groupBy("source").agg(sum("c_st").as("n_s"))
+        .withColumn("n", sum(col("n_s")).over(Window.partitionBy()))
       val ct = st.groupBy("term").agg(sum("c_st").as("c_t"))
-        .withColumn("n", sum(col("c_t")).over(Window.partitionBy(lit(1))))
-      val j = st.join(ns, "source").join(broadcast(ct), "term")
+      val j = st.join(ns, "source").join(ct, "term")
         .withColumn("p", col("c_st").cast(DoubleType) / col("n_s"))
         .withColumn("q", col("c_t").cast(DoubleType) / col("n"))
         .withColumn("m", (col("p") + col("q")) / lit(2.0))
@@ -1674,7 +1659,7 @@ object TextPipeline {
       val srcs = documents(s, d).select("source").distinct()
         .withColumn("src_idx", row_number().over(wSrc).cast(LongType))
         .withColumn("n_src", count(lit(1)).over(
-          Window.partitionBy(lit(1))).cast(LongType))
+          Window.partitionBy()).cast(LongType))
       val wIn = Window.partitionBy("source").orderBy(h, col("doc_id"))
       documents(s, d).select(col("doc_id"), col("source"))
         .join(broadcast(srcs), "source")
@@ -1688,26 +1673,17 @@ object TextPipeline {
       // Deterministic global corpus shuffle — the "shuffle your training
       // data before packing" step — WITHOUT the single-partition trap: a
       // naive global row_number() window funnels the whole corpus
-      // through one task. Two-level shape instead: the md5 order key's
-      // first two hex chars form 256 coarse buckets; pass 1 counts rows
-      // per bucket (a tiny aggregate) and an exclusive prefix sum over
-      // that ≤256-row table (the only unpartitioned window, bounded at
-      // 256 rows at ANY corpus size) gives each bucket's global start
-      // offset; pass 2 ranks within a bucket, whose window partitions
-      // are ~corpus/256. pos = bucket_start + intra_rank − 1 reproduces
-      // the exact global permutation because the bucket is a prefix of
-      // the order key — ordering by (bucket, h) ≡ ordering by h.
+      // through one task. pos is the number of docs before this one in
+      // (h, doc_id) order, a [[Tables.sumBefore]] of 1 whose bucket is
+      // the md5 order key's first two hex chars: a prefix of the order
+      // key, so the 256 buckets rise along it, the start prefix runs
+      // over a ≤256-row table at ANY corpus size, and the in-bucket
+      // windows partition ~corpus/256 rows each.
       val h = md5(concat(lit("graft-shuffle:"), col("doc_id").cast(StringType)))
-      val docs = documents(s, d).select(col("doc_id"), h.as("h"),
-        conv(substring(h, 1, 2), 16, 10).cast(LongType).as("bkt"))
-      val offs = docs.groupBy("bkt").agg(count(lit(1)).as("n"))
-        .withColumn("bucket_start", coalesce(
-          sum(col("n")).over(Window.orderBy("bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bkt", "bucket_start")
-      val wIn = Window.partitionBy("bkt").orderBy("h", "doc_id")
-      docs.join(broadcast(offs), "bkt")
-        .withColumn("pos", col("bucket_start") + row_number().over(wIn) - 1)
+      val docs = documents(s, d).select(col("doc_id"), h.as("h"))
+      sumBefore(docs, Nil,
+          conv(substring(col("h"), 1, 2), 16, 10).cast(LongType),
+          Seq(col("h"), col("doc_id")), "pos" -> lit(1L))
         .select("pos", "doc_id")
         .orderBy("pos")
     },
@@ -1716,29 +1692,19 @@ object TextPipeline {
       // Token-budget corpus slice — "the first 2000 tokens per language
       // in deterministic shuffle order", the data-mixing primitive that
       // assembles a training mix from per-language/per-source token
-      // budgets. Same two-level trick as shuffle_global, with token
-      // SUMS instead of row counts: per-(lang, bucket) totals roll up
-      // to bucket start offsets (tiny), the in-bucket running sum is
-      // windowed per (lang, bucket), and a doc is admitted iff the
-      // tokens consumed strictly before it are under budget (greedy
-      // take-while; the boundary doc may overshoot, matching how
-      // packing then consumes it). No window partition ever exceeds
-      // ~corpus/256 rows, so the slice stays parallel at 100 TB.
+      // budgets. The tokens consumed strictly before a doc are a
+      // per-language [[Tables.sumBefore]] over shuffle_global's md5
+      // prefix buckets, so no window partition ever exceeds ~corpus/256
+      // rows and the slice stays parallel at 100 TB; a doc is admitted
+      // iff that sum is under budget (greedy take-while; the boundary
+      // doc may overshoot, matching how packing then consumes it).
       val budget = 2000L
       val h = md5(concat(lit("graft-mix:"), col("doc_id").cast(StringType)))
       val docs = documents(s, d).select(col("doc_id"), col("lang"),
-        size(split(col("text"), " ")).cast(LongType).as("n_tok"),
-        h.as("h"), conv(substring(h, 1, 2), 16, 10).cast(LongType).as("bkt"))
-      val offs = docs.groupBy("lang", "bkt").agg(sum(col("n_tok")).as("t"))
-        .withColumn("bucket_start", coalesce(
-          sum(col("t")).over(Window.partitionBy("lang").orderBy("bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("lang", "bkt", "bucket_start")
-      val wIn = Window.partitionBy("lang", "bkt").orderBy("h", "doc_id")
-      docs.join(broadcast(offs), Seq("lang", "bkt"))
-        .withColumn("consumed_before", col("bucket_start") + coalesce(
-          sum(col("n_tok")).over(wIn.rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
+        size(split(col("text"), " ")).cast(LongType).as("n_tok"), h.as("h"))
+      sumBefore(docs, Seq("lang"),
+          conv(substring(col("h"), 1, 2), 16, 10).cast(LongType),
+          Seq(col("h"), col("doc_id")), "consumed_before" -> col("n_tok"))
         .filter(col("consumed_before") < budget)
         .select(col("doc_id"), col("lang"), col("n_tok"), col("consumed_before"))
         .orderBy("doc_id")
@@ -2314,7 +2280,7 @@ object TextPipeline {
       // from that tiny table by an unpartitioned window, never a second
       // scan. weight = (total/k)/source_tokens on identical IEEE
       // doubles, floored at 1e-6.
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       documents(s, d)
         .select(col("source"), size(split(col("text"), " ")).cast(LongType).as("n_tok"))
         .groupBy("source")
@@ -2341,7 +2307,7 @@ object TextPipeline {
       // tiny table (the mixture_weights rationale) — input-size-free
       // after the scan. epochs snapped at 1e-6; the flag compares the
       // UNROUNDED quotient (identical IEEE in both engines).
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       val ep = col("tot").cast(DoubleType) * 3 / col("k") / col("n_tokens")
       documents(s, d)
         .select(col("source"),
@@ -2397,7 +2363,7 @@ object TextPipeline {
       // consumes (doc, n_copies) pairs directly).
       val docs = documents(s, d).select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast(LongType).as("n_tok"))
-      val wAll = Window.partitionBy(lit(1))
+      val wAll = Window.partitionBy()
       val weights = docs.groupBy("source")
         .agg(sum(col("n_tok")).as("n_tokens"))
         .withColumn("tot", sum(col("n_tokens")).over(wAll))
@@ -3547,9 +3513,9 @@ object TextPipeline {
         |FROM offs GROUP BY lang, shard, bin
         |ORDER BY lang, shard, bin""".stripMargin,
 
-    // The two-level (bucket prefix-sum + in-bucket window) Spark shape
-    // equals one flat global window because the bucket is a prefix of
-    // the md5 order key — so the oracle can use the simple form.
+    // The two-level Spark shape (Tables.sumBefore) equals one flat
+    // global window because the bucket is a prefix of the md5 order
+    // key — so the oracle can use the simple form.
     "shuffle_global" ->
       """SELECT CAST(row_number() OVER (
         |    ORDER BY md5('graft-shuffle:' || CAST(doc_id AS VARCHAR)), doc_id)

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LLM-pipeline operators that have no SQL oracle (SURVEY.md §5.2):
@@ -723,6 +726,31 @@ class PipelineSpec extends AnyFunSuite with GraftSuite {
       assert(kept == (id == surv), s"doc $id: kept=$kept but survivor=$surv")
       assert(surv <= id, s"doc $id: survivor $surv is not the min member")
     }
+  }
+
+  test("building dedup_clusters keeps the label blocks of a built pipeline_dedup_corpus") {
+    // Both keys run the connected-components fixpoint, whose checkpoint
+    // is the label table's only copy; the caller's drain is the one
+    // point that releases it. Building the second key must leave the
+    // first key's lazy frame readable.
+    val corpus = SparkEntry.queries("pipeline_dedup_corpus")(spark, sf)
+    val labelRdds = corpus.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd.id
+    }
+    assert(labelRdds.nonEmpty, "pipeline_dedup_corpus reads no checkpoint")
+    SparkEntry.queries("dedup_clusters")(spark, sf)
+    // A release frees its blocks asynchronously: wait until a label
+    // table that is no longer registered as persistent has lost its
+    // blocks, so the read below sees what a later action would.
+    val released = labelRdds.filterNot(spark.sparkContext.getPersistentRDDs.contains)
+    def blocksLeft = SparkEnv.get.blockManager.master.getMatchingBlockIds({
+      case RDDBlockId(r, _) => released.contains(r)
+      case _ => false
+    }, askStorageEndpoints = true).size
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (released.nonEmpty && blocksLeft > 0 && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(corpus.collect().length == Tables.documents(spark, sf).count())
   }
 
   test("graph_k_core output satisfies the core invariant (every degree >= 5)") {

@@ -246,10 +246,11 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
   }
 
   test("two-level global-order ops broadcast their offset table") {
-    // shuffle_global / sample_token_budget exist precisely to avoid a
-    // global window; the ≤256-row bucket-offset table must come back to
-    // the corpus as a broadcast, never by shuffling the corpus.
-    for (q <- Seq("shuffle_global", "sample_token_budget")) {
+    // shuffle_global / sample_token_budget / mm_shard_pack exist
+    // precisely to avoid a global window; the small bucket-offset table
+    // must come back to the corpus as a broadcast, never by shuffling
+    // the corpus.
+    for (q <- Seq("shuffle_global", "sample_token_budget", "mm_shard_pack")) {
       val p = plan(q)
       assert(p.contains("BroadcastHashJoin"),
         s"$q: offsets join is not broadcast:\n$p")
@@ -479,11 +480,11 @@ class PlanSpec extends AnyFunSuite with GraftSuite {
     // ALREADY REDUCED by a grouped aggregate whose key domain is
     // structurally bounded — value grids (spearman: quantity 1..50 /
     // 11 discount points), digit/bucket/hour domains (benford ≤9,
-    // ks-style 256-bucket bands in js_divergence/mixture_resample,
     // cusum/ltob/stl/seasonal hourly-bucket series, shuffle_global's
     // bucket prefix), or #source-row tables (epoch_plan, interleave,
-    // mixture_weights, chi_square/cramers_v/MI status×priority
-    // contingency). Their scaladocs carry the boundedness argument;
+    // mixture_weights, js_divergence, mixture_resample,
+    // chi_square/cramers_v/MI status×priority contingency). Their
+    // scaladocs carry the boundedness argument;
     // the gate exists to stop NEW data-sized instances (the
     // text_vocab_build / zipf / bigram_lm class this round removed).
     // Fixed-bin tables over a clamped bin key belong here too, though
