@@ -70,6 +70,13 @@ import org.apache.spark.sql.graftbridge.{OfRows, Unpersist}
   *   then needs 69-133 rounds over three random shufflings, past the
   *   30-round cap, where the loop fails loudly instead of emitting a
   *   split clustering.
+  *
+  * Every converging key runs its loop on [[fixpoint]], the one driver:
+  * min-label here, PageRank, HITS, k-core and both Louvain loops
+  * (Graph), and the small-state trainers (Vectors.stationary). A caller
+  * keeps only its step and its emission; the driver owns the cap and
+  * its loud failure, and releases each superseded state only after the
+  * step has materialized its successor, never the state it returns.
   */
 object Cc {
 
@@ -89,17 +96,19 @@ object Cc {
     val (init, r0) = round(
       star.groupBy("id").agg(min(col("root")).as("label"), max(col("root")).as("top")),
       col("label") < col("top"), Seq("id", "label"))
-    var labels = init
-    var changed = r0.getAs[Long]("changed")
     // Both directions of every star edge, from one pass over S.
     val edges = star
       .select(explode(array(
         struct(col("id").as("id_a"), col("root").as("id_b")),
         struct(col("root").as("id_a"), col("id").as("id_b")))).as("e"))
       .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"))
-    val noPrev = lit(null).cast(labels.schema("label").dataType)
-    var rounds = 0
-    while (changed != 0L && rounds < 30) {
+    val noPrev = lit(null).cast(init.schema("label").dataType)
+    // An unconverged fixpoint fails loudly: a partial propagation would
+    // emit labels that are upper bounds, i.e. a WRONG (split)
+    // clustering, and only the gate harness's hash — not a standalone
+    // caller — would notice.
+    val labels = fixpoint(s"$what (min-label propagation)", 30)(
+        init, r0.getAs[Long]("changed") != 0L) { labels =>
       // ONE join brings each node its neighbors' labels AND its
       // label's label: the right side is every edge plus a pseudo-edge
       // label(v) → v. Labels always point at real node ids (min over
@@ -113,18 +122,8 @@ object Cc {
         .groupBy("id")
         .agg(min(col("label")).as("label"), max(col("prev")).as("prev"))
       val (cp, r) = round(next, col("label") < col("prev"), Seq("id", "label"))
-      release(labels)
-      labels = cp
-      changed = r.getAs[Long]("changed")
-      rounds += 1
-    }
-    // An unconverged fixpoint must fail loudly: a partial propagation
-    // would emit labels that are upper bounds, i.e. a WRONG (split)
-    // clustering, and only the gate harness's hash — not a standalone
-    // caller — would notice.
-    require(changed == 0L,
-      s"$what: min-label propagation did not converge in $rounds rounds" +
-        " — emission would be a partial (split) clustering")
+      (cp, r.getAs[Long]("changed") != 0L)
+    }(release)
     star.unpersist()
     labels
   }
@@ -172,6 +171,32 @@ object Cc {
     def hasNext: Boolean = out.hasNext || fill()
     def next(): (Long, Long) =
       if (hasNext) out.next() else throw new NoSuchElementException("contract")
+  }
+
+  /** The one convergence driver: from `s0`, runs `step` while the
+    * last round moved (`moved0` for the start state), and never more
+    * than `cap` times; returns the first state a step reports unmoved.
+    * A step returns its successor, materialized, and whether it moved.
+    * Once it has returned, the state it superseded is `release`d unless
+    * it equals the successor: a returned state is never released, so a
+    * step that returns its own input releases nothing. A state still
+    * moving after `cap` steps throws: an unconverged fixpoint would
+    * emit a truncation, so the cap bounds a broken schedule and is
+    * never a silent exit.
+    */
+  def fixpoint[S](what: String, cap: Int)(s0: S, moved0: Boolean)
+      (step: S => (S, Boolean))(release: S => Unit): S = {
+    @annotation.tailrec
+    def go(s: S, moved: Boolean, n: Int): S =
+      if (!moved) s
+      else {
+        require(n < cap, s"$what: did not converge in $cap rounds — emission " +
+          "would be a truncation, not the fixed point")
+        val (next, m) = step(s)
+        if (next != s) release(s)
+        go(next, m, n + 1)
+      }
+    go(s0, moved0, 0)
   }
 
   /** One fixpoint round in ONE SQL execution: eagerly localCheckpoints

@@ -89,11 +89,9 @@ object Graph {
     * `d`; the first invocation trains, repeats and downstream consumers
     * (graph_louvain_full's level-1 input) re-seed from the held rows
     * (~2k at sf0.1 — node-sized on the witness graph; a persisted
-    * artifact table in production). `sweeps` records the improving-sweep
-    * count for the SCALING story.
+    * artifact table in production).
     */
-  private case class Louvain10Art(labelsPath: String, q: Double,
-      sweeps: Int)
+  private case class Louvain10Art(labelsPath: String, q: Double)
 
   /** The %10 phase-1 fixpoint artifact — single-flight through
     * ArtifactMemo.once: the trainer itself is the memo value, so no
@@ -114,7 +112,7 @@ object Graph {
       memoKey: String): Louvain10Art = {
     val und = undirectedEdges(s, d, 10).persist()
     val g = CGraph.of(unit(und)).held
-    val (lab, q, sweeps) = phase1(g, hash64,
+    val (lab, q) = phase1(g, hash64,
       modularity(g, hash64).head().getDouble(0), 40, "graph_louvain_converged")
     // Node-sized (corpus-proportional) labels: a parquet label table,
     // never driver memory (r12 review).
@@ -122,7 +120,7 @@ object Graph {
       "artlouv10" + graft.Tables.md5hex(memoKey).take(12), d)
     lab.write.mode("overwrite").parquet(labPath)
     Cc.release(lab); Cc.release(g.deg); und.unpersist()
-    Louvain10Art(labPath, q, sweeps)
+    Louvain10Art(labPath, q)
   }
 
   /** The lineitem-derived co-occurrence WITNESS GRAPHS every graph
@@ -325,42 +323,31 @@ object Graph {
 
   /** Louvain phase 1 to its Q dip: sweeps from `start`, whose Q is `q0`,
     * while Q strictly improves, and returns the last improving
-    * partition as an (i, c) table, its Q and the number of improving
-    * sweeps; the first sweep that does not improve is discarded. Throws
-    * if Q still improves after `cap` sweeps: a mid-ascent partition
-    * would under-report the refinement. Zero moves is no stop rule here:
-    * the synchronous sweep can swap nodes forever, while Q rises and
-    * then dips. Each sweep's labels are one eager, row-count-sized
-    * checkpoint ([[Cc.round]]), so plans stay flat and their estimates
-    * real; Q is one O(1) driver read per sweep. (A variant deriving Q
-    * from the sweep's own kin/ktot, with no edge joins, measured slower:
-    * 44 s vs 32 s on the %3 graph; caching the wide pre-argmax frame
-    * cost more than the two small edge joins it saved.) `g` is meant to
-    * be [[CGraph.held]].
+    * partition as an (i, c) table and its Q; the first sweep that does
+    * not improve is discarded, and the step returns its input unmoved.
+    * Throws if Q still improves after `cap` sweeps ([[Cc.fixpoint]]): a
+    * mid-ascent partition would under-report the refinement. Zero moves
+    * is no stop rule here: the synchronous sweep can swap nodes forever,
+    * while Q rises and then dips. Each sweep's labels are one eager,
+    * row-count-sized checkpoint ([[Cc.round]]), so plans stay flat and
+    * their estimates real; Q is one O(1) driver read per sweep. (A
+    * variant deriving Q from the sweep's own kin/ktot, with no edge
+    * joins, measured slower: 44 s vs 32 s on the %3 graph; caching the
+    * wide pre-argmax frame cost more than the two small edge joins it
+    * saved.) `g` is meant to be [[CGraph.held]].
     */
   private def phase1(g: CGraph, start: Part, q0: Double, cap: Int,
-      what: String): (DataFrame, Double, Int) = {
-    var lab = start
-    var q = q0
-    var sweeps = 0
-    var dipped = false
-    while (!dipped && sweeps < cap) {
+      what: String): (DataFrame, Double) = {
+    val (lab, q) = Cc.fixpoint(what, cap)((start, q0), moved0 = true) { case st @ (lab, q) =>
       val nxt = Cc.round(sweep(g, lab), lit(false), Seq("i", "c"))._1
       val qn = modularity(g, Labels(nxt)).head().getDouble(0)
-      dipped = qn <= q
-      if (dipped) Cc.release(nxt)
-      else {
-        if (lab ne start) Cc.release(lab.table(g))
-        lab = Labels(nxt)
-        q = qn
-      }
-      sweeps += 1
+      if (qn > q) ((Labels(nxt), qn), true)
+      else { Cc.release(nxt); (st, false) } // the dip: the sweep is rejected
+    } {
+      case (Labels(t), _) => Cc.release(t)
+      case _ => () // the start partition: a function of the node id
     }
-    require(dipped,
-      s"$what: Q still strictly improving after $sweeps sweeps (Q=$q) — " +
-        "raise the cap; emitting a mid-ascent partition would under-report " +
-        "the refinement")
-    (lab.table(g), q, sweeps - 1)
+    (lab.table(g), q)
   }
 
   /** One synchronous plurality-vote step of label propagation from the
@@ -487,30 +474,25 @@ object Graph {
               .as("q"))
       }
       val out = Seq("ntype", "node_id", "q")
-      var (q, r) = Cc.round(
+      val (q0, r0) = Cc.round(
         wed.select(lit("s").as("ntype"), col("src").as("node_id")).distinct()
           .unionByName(
             wed.select(lit("p").as("ntype"), col("dst").as("node_id")).distinct())
           .withColumn("q", lit(1.0)),
         lit(false), out, dmass)
-      val n = r.getAs[Long]("rows")
-      var rounds = 0
-      do {
-        // Quantized q compares EXACTLY (every value is round(·, 4)).
-        val (next, rn) = Cc.round(step(q, r.getAs[Double]("dmass") / n),
-          col("q") =!= col("prev"), out, dmass)
-        // D is a sum: a task counted twice would shift it, and it would
-        // also add rows, so a double count fails here instead.
-        require(rn.getAs[Long]("rows") == n,
-          s"graph_pagerank_converged: round ${rounds + 1} observed " +
-            s"${rn.getAs[Long]("rows")} rows, not $n")
-        Cc.release(q)
-        q = next; r = rn
-        rounds += 1
-      } while (r.getAs[Long]("changed") != 0L && rounds < 100)
-      require(r.getAs[Long]("changed") == 0L,
-        s"graph_pagerank_converged: no stationary point in $rounds rounds" +
-          " — emission would be a truncated, non-converged vector")
+      val n = r0.getAs[Long]("rows")
+      val (q, _) = Cc.fixpoint("graph_pagerank_converged", 100)((q0, r0), moved0 = true) {
+        case (cur, r) =>
+          // Quantized q compares EXACTLY (every value is round(·, 4)).
+          val (next, rn) = Cc.round(step(cur, r.getAs[Double]("dmass") / n),
+            col("q") =!= col("prev"), out, dmass)
+          // D is a sum: a task counted twice would shift it, and it would
+          // also add rows, so a double count fails here instead.
+          require(rn.getAs[Long]("rows") == n,
+            s"graph_pagerank_converged: a round observed " +
+              s"${rn.getAs[Long]("rows")} rows, not $n")
+          ((next, rn), rn.getAs[Long]("changed") != 0L)
+      } { case (cur, _) => Cc.release(cur) }
       wed.unpersist()
       // q backs the returned plan and is the caller's to drain
       // (CacheDrain).
@@ -575,11 +557,10 @@ object Graph {
       val raw = Seq("node_id", "raw")
       val noRaw = lit(null).cast(DoubleType)
       // Round 0: every hub at raw 1 (so qh = 1); no authority yet.
-      var hRaw = edges.select(col("src").as("node_id")).distinct().withColumn("raw", lit(1.0))
-      var aRaw = edges.limit(0).select(col("dst").as("node_id"), noRaw.as("raw"))
-      var (ma, mh, changed) = (1.0, 1.0, 1L)
-      var rounds = 0
-      while (changed != 0L && rounds < 60) {
+      val hRaw0 = edges.select(col("src").as("node_id")).distinct().withColumn("raw", lit(1.0))
+      val aRaw0 = edges.limit(0).select(col("dst").as("node_id"), noRaw.as("raw"))
+      val (aRaw, hRaw, ma, mh) = Cc.fixpoint("graph_hits_converged", 60)(
+          (aRaw0, hRaw0, 1.0, 1.0), moved0 = true) { case (aRaw, hRaw, _, mh) =>
         val hubQ = hRaw.select(col("node_id").as("src"), round(col("raw") / lit(mh), 4).as("qh"))
         val (a, ra) = Cc.round(
           edges.join(hubQ, "src").select(col("dst").as("node_id"), col("qh"), noRaw.as("prev"))
@@ -589,22 +570,15 @@ object Graph {
             // [0,1], so per-node Σ|qh| < 9e9 holds to ~9 billion in-edges.
             .agg(lsum(col("qh"), 6).as("raw"), max(col("prev")).as("prev")),
           !(col("raw") <=> col("prev")), raw, max(col("raw")).as("ma"))
-        ma = ra.getAs[Double]("ma")
+        val ma = ra.getAs[Double]("ma")
         val (h, rh) = Cc.round(
           edges.join(a.select(col("node_id").as("dst"),
               round(col("raw") / lit(ma), 4).as("qa")), "dst")
             .groupBy(col("src").as("node_id"))
             .agg(lsum(col("qa"), 6).as("raw")),
           lit(false), raw, max(col("raw")).as("mh"))
-        mh = rh.getAs[Double]("mh")
-        Cc.release(aRaw); Cc.release(hRaw)
-        aRaw = a; hRaw = h
-        changed = ra.getAs[Long]("changed")
-        rounds += 1
-      }
-      require(changed == 0L,
-        s"graph_hits_converged: no stationary point in $rounds rounds" +
-          " — emission would be a truncated, non-converged vector")
+        ((a, h, ma, rh.getAs[Double]("mh")), ra.getAs[Long]("changed") != 0L)
+      } { case (aRaw, hRaw, _, _) => Cc.release(aRaw); Cc.release(hRaw) }
       edges.unpersist()
       aRaw.select(lit("p").as("ntype"), col("node_id"), round(col("raw") / lit(ma), 4).as("score"))
         .unionByName(hRaw.select(lit("s").as("ntype"), col("node_id"),
@@ -1151,10 +1125,11 @@ object Graph {
       // over the contraction must EXACTLY equal the previous level's
       // final Q — graph_coarsen_invariant's theorem, require()d per
       // level, so a bookkeeping slip in the weighted contraction
-      // cannot emit silently; (2) the inner loop require()s its dip
+      // cannot emit silently; (2) the inner loop fails unless it dips
       // within the sweep cap (the converged contract); (3) the outer
-      // loop require()s termination within the level cap — a still-
+      // loop fails unless it stops within the level cap — a still-
       // improving level-4 is a red gate, never a truncated emission.
+      // Both loops run on Cc.fixpoint, which owns both caps.
       //
       // Oracle-able by composition: the oracle unrolls the fine ladder
       // (40) + two weighted ladders (16 each) of the same arithmetic
@@ -1176,41 +1151,32 @@ object Graph {
       // Level state as eager checkpoints sized by their observed row
       // counts ([[Cc.round]]), not by the plan's estimate.
       def checkpoint(df: DataFrame): DataFrame = Cc.round(df, lit(false), df.columns.toSeq)._1
-      var cur = checkpoint(contract(unit(undirectedEdges(s, d, 10)), Labels(lab1)))
-      var curQ = art.q
-      var compo = lab1 // fine i → community at the current final level
-      var levels = 1
-      var improving = true
-      while (improving && levels < 4) {
+      // State: the current coarse graph, the fine i → community map at
+      // the current final level (node-sized, the next level joins it),
+      // its Q and the level count. Cc.release of the parquet-read lab1
+      // is a no-op unpersist.
+      val cur0 = checkpoint(contract(unit(undirectedEdges(s, d, 10)), Labels(lab1)))
+      val (cur, compo, curQ, levels) = Cc.fixpoint("graph_louvain_full: levels", 3)(
+          (cur0, lab1, art.q, 1), moved0 = true) { case st @ (cur, compo, curQ, levels) =>
         val g = CGraph.of(cur).held
         // Witness (1): the coarsen invariant, loud, per level.
         val q0 = modularity(g, singletons).head().getDouble(0)
         require(q0 == curQ,
           s"graph_louvain_full: contraction broke the modularity " +
             s"invariant at level $levels (singleton Q=$q0 vs $curQ)")
-        val (lab, q, _) = phase1(g, singletons, q0, 16,
+        val (lab, q) = phase1(g, singletons, q0, 16,
           s"graph_louvain_full: level ${levels + 1}")
-        if (q <= curQ) improving = false // level added nothing: stop
-        else {
-          val prevCompo = compo
-          val prevCur = cur
-          compo = checkpoint(compo // node-sized, next level joins it
+        val moved = q > curQ // a level that adds nothing stops the loop
+        val next = if (!moved) st else {
+          val compoNext = checkpoint(compo
             .join(lab.select(col("i").as("c"), col("c").as("c2")), "c")
             .select(col("i"), col("c2").as("c")))
-          cur = checkpoint(contract(cur, Labels(lab)))
-          // Superseded level state released only AFTER the eager
-          // checkpoints above materialized from it.
-          if (prevCompo ne lab1) Cc.release(prevCompo)
-          Cc.release(prevCur)
-          curQ = q
-          levels += 1
+          (checkpoint(contract(cur, Labels(lab))), compoNext, q, levels + 1)
         }
         Cc.release(lab)
         Cc.release(g.deg)
-      }
-      require(!improving,
-        s"graph_louvain_full: still improving at the $levels-level cap " +
-          "— raise the outer cap; truncating would under-report")
+        (next, moved)
+      } { case (cur, compo, _, _) => Cc.release(cur); Cc.release(compo) }
       Cc.release(cur) // the final coarse graph; the emission reads compo
       compo.select(col("i").as("node_id"), col("c").as("cid"),
         lit(levels.toLong).as("levels"), lit(curQ).as("q_final"))
@@ -1271,19 +1237,24 @@ object Graph {
       // neighborhood-expansion primitive behind crawl-frontier
       // scheduling, influence radii, and graph feature extraction.
       // Iterative-driver schedule, but UNLIKE Cc.minLabel/k_core there
-      // is NO per-round driver read at all: depth is a fixed contract
-      // (4), so the loop body is pure plan construction — Spark runs
-      // all four frontier expansions as one job tree at the final
-      // count. Per round: one frontier⋈edges equi-join + one anti-join
-      // against the visited set, O(edges) shuffle bytes; frontier and
-      // visited localCheckpoint to keep the 4-round lineage flat.
+      // is NO per-round driver read at all: depth 4 is the emission
+      // contract, not a convergence cap, so the loop is a plan unroll,
+      // off Cc.fixpoint — Spark runs all four frontier expansions as
+      // one job tree at the final count, where eager rounds would add
+      // an SQL execution per level. Per round: one frontier⋈edges
+      // equi-join + one anti-join against the visited set, O(edges)
+      // shuffle bytes; frontier and visited localCheckpoint to keep the
+      // 4-round lineage flat.
       // Oracle: the expansion UNROLLED 4 rounds (k_core's pattern) —
       // level assignment is min-hop by construction since a node
-      // joins `visited` the first round it is reachable.
-      val op = partPairs(s, d, 10)
-      val edges = op.as("x").join(op.as("y"),
-          col("x.o") === col("y.o") && col("x.p") =!= col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v")).distinct()
+      // joins `visited` the first round it is reachable. Both
+      // directions of every witness edge come from one explode, as in
+      // CGraph.adj: a union of two selects re-executes the pair join.
+      val edges = undirectedEdges(s, d, 10)
+        .select(explode(array(
+          struct(col("u").as("u"), col("v").as("v")),
+          struct(col("v").as("u"), col("u").as("v")))).as("e"))
+        .select("e.*")
         .persist() // joined every round
       var visited = edges.agg(min(col("u")).as("n"))
         .withColumn("level", lit(0))
@@ -1320,10 +1291,14 @@ object Graph {
       // times — peeling is idempotent at fixpoint, so any graph that
       // converges within 6 rounds hash-matches exactly; one that
       // doesn't fails the gate loudly (the drift alarm we want).
-      var cur = undirectedEdges(s, d, 10).withColumn("peel", lit(false))
-      var peeled = 1L
-      var rounds = 0
-      while (peeled != 0L && rounds < 30) {
+      //
+      // A partial peel is NOT a 5-core — it still contains nodes whose
+      // degree would drop below k on further rounds. The 30-round cap
+      // bounds a broken schedule (the peel cascade depth is ≤ the node
+      // count and measured at 3 here), and Cc.fixpoint fails loudly
+      // past it.
+      val cur = Cc.fixpoint("graph_k_core", 30)(
+          undirectedEdges(s, d, 10).withColumn("peel", lit(false)), moved0 = true) { cur =>
         val edges = cur.filter(!col("peel"))
         val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
           .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -1332,20 +1307,8 @@ object Graph {
           edges.join(degOf("u"), "u").join(degOf("v"), "v")
             .withColumn("peel", col("du") < 5 || col("dv") < 5),
           col("peel"), Seq("u", "v", "peel"))
-        Cc.release(cur)
-        cur = next
-        peeled = r.getAs[Long]("changed")
-        rounds += 1
-      }
-      // A partial peel is NOT a 5-core — it still contains nodes whose
-      // degree would drop below k on further rounds. The cap exists to
-      // bound a broken schedule, not as a silent exit: the peel
-      // cascade depth is ≤ the node count and measured at 3 here, so
-      // 30 rounds only trips on a genuine bug. Fail loudly so a
-      // standalone caller (not just the gate hash) sees it.
-      require(peeled == 0L,
-        s"graph_k_core: peel did not reach fixpoint in $rounds rounds" +
-          " — emission would be a partial peel, not a 5-core")
+        (next, r.getAs[Long]("changed") != 0L)
+      }(Cc.release)
       // No edge peeled: every edge of cur is in the 5-core.
       cur.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("core_deg"))

@@ -257,13 +257,24 @@ object TextPipeline {
       .filter(length(col("w")) >= 1)
       .groupBy("w").agg(count(lit(1)).as("c"))
 
-  /** The trained merge list for external consumers (the streaming
-    * tokenizer twin): same memo, same single-flight training.
+  /** The first `k` trained merges as (pair, placeholder), the
+    * [[bpeEncode]] input of bpe_tokenize_corpus and its streaming twin:
+    * same memo, same single-flight training.
     */
   private[graft] def trainedBpeMerges(s: SparkSession, d: String,
       k: Int = 6): Seq[(String, String)] =
     bpeTrainMergesMemo(s, d, wordCounts(s, d), k)._1
       .map { case (pair, ph, _) => (pair, ph) }
+
+  /** Column w encoded under a trained merge list: the merges' chained
+    * `replace`s in rank order, each pair replaced by its placeholder.
+    * Column-literal search and replacement strings, never SQL text: a
+    * pair may contain earlier placeholder control chars.
+    */
+  private[graft] def bpeEncode(merges: Seq[(String, String)]): Column =
+    merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
+      call_function("replace", c, lit(pair), lit(ph))
+    }
 
   val queries: Map[String, Q] = keyed(
     "dedup_exact" -> { (s, d) =>
@@ -787,9 +798,7 @@ object TextPipeline {
       import s.implicits._
       val all = wordCounts(s, d).persist()
       val (merges, exp) = bpeTrainMergesMemo(s, d, all, 6)
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
-        call_function("replace", c, lit(pair), lit(ph))
-      }
+      val encoded = bpeEncode(merges.map { case (pair, ph, _) => (pair, ph) })
       val expDf = exp.toSeq.toDF("sym", "tok")
       val res = all.select(encoded.as("w"), col("c"))
         .select(explode(expr(
@@ -821,9 +830,7 @@ object TextPipeline {
       val all = wordCounts(s, d).persist()
       val (merges, _) = bpeTrainMergesMemo(s, d, all, 6)
       all.unpersist()
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
-        call_function("replace", c, lit(pair), lit(ph))
-      }
+      val encoded = bpeEncode(merges.map { case (pair, ph, _) => (pair, ph) })
       documents(s, d)
         .select(col("lang"),
           explode(split(lower(col("text")), "[^a-z]+")).as("w"))
@@ -857,10 +864,7 @@ object TextPipeline {
       // doc-keyed rollup of encoded lengths (every surviving symbol is
       // one token — the fertility rule; [a-z]+ separator convention of
       // the whole BPE family).
-      val (merges, _) = bpeTrainMergesMemo(s, d, wordCounts(s, d), 6)
-      val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph, _)) =>
-        call_function("replace", c, lit(pair), lit(ph))
-      }
+      val encoded = bpeEncode(trainedBpeMerges(s, d))
       // spread: the tokenize explode + per-(doc, word) partial combine
       // otherwise run on the one-split scan's single task (round 14).
       spread(documents(s, d))
@@ -2490,6 +2494,63 @@ object TextPipeline {
       |  FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id) t
       |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin
 
+  /** The BPE training loop unrolled `k` rounds as oracle CTEs over
+    * w0, the (w, c) table of the words of length ≥ 2 (the
+    * louvainFineLadderCtes precedent: one builder, so the four BPE
+    * oracles cannot drift). Round r is its weighted pair counts p_r,
+    * the rank-1 winner t_r (n DESC, pair ASC; sum(c) CAST AS BIGINT,
+    * since DuckDB sums BIGINT into HUGEINT) and w_r, the words with the
+    * winner replace()d by chr(r + 1), the placeholder bpeTrainMerges
+    * assigns. With `decode`, also the expansion tables e_0..e_k and
+    * d_r = (rank, merge, n, pair), the winner decoded to its text.
+    */
+  private def bpeTrainCtes(k: Int, decode: Boolean): String = {
+    val train = (1 to k).map { r =>
+      s"""p$r AS (
+         |  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, c
+         |  FROM w${r - 1}, unnest(range(1, length(w))) AS tt(i)),
+         |t$r AS MATERIALIZED (
+         |  SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p$r
+         |  GROUP BY pair ORDER BY sum(c) DESC, pair ASC LIMIT 1),
+         |w$r AS MATERIALIZED (
+         |  SELECT w, c FROM (
+         |    SELECT replace(x.w, t.pair, chr(${r + 1})) AS w, x.c
+         |    FROM w${r - 1} x CROSS JOIN t$r t) m
+         |  WHERE length(w) >= 2)""".stripMargin
+    }
+    val decoded = if (!decode) Nil else "e0 AS (SELECT '' AS sym, '' AS e WHERE 1 = 0)" +:
+      (1 to k).map { r =>
+        s"""d$r AS MATERIALIZED (
+           |  SELECT $r AS rank,
+           |    coalesce(el.e, substring(t.pair, 1, 1)) ||
+           |    coalesce(er.e, substring(t.pair, 2, 1)) AS merge,
+           |    t.n, t.pair
+           |  FROM t$r t
+           |  LEFT JOIN e${r - 1} el ON el.sym = substring(t.pair, 1, 1)
+           |  LEFT JOIN e${r - 1} er ON er.sym = substring(t.pair, 2, 1)),
+           |e$r AS (
+           |  SELECT sym, e FROM e${r - 1}
+           |  UNION ALL SELECT chr(${r + 1}) AS sym, merge AS e FROM d$r)""".stripMargin
+      }
+    (train ++ decoded).mkString(",\n")
+  }
+
+  /** The full (w, c) word table wfull and its length ≥ 2 training part
+    * w0, the encode oracles' input over `words`.
+    */
+  private val bpeWordTables: String =
+    """wfull AS MATERIALIZED (
+      |  SELECT w, count(*) AS c FROM words WHERE length(w) >= 1 GROUP BY w),
+      |w0 AS MATERIALIZED (SELECT w, c FROM wfull WHERE length(w) >= 2)""".stripMargin
+
+  /** Column w encoded by the first `k` winners t_1..t_k of
+    * [[bpeTrainCtes]] as chained replace()s in rank order, the oracle
+    * twin of [[bpeEncode]].
+    */
+  private def bpeEncSql(k: Int): String = (1 to k).foldLeft("w") { (acc, r) =>
+    s"replace($acc, (SELECT pair FROM t$r), chr(${r + 1}))"
+  }
+
   val oracleSql: Map[String, String] = keyed(
     // Both sketch pipelines end in the exact-verify tail, so both must
     // reproduce the same brute-force truth set (see shingleVerify).
@@ -2838,40 +2899,15 @@ object TextPipeline {
         |SELECT pair, count(*) AS n FROM pairs
         |GROUP BY pair ORDER BY n DESC, pair ASC LIMIT 20""".stripMargin,
 
-    // 12-round unroll of the training loop: per round, rank-1 winner
-    // under the same (n DESC, pair ASC) total order over the SAME
-    // (distinct word, count)-weighted statistics (weighted sums equal
-    // the flat per-occurrence counts exactly), placeholder replace()
-    // merge with no re-grouping (replace is injective on the vocab —
-    // see the Spark-side scaladoc), and an expansion-table UNION that
-    // decodes the emitted merge list — identical chr(k+1) placeholder
-    // assignment. sum(c) is CAST AS BIGINT (DuckDB sums BIGINT into
-    // HUGEINT).
+    // 12-round unroll of the training loop (bpeTrainCtes): per round,
+    // rank-1 winner under the same (n DESC, pair ASC) total order over
+    // the SAME (distinct word, count)-weighted statistics (weighted sums
+    // equal the flat per-occurrence counts exactly), placeholder
+    // replace() merge with no re-grouping (replace is injective on the
+    // vocab — see the Spark-side scaladoc), and an expansion-table UNION
+    // that decodes the emitted merge list — identical chr(k+1)
+    // placeholder assignment.
     "bpe_train_loop" -> {
-      val rounds = (1 to 12).map { k =>
-        s"""p$k AS (
-           |  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, c
-           |  FROM w${k - 1}, unnest(range(1, length(w))) AS tt(i)),
-           |t$k AS MATERIALIZED (
-           |  SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p$k
-           |  GROUP BY pair ORDER BY sum(c) DESC, pair ASC LIMIT 1),
-           |d$k AS MATERIALIZED (
-           |  SELECT $k AS rank,
-           |    coalesce(el.e, substring(t.pair, 1, 1)) ||
-           |    coalesce(er.e, substring(t.pair, 2, 1)) AS merge,
-           |    t.n, t.pair
-           |  FROM t$k t
-           |  LEFT JOIN e${k - 1} el ON el.sym = substring(t.pair, 1, 1)
-           |  LEFT JOIN e${k - 1} er ON er.sym = substring(t.pair, 2, 1)),
-           |e$k AS (
-           |  SELECT sym, e FROM e${k - 1}
-           |  UNION ALL SELECT chr(${k + 1}) AS sym, merge AS e FROM d$k),
-           |w$k AS MATERIALIZED (
-           |  SELECT w, c FROM (
-           |    SELECT replace(x.w, t.pair, chr(${k + 1})) AS w, x.c
-           |    FROM w${k - 1} x CROSS JOIN t$k t) m
-           |  WHERE length(w) >= 2)""".stripMargin
-      }.mkString(",\n")
       val ds = (1 to 12).map(k => s"SELECT rank, merge, n FROM d$k")
         .mkString("\n  UNION ALL ")
       s"""WITH words AS (
@@ -2879,8 +2915,7 @@ object TextPipeline {
         |  FROM documents),
         |w0 AS MATERIALIZED (
         |  SELECT w, count(*) AS c FROM words WHERE length(w) >= 2 GROUP BY w),
-        |e0 AS (SELECT '' AS sym, '' AS e WHERE 1 = 0),
-        |$rounds
+        |${bpeTrainCtes(12, decode = true)}
         |SELECT rank, merge, n FROM (
         |  $ds) u
         |ORDER BY rank""".stripMargin
@@ -2890,119 +2925,53 @@ object TextPipeline {
     // round count) + the encode pass: the 6 winners applied to the
     // FULL word table as chained replace()s in rank order, per-char
     // token histogram, placeholder decode via the expansion table.
-    "bpe_encode" -> {
-      val rounds = (1 to 6).map { k =>
-        s"""p$k AS (
-           |  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, c
-           |  FROM w${k - 1}, unnest(range(1, length(w))) AS tt(i)),
-           |t$k AS MATERIALIZED (
-           |  SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p$k
-           |  GROUP BY pair ORDER BY sum(c) DESC, pair ASC LIMIT 1),
-           |d$k AS MATERIALIZED (
-           |  SELECT coalesce(el.e, substring(t.pair, 1, 1)) ||
-           |    coalesce(er.e, substring(t.pair, 2, 1)) AS merge
-           |  FROM t$k t
-           |  LEFT JOIN e${k - 1} el ON el.sym = substring(t.pair, 1, 1)
-           |  LEFT JOIN e${k - 1} er ON er.sym = substring(t.pair, 2, 1)),
-           |e$k AS (
-           |  SELECT sym, e FROM e${k - 1}
-           |  UNION ALL SELECT chr(${k + 1}) AS sym, merge AS e FROM d$k),
-           |w$k AS MATERIALIZED (
-           |  SELECT w, c FROM (
-           |    SELECT replace(x.w, t.pair, chr(${k + 1})) AS w, x.c
-           |    FROM w${k - 1} x CROSS JOIN t$k t) m
-           |  WHERE length(w) >= 2)""".stripMargin
-      }.mkString(",\n")
-      val enc = (1 to 6).foldLeft("w") { (acc, k) =>
-        s"replace($acc, (SELECT pair FROM t$k), chr(${k + 1}))"
-      }
+    "bpe_encode" ->
       s"""WITH words AS (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |  FROM documents),
-        |wfull AS MATERIALIZED (
-        |  SELECT w, count(*) AS c FROM words WHERE length(w) >= 1 GROUP BY w),
-        |w0 AS MATERIALIZED (SELECT w, c FROM wfull WHERE length(w) >= 2),
-        |e0 AS (SELECT '' AS sym, '' AS e WHERE 1 = 0),
-        |$rounds,
-        |enc AS (SELECT $enc AS w, c FROM wfull),
+        |$bpeWordTables,
+        |${bpeTrainCtes(6, decode = true)},
+        |enc AS (SELECT ${bpeEncSql(6)} AS w, c FROM wfull),
         |toks AS (
         |  SELECT substring(w, CAST(i AS INTEGER) + 1, 1) AS sym, c
         |  FROM enc, unnest(range(length(w))) AS tt(i)),
         |hist AS (SELECT sym, CAST(sum(c) AS BIGINT) AS n FROM toks GROUP BY sym)
         |SELECT coalesce(e.e, h.sym) AS token, n
         |FROM hist h LEFT JOIN e6 e ON e.sym = h.sym
-        |ORDER BY n DESC, token ASC LIMIT 20""".stripMargin
-    },
+        |ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
 
     // The bpe_encode oracle's 6 training rounds + the per-language
     // fertility rollup over the encoded per-(lang, word) collapse.
-    "text_tokenizer_fertility" -> {
-      val rounds = (1 to 6).map { k =>
-        s"""p$k AS (
-           |  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, c
-           |  FROM w${k - 1}, unnest(range(1, length(w))) AS tt(i)),
-           |t$k AS MATERIALIZED (
-           |  SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p$k
-           |  GROUP BY pair ORDER BY sum(c) DESC, pair ASC LIMIT 1),
-           |w$k AS MATERIALIZED (
-           |  SELECT w, c FROM (
-           |    SELECT replace(x.w, t.pair, chr(${k + 1})) AS w, x.c
-           |    FROM w${k - 1} x CROSS JOIN t$k t) m
-           |  WHERE length(w) >= 2)""".stripMargin
-      }.mkString(",\n")
-      val enc = (1 to 6).foldLeft("w") { (acc, k) =>
-        s"replace($acc, (SELECT pair FROM t$k), chr(${k + 1}))"
-      }
+    "text_tokenizer_fertility" ->
       s"""WITH words AS (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |  FROM documents),
-        |wfull AS MATERIALIZED (
-        |  SELECT w, count(*) AS c FROM words WHERE length(w) >= 1 GROUP BY w),
-        |w0 AS MATERIALIZED (SELECT w, c FROM wfull WHERE length(w) >= 2),
-        |$rounds,
+        |$bpeWordTables,
+        |${bpeTrainCtes(6, decode = false)},
         |byl AS (
         |  SELECT lang, w, count(*) AS c FROM (
         |    SELECT lang, unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |    FROM documents) t
         |  WHERE length(w) >= 1 GROUP BY lang, w),
         |encl AS (
-        |  SELECT lang, c, length(w) AS chars, length($enc) AS toks
+        |  SELECT lang, c, length(w) AS chars, length(${bpeEncSql(6)}) AS toks
         |  FROM byl)
         |SELECT lang, CAST(sum(c) AS BIGINT) AS n_words,
         |  CAST(sum(toks * c) AS BIGINT) AS n_tokens,
         |  round(CAST(sum(toks * c) AS DOUBLE) / sum(c), 6) AS fertility,
         |  round(CAST(sum(chars * c) AS DOUBLE) / sum(toks * c), 6)
         |    AS chars_per_token
-        |FROM encl GROUP BY lang ORDER BY lang""".stripMargin
-    },
+        |FROM encl GROUP BY lang ORDER BY lang""".stripMargin,
 
     // The bpe_encode oracle's 6 training rounds + the per-document
     // rollup over the encoded per-(doc, word) collapse — the
     // text_tokenizer_fertility oracle re-keyed by doc.
-    "bpe_tokenize_corpus" -> {
-      val rounds = (1 to 6).map { k =>
-        s"""p$k AS (
-           |  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, c
-           |  FROM w${k - 1}, unnest(range(1, length(w))) AS tt(i)),
-           |t$k AS MATERIALIZED (
-           |  SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM p$k
-           |  GROUP BY pair ORDER BY sum(c) DESC, pair ASC LIMIT 1),
-           |w$k AS MATERIALIZED (
-           |  SELECT w, c FROM (
-           |    SELECT replace(x.w, t.pair, chr(${k + 1})) AS w, x.c
-           |    FROM w${k - 1} x CROSS JOIN t$k t) m
-           |  WHERE length(w) >= 2)""".stripMargin
-      }.mkString(",\n")
-      val enc = (1 to 6).foldLeft("w") { (acc, k) =>
-        s"replace($acc, (SELECT pair FROM t$k), chr(${k + 1}))"
-      }
+    "bpe_tokenize_corpus" ->
       s"""WITH words AS (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |  FROM documents),
-        |wfull AS MATERIALIZED (
-        |  SELECT w, count(*) AS c FROM words WHERE length(w) >= 1 GROUP BY w),
-        |w0 AS MATERIALIZED (SELECT w, c FROM wfull WHERE length(w) >= 2),
-        |$rounds,
+        |$bpeWordTables,
+        |${bpeTrainCtes(6, decode = false)},
         |byd AS (
         |  SELECT doc_id, w, count(*) AS c FROM (
         |    SELECT doc_id,
@@ -3010,13 +2979,12 @@ object TextPipeline {
         |    FROM documents) t
         |  WHERE length(w) >= 1 GROUP BY doc_id, w),
         |encd AS (
-        |  SELECT doc_id, c, length(w) AS chars, length($enc) AS toks
+        |  SELECT doc_id, c, length(w) AS chars, length(${bpeEncSql(6)}) AS toks
         |  FROM byd)
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
         |  CAST(sum(toks * c) AS BIGINT) AS n_tokens,
         |  CAST(sum(chars * c) AS BIGINT) AS n_chars
-        |FROM encd GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
+        |FROM encd GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // Full replication of one BPE train iteration: rank-1 winner (same
     // n DESC, pair ASC total order), placeholder replace() merge,

@@ -272,33 +272,31 @@ object Vectors {
       }
     }
 
-  /** The small-state trainers' one driver loop (k-means, PQ, PCA; the
-    * Spark MLlib KMeans schedule): run a round from the state, collect
-    * its table, and stop at the first table equal to the one before.
-    * That table is the fixed point and the emission: every round's
-    * arithmetic quantizes, so the next round would start from the same
-    * float32 state and reproduce it. The state crosses the driver, an
-    * O(state) transfer (≤ 1,024 rows) independent of corpus size, and
-    * goes back as broadcast data, so a round is one job with flat
-    * lineage and the driver-side compare is the exact certificate. A
-    * broadcast + checkpoint + compare-join round measured ~5× slower at
-    * sf0.1, which is why these loops stay off Cc.round. Each oracle
-    * unrolls `cap` rounds, and rounds past the fixed point are no-ops;
-    * a loop still moving after `cap` rounds (a quantization-made cycle)
-    * fails loudly instead of emitting a mid-descent truncation.
+  /** The small-state trainers' loop (k-means, PQ, PCA; the Spark
+    * MLlib KMeans schedule) on [[Cc.fixpoint]], the one convergence
+    * driver: run a round from the state, collect its table, and stop at
+    * the first table equal to the one before. That table is the fixed
+    * point and the emission: every round's arithmetic quantizes, so the
+    * next round would start from the same float32 state and reproduce
+    * it. The driver's state carries the last collected table; there is
+    * nothing to release. The state crosses the driver, an O(state)
+    * transfer (≤ 1,024 rows) independent of corpus size, and goes back
+    * as broadcast data, so a round is one job with flat lineage and the
+    * driver-side compare is the exact certificate. A broadcast +
+    * checkpoint + compare-join round measured ~5× slower at sf0.1,
+    * which is why these rounds stay off Cc.round. Each oracle unrolls
+    * `cap` rounds, and rounds past the fixed point are no-ops; a loop
+    * still moving after `cap` rounds (a quantization-made cycle) fails
+    * loudly instead of emitting a mid-descent truncation.
     */
   private def stationary[S](what: String, cap: Int, s0: S)
       (step: S => DataFrame)(next: Seq[Row] => S): (StructType, Seq[Row]) = {
-    @annotation.tailrec
-    def go(state: S, prev: Option[Set[Row]], n: Int): (StructType, Seq[Row]) = {
-      require(n < cap, s"$what not stationary after $cap rounds — emission " +
-        "would be a mid-descent truncation, not the fixed point")
-      val df = step(state)
-      val rows = graft.ArtifactMemo.collectBounded(df, what).toSeq
-      val cur = rows.toSet
-      if (prev.contains(cur)) (df.schema, rows) else go(next(rows), Some(cur), n + 1)
-    }
-    go(s0, None, 0)
+    Cc.fixpoint(what, cap)((s0, Option.empty[(StructType, Seq[Row])]), moved0 = true) {
+      case (state, last) =>
+        val df = step(state)
+        val rows = graft.ArtifactMemo.collectBounded(df, what).toSeq
+        ((next(rows), Some((df.schema, rows))), !last.exists(_._2.toSet == rows.toSet))
+    }(_ => ())._2.get
   }
 
   /** Lloyd to the fixed point over a (j, vec_id, semb) frame, seeded
@@ -913,8 +911,8 @@ object Vectors {
       // capture at 1e-9 through exact decimal sums, the emitted unit
       // vector rounded at 1e-6 and CAST TO FLOAT32 — the corpus element
       // type — before feeding back), so the round map is a function on
-      // quantized 64-float vectors and `stationary` (the trainers' one
-      // driver loop) stops at exact equality. The 64-value iterate goes
+      // quantized 64-float vectors and `stationary` (the trainers' loop
+      // on Cc.fixpoint) stops at exact equality. The 64-value iterate goes
       // back each round as broadcast DATA, one row of (v), never as
       // plan literals, so the generated code compiles once. A sign-flip
       // limit cycle (possible when the start vector is near-orthogonal

@@ -195,9 +195,7 @@ object StreamingOps {
     */
   def tokenizeCorpus(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    val encoded = merges.foldLeft(col("w")) { case (c, (pair, ph)) =>
-      call_function("replace", c, lit(pair), lit(ph))
-    }
+    val encoded = graft.queries.TextPipeline.bpeEncode(merges)
     docs
       .select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z]+")).as("w"))

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
@@ -28,7 +29,9 @@ import graft.queries.{Cc, Graph}
   * contraction, fixpoints that land on odd and on even rounds,
   * duplicate and reversed pairs, an empty pair frame, and the
   * contraction's union-find without Spark. `Cc.round`, the fixpoint
-  * step every loop runs on, is checked on its own too.
+  * round every data-sized loop runs, is checked on its own too, and
+  * `Cc.fixpoint`, the driver every converging loop runs on, on plain
+  * Scala states.
   */
 class CcSpec extends AnyFunSuite with GraftSuite {
   import CcSpec._
@@ -144,6 +147,45 @@ class CcSpec extends AnyFunSuite with GraftSuite {
       val whole = Cc.contract(pairs.iterator).toSeq
       assert(whole.size == comp.size && whole.toMap == comp, s"seed $seed")
     }
+  }
+
+  test("Cc.fixpoint runs a step that moves n times exactly n times, releasing each superseded state") {
+    // States are fresh boxes, so a release names exactly one state.
+    final class St(val n: Int)
+    for (n <- 1 to 4) {
+      val released = mutable.ArrayBuffer[Int]()
+      var steps = 0
+      val out = Cc.fixpoint("count up", 10)(new St(0), moved0 = true) { st =>
+        steps += 1
+        (new St(st.n + 1), st.n + 1 < n)
+      }(st => released += st.n)
+      assert(out.n == n && steps == n)
+      assert(released == (0 until n), "each superseded state once, never the returned one")
+    }
+  }
+
+  test("Cc.fixpoint runs no step when the start did not move") {
+    var steps = 0
+    val out = Cc.fixpoint("settled", 10)("s0", moved0 = false) { st => steps += 1; (st + "'", true) }(
+      st => fail(s"released $st"))
+    assert(out == "s0" && steps == 0)
+  }
+
+  test("Cc.fixpoint does not release a state a step returns as its own") {
+    val released = mutable.ArrayBuffer[String]()
+    val out = Cc.fixpoint("rejects", 10)("a", moved0 = true) {
+      case "a" => ("b", true)
+      case st => (st, false) // a rejected move: the input comes back unmoved
+    }(released += _)
+    assert(out == "b" && released == Seq("a"))
+  }
+
+  test("Cc.fixpoint fails loudly past its cap") {
+    var steps = 0
+    val e = intercept[IllegalArgumentException](
+      Cc.fixpoint("never settles", 5)(0, moved0 = true) { st => steps += 1; (st + 1, true) }(_ => ()))
+    assert(e.getMessage.contains("did not converge in 5 rounds"), e.getMessage)
+    assert(steps == 5)
   }
 
   test("Cc.round returns rows, changed and extra aggregates from one SQL execution") {

@@ -24,7 +24,8 @@ import graft.queries.Cc
   *  - a job budget and an SQL-execution budget for each connected-
   *    components key, each community (Louvain/modularity) key and
   *    each converging graph loop (PageRank, HITS, k-core; the first
-  *    two on their training calls) and each small-state trainer
+  *    two on their training calls), graph_bfs_levels' four-level
+  *    unroll and each small-state trainer
   *    (k-means, PQ, PCA, BPE; training calls), counted over
   *    construction plus one consuming collect, and that
   *    two calls count exactly the same, except for the few keys whose
@@ -135,6 +136,13 @@ class JobBudgetSpec extends AnyFunSuite with GraftSuite {
         "graph_hits_converged" -> (34, 10)), train = true)
     for ((key, c) <- counts)
       assert(!c.execs.exists(Set("head", "count")), s"$key: a driver read remains: ${c.execs}")
+  }
+
+  test("graph_bfs_levels stays within its budget on the witness graph") {
+    // Set at the count before its edges came from the hoisted witness
+    // graph: the four levels are a plan unroll, one job tree at the
+    // consuming collect, with no driver read per level.
+    checkBudgets(Seq("graph_bfs_levels" -> (21, 10)))
   }
 
   test("the small-state trainers stay within their training budgets") {
